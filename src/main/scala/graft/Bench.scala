@@ -159,8 +159,7 @@ object Bench {
     /** One timed attempt with its GC-time and session-memo deltas
       * (bytes AND entry count — a small memo with an expensive
       * pipeline shows up in entries, not bytes — AND the process-wide
-      * [[graft.functions.DriverMemo]] build delta, which also sees
-      * the memos outside SessionScopedCache: BPE merges, PCA model). */
+      * [[graft.functions.DriverMemo]] build delta). */
     case class Attempt(
         res: Either[String, Double], gcMs: Long, memoBytes: Long, memoEntries: Int,
         memoBuilds: Long)

@@ -293,10 +293,8 @@ object BenchGate {
     * outright — EITHER a [[graft.functions.SessionScopedCache]] entry
     * (entry count, not bytes, because a tiny memoized frame can have
     * an expensive pipeline) OR any build recorded by the process-wide
-    * [[graft.functions.DriverMemo]] counter, which also covers the
-    * memos that deliberately live outside SessionScopedCache (the BPE
-    * merge table, the PCA model — the r11 blind spot that left
-    * text_bpe_encode's 15× first attempt "unattributed"); else GC
+    * [[graft.functions.DriverMemo]] counter, which still reads a build
+    * whose entry was evicted within the attempt; else GC
     * dominating ≥30% of the wall clock names memory pressure; else a
     * demonstrably loaded box names ambient load, bounded: the
     * session-start calibration kernel must read ≥ `ambientMin`× its

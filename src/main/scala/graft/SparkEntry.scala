@@ -301,6 +301,34 @@ object SparkEntry {
       |      CAST(concat('0x', substring(md5(key), 17, 16)) AS UBIGINT)::HUGEINT AS lo
       |    FROM (SELECT DISTINCT key FROM cells)))""".stripMargin
 
+  /** 64-bit wrapping arithmetic in DuckDB SQL, shared by every
+    * hash-replay chain below (xxhash64, both murmur3 chains, the band
+    * fold). Values are non-negative HUGEINT bit patterns: a 64x64
+    * product overflows HUGEINT, so [[mul64]] splits into 32-bit halves,
+    * and rotate/shift become scaled adds over disjoint bits. */
+  private object U64Sql {
+    val M = "18446744073709551616::HUGEINT"  // 2^64
+    val B32 = "4294967296::HUGEINT"          // 2^32
+    val F1 = "18397679294719823053::HUGEINT" // 0xff51afd7ed558ccd fmix
+    val F2 = "14181476777654086739::HUGEINT" // 0xc4ceb9fe1a85ec53 fmix
+
+    def m64(x: String) = s"((($x) % $M + $M) % $M)"
+    def mul64(a: String, b: String) = m64(
+      s"(($a) % $B32) * (($b) % $B32)" +
+      s" + ((((($a) // $B32) * (($b) % $B32)" +
+      s" + (($a) % $B32) * (($b) // $B32)) % $B32) * $B32)")
+    def rotl(x: String, n: Int) = m64(
+      s"($x) * ${BigInt(1) << n}::HUGEINT + ($x) // ${BigInt(1) << (64 - n)}::HUGEINT")
+    def xor64(a: String, b: String) = s"xor(($a)::UBIGINT, ($b)::UBIGINT)::HUGEINT"
+    def shr(x: String, n: Int) = s"(($x) // ${BigInt(1) << n}::HUGEINT)"
+    def add64(a: String, b: String) = m64(s"($a) + ($b)")
+    /** MurmurHash3's fmix64 on column `c`, one stage per step. */
+    def fmixStages(c: String): Seq[Map[String, String]] = Seq(
+      Map(c -> xor64(c, shr(c, 33))), Map(c -> mul64(c, F1)),
+      Map(c -> xor64(c, shr(c, 33))), Map(c -> mul64(c, F2)),
+      Map(c -> xor64(c, shr(c, 33))))
+  }
+
   /** Spark's `xxhash64` of ONE long (seed 42) in DuckDB SQL — the
     * murmur3-chain technique applied to XXH64's hashLong path: all
     * 64-bit wrapping arithmetic on non-negative HUGEINT bit patterns
@@ -312,21 +340,11 @@ object SparkEntry {
     * yields `<prefix>xx(user_id, h)` where h = hash >>> 1 (the
     * sign-bit-masked uniform [0, 2^63) value the KMV sketch retains). */
   private def xxhash64LongSqlChain(prefix: String, fromSql: String): String = {
-    val M = "18446744073709551616::HUGEINT"  // 2^64
-    val B32 = "4294967296::HUGEINT"          // 2^32
+    import U64Sql._
     val P1 = "11400714785074694791::HUGEINT" // XXH64 PRIME64_1
     val P2 = "14029467366897019727::HUGEINT" // PRIME64_2
     val P3 = "1609587929392839161::HUGEINT"  // PRIME64_3
     val P4 = "9650029242287828579::HUGEINT"  // PRIME64_4
-    def m64(x: String) = s"((($x) % $M + $M) % $M)"
-    def mul64(a: String, b: String) = m64(
-      s"(($a) % $B32) * (($b) % $B32)" +
-      s" + ((((($a) // $B32) * (($b) % $B32)" +
-      s" + (($a) % $B32) * (($b) // $B32)) % $B32) * $B32)")
-    def rotl(x: String, n: Int) = m64(
-      s"($x) * ${BigInt(1) << n}::HUGEINT + ($x) // ${BigInt(1) << (64 - n)}::HUGEINT")
-    def xor64(a: String, b: String) = s"xor(($a)::UBIGINT, ($b)::UBIGINT)::HUGEINT"
-    def shr(x: String, n: Int) = s"(($x) // ${BigInt(1) << n}::HUGEINT)"
     // h0 = seed + PRIME64_5 + 8 = 42 + 2870177450012600261 + 8.
     val stages = Seq(
       mul64("h", P2), rotl("h", 31), mul64("h", P1),
@@ -511,31 +529,32 @@ object SparkEntry {
     * `<prefix>tok(key, token)`. */
   private def murmurTokenSqlChain(
       prefix: String, fromSql: String, maxBlocks: Int = 3): String = {
-    val M = "18446744073709551616::HUGEINT"  // 2^64
+    import U64Sql.M
     val HB = "9223372036854775808::HUGEINT"  // 2^63
-    val B32 = "4294967296::HUGEINT"          // 2^32
+    val stages = murmurX64Stages(maxBlocks, signedTail = true) ++
+      Seq(Map("h1" -> U64Sql.add64("h1", "h2")))
+    murmurStageCtes(prefix, fromSql, stages) +
+      s",\n${prefix}tok AS MATERIALIZED (SELECT key, CASE WHEN len > ${16 * maxBlocks + 15} THEN NULL" +
+      s" WHEN h1 = $HB THEN 9223372036854775807::BIGINT" +
+      s" ELSE (h1 - CASE WHEN h1 >= $HB THEN $M ELSE 0::HUGEINT END)::BIGINT END AS token" +
+      s" FROM ${prefix}_s${stages.length})"
+  }
+
+  /** MurmurHash3 x64_128 over a `key` column as MATERIALIZED-stage
+    * column updates, up to (not including) the final h1 += h2: body
+    * rounds for `maxBlocks` 16-byte blocks, then the tail and fmix.
+    * `signedTail` sign-extends tail bytes — the Cassandra quirk. */
+  private def murmurX64Stages(maxBlocks: Int, signedTail: Boolean): Seq[Map[String, String]] = {
+    import U64Sql._
     val C1 = "9782798678568883157::HUGEINT"  // 0x87c37b91114253d5
     val C2 = "5545529020109919103::HUGEINT"  // 0x4cf5ad432745937f
-    val F1 = "18397679294719823053::HUGEINT" // 0xff51afd7ed558ccd fmix
-    val F2 = "14181476777654086739::HUGEINT" // 0xc4ceb9fe1a85ec53 fmix
-
-    def m64(x: String) = s"((($x) % $M + $M) % $M)"
-    def mul64(a: String, b: String) = m64(
-      s"(($a) % $B32) * (($b) % $B32)" +
-      s" + ((((($a) // $B32) * (($b) % $B32)" +
-      s" + (($a) % $B32) * (($b) // $B32)) % $B32) * $B32)")
-    def rotl(x: String, n: Int) = m64(
-      s"($x) * ${BigInt(1) << n}::HUGEINT + ($x) // ${BigInt(1) << (64 - n)}::HUGEINT")
-    def xor64(a: String, b: String) = s"xor(($a)::UBIGINT, ($b)::UBIGINT)::HUGEINT"
-    def shr33(x: String) = s"(($x) // 8589934592::HUGEINT)"
-    def add64(a: String, b: String) = m64(s"($a) + ($b)")
     // Tail byte j (1-based within the tail, after `len // 16` whole
-    // blocks): SIGNED char sign-extension — the Cassandra quirk.
+    // blocks), zero when the tail is shorter.
     def tailByteTerm(j: Int, shift: Int) = {
       val pos = s"((len // 16) * 16 + $j)::BIGINT"
       val b = s"ascii(substring(key, $pos, 1))::HUGEINT"
-      val sb = s"($b - CASE WHEN $b >= 128 THEN 256 ELSE 0 END)"
-      s"CASE WHEN (len % 16) >= $j THEN ${m64(s"$sb * ${BigInt(1) << shift}::HUGEINT")} ELSE 0::HUGEINT END"
+      val v = if (signedTail) s"($b - CASE WHEN $b >= 128 THEN 256 ELSE 0 END)" else b
+      s"CASE WHEN (len % 16) >= $j THEN ${m64(s"$v * ${BigInt(1) << shift}::HUGEINT")} ELSE 0::HUGEINT END"
     }
     // Body block half: 8 UNSIGNED little-endian byte lanes (disjoint,
     // so XOR == sum, no carries), zero when the block is absent.
@@ -546,10 +565,6 @@ object SparkEntry {
       }.mkString(" + ")
       s"(CASE WHEN len >= ${16 * (block + 1)} THEN $terms ELSE 0::HUGEINT END)"
     }
-    def fmixStages(c: String): Seq[Map[String, String]] = Seq(
-      Map(c -> xor64(c, shr33(c))), Map(c -> mul64(c, F1)),
-      Map(c -> xor64(c, shr33(c))), Map(c -> mul64(c, F2)),
-      Map(c -> xor64(c, shr33(c))))
 
     // Body rounds: for each present block, the standard x64_128 mixing
     // (h-side steps gated on block presence; the k-side mixes of an
@@ -574,7 +589,7 @@ object SparkEntry {
 
     val k1 = (1 to 8).map(j => tailByteTerm(j, 8 * (j - 1))).mkString(" + ")
     val k2 = (9 to 15).map(j => tailByteTerm(j, 8 * (j - 9))).mkString(" + ")
-    val tailStages: Seq[Map[String, String]] = Seq(
+    blockStages ++ Seq(
       Map("k1" -> s"($k1)", "k2" -> s"($k2)"),
       Map("k1" -> mul64("k1", C1), "k2" -> mul64("k2", C2)),
       Map("k1" -> rotl("k1", 31), "k2" -> rotl("k2", 33)),
@@ -585,10 +600,13 @@ object SparkEntry {
       Map("h1" -> xor64("h1", "len::HUGEINT"), "h2" -> xor64("h2", "len::HUGEINT")),
       Map("h1" -> add64("h1", "h2")),
       Map("h2" -> add64("h2", "h1"))) ++
-      fmixStages("h1") ++ fmixStages("h2") ++
-      Seq(Map("h1" -> add64("h1", "h2")))
-    val stages = blockStages ++ tailStages
+      fmixStages("h1") ++ fmixStages("h2")
+  }
 
+  /** The murmur stages as `<prefix>_s0 .. <prefix>_s<n>` MATERIALIZED
+    * CTEs over `fromSql`'s `key` column. */
+  private def murmurStageCtes(
+      prefix: String, fromSql: String, stages: Seq[Map[String, String]]): String = {
     val cols = Seq("key", "len", "bk1", "bk2", "k1", "k2", "h1", "h2")
     val sb = new StringBuilder(
       s"${prefix}_s0 AS MATERIALIZED (SELECT key, length(key)::HUGEINT AS len, " +
@@ -601,11 +619,6 @@ object SparkEntry {
         .map(c => st.get(c).map(e => s"$e AS $c").getOrElse(c)).mkString(", ")
       sb.append(s",\n${prefix}_s$i AS MATERIALIZED (SELECT $sel FROM ${prefix}_s${i0})")
     }
-    sb.append(
-      s",\n${prefix}tok AS MATERIALIZED (SELECT key, CASE WHEN len > ${16 * maxBlocks + 15} THEN NULL" +
-      s" WHEN h1 = $HB THEN 9223372036854775807::BIGINT" +
-      s" ELSE (h1 - CASE WHEN h1 >= $HB THEN $M ELSE 0::HUGEINT END)::BIGINT END AS token" +
-      s" FROM ${prefix}_s${stages.length})")
     sb.toString
   }
 
@@ -624,95 +637,15 @@ object SparkEntry {
     * ≤ 26 ASCII bytes at every driver scale). */
   private def murmur128SqlChain(
       prefix: String, fromSql: String, maxBlocks: Int = 2): String = {
-    val M = "18446744073709551616::HUGEINT"  // 2^64
-    val B32 = "4294967296::HUGEINT"          // 2^32
-    val C1 = "9782798678568883157::HUGEINT"  // 0x87c37b91114253d5
-    val C2 = "5545529020109919103::HUGEINT"  // 0x4cf5ad432745937f
-    val F1 = "18397679294719823053::HUGEINT" // 0xff51afd7ed558ccd fmix
-    val F2 = "14181476777654086739::HUGEINT" // 0xc4ceb9fe1a85ec53 fmix
-
-    def m64(x: String) = s"((($x) % $M + $M) % $M)"
-    def mul64(a: String, b: String) = m64(
-      s"(($a) % $B32) * (($b) % $B32)" +
-      s" + ((((($a) // $B32) * (($b) % $B32)" +
-      s" + (($a) % $B32) * (($b) // $B32)) % $B32) * $B32)")
-    def rotl(x: String, n: Int) = m64(
-      s"($x) * ${BigInt(1) << n}::HUGEINT + ($x) // ${BigInt(1) << (64 - n)}::HUGEINT")
-    def xor64(a: String, b: String) = s"xor(($a)::UBIGINT, ($b)::UBIGINT)::HUGEINT"
-    def shr33(x: String) = s"(($x) // 8589934592::HUGEINT)"
-    def add64(a: String, b: String) = m64(s"($a) + ($b)")
-    // UNSIGNED tail byte j (1-based within the tail) — the one line
-    // that differs from the Cassandra chain's sign extension.
-    def tailByteTerm(j: Int, shift: Int) = {
-      val pos = s"((len // 16) * 16 + $j)::BIGINT"
-      val b = s"ascii(substring(key, $pos, 1))::HUGEINT"
-      s"CASE WHEN (len % 16) >= $j THEN ${m64(s"$b * ${BigInt(1) << shift}::HUGEINT")} ELSE 0::HUGEINT END"
-    }
-    def bodyHalf(block: Int, off: Int) = {
-      val terms = (1 to 8).map { j =>
-        val pos = 16 * block + off + j
-        s"ascii(substring(key, $pos, 1))::HUGEINT * ${BigInt(1) << (8 * (j - 1))}::HUGEINT"
-      }.mkString(" + ")
-      s"(CASE WHEN len >= ${16 * (block + 1)} THEN $terms ELSE 0::HUGEINT END)"
-    }
-    def fmixStages(c: String): Seq[Map[String, String]] = Seq(
-      Map(c -> xor64(c, shr33(c))), Map(c -> mul64(c, F1)),
-      Map(c -> xor64(c, shr33(c))), Map(c -> mul64(c, F2)),
-      Map(c -> xor64(c, shr33(c))))
-
-    val blockStages: Seq[Map[String, String]] = (0 until maxBlocks).flatMap { b =>
-      def cond(e: String, keep: String) =
-        s"CASE WHEN len >= ${16 * (b + 1)} THEN $e ELSE $keep END"
-      Seq(
-        Map("bk1" -> bodyHalf(b, 0), "bk2" -> bodyHalf(b, 8)),
-        Map("bk1" -> mul64("bk1", C1), "bk2" -> mul64("bk2", C2)),
-        Map("bk1" -> rotl("bk1", 31), "bk2" -> rotl("bk2", 33)),
-        Map("bk1" -> mul64("bk1", C2), "bk2" -> mul64("bk2", C1)),
-        Map("h1" -> xor64("h1", "bk1")),
-        Map("h1" -> cond(rotl("h1", 27), "h1")),
-        Map("h1" -> cond(add64("h1", "h2"), "h1")),
-        Map("h1" -> cond(add64(mul64("h1", "5::HUGEINT"), "1390208809::HUGEINT"), "h1")),
-        Map("h2" -> xor64("h2", "bk2")),
-        Map("h2" -> cond(rotl("h2", 31), "h2")),
-        Map("h2" -> cond(add64("h2", "h1"), "h2")),
-        Map("h2" -> cond(add64(mul64("h2", "5::HUGEINT"), "944331445::HUGEINT"), "h2")))
-    }
-
-    val k1 = (1 to 8).map(j => tailByteTerm(j, 8 * (j - 1))).mkString(" + ")
-    val k2 = (9 to 15).map(j => tailByteTerm(j, 8 * (j - 9))).mkString(" + ")
-    val tailStages: Seq[Map[String, String]] = Seq(
-      Map("k1" -> s"($k1)", "k2" -> s"($k2)"),
-      Map("k1" -> mul64("k1", C1), "k2" -> mul64("k2", C2)),
-      Map("k1" -> rotl("k1", 31), "k2" -> rotl("k2", 33)),
-      Map("k1" -> mul64("k1", C2), "k2" -> mul64("k2", C1)),
-      Map("h1" -> xor64("h1", "k1"), "h2" -> xor64("h2", "k2")),
-      Map("h1" -> xor64("h1", "len::HUGEINT"), "h2" -> xor64("h2", "len::HUGEINT")),
-      Map("h1" -> add64("h1", "h2")),
-      Map("h2" -> add64("h2", "h1"))) ++
-      fmixStages("h1") ++ fmixStages("h2") ++
-      // Standard x64_128 finisher keeps BOTH halves (the Cassandra
-      // token chain only needed h1).
-      Seq(Map("h1" -> add64("h1", "h2")), Map("h2" -> add64("h2", "h1")))
-    val stages = blockStages ++ tailStages
-
-    val cols = Seq("key", "len", "bk1", "bk2", "k1", "k2", "h1", "h2")
-    val sb = new StringBuilder(
-      s"${prefix}_s0 AS MATERIALIZED (SELECT key, length(key)::HUGEINT AS len, " +
-      "0::HUGEINT AS bk1, 0::HUGEINT AS bk2, " +
-      "0::HUGEINT AS k1, 0::HUGEINT AS k2, 0::HUGEINT AS h1, 0::HUGEINT AS h2 " +
-      s"FROM $fromSql)")
-    stages.zipWithIndex.foreach { case (st, i0) =>
-      val i = i0 + 1
-      val sel = cols
-        .map(c => st.get(c).map(e => s"$e AS $c").getOrElse(c)).mkString(", ")
-      sb.append(s",\n${prefix}_s$i AS MATERIALIZED (SELECT $sel FROM ${prefix}_s${i0})")
-    }
-    sb.append(
+    // Standard x64_128 finisher keeps BOTH halves (the Cassandra token
+    // chain only needed h1).
+    val stages = murmurX64Stages(maxBlocks, signedTail = false) ++
+      Seq(Map("h1" -> U64Sql.add64("h1", "h2")), Map("h2" -> U64Sql.add64("h2", "h1")))
+    murmurStageCtes(prefix, fromSql, stages) +
       s",\n${prefix}tok AS MATERIALIZED (SELECT key, " +
       s"CASE WHEN len > ${16 * maxBlocks + 15} THEN NULL ELSE h1 END AS h1u, " +
       s"CASE WHEN len > ${16 * maxBlocks + 15} THEN NULL ELSE h2 END AS h2u " +
-      s"FROM ${prefix}_s${stages.length})")
-    sb.toString
+      s"FROM ${prefix}_s${stages.length})"
   }
 
   /** The [[graft.functions.Sketches.bandHashes]] fold as unrolled
@@ -724,17 +657,7 @@ object SparkEntry {
     * (doc_id, j, v) with v the signed 64-bit signature value. */
   private def bandFoldSqlChain(
       prefix: String, sigjRel: String, nBands: Int, r: Int): String = {
-    val M = "18446744073709551616::HUGEINT"
-    val B32 = "4294967296::HUGEINT"
-    val F1 = "18397679294719823053::HUGEINT"
-    val F2 = "14181476777654086739::HUGEINT"
-    def m64(x: String) = s"((($x) % $M + $M) % $M)"
-    def mul64(a: String, b: String) = m64(
-      s"(($a) % $B32) * (($b) % $B32)" +
-      s" + ((((($a) // $B32) * (($b) % $B32)" +
-      s" + (($a) % $B32) * (($b) // $B32)) % $B32) * $B32)")
-    def xor64(a: String, b: String) = s"xor(($a)::UBIGINT, ($b)::UBIGINT)::HUGEINT"
-    def shr33(x: String) = s"(($x) // 8589934592::HUGEINT)"
+    import U64Sql._
     val toSigned = (x: String) =>
       s"(($x) - CASE WHEN ($x) >= 9223372036854775808::HUGEINT THEN $M ELSE 0::HUGEINT END)::BIGINT"
     val parts = scala.collection.mutable.ArrayBuffer(
@@ -749,9 +672,7 @@ object SparkEntry {
         s"${m64(s"t.h + ($sv)")} AS h " +
         s"FROM ${prefix}_b${i - 1} t JOIN $sigjRel s ON s.doc_id = t.doc_id " +
         s"AND s.j = t.band * $r + $step)")
-      Seq(xor64("h", shr33("h")), mul64("h", F1),
-          xor64("h", shr33("h")), mul64("h", F2),
-          xor64("h", shr33("h"))).foreach { e =>
+      fmixStages("h").map(_("h")).foreach { e =>
         i += 1
         parts += s"${prefix}_b$i AS MATERIALIZED (SELECT doc_id, band, $e AS h FROM ${prefix}_b${i - 1})"
       }

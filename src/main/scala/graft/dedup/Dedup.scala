@@ -106,10 +106,7 @@ object Dedup {
     * SAME tiny materialized frame instead of each re-running the whole
     * exact pipeline. The checkpoint is duplication-bounded (the capped
     * pair list), so keeping it resident costs kilobytes, not corpus. */
-  // Session-scoped with explicit application-end eviction (see
-  // SessionScopedCache: the cached frames strongly reference their
-  // session, so weak keying alone could never free an entry).
-  private val exactPairCache = new graft.functions.SessionScopedCache("dedup.exact_pairs")
+  private val exactPairCache = new graft.functions.SessionScopedCache[DataFrame]("dedup.exact_pairs")
   private def exactPairSet(spark: SparkSession, dir: String): DataFrame =
     ngramJaccardM(spark, dir).select(col("doc_a"), col("doc_b"))
 
@@ -152,7 +149,7 @@ object Dedup {
     * a pair list is the frame a pipeline's downstream stages (and
     * repeated calls) consume, and it is capped-tiny, so it
     * materializes once per (session, dir, family). */
-  private val approxPairCache = new graft.functions.SessionScopedCache("dedup.approx")
+  private val approxPairCache = new graft.functions.SessionScopedCache[DataFrame]("dedup.approx")
 
   private def withPairRecall(approx: => DataFrame, memoKey: String,
       spark: SparkSession, dir: String,
@@ -161,7 +158,7 @@ object Dedup {
     // for every audit mode (only the recall branch depends on the
     // sample), so one materialization serves them all.
     val approxM = approxPairCache.getOrCompute(
-      spark, s"$dir#$memoKey")(approx.localCheckpoint())
+      spark, dir, memoKey)(approx.localCheckpoint())
     val inSample = (id: Column) => sampleMod.fold(lit(true))(m =>
       pmod(crc32(id.cast("string")), lit(m.toLong)) === 0L)
     val exact = sampleMod match {
@@ -274,12 +271,11 @@ object Dedup {
     *      r14: two dirs with colliding hashCodes in one session would
     *      silently cross-serve each other's index).
     *
-    * Memoized per (session, dir) like the BPE merge table (the value
-    * is a plain table-name triple). */
+    * Memoized per (session, dir) like the BPE merge table. */
   private[graft] final case class SigIndex(sig: String, sh: String, stats: String)
 
   private val sigIndexMemo =
-    new graft.sources.PersistedIndex.SessionMemo[SigIndex]
+    new graft.functions.SessionScopedCache[SigIndex]("dedup.sig_index")
 
   private[graft] def signatureIndex(spark: SparkSession, dir: String): SigIndex =
     sigIndexMemo.getOrCompute(spark, dir)(
@@ -300,7 +296,6 @@ object Dedup {
     * the session's canonical index. */
   private[graft] def buildSignatureIndex(spark: SparkSession, dir: String,
       hiExcl: Long, salt: String): SigIndex = {
-    graft.functions.DriverMemo.recordBuild()
     val key = graft.sources.PersistedIndex.tableKey(dir, salt)
     val idx = SigIndex(s"graft_dedup_sig_idx_$key", s"graft_dedup_sh_idx_$key",
       s"graft_dedup_sigstats_idx_$key")
@@ -688,7 +683,7 @@ object Dedup {
     // [[pairStatsM]] frame, so the containment report's marginal cost
     // after any other exact-pipeline consumer is one memo read, not a
     // second inverted-index + co-pair aggregation pass (r17, §1.2).
-    approxPairCache.getOrCompute(spark, s"$dir#containment")(
+    approxPairCache.getOrCompute(spark, dir, "containment")(
       containmentFrom(pairStatsM(spark, dir)).localCheckpoint())
       .orderBy(col("doc_small"), col("doc_big"))
 
@@ -744,7 +739,7 @@ object Dedup {
     * retained-shingle counts, and the co-occurrence pair counts —
     * ONE definition so the two similarity semantics can never see
     * different candidate sets. */
-  private val postingsCache = new graft.functions.SessionScopedCache("dedup.postings")
+  private val postingsCache = new graft.functions.SessionScopedCache[DataFrame]("dedup.postings")
 
   private def coAndSizes(docs: DataFrame,
       postingsMemoKey: Option[String] = None): (DataFrame, DataFrame) = {
@@ -940,7 +935,7 @@ object Dedup {
     * and materialized — the frame every exact-pipeline consumer reads.
     * Duplication-bounded (only dual-gate survivors), kilobytes
     * resident. */
-  private val pairStatsCache = new graft.functions.SessionScopedCache("dedup.pair_stats")
+  private val pairStatsCache = new graft.functions.SessionScopedCache[DataFrame]("dedup.pair_stats")
   private def pairStatsM(spark: SparkSession, dir: String): DataFrame =
     pairStatsCache.getOrCompute(spark, dir)(
       pairStatsOf(shingledDocs(spark, dir), Some(dir)).localCheckpoint())
@@ -969,7 +964,7 @@ object Dedup {
     // Same memoized-pair-list discipline as [[ngramJaccardM]]; the
     // pipeline's shape is pinned on [[substringPairsRaw]] (the
     // checkpoint hides the subtree from the audited plan).
-    approxPairCache.getOrCompute(spark, s"$dir#substring")(
+    approxPairCache.getOrCompute(spark, dir, "substring")(
         substringPairsRaw(spark, dir).localCheckpoint())
       .orderBy(col("doc_a"), col("doc_b"))
 
@@ -1048,7 +1043,7 @@ object Dedup {
     // result is already a lineage-free localCheckpoint), so it
     // memoizes per (session, dir) like the pair set it consumes: the
     // iterative CC loop runs once per session, not once per consumer.
-    approxPairCache.getOrCompute(spark, s"$dir#clusters")(
+    approxPairCache.getOrCompute(spark, dir, "clusters")(
       clustersUncached(spark, dir))
 
   private def clustersUncached(spark: SparkSession, dir: String): DataFrame = {
@@ -1258,7 +1253,7 @@ object Dedup {
   def clustersStar(spark: SparkSession, dir: String): DataFrame =
     // Shares [[exactPairSet]]'s materialized pair frame and memoizes
     // its own checkpointed result — see clusters.
-    approxPairCache.getOrCompute(spark, s"$dir#clusters_star")(
+    approxPairCache.getOrCompute(spark, dir, "clusters_star")(
       ccStar(spark, exactPairSet(spark, dir)))
 
   /** #37c dedup_survivors: the dedup pipeline's final step — drop every
@@ -1345,7 +1340,7 @@ object Dedup {
     * literals in the DuckDB replay, and both audit scalars use exact
     * (order-proof) aggregations — see SparkEntry.embeddingDedupOracleSql. */
   /** Memoized per-vector LSH-best frame — see the bestM comment below. */
-  private val bestCache = new graft.functions.SessionScopedCache("dedup.emb_best")
+  private val bestCache = new graft.functions.SessionScopedCache[DataFrame]("dedup.emb_best")
 
   /** The per-vector LSH-best pipeline BEFORE the session memo — the
     * frame the plan dumps and shape tests pin (the memo hides it). */
@@ -1492,7 +1487,7 @@ object Dedup {
     * (SparkEntry.dedupSemanticOracleSql). */
   /** Accounted session memo for [[semantic]]'s assigned-corpus frame. */
   private val semanticAssignCache =
-    new graft.functions.SessionScopedCache("dedup.semantic_assign")
+    new graft.functions.SessionScopedCache[DataFrame]("dedup.semantic_assign")
 
   /** SemDeDup's cluster count as a RULE, not a knob: the smallest
     * power of 2 (from 16) with k ≥ n/128, capped only by the corpus
@@ -1522,7 +1517,7 @@ object Dedup {
     // self-join sides, the sizes aggregation, the final projection),
     // each of which would otherwise re-run the scan + k×d assignment
     // expression — and re-fit, since the fit happens at construction.
-    val assigned = semanticAssignCache.getOrCompute(spark, s"$dir#$kEff") {
+    val assigned = semanticAssignCache.getOrCompute(spark, dir, kEff.toString) {
       val cents = graft.similarity.Kmeans
         .fittedCentroidsSeeded(emb, kEff, rounds = 5, salt = "#sem")
       // Parallelism floor: the assignment pass is k×d per row, and the
@@ -1555,7 +1550,7 @@ object Dedup {
     // the Σ|cluster|² pair stream, the dominant cost of the operator;
     // one per session, not one per consumer). The checkpoint is one
     // row per vector (id, match, cos).
-    val best = semanticAssignCache.getOrCompute(spark, s"$dir#$kEff#best") {
+    val best = semanticAssignCache.getOrCompute(spark, dir, s"$kEff#best") {
       assigned
         .join(assigned.select(col("cluster"),
           col("vec_id").as("cand_id"), col("embedding").as("cand_emb")),

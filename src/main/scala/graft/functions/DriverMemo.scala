@@ -2,21 +2,14 @@ package graft.functions
 
 import java.util.concurrent.atomic.AtomicLong
 
-/** Process-wide counter of driver-memo BUILDS — one increment per
-  * first-touch materialization of any session-scoped memo, regardless
-  * of which cache holds the result.
+/** Process-wide counter of session-memo BUILDS — one increment per
+  * real miss of any [[SessionScopedCache]] instance, whatever the value
+  * type (frame, driver model, index handle).
   *
-  * Why it exists (VERDICT r11 "what's wrong" #1): the bench spike
-  * attributor read memo growth from [[SessionScopedCache]] only, but
-  * two memos deliberately live outside it — the BPE merge table
-  * (graft.text.Bpe, a WeakHashMap of plain strings) and the PCA
-  * spectral model (graft.similarity.Pca, a WeakHashMap of a driver
-  * model) — both of whose first builds run full corpus passes. The
-  * result was a knowable-but-unnamed 15× first-attempt spike on
-  * text_bpe_encode labeled "unattributed" in bench_full.json. Every
-  * memo build site now bumps this one counter; the bench attempt
-  * records its delta, so a spike whose attempt built ANY driver memo
-  * reads "memo-build".
+  * Why it exists (VERDICT r11 "what's wrong" #1): a bench attempt that
+  * paid a memo build must read "memo-build", not "unattributed", even
+  * when the memo retains no checkpoint bytes (the BPE merge table, the
+  * PCA model). The bench attempt records this counter's delta.
   *
   * Monotonic by design: entry COUNTS can shrink under eviction, which
   * would let a build-then-evict attempt net to zero; a build counter
@@ -24,9 +17,9 @@ import java.util.concurrent.atomic.AtomicLong
 object DriverMemo {
   private val builds = new AtomicLong(0)
 
-  /** Record one memo materialization. Call from inside the
-    * compute-if-absent body so only actual builds count. */
-  def recordBuild(): Unit = builds.incrementAndGet()
+  /** Record one memo materialization; called by [[SessionScopedCache]]
+    * at a real miss only. */
+  private[functions] def recordBuild(): Unit = builds.incrementAndGet()
 
   /** Total builds so far this JVM; bench attempts diff this. */
   def buildCount(): Long = builds.get()

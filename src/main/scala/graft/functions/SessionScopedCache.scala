@@ -1,117 +1,179 @@
 package graft.functions
 
-import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.{ConcurrentHashMap, ExecutionException, FutureTask}
 
+import scala.annotation.tailrec
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Per-(SparkSession, key) memoized DataFrames for subtrees shared
-  * across queries (the exact dedup pair set, the token-count table).
+/** The session memo: the one place graft reuses work across queries of
+  * a driver session. A value is anything an operator derives from a
+  * corpus directory — a `localCheckpoint()`ed frame (the exact dedup
+  * pair set, the token-count table), a driver-side model (the PCA fit,
+  * the BPE merge table), or the handle of a persisted index.
   *
-  * A weak-KEYED map alone cannot free these entries: a Dataset
-  * strongly references its SparkSession, so the cached values
-  * resurrect their own key — exactly the value→key caveat in the
-  * WeakHashMap javadoc. Entries are therefore also evicted
-  * explicitly when the session's SparkContext ends (application-end
-  * listener registered once per session), which breaks the cycle in
-  * JVMs that cycle sessions — test suites, notebook servers — while
+  * REUSE CONTRACT:
+  *  - What is reused: the value `build` returned for the same
+  *    (instance, dir, variant) in the same session. `build` must be a
+  *    function of the data files under `dir` and of `variant` alone;
+  *    `variant` names every other input (k, nMerges, a derived frame).
+  *  - The key is content: (instance, dir, variant, fingerprint), where
+  *    the fingerprint is the (path, length, mtime) list of the data
+  *    files under `dir` ([[graft.sources.Tables.dataFiles]] — a
+  *    driver-side metadata listing, no Spark job), taken on EVERY
+  *    lookup. A session whose corpus files are rewritten rebuilds
+  *    instead of returning the old answer.
+  *  - An entry is dropped, and a frame's checkpoint blocks unpersisted,
+  *    when a lookup sees a different fingerprint, when the session's
+  *    application ends, or on explicit request ([[SessionScopedCache.unpersist]],
+  *    [[SessionScopedCache.evictToCap]], [[SessionScopedCache.unpersistAll]]).
+  *    A build that throws leaves no entry.
+  *
+  * BUILDS: one per key, also under concurrent callers, and counted in
+  * [[DriverMemo]] at the real miss. The build runs on the first
+  * caller's thread behind a per-key FutureTask — never inside the map's
+  * own compute — so a build may look up other keys of the same
+  * instance (the phash clusters build reads the phash pairs entry).
+  *
+  * LIFETIME: a weak-keyed map alone cannot free entries — a Dataset
+  * strongly references its SparkSession, so a cached frame resurrects
+  * its own key (the value→key caveat in the WeakHashMap javadoc).
+  * Entries are therefore also evicted when the session's SparkContext
+  * ends (application-end listener, registered once per session), while
   * the weak keying still covers sessions dropped without a stop().
-  * The builder runs OUTSIDE the outer map lock (it may launch Spark
-  * jobs); the inner ConcurrentHashMap's computeIfAbsent runs it once
-  * per key — the same contract the per-module caches had.
   *
-  * FOOTPRINT (the r8/r9 accounting gap): the cached values are
-  * `localCheckpoint()`ed frames whose blocks sit in executor storage
-  * until the session ends — ~10 artifacts in a full bench session,
-  * previously with no way to see or reclaim them. Every instance now
-  * registers in a process-wide registry, and the companion exposes
-  * [[SessionScopedCache.retainedInfo]] (per-entry block bytes from
-  * the SparkContext's RDD storage listing) plus
-  * [[SessionScopedCache.unpersist]] /
-  * [[SessionScopedCache.unpersistAll]] to drop entries and free their
-  * blocks between pipeline stages. Reclamation is EXPLICIT by design:
-  * a localCheckpoint truncates lineage, so an automatic evictor that
-  * unpersisted a block while a caller still held the frame would
-  * leave it unrecomputable — the safe contract is
-  * account-always/free-on-request, with the entry removed from the
-  * map in the same call so the next consumer rebuilds instead of
-  * reading a gutted checkpoint.
+  * FOOTPRINT: every instance registers in a process-wide registry;
+  * [[SessionScopedCache.retainedInfo]] reports per-entry block bytes
+  * from the SparkContext's own RDD storage listing (a non-frame value
+  * retains 0). Reclamation beyond a fingerprint change is EXPLICIT: a
+  * localCheckpoint truncates lineage, so an evictor that unpersisted a
+  * block while a caller still held the frame would leave it
+  * unrecomputable — the entry leaves the map in the same call that
+  * frees its blocks, so the next consumer rebuilds instead of reading
+  * a gutted checkpoint.
   */
-private[graft] final class SessionScopedCache(val name: String = "cache") {
-  SessionScopedCache.register(this)
+private[graft] final class SessionScopedCache[V](val name: String) {
+  import SessionScopedCache._
 
-  private val cache =
-    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, DataFrame]]()
+  register(this)
 
-  def getOrCompute(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val perSession = cache.synchronized {
-      var m = cache.get(spark)
+  private val sessions =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[Key, Entry[V]]]()
+
+  private def perSession(spark: SparkSession): ConcurrentHashMap[Key, Entry[V]] =
+    sessions.synchronized {
+      var m = sessions.get(spark)
       if (m == null) {
-        m = new ConcurrentHashMap[String, DataFrame]()
-        cache.put(spark, m)
+        m = new ConcurrentHashMap[Key, Entry[V]]()
+        sessions.put(spark, m)
         spark.sparkContext.addSparkListener(new SparkListener {
           override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
-            cache.synchronized { cache.remove(spark) }
+            sessions.synchronized { sessions.remove(spark) }
         })
       }
       m
     }
-    perSession.computeIfAbsent(key, { _ =>
-      DriverMemo.recordBuild()
-      build
-    })
+
+  def getOrCompute(spark: SparkSession, dir: String, variant: String = "")(
+      build: => V): V = {
+    val key = Key(dir, variant)
+    val fp = fingerprint(spark, dir)
+    val entries = perSession(spark)
+    @tailrec def slot(): Entry[V] = {
+      val mine = new Entry[V](fp, new FutureTask[V](() => {
+        DriverMemo.recordBuild()
+        build
+      }))
+      entries.putIfAbsent(key, mine) match {
+        case null => mine.task.run(); mine
+        case e if e.fingerprint == fp =>
+          if (!e.task.isDone && (e.builder eq Thread.currentThread()))
+            throw new IllegalStateException(s"$name: ${key.label} is built from its own build")
+          e
+        case stale =>
+          if (entries.remove(key, stale)) release(stale)
+          slot()
+      }
+    }
+    val e = slot()
+    try e.task.get()
+    catch {
+      case x: ExecutionException =>
+        entries.remove(key, e)
+        throw x.getCause
+    }
   }
 
-  /** This instance's live entries for `spark`, as `name#key` → frame. */
-  private[graft] def entries(spark: SparkSession): Map[String, DataFrame] =
-    cache.synchronized { Option(cache.get(spark)) }
-      .map(_.asScala.map { case (k, v) => s"$name#$k" -> v }.toMap)
-      .getOrElse(Map.empty)
+  /** This instance's built entries for `spark`, as `name#key` → value. */
+  private[graft] def entries(spark: SparkSession): Map[String, V] =
+    Option(sessions.synchronized(sessions.get(spark))).fold(Map.empty[String, V]) {
+      _.asScala.flatMap { case (k, e) => e.value.map(s"$name#${k.label}" -> _) }.toMap
+    }
 
-  /** Drop `key` (bare, without the instance prefix) and unpersist its
-    * checkpoint blocks. Returns true when an entry was removed. */
-  private[graft] def drop(spark: SparkSession, key: String): Boolean = {
-    val removed = cache.synchronized { Option(cache.get(spark)) }
-      .flatMap(m => Option(m.remove(key)))
-    removed.foreach(SessionScopedCache.unpersistBlocks)
+  /** Drop the entry printed as `label` (without the instance prefix)
+    * and unpersist its checkpoint blocks. True when one was removed. */
+  private[graft] def drop(spark: SparkSession, label: String): Boolean = {
+    val removed = Option(sessions.synchronized(sessions.get(spark))).flatMap { m =>
+      m.keySet.asScala.find(_.label == label).flatMap(k => Option(m.remove(k)))
+    }
+    removed.foreach(release)
     removed.isDefined
   }
 }
 
 private[graft] object SessionScopedCache {
 
+  private final case class Key(dir: String, variant: String) {
+    def label: String = if (variant.isEmpty) dir else s"$dir#$variant"
+  }
+
+  /** One key's value: `task` is run once, by `builder`, the thread
+    * whose lookup installed the entry. */
+  private final class Entry[V](val fingerprint: Seq[(String, Long, Long)],
+      val task: FutureTask[V]) {
+    val builder: Thread = Thread.currentThread()
+    def value: Option[V] =
+      if (task.isDone) scala.util.Try(task.get()).toOption else None
+  }
+
+  /** (path, length, mtime) of every data file under `dir`, path-sorted;
+    * empty when `dir` does not exist. */
+  private def fingerprint(spark: SparkSession, dir: String): Seq[(String, Long, Long)] =
+    try graft.sources.Tables.dataFiles(spark, dir)
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sortBy(_._1)
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
   // Instances are static module singletons; a strong list is their
   // natural lifetime.
   private val instances =
-    new java.util.concurrent.CopyOnWriteArrayList[SessionScopedCache]()
+    new java.util.concurrent.CopyOnWriteArrayList[SessionScopedCache[_]]()
 
-  private def register(c: SessionScopedCache): Unit = instances.add(c)
+  private def register(c: SessionScopedCache[_]): Unit = instances.add(c)
 
-  /** The checkpoint RDD ids a memoized frame pins in block storage:
+  /** The checkpoint RDDs a memoized frame pins in block storage:
     * every LogicalRDD leaf of its analyzed plan (a localCheckpoint'd
-    * frame is exactly one). */
-  private def rddIdsOf(df: DataFrame): Seq[Int] =
-    df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd.id }
+    * frame is exactly one). Other values pin none. */
+  private def rddsOf(value: Any): Seq[org.apache.spark.rdd.RDD[_]] = value match {
+    case df: Dataset[_] => df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
+    case _ => Seq.empty
+  }
 
-  private def unpersistBlocks(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case l: LogicalRDD => l.rdd.unpersist(blocking = true)
-      case _ => ()
-    }
+  private def release(e: Entry[_]): Unit =
+    e.value.foreach(rddsOf(_).foreach(_.unpersist(blocking = true)))
 
   /** Per-entry retained block bytes (memory + disk) for `spark`,
-    * across every module cache, keyed `instance#key`. The bytes come
-    * from the SparkContext's own storage listing, so the number is
-    * the session's real footprint, not an estimate. */
+    * across every instance, keyed `instance#key`. The bytes come from
+    * the SparkContext's own storage listing, so the number is the
+    * session's real footprint, not an estimate. */
   def retainedInfo(spark: SparkSession): Map[String, Long] = {
     val storage = spark.sparkContext.getRDDStorageInfo
       .map(i => i.id -> (i.memSize + i.diskSize)).toMap
-    instances.asScala.flatMap(_.entries(spark)).map { case (k, df) =>
-      k -> rddIdsOf(df).map(storage.getOrElse(_, 0L)).sum
+    instances.asScala.flatMap(_.entries(spark)).map { case (k, v) =>
+      k -> rddsOf(v).map(r => storage.getOrElse(r.id, 0L)).sum
     }.toMap
   }
 
@@ -121,9 +183,9 @@ private[graft] object SessionScopedCache {
 
   /** Live memo entry count for `spark` across all caches — the signal
     * a bench attempt uses to attribute a first-materialization spike:
-    * bytes can be tiny for a small pair list whose PIPELINE was
-    * expensive, but the entry-count delta is 1 the attempt that built
-    * it and 0 every attempt after. */
+    * bytes can be tiny (or zero, for a driver model) when the PIPELINE
+    * was expensive, but the entry-count delta is 1 the attempt that
+    * built it and 0 every attempt after. */
   def retainedEntries(spark: SparkSession): Int =
     instances.asScala.map(_.entries(spark).size).sum
 
@@ -144,10 +206,11 @@ private[graft] object SessionScopedCache {
     * required them to lose; shrinking below the cap evicts only what
     * the accounting says is oversized, and [[retainedInfo]]'s
     * per-entry bytes make largest-first the minimal-eviction order.
-    * Entries whose accounted bytes are zero (blocks already gone, or
-    * a frame checkpointed to nothing) cannot reduce the footprint and
-    * are left alone — if the remaining nonzero entries cannot reach
-    * the cap the method evicts them all and returns; it never spins. */
+    * Entries whose accounted bytes are zero (driver values, blocks
+    * already gone, or a frame checkpointed to nothing) cannot reduce
+    * the footprint and are left alone — if the remaining nonzero
+    * entries cannot reach the cap the method evicts them all and
+    * returns; it never spins. */
   def evictToCap(spark: SparkSession, cap: Long): Int = {
     val info = retainedInfo(spark).toSeq.filter(_._2 > 0).sortBy(-_._2)
     var retained = retainedBytes(spark)
@@ -163,7 +226,6 @@ private[graft] object SessionScopedCache {
   /** Drop every memoized entry for `spark`; returns how many. */
   def unpersistAll(spark: SparkSession): Int =
     instances.asScala.map { c =>
-      val ks = c.entries(spark).keys.map(_.split("#", 2)(1)).toSeq
-      ks.count(c.drop(spark, _))
+      c.entries(spark).keys.count(k => c.drop(spark, k.split("#", 2)(1)))
     }.sum
 }

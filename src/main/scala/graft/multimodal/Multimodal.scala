@@ -360,10 +360,10 @@ object Multimodal {
     * the banded pair join and the CC loop each run once per
     * (session, dir) and every consumer (clusters, survivors, repeat
     * calls) re-reads the materialized checkpoint. */
-  private val phashCache = new graft.functions.SessionScopedCache("mm.phash")
+  private val phashCache = new graft.functions.SessionScopedCache[DataFrame]("mm.phash")
 
   private def phashPairsM(spark: SparkSession, dir: String): DataFrame =
-    phashCache.getOrCompute(spark, s"$dir#phash_pairs")(
+    phashCache.getOrCompute(spark, dir, "phash_pairs")(
       phashDedupUncached(spark, dir).localCheckpoint())
 
   /** #45e mm_phash_clusters: connected components over the perceptual
@@ -375,7 +375,7 @@ object Multimodal {
     * pipelines share one scale-proven CC kernel. Oracle: the
     * recursive-CTE min-label propagation over the same pair CTEs. */
   def phashClusters(spark: SparkSession, dir: String): DataFrame =
-    phashCache.getOrCompute(spark, s"$dir#phash_clusters")(
+    phashCache.getOrCompute(spark, dir, "phash_clusters")(
       graft.dedup.Dedup.ccStar(spark,
         phashPairsM(spark, dir).select(col("doc_a"), col("doc_b"))))
 

@@ -318,7 +318,7 @@ object Relational {
     * [[graft.similarity.Similarity]] recall-truth discipline (r17,
     * guide §1.2). */
   private val quantileAggCache =
-    new graft.functions.SessionScopedCache("relational.quantile_agg")
+    new graft.functions.SessionScopedCache[DataFrame]("relational.quantile_agg")
 
   private def quantileAggM(spark: SparkSession, dir: String): DataFrame =
     quantileAggCache.getOrCompute(spark, dir)(
@@ -803,7 +803,7 @@ object Relational {
   // see [[graft.functions.SessionScopedCache]] for the footprint
   // contract (retainedBytes accounting, explicit reclamation).
   private val basketMarkersCache =
-    new graft.functions.SessionScopedCache("relational.basket_markers")
+    new graft.functions.SessionScopedCache[DataFrame]("relational.basket_markers")
 
   def basketPairs(spark: SparkSession, dir: String): DataFrame = {
     // ONE corpus aggregation total: the per-order sorted brand set

@@ -154,30 +154,18 @@ object Kmeans {
     * (OPTIMIZATION r16, guide §1.2 step 1: emb_kmeans and
     * emb_label_purity each re-ran the identical 5-round corpus fit —
     * 10 corpus passes per bench pair where 5 suffice; at 100 TB the
-    * fit IS the dominant cost of both reports). Values hold no
-    * Dataset, so plain weak keying is sound; the memo-miss records a
-    * DriverMemo build so a bench first-attempt spike stays
-    * cause-attributed. */
+    * fit IS the dominant cost of both reports). */
   private val fitCache =
-    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[
-      String, Array[Array[Double]]]]()
+    new graft.functions.SessionScopedCache[Array[Array[Double]]]("similarity.kmeans_fit")
 
   private[graft] def fittedCentroidsFor(
       spark: SparkSession, dir: String, k: Int, rounds: Int,
       sampleCap: Int = 1024): Array[Array[Double]] =
-    fitCache.synchronized {
-      var m = fitCache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, Array[Array[Double]]]()
-        fitCache.put(spark, m)
-      }
-      m
-    }.computeIfAbsent(s"$dir#$k#$rounds#$sampleCap", { _ =>
-      graft.functions.DriverMemo.recordBuild()
+    fitCache.getOrCompute(spark, dir, s"$k#$rounds#$sampleCap") {
       fittedCentroids(
         Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")),
         k, rounds, sampleCap)
-    })
+    }
 
   /** One row per cluster over an arbitrary (vec_id, embedding) frame:
     * size, corpus share, mean/min cosine of members to their final

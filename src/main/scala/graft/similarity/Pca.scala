@@ -46,28 +46,12 @@ object Pca {
       eigVals: Array[Double], eigVecs: Array[Array[Double]])
 
   // Per-(session, dir) memoized fit, so emb_pca and emb_pca_project
-  // share ONE moment pass per driver session (the SessionScopedCache
-  // discipline, typed for a driver-side model instead of a frame;
-  // same weak-keyed eviction posture — the model holds no session
-  // reference at all, so weak keying alone suffices here).
-  private val fitCache =
-    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[String, Model]]()
+  // share ONE moment pass per driver session.
+  private val fitCache = new graft.functions.SessionScopedCache[Model]("similarity.pca_fit")
 
   /** One corpus pass → covariance → driver Jacobi. See [[embPca]]. */
-  def fit(spark: SparkSession, dir: String): Model = {
-    val perSession = fitCache.synchronized {
-      var m = fitCache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[String, Model]()
-        fitCache.put(spark, m)
-      }
-      m
-    }
-    perSession.computeIfAbsent(dir, { _ =>
-      graft.functions.DriverMemo.recordBuild()
-      fitUncached(spark, dir)
-    })
-  }
+  def fit(spark: SparkSession, dir: String): Model =
+    fitCache.getOrCompute(spark, dir)(fitUncached(spark, dir))
 
   private def fitUncached(spark: SparkSession, dir: String): Model = {
     val emb = graft.sources.Tables.embeddings(spark, dir)

@@ -77,7 +77,7 @@ object Similarity {
     * sort), [[withRecall]]'s truth side (4 declared ANN reports), and
     * [[ivfTuningCurve]]'s truth join. */
   private val bruteTopKCache =
-    new graft.functions.SessionScopedCache("similarity.brute_topk")
+    new graft.functions.SessionScopedCache[DataFrame]("similarity.brute_topk")
 
   private def bruteTopKM(spark: SparkSession, dir: String): DataFrame =
     bruteTopKCache.getOrCompute(spark, dir) {
@@ -101,14 +101,12 @@ object Similarity {
     * memoized per (session, dir): the sample and the Lloyd fits on it
     * are pure functions of the corpus, and each ANN report re-collected
     * the identical sample (a TakeOrdered corpus job) on every call
-    * (r17, guide §1.2/§4.5 — train once, serve many). Values are plain
-    * float arrays (64 KB), no Dataset — weak session keying is sound. */
+    * (r17, guide §1.2/§4.5 — train once, serve many). */
   private val annSampleMemo =
-    new graft.sources.PersistedIndex.SessionMemo[Array[Array[Float]]]
+    new graft.functions.SessionScopedCache[Array[Array[Float]]]("similarity.ann_sample")
 
   private def trainerSample(spark: SparkSession, dir: String): Array[Array[Float]] =
     annSampleMemo.getOrCompute(spark, dir) {
-      graft.functions.DriverMemo.recordBuild()
       Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
         .filter(pmod(col("vec_id"), lit(3)) === 0)
@@ -608,13 +606,12 @@ object Similarity {
     * the doubling rule in a `kdef` CTE and replays the fit at that
     * same adaptive count. */
   /** [[knnGraph]]'s plan-time prep — (nLists, fitted centroids) —
-    * memoized per (session, dir) like the BPE merge table (values hold
-    * no Dataset, so plain weak keying is sound): the fit runs ONCE per
-    * session, not once per call (VERDICT r13 #4), and the corpus count
-    * that sizes the adaptive list rule is [[Tables.parquetRowCount]]'s
-    * footer-metadata read — zero Spark jobs for the sizing even on the
-    * memo-miss path (r13 #7). The fit itself is
-    * [[Kmeans.fittedCentroidsSeeded]] (VERDICT r15 #1 — the one
+    * memoized per (session, dir) like the BPE merge table: the fit
+    * runs ONCE per session, not once per call (VERDICT r13 #4), and the
+    * corpus count that sizes the adaptive list rule is
+    * [[Tables.parquetRowCount]]'s footer-metadata read — zero Spark
+    * jobs for the sizing even on the memo-miss path (r13 #7). The fit
+    * itself is [[Kmeans.fittedCentroidsSeeded]] (VERDICT r15 #1 — the one
     * genuine 100× defect left in r15): hash-ordered corpus seeds plus
     * 5 full-corpus Lloyd rounds moving only k×d quantized moment
     * frames, so NOTHING caps nLists below the corpus size — the old
@@ -623,21 +620,11 @@ object Similarity {
     * samples each at sf1, which is exactly the imbalance the measured
     * 25.4 s dedup_knn_cc row paid for. */
   private val knnPrepCache =
-    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[
-      String, (Int, Array[Array[Double]])]]()
+    new graft.functions.SessionScopedCache[(Int, Array[Array[Double]])]("similarity.knn_prep")
 
   private[graft] def knnPrep(
       spark: SparkSession, dir: String): (Int, Array[Array[Double]]) =
-    knnPrepCache.synchronized {
-      var m = knnPrepCache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[
-          String, (Int, Array[Array[Double]])]()
-        knnPrepCache.put(spark, m)
-      }
-      m
-    }.computeIfAbsent(dir, { _ =>
-      graft.functions.DriverMemo.recordBuild()
+    knnPrepCache.getOrCompute(spark, dir) {
       val corpus = Tables.embeddings(spark, dir)
         .select(col("vec_id"), col("embedding"))
       // Footer-metadata count, not a count() scan job (r13 #7 closed
@@ -647,7 +634,7 @@ object Similarity {
       val n = Tables.parquetRowCount(spark, dir, "embeddings")
       val nLists = Kmeans.adaptivePow2(n, 1L << 20)(k => k * k >= n)
       (nLists, Kmeans.fittedCentroidsSeeded(corpus, nLists, rounds = 5, salt = "#knn"))
-    })
+    }
 
   /** The annotated kNN edge list — [[knnGraph]] minus its report
     * ordering — memoized per (session, dir) as a lineage-free
@@ -660,7 +647,7 @@ object Similarity {
     * showed 16 Exchanges / 12 corpus scans before this). The
     * checkpoint is n·k edge rows — graph-sized, never corpus-sized. */
   private val knnEdgeCache =
-    new graft.functions.SessionScopedCache("similarity.knn_edges")
+    new graft.functions.SessionScopedCache[DataFrame]("similarity.knn_edges")
 
   private[graft] def knnEdges(spark: SparkSession, dir: String): DataFrame =
     knnEdgeCache.getOrCompute(spark, dir) {
@@ -729,7 +716,7 @@ object Similarity {
     * mutual neighbors have no defined coefficient and are not report
     * rows. */
   private val mutualEdgeCache =
-    new graft.functions.SessionScopedCache("similarity.mutual_edges")
+    new graft.functions.SessionScopedCache[DataFrame]("similarity.mutual_edges")
 
   def knnTriangles(spark: SparkSession, dir: String): DataFrame = {
     // The census references the edge list SIX times (degree, both
@@ -749,12 +736,12 @@ object Similarity {
     // deg and the oriented list are each consumed three times; at
     // scale they are n- and m-row frames whose re-aggregation /
     // re-join per consumer would triple the census's shuffle volume.
-    val deg = mutualEdgeCache.getOrCompute(spark, s"$dir#deg") {
+    val deg = mutualEdgeCache.getOrCompute(spark, dir, "deg") {
       edges.select(explode(array(col("a"), col("b"))).as("v"))
         .groupBy(col("v")).agg(count(lit(1)).as("deg"))
         .localCheckpoint()
     }
-    val o = mutualEdgeCache.getOrCompute(spark, s"$dir#oriented") {
+    val o = mutualEdgeCache.getOrCompute(spark, dir, "oriented") {
       val withDeg = edges
         .join(deg.select(col("v").as("a"), col("deg").as("da")), "a")
         .join(deg.select(col("v").as("b"), col("deg").as("db")), "b")
@@ -816,7 +803,7 @@ object Similarity {
       table: String, cents: Array[Array[Double]])
 
   private val ivfIndexMemo =
-    new graft.sources.PersistedIndex.SessionMemo[IvfIndex]
+    new graft.functions.SessionScopedCache[IvfIndex]("similarity.ivf_index")
 
   private[graft] def ivfIndex(spark: SparkSession, dir: String): IvfIndex =
     ivfIndexMemo.getOrCompute(spark, dir)(
@@ -829,7 +816,6 @@ object Similarity {
     * canonical index. */
   private[graft] def buildIvfIndex(spark: SparkSession, dir: String,
       hiExcl: Long, salt: String): IvfIndex = {
-    graft.functions.DriverMemo.recordBuild()
     val table =
       s"graft_ann_ivf_idx_${graft.sources.PersistedIndex.tableKey(dir, salt)}"
     graft.sources.PersistedIndex.dropAndClean(spark, table)

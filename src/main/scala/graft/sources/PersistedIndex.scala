@@ -7,13 +7,14 @@ import org.apache.spark.sql.functions.{concat, conv, md5, substring}
   * the dedup signature index pair (graft.dedup.Dedup) and the ANN IVF
   * postings table (graft.similarity.Similarity) both follow the same
   * lifecycle, and before r15's review each carried its own copy of
-  * all four pieces (review r15: four near-copies kept in sync by
-  * hand):
+  * every piece (review r15: near-copies kept in sync by hand):
   *
   *   1. a collision-proof table-name key,
-  *   2. warehouse drop-and-recreate hygiene,
-  *   3. a per-(session, key) memo for the built handle, and
-  *   4. the append high-water manifest below.
+  *   2. warehouse drop-and-recreate hygiene, and
+  *   3. the append high-water manifest below.
+  *
+  * The built handle is memoized per session like every other derived
+  * value, in a [[graft.functions.SessionScopedCache]].
   */
 object PersistedIndex {
 
@@ -58,25 +59,6 @@ object PersistedIndex {
       val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(loc)) fs.delete(loc, true)
     }
-  }
-
-  /** Per-(session, key) memo for built index handles. Values are
-    * plain (table names, centroid arrays — no Dataset), so weak
-    * keying on the session is sound: when the session is collected
-    * the entry goes with it. */
-  final class SessionMemo[V] {
-    private val maps =
-      new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[
-        String, V]]()
-    def getOrCompute(spark: SparkSession, key: String)(build: => V): V =
-      maps.synchronized {
-        var m = maps.get(spark)
-        if (m == null) {
-          m = new java.util.concurrent.ConcurrentHashMap[String, V]()
-          maps.put(spark, m)
-        }
-        m
-      }.computeIfAbsent(key, _ => build)
   }
 
   private def manifestOf(table: String): String = table + "_hw"

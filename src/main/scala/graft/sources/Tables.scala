@@ -1,5 +1,6 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -61,23 +62,30 @@ object Tables {
     * the footer IS the catalog. */
   def parquetRowCount(spark: SparkSession, dir: String, name: String): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
-    val fs = root.getFileSystem(conf)
-    def files(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.FileStatus] = {
-      val st = fs.getFileStatus(p)
-      if (st.isFile) Seq(st)
-      else fs.listStatus(p).toSeq.flatMap { c =>
-        val n = c.getPath.getName
-        if (n.startsWith("_") || n.startsWith(".")) Seq.empty
-        else if (c.isDirectory) files(c.getPath)
-        else Seq(c)
-      }
-    }
-    files(root).map { f =>
+    dataFiles(spark, s"$dir/$name.parquet").map { f =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(f, conf)
       val rd = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try rd.getRecordCount finally rd.close()
     }.sum
+  }
+
+  /** Every data file under `path` — the path itself when it is a file,
+    * else its directory tree — listed on the driver by filesystem
+    * metadata calls, no Spark job. Names starting with `_` or `.`
+    * (`_SUCCESS`, checksum sidecars, `_temporary`) are skipped. Throws
+    * FileNotFoundException when `path` does not exist. Feeds the
+    * footer row counts above and the session memo's content
+    * fingerprint ([[graft.functions.SessionScopedCache]]). */
+  def dataFiles(spark: SparkSession, path: String): Seq[FileStatus] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (st.isFile) Seq(st)
+      else fs.listStatus(st.getPath).toSeq.flatMap { c =>
+        val n = c.getPath.getName
+        if (n.startsWith("_") || n.startsWith(".")) Seq.empty else walk(c)
+      }
+    walk(fs.getFileStatus(root))
   }
 
   def region(spark: SparkSession, dir: String): DataFrame     = apply(spark, dir, "region")

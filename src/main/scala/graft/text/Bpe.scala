@@ -76,31 +76,12 @@ object Bpe {
 
   /** The learned merge table as driver-side rows, memoized per
     * (session, dir, nMerges) so [[train]] and [[encode]] share one
-    * training run within a driver session. The cached values hold
-    * only strings — no Dataset, hence no back-reference to the
-    * session — so plain weak keying IS sound here (contrast
-    * [[graft.functions.SessionScopedCache]], whose values pin their
-    * key). */
-  private val mergeCache =
-    new java.util.WeakHashMap[SparkSession, java.util.concurrent.ConcurrentHashMap[
-      String, Seq[(Int, String, String, String, Long)]]]()
+    * training run within a driver session. */
+  private val mergeCache = new graft.functions.SessionScopedCache[
+    Seq[(Int, String, String, String, Long)]]("text.bpe_merges")
   private def trainedMerges(spark: SparkSession, dir: String, nMerges: Int)
       : Seq[(Int, String, String, String, Long)] =
-    mergeCache.synchronized {
-      var m = mergeCache.get(spark)
-      if (m == null) {
-        m = new java.util.concurrent.ConcurrentHashMap[
-          String, Seq[(Int, String, String, String, Long)]]()
-        mergeCache.put(spark, m)
-      }
-      m
-    }.computeIfAbsent(s"$dir#$nMerges", { _ =>
-      // The bench spike attributor watches this counter: a first
-      // attempt that pays this training run must read "memo-build",
-      // not "unattributed" (VERDICT r11 — text_bpe_encode's 15×).
-      graft.functions.DriverMemo.recordBuild()
-      runTraining(spark, dir, nMerges)
-    })
+    mergeCache.getOrCompute(spark, dir, nMerges.toString)(runTraining(spark, dir, nMerges))
 
   private def runTraining(spark: SparkSession, dir: String, nMerges: Int)
       : Seq[(Int, String, String, String, Long)] = {

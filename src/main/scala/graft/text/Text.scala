@@ -28,7 +28,7 @@ object Text {
     * pattern the dedup audits established; eviction semantics in
     * [[graft.functions.SessionScopedCache]]) so one driver session
     * never recounts it across its consumers. */
-  private val tokenCountCache = new graft.functions.SessionScopedCache("text.token_counts")
+  private val tokenCountCache = new graft.functions.SessionScopedCache[DataFrame]("text.token_counts")
   private[graft] def tokenCounts(spark: SparkSession, dir: String): DataFrame =
     tokenCountCache.getOrCompute(spark, dir) {
       Tables.documents(spark, dir)
@@ -880,7 +880,7 @@ object Text {
     * far sublinear in the corpus (Heaps' law), same class as the
     * token-count memo. */
   private val bigramLmCache =
-    new graft.functions.SessionScopedCache("text.bigram_lm")
+    new graft.functions.SessionScopedCache[DataFrame]("text.bigram_lm")
   private[graft] def bigramLm(spark: SparkSession, dir: String): DataFrame =
     bigramLmCache.getOrCompute(spark, dir) {
       val toks = regexp_extract_all(lower(col("text")), lit(BpePattern), lit(0))

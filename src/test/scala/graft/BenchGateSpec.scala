@@ -185,9 +185,41 @@ class BenchGateSpec extends AnyFunSuite {
   }
 
   test("DriverMemo counter ticks once per build across both cache shapes") {
-    val before = graft.functions.DriverMemo.buildCount()
-    graft.functions.DriverMemo.recordBuild()
-    assert(graft.functions.DriverMemo.buildCount() === before + 1)
+    // The cache ticks the counter itself, once per real miss: a frame
+    // entry and a driver-value entry each tick when built — the value
+    // entry raced by 8 concurrent callers — and never on a hit.
+    import java.util.concurrent.{Callable, CountDownLatch, Executors}
+    import graft.functions.{DriverMemo, SessionScopedCache}
+    val spark = SparkTestSession.spark
+    val dir = java.nio.file.Files.createTempDirectory("graft-memo-count").toString
+    val frames = new SessionScopedCache[org.apache.spark.sql.DataFrame]("spec.count_frames")
+    val values = new SessionScopedCache[Long]("spec.count_values")
+
+    val b0 = DriverMemo.buildCount()
+    val df = frames.getOrCompute(spark, dir)(spark.range(100).toDF().localCheckpoint())
+    assert(DriverMemo.buildCount() === b0 + 1)
+    assert(frames.getOrCompute(spark, dir)(fail("a frame hit must not build")) eq df)
+    assert(DriverMemo.buildCount() === b0 + 1)
+
+    val builds = new java.util.concurrent.atomic.AtomicInteger
+    val go = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(8)
+    val got = try {
+      val futures = (1 to 8).map(_ => pool.submit(new Callable[Long] {
+        def call(): Long = {
+          go.await()
+          values.getOrCompute(spark, dir) { builds.incrementAndGet(); Thread.sleep(200); 42L }
+        }
+      }))
+      go.countDown()
+      futures.map(_.get())
+    } finally pool.shutdown()
+    assert(got.forall(_ == 42L))
+    assert(builds.get === 1, "8 concurrent callers must share one build")
+    assert(DriverMemo.buildCount() === b0 + 2)
+    assert(values.getOrCompute(spark, dir)(fail("a value hit must not build")) === 42L)
+    assert(DriverMemo.buildCount() === b0 + 2)
+    SessionScopedCache.unpersist(spark, s"spec.count_frames#$dir")
   }
 
   test("instrument keys (_ambient_kernel) never flag as regressions") {
