@@ -114,6 +114,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // AsOfJoinPlan nodes without any API call having run first.
     ext.injectPlannerStrategy(_ =>
       org.apache.spark.sql.graftbridge.AsOfJoinStrategy)
+    // Likewise the generation merge of Kv.migrate (GenerationMergeApi
+    // registers it lazily too).
+    ext.injectPlannerStrategy(_ =>
+      org.apache.spark.sql.graftbridge.GenerationMergeStrategy)
     // Ring-slice pushdown: WHERE cassandra_token(key) BETWEEN a AND b
     // over an SSTable read folds into the source's tokenMin/tokenMax
     // plan-time pruning (see the rule's guards).

@@ -3,6 +3,7 @@ package graft.kv
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GenerationMergeApi
 
 import graft.functions.CassandraMurmur3.cassandraToken
 import graft.functions.CassandraRandomMd5
@@ -15,12 +16,17 @@ import graft.sources.Tables
   * A Cassandra table read from SSTables is a bag of cells
   * `(key, col, ts, seq, value)` spread over multiple generations; the
   * reference reconstructs the logical table with a serial k-way merge
-  * (CassandraParser.cpp:375-532). Here each semantic is a declarative
-  * plan over the cell bag:
+  * (CassandraParser.cpp:375-532). [[migrate]] does the same merge in
+  * parallel: [[mergeSSTables]] reads merge slices — ring ranges that
+  * span every generation, each heap-merged by key in its task — into
+  * one per-key kernel (LWW, tombstones, counter sums), with no shuffle
+  * at all when the SSTables carry Index.db and Statistics.db, and one
+  * hash exchange on key when they do not. Each semantic also stands as
+  * a declarative plan over the cell bag (the kernel's specification,
+  * and what the `events`-table queries below run):
   *
-  *  - generations are DataFrames; merging k of them is `union` — the
-  *    shuffle that follows costs the same for 1 or k inputs, so the
-  *    k-way merge is free at 100 TB instead of serial;
+  *  - generations are DataFrames; merging k of them is `union`
+  *    followed by one shuffle on the merge key;
   *  - last-write-wins (choose_latest_match, CassandraParser.cpp:316) is
   *    one ranking window over (key, col), ordered by (ts, seq) desc —
   *    a single hash shuffle, AQE-coalesced;
@@ -54,10 +60,11 @@ object Kv {
     * [[graft.sources.sstable.MaSSTableSource]]) and normalize into the
     * same cell-bag model the operators above consume. Partition/row
     * deletions and range-tombstone markers become [[TombstoneCol]]
-    * marker cells so [[applyRowTombstones]] + [[lww]] reproduce
-    * CassandraParser's merge; counter cells keep their flag so callers
-    * route them to SUM-merge ([[counterMerge]] semantics) instead of
-    * LWW. Cell timestamps are treated as µs epoch (the Cassandra
+    * marker cells so [[applyMarkerTombstones]] + [[lww]] reproduce
+    * CassandraParser's merge (each Data.db is scanned once: a decoded
+    * row yields its data cell, its marker, or both); counter cells
+    * keep their flag so callers route them to SUM-merge
+    * ([[counterMerge]] semantics) instead of LWW. Cell timestamps are treated as µs epoch (the Cassandra
     * convention). Cells with EQUAL timestamps across generations have
     * no defined winner — the reference keeps whichever generation it
     * scans first (choose_latest_match's strict `>`,
@@ -70,63 +77,68 @@ object Kv {
       verifyChecksums: Boolean = true,
       tokenRange: Option[(String, String)] = None,
       clusteringIdentity: Boolean = false): DataFrame = {
-    val withCols = spark.read
-      .format("graft.sources.sstable.MaSSTableSource")
-      .option("path", path)
-      .option("verifyChecksums", verifyChecksums.toString)
-      // Clustered-table mode: clustering values become part of each
-      // cell's column identity (see MaSSTableSource docs) so distinct
-      // rows survive the LWW merge below as distinct records.
-      .option("clusteringIdentity", clusteringIdentity.toString)
-    // An empty spec self-describes from each file's Statistics.db
-    // (the reference reads the schema there — SSTable.cpp:275).
-    val withSpec =
-      if (columnsSpec.trim.isEmpty) withCols
-      else withCols.option("columns", columnsSpec)
-    // A token slice ([min, max] in the partitioner's own token
-    // notation, either side empty for open) reaches the source's
-    // Index.db seek: each shard of a DISTRIBUTED migration reads only
-    // its ring slice of every SSTable (the source applies the exact
-    // per-cell residual as well, so indexless files return the same
-    // rows).
-    val withSlice = tokenRange.foldLeft(withSpec) { case (r, (lo, hi)) =>
-      val r2 = if (lo.nonEmpty) r.option("tokenMin", lo) else r
-      if (hi.nonEmpty) r2.option("tokenMax", hi) else r2
-    }
-    val raw = resumeKey.foldLeft(withSlice)((r, k) => r.option("resumeKey", k))
-      .load()
-    val data = raw.filter(!col("marker"))
+    val raw = readSSTables(spark, Seq(path), columnsSpec, resumeKey, verifyChecksums,
+      tokenRange, clusteringIdentity, mergeSlices = false)
+    // One scan: a decoded row yields its data cell (kind 0) unless it
+    // is a marker row, and its marker (kind 1) when it carries a
+    // deletion.
+    val marker = col("_kind") === 1
+    // Legacy ka range tombstones carry their column bounds (start name
+    // in col, end name in value — MaFormat.KaReader preserves the
+    // pair); they suppress only columns INSIDE [start, end]
+    // (update_tombstones, CassandraParser.cpp:337-372). Whole-key
+    // markers (ma markers, partition/row deletions) carry nulls.
+    val range = marker && col("marker") && col("col").isNotNull
+    raw.withColumn("_kind", explode(array(lit(0), lit(1))))
+      .filter(when(marker, col("deletion_ts").isNotNull).otherwise(!col("marker")))
       .select(
-        col("key"), col("col"),
-        timestamp_micros(col("ts")).as("ts"),
-        col("ts").as("seq"),
-        col("value"), col("ttl_s"), col("counter"),
+        col("key"),
+        when(marker, lit(TombstoneCol)).otherwise(col("col")).as("col"),
+        timestamp_micros(when(marker, col("deletion_ts")).otherwise(col("ts"))).as("ts"),
+        when(marker, col("deletion_ts")).otherwise(col("ts")).as("seq"),
+        when(!marker, col("value")).as("value"),
+        when(!marker, col("ttl_s")).as("ttl_s"),
+        (!marker && col("counter")).as("counter"),
         // Cell-level tombstones (IS_DELETED_MASK) ride the bag so LWW
         // can pick them as the winning version; the consumer then DROPS
         // deleted winners (the reference skips deleted cells at export,
         // CassandraParser.cpp:481 `!nextColumn.deleted`) — keeping them
         // in the merge is what makes them suppress older live values.
-        col("deleted"))
-    val markers = raw.filter(col("deletion_ts").isNotNull)
-      .select(
-        col("key"), lit(TombstoneCol).as("col"),
-        timestamp_micros(col("deletion_ts")).as("ts"),
-        col("deletion_ts").as("seq"),
-        lit(null).cast("binary").as("value"),
-        lit(null).cast("long").as("ttl_s"),
-        lit(false).as("counter"),
-        lit(true).as("deleted"),
-        // Legacy ka range tombstones carry their column bounds (start
-        // name in col, end name in value — MaFormat.KaReader preserves
-        // the pair); they suppress only columns INSIDE [start, end]
-        // (update_tombstones, CassandraParser.cpp:337-372). Whole-key
-        // markers (ma markers, partition/row deletions) carry nulls.
-        when(col("marker") && col("col").isNotNull, col("col")).as("range_start"),
-        when(col("marker") && col("col").isNotNull, col("value").cast("string")).as("range_end"))
-    data
-      .withColumn("range_start", lit(null).cast("string"))
-      .withColumn("range_end", lit(null).cast("string"))
-      .unionAll(markers)
+        (marker || col("deleted")).as("deleted"),
+        when(range, col("col")).as("range_start"),
+        when(range, col("value").cast("string")).as("range_end"))
+  }
+
+  /** The SSTable source over `paths`, with the scan options every
+    * reader here shares. A token slice ([min, max] in the
+    * partitioner's own token notation, either side empty for open)
+    * reaches the source's Index.db seek: each shard of a DISTRIBUTED
+    * migration reads only its ring slice of every SSTable (the source
+    * applies the exact per-cell residual as well, so indexless files
+    * return the same rows). */
+  private def readSSTables(
+      spark: SparkSession, paths: Seq[String], columnsSpec: String,
+      resumeKey: Option[String], verifyChecksums: Boolean,
+      tokenRange: Option[(String, String)], clusteringIdentity: Boolean,
+      mergeSlices: Boolean): DataFrame = {
+    val base = spark.read
+      .format("graft.sources.sstable.MaSSTableSource")
+      .option("verifyChecksums", verifyChecksums.toString)
+      // Clustered-table mode: clustering values become part of each
+      // cell's column identity (see MaSSTableSource docs) so distinct
+      // rows survive the LWW merge as distinct records.
+      .option("clusteringIdentity", clusteringIdentity.toString)
+      .option("mergeSlices", mergeSlices.toString)
+    // An empty spec self-describes from each file's Statistics.db
+    // (the reference reads the schema there — SSTable.cpp:275).
+    val withSpec =
+      if (columnsSpec.trim.isEmpty) base
+      else base.option("columns", columnsSpec)
+    val withSlice = tokenRange.foldLeft(withSpec) { case (r, (lo, hi)) =>
+      val r2 = if (lo.nonEmpty) r.option("tokenMin", lo) else r
+      if (hi.nonEmpty) r2.option("tokenMax", hi) else r2
+    }
+    resumeKey.foldLeft(withSlice)((r, k) => r.option("resumeKey", k)).load(paths: _*)
   }
 
   /** Tombstone application for SSTable cell bags ([[cellsFromSSTables]]
@@ -280,19 +292,6 @@ object Kv {
   private val minTtlUs: Long = 600L * 1000000L   // -L 600 seconds
   private val splitUs: Long  = 1705276800000000L // 2024-01-15T00:00:00Z
 
-  /** The reference's whole job as one call (Cassandra2Aerospike.cpp
-    * do_transfer): read SSTable directories (any supported format /
-    * compression, multi-directory = multi-generation), reconstruct the
-    * logical table (tombstones + LWW), apply the TTL policy flags, and
-    * create-only-append the survivors into the keyed target, returning
-    * the end-of-run statistics. `resumeKey` reproduces `-s` (scan only
-    * keys at-or-after the resume point in raw-key ring order);
-    * `dryRun` reproduces `-D` (render what WOULD be written, no write).
-    *
-    * At scale every step is the operators above: the SSTable scan
-    * parallelizes per file, the merge is one hash shuffle, policies are
-    * column arithmetic, and the create-only check is one key anti-join.
-    */
   /** The `-T` arguments for an N-worker fan-out: N contiguous,
     * disjoint, exhaustive murmur3 ring slices. Both slice ends are
     * INCLUSIVE (the `-T`/tokenMin/tokenMax contract), so consecutive
@@ -329,6 +328,60 @@ object Kv {
       .reduce(_ unionAll _)
       .orderBy("dir", "file")
 
+  /** The logical table of SSTable directories (multi-directory =
+    * multi-generation): one row per surviving (key, col) with the
+    * columns of [[lww]] over the [[cellsFromSSTables]] bag — key, col,
+    * ts, seq, value, ttl_s, counter, deleted — and exactly its rows:
+    * `lww(applyMarkerTombstones(bag))`, or [[mergeWithCounterSum]]'s
+    * with `counterSum` (default = reference parity: LWW even for
+    * counters; counterSum opts into the shard-summing merge a counter
+    * table actually needs). Deleted winners stay in, for the caller to
+    * drop and count.
+    *
+    * One scan over every generation feeds one per-key merge kernel
+    * (`GenerationMergeExec`). When every Data.db has an Index.db and a
+    * Statistics.db naming one partitioner, the scan plans merge slices
+    * — ring ranges that span all generations, heap-merged by key — so
+    * the plan has no exchange at all. Otherwise one hash exchange on
+    * key (plus a sort) groups the cells for the same kernel.
+    *
+    * The resume key reaches the SOURCE (Index.db seek skips whole
+    * partitions at plan time — the reference's `-s` Summary seek), as
+    * does the token slice of a sharded run (`-T`, each worker's ring
+    * range); the relational filter stays as the declarative form of
+    * the resume bound so the rows are right over any source. */
+  def mergeSSTables(
+      spark: SparkSession,
+      sstableDirs: Seq[String],
+      columnsSpec: String,
+      resumeKey: Option[String] = None,
+      verifyChecksums: Boolean = true,
+      tokenRange: Option[(String, String)] = None,
+      clusteringIdentity: Boolean = false,
+      counterSum: Boolean = false): DataFrame = {
+    val grouped = graft.sources.sstable.MaSSTableSource.mergeSlicesApply(spark, sstableDirs)
+    val cells = readSSTables(spark, sstableDirs, columnsSpec, resumeKey, verifyChecksums,
+        tokenRange, clusteringIdentity, mergeSlices = grouped)
+      .select(GenerationMergeApi.InputColumns.map(col): _*)
+      .transform(df => resumeKey.fold(df)(k => df.filter(col("key") >= k)))
+    GenerationMergeApi.merge(cells, counterSum, grouped)
+  }
+
+  /** The reference's whole job as one call (Cassandra2Aerospike.cpp
+    * do_transfer): read SSTable directories (any supported format /
+    * compression, multi-directory = multi-generation), reconstruct the
+    * logical table (tombstones + LWW), apply the TTL policy flags, and
+    * create-only-append the survivors into the keyed target, returning
+    * the end-of-run statistics. `resumeKey` reproduces `-s` (scan only
+    * keys at-or-after the resume point in raw-key ring order);
+    * `dryRun` reproduces `-D` (render what WOULD be written, no write).
+    *
+    * At scale: the merge is [[mergeSSTables]] — merge slices (one ring
+    * range of every generation per task) into the per-key kernel, no
+    * exchange; SSTables without Index.db/Statistics.db take one hash
+    * exchange on key into the same kernel. Policies are column
+    * arithmetic, and the create-only check is one key anti-join.
+    */
   def migrate(
       spark: SparkSession,
       sstableDirs: Seq[String],
@@ -342,20 +395,8 @@ object Kv {
       clusteringIdentity: Boolean = false,
       counterSum: Boolean = false,
       sinceTsUs: Option[Long] = None): Either[DataFrame, graft.sinks.KeyedSink.WriteStats] = {
-    // The resume key reaches the SOURCE (Index.db seek skips whole
-    // partitions at plan time — the reference's `-s` Summary seek), as
-    // does the token slice of a sharded run (`-T`, each worker's ring
-    // range); the relational filter stays as the declarative form of
-    // the resume bound so the plan is correct over any source.
-    val bags = sstableDirs.map(
-      cellsFromSSTables(spark, _, columnsSpec, resumeKey, verifyChecksums,
-        tokenRange, clusteringIdentity))
-    val bag = applyMarkerTombstones(
-      bags.reduce(_ unionAll _)
-        .transform(df => resumeKey.fold(df)(k => df.filter(col("key") >= k))))
-    // Default = reference parity (LWW even for counters); counterSum
-    // opts into the shard-summing merge a counter table actually needs.
-    val merged = if (counterSum) mergeWithCounterSum(bag) else lww(bag)
+    val merged = mergeSSTables(spark, sstableDirs, columnsSpec, resumeKey,
+      verifyChecksums, tokenRange, clusteringIdentity, counterSum)
     // A cell whose WINNING version is a cell-tombstone is dead — the
     // reference drops it at export and counts it skipped
     // (CassandraParser.cpp:481,524); exporting the null-valued winner

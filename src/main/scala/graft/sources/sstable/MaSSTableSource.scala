@@ -27,7 +27,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * options only make sense for single-generation reads.
   *
   * Options:
-  *  - `path`: file or directory of `*-Data.db` files
+  *  - `path`: file or directory of `*-Data.db` files; several via
+  *    `load(paths: _*)` (the `paths` option Spark sets for them)
   *  - `columns`: the regular-column schema, e.g. `"click:text,count:long"`
   *    (read from Statistics.db when present, SSTableSchema.cpp);
   *    complex collections spell as `tags:set<text>`, `log:list<long>`,
@@ -80,6 +81,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *    chunk-granularly via the CompressionInfo offsets. A file with no
   *    Index.db stays one split — the format is a stream and has no
   *    other safe cut points.
+  *  - `mergeSlices` (set by [[graft.kv.Kv.migrate]] when
+  *    [[MaSSTableSource.mergeSlicesApply]] holds): plan merge slices —
+  *    each input partition one range of the token ring across every
+  *    file, its files' ranges heap-merged by partition key, so all
+  *    cells of a key arrive adjacent in one task (see
+  *    `MaScan.planMergeSlices`). A key out of ring order fails the read
+  *    with a [[RingOrderException]]
   *
   * Scale shape: without splitting, a multi-hundred-GB SSTable is one
   * task; with Index.db present the parallelism ceiling is
@@ -168,12 +176,15 @@ object MaSSTableSource {
   }
 
   /** The Data.db files a planned scan will actually open (one entry
-    * per input split) — how tests observe file-level ring pruning. */
+    * per file range; a merge slice contributes one per file it reads)
+    * — how tests observe file-level ring pruning. */
   def scanPartitionFiles(scan: org.apache.spark.sql.connector.read.Scan)
       : Option[Seq[String]] = scan match {
     case m: MaScan =>
-      Some(m.planInputPartitions().toSeq
-        .map(_.asInstanceOf[MaInputPartition].file))
+      Some(m.planInputPartitions().toSeq.flatMap {
+        case p: MaInputPartition => Seq(p.file)
+        case s: MaMergeSlice => s.ranges.toSeq.map(_.file)
+      })
     case _ => None
   }
 
@@ -235,6 +246,58 @@ object MaSSTableSource {
         k => compareBytes(graft.functions.CassandraRandomMd5.tokenBytes(k), b)
       case other => throw new IllegalArgumentException(
         s"unknown partitioner: $other (byteOrdered | murmur3 | random)")
+    }
+
+  /** A byte string per key whose unsigned lexicographic order
+    * ([[compareBytes]]) is the [[ringCompare]] order: the token in a
+    * fixed-width, order-preserving encoding, then the raw key. Merge
+    * slices compute it once per partition and compare bytes after. */
+  def ringSortKey(partitioner: String): Array[Byte] => Array[Byte] =
+    partitioner match {
+      case "byteOrdered" => k => k
+      case "murmur3" => k =>
+        // Flipping the sign bit makes the signed token sort unsigned.
+        val t = graft.functions.CassandraMurmur3.token(k) ^ Long.MinValue
+        val out = new Array[Byte](8 + k.length)
+        var i = 0
+        while (i < 8) { out(i) = (t >>> (56 - 8 * i)).toByte; i += 1 }
+        System.arraycopy(k, 0, out, 8, k.length)
+        out
+      case "random" => k => graft.functions.CassandraRandomMd5.tokenBytes(k) ++ k
+      case other => throw new IllegalArgumentException(
+        s"unknown partitioner: $other (byteOrdered | murmur3 | random)")
+    }
+
+  /** Can [[graft.kv.Kv.migrate]] read `paths` as merge slices? True when
+    * every Data.db under them has an Index.db and a Statistics.db, and
+    * those Statistics.db files all name the same partitioner. Only
+    * sibling metadata is opened; a file whose Statistics.db does not
+    * parse answers false, so the ordinary scan reports it. */
+  def mergeSlicesApply(spark: org.apache.spark.sql.SparkSession, paths: Seq[String]): Boolean =
+    mergePartitioner(paths.flatMap(listDataFiles(spark.sparkContext, _)),
+      spark.sparkContext.hadoopConfiguration).isDefined
+
+  /** The partitioner of a merge-slice read of `files`: the one all
+    * their Statistics.db name, when every file also has an Index.db. */
+  private[sstable] def mergePartitioner(
+      files: Seq[String], conf: org.apache.hadoop.conf.Configuration): Option[String] = {
+    val declared = files.map { f =>
+      val fs = new Path(f).getFileSystem(conf)
+      if (!fs.exists(new Path(f.stripSuffix("Data.db") + "Index.db"))) None
+      else scala.util.Try(statsFor(f, fs)).toOption.flatten.flatMap(_.partitioner)
+    }.distinct
+    if (declared.size == 1) declared.head else None
+  }
+
+  /** The input paths of a scan: `paths` (the JSON array
+    * `DataFrameReader.load(paths: _*)` sets for several) or `path`. */
+  private[sstable] def inputPaths(options: Map[String, String]): Seq[String] =
+    options.get("paths") match {
+      case Some(json) =>
+        new com.fasterxml.jackson.databind.ObjectMapper()
+          .readValue(json, classOf[Array[String]]).toSeq
+      case None => Seq(options.getOrElse("path",
+        throw new IllegalArgumentException("path option required")))
     }
 
   def listDataFiles(spark: org.apache.spark.SparkContext, path: String): Seq[String] = {
@@ -439,7 +502,8 @@ object MaSSTableSource {
 
 private[sstable] class MaTable(private[sstable] val props: Map[String, String])
     extends Table with SupportsRead {
-  override def name(): String = s"ma-sstable(${props.getOrElse("path", "?")})"
+  override def name(): String =
+    s"ma-sstable(${scala.util.Try(MaSSTableSource.inputPaths(props).mkString(", ")).getOrElse("?")})"
   // Standard DSv2 surface for the effective options — also how tests
   // (and EXPLAIN readers) observe a pushed ring slice.
   override def properties(): util.Map[String, String] = props.asJava
@@ -508,15 +572,121 @@ private[sstable] class MaScan(
   override def toBatch: Batch = this
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val path = options.getOrElse("path",
-      throw new IllegalArgumentException("path option required"))
     val splitBytes = options.getOrElse("splitBytes", (128L * 1024 * 1024).toString).toLong
     val resumeKey = options.get("resumeKey")
       .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val spark = org.apache.spark.sql.SparkSession.active
     val conf = spark.sparkContext.hadoopConfiguration
-    MaSSTableSource.listDataFiles(spark.sparkContext, path)
-      .flatMap(planSplits(_, splitBytes, resumeKey, conf)).toArray
+    val files = MaSSTableSource.inputPaths(options)
+      .flatMap(MaSSTableSource.listDataFiles(spark.sparkContext, _))
+    if (options.get("mergeSlices").contains("true"))
+      planMergeSlices(files, splitBytes, resumeKey, spark.sparkContext.defaultParallelism, conf)
+    else files.flatMap(planSplits(_, splitBytes, resumeKey, conf)).toArray
+  }
+
+  /** The resume/slice bounds of the scan in one partitioner's ring
+    * order. */
+  private final class RingBounds(partitioner: String, resumeKey: Option[Array[Byte]]) {
+    private val ringGe = MaSSTableSource.ringCompare(partitioner) _
+    private val cmpMin = options.get("tokenMin").filter(_.nonEmpty)
+      .map(MaSSTableSource.tokenCompare(partitioner, _))
+    private val cmpMax = options.get("tokenMax").filter(_.nonEmpty)
+      .map(MaSSTableSource.tokenCompare(partitioner, _))
+    /** Some bound narrows the scan. */
+    val narrowed: Boolean = resumeKey.isDefined || cmpMin.isDefined || cmpMax.isDefined
+    /** The scan starts past the ring's first key. */
+    val seeks: Boolean = resumeKey.isDefined || cmpMin.isDefined
+    def inStart(k: Array[Byte]): Boolean =
+      resumeKey.forall(rk => ringGe(k, rk) >= 0) && cmpMin.forall(_(k) >= 0)
+    def pastEnd(k: Array[Byte]): Boolean = cmpMax.exists(_(k) > 0)
+  }
+
+  private def sibling(file: String, component: String): Path =
+    new Path(file.stripSuffix("Data.db") + component)
+
+  private def uncompressedLen(file: String, fs: org.apache.hadoop.fs.FileSystem): Long = {
+    val ciPath = sibling(file, "CompressionInfo.db")
+    if (fs.exists(ciPath)) {
+      val in = fs.open(ciPath)
+      try CompressedBlocks.readCompressionInfo(in).uncompressedLen finally in.close()
+    } else fs.getFileStatus(new Path(file)).getLen
+  }
+
+  /** FILE-level ring pruning: the Summary's trailing (first, last)
+    * keys bound the whole file's ring range (SSTables are written in
+    * ring order), so a sharded worker (-T) or resumed scan skips a
+    * non-overlapping SSTable without opening its Index.db at all —
+    * at 1000 executors × 1/N slices this is the difference between
+    * "every worker touches every file's index" and "each worker plans
+    * only its own files". Even an index-less file is skipped on its
+    * bounds. Purely an optimization: the index seek (and the caller's
+    * residual filter) excludes the same partitions anyway, and files
+    * without readable bounds are never skipped. */
+  private def outsideBounds(
+      file: String, version: String, fs: org.apache.hadoop.fs.FileSystem,
+      b: RingBounds): Boolean = {
+    val sumPath = sibling(file, "Summary.db")
+    b.narrowed && fs.exists(sumPath) && {
+      val sin = fs.open(sumPath)
+      val bounds = try MaFormat.readSummaryBounds(sin, version) finally sin.close()
+      bounds.exists { case (firstKey, lastKey) =>
+        !b.inStart(lastKey) ||  // even the ring-greatest key precedes the start
+          b.pastEnd(firstKey)   // even the ring-least key is past the end
+      }
+    }
+  }
+
+  /** Where the index pass of a seeking scan may start reading Index.db.
+    * Summary.db floor (the reference's find_partition_in_summary,
+    * SSTable.cpp:121-180): the last SAMPLED entry strictly before the
+    * seek target is a safe place to start reading the index — every
+    * skipped index byte belongs to partitions the slice excludes
+    * anyway. Without a summary the index is read from byte 0 (still
+    * streamed, never materialized).
+    *
+    * The summary is PURELY an optimization (the index pass re-checks
+    * every entry), so a truncated/corrupt Summary.db degrades to the
+    * always-safe scan-from-0, never aborts the query a plain Index.db
+    * could have planned. Parsing alone is not enough of a guard: a
+    * summary that PARSES but carries a stale position would land the
+    * seek mid-entry and the index stream would misparse silently — so
+    * the candidate position is verified by actually reading the index
+    * entry there and checking it is the very key the summary
+    * sampled. */
+  private def indexSeekFloor(
+      file: String, version: String, fs: org.apache.hadoop.fs.FileSystem,
+      b: RingBounds): Long = {
+    val sumPath = sibling(file, "Summary.db")
+    val idxPath = sibling(file, "Index.db")
+    if (!b.seeks || !fs.exists(sumPath)) 0L
+    else scala.util.Try {
+      val sin = fs.open(sumPath)
+      val summary =
+        try MaFormat.readSummary(sin, version)
+        finally sin.close()
+      // inStart is monotone along the summary's ring order
+      // (false* true*) — binary-search the last false.
+      var lo = 0
+      var hi = summary.length - 1
+      var floor = -1
+      while (lo <= hi) {
+        val mid = (lo + hi) >>> 1
+        if (!b.inStart(summary(mid)._1)) { floor = mid; lo = mid + 1 } else hi = mid - 1
+      }
+      if (floor < 0) 0L
+      else {
+        val pos = summary(floor)._2
+        require(pos >= 0 && pos < fs.getFileStatus(idxPath).getLen,
+          s"summary position $pos outside Index.db")
+        val vin = fs.open(idxPath)
+        val firstKey =
+          try { vin.seek(pos); MaFormat.indexEntries(vin, version).next()._1 }
+          finally vin.close()
+        require(java.util.Arrays.equals(firstKey, summary(floor)._1),
+          "summary position does not point at its sampled key")
+        pos
+      }
+    }.getOrElse(0L)
   }
 
   /** Split one Data.db at Index.db partition boundaries: pick the first
@@ -534,104 +704,26 @@ private[sstable] class MaScan(
     val dataPath = new Path(file)
     val fs = dataPath.getFileSystem(conf)
     val version = MaSSTableSource.versionOf(dataPath.getName)
-    val tokenMin = options.get("tokenMin").filter(_.nonEmpty)
-    val tokenMax = options.get("tokenMax").filter(_.nonEmpty)
+    val sliced = options.get("tokenMin").exists(_.nonEmpty) ||
+      options.get("tokenMax").exists(_.nonEmpty)
     // Ring order for the resume/slice seek: explicit option, else the
     // partitioner recorded in this file's own Statistics.db (the
     // reference's read_metadata VALIDATION component).
     val partitioner = options.getOrElse("partitioner",
-      (if (resumeKey.isDefined || tokenMin.isDefined || tokenMax.isDefined)
+      (if (resumeKey.isDefined || sliced)
          MaSSTableSource.statsFor(file, fs).flatMap(_.partitioner)
        else None).getOrElse("byteOrdered"))
-    val ringGe = MaSSTableSource.ringCompare(partitioner) _
-    val cmpMin = tokenMin.map(MaSSTableSource.tokenCompare(partitioner, _))
-    val cmpMax = tokenMax.map(MaSSTableSource.tokenCompare(partitioner, _))
-    def inStart(k: Array[Byte]): Boolean =
-      resumeKey.forall(rk => ringGe(k, rk) >= 0) && cmpMin.forall(_(k) >= 0)
-    val sumPath = new Path(file.stripSuffix("Data.db") + "Summary.db")
-    // FILE-level ring pruning: the Summary's trailing (first, last)
-    // keys bound the whole file's ring range (SSTables are written in
-    // ring order), so a sharded worker (-T) or resumed scan skips a
-    // non-overlapping SSTable without opening its Index.db at all —
-    // at 1000 executors × 1/N slices this is the difference between
-    // "every worker touches every file's index" and "each worker
-    // plans only its own files". Runs BEFORE the index check, so even
-    // an index-less file is skipped on its bounds. Purely an
-    // optimization: the index seek below (and the caller's residual
-    // filter) excludes the same partitions anyway, and files without
-    // readable bounds take that path unchanged.
-    if ((resumeKey.isDefined || cmpMin.isDefined || cmpMax.isDefined) &&
-        fs.exists(sumPath)) {
-      val bounds = {
-        val sin = fs.open(sumPath)
-        try MaFormat.readSummaryBounds(sin, version) finally sin.close()
-      }
-      val skipWholeFile = bounds.exists { case (firstKey, lastKey) =>
-        !inStart(lastKey) ||          // even the ring-greatest key precedes the start
-          cmpMax.exists(_(firstKey) > 0) // even the ring-least key is past the end
-      }
-      if (skipWholeFile) return Seq.empty
-    }
-    val idxPath = new Path(file.stripSuffix("Data.db") + "Index.db")
+    val b = new RingBounds(partitioner, resumeKey)
+    if (outsideBounds(file, version, fs, b)) return Seq.empty
+    val idxPath = sibling(file, "Index.db")
     val whole = Seq(MaInputPartition(file, 0L, Long.MaxValue))
     if (!fs.exists(idxPath)) return whole
-    val ciPath = new Path(file.stripSuffix("Data.db") + "CompressionInfo.db")
-    val totalUncompressed =
-      if (fs.exists(ciPath)) {
-        val in = fs.open(ciPath)
-        try CompressedBlocks.readCompressionInfo(in).uncompressedLen finally in.close()
-      } else fs.getFileStatus(dataPath).getLen
+    val totalUncompressed = uncompressedLen(file, fs)
     // Seek: the index is written in the table's ring/key order, so the
     // first entry at-or-after the resume key / token-slice start is the
     // scan start and the first entry PAST the slice end caps it — every
     // partition outside [start, cap) is never read at all.
-    // Summary.db floor (the reference's find_partition_in_summary,
-    // SSTable.cpp:121-180): the last SAMPLED entry strictly before the
-    // seek target is a safe place to start reading the index — every
-    // skipped index byte belongs to partitions the slice excludes
-    // anyway. Without it a seek scans the index from byte 0 (still
-    // streamed, never materialized).
-    val indexSeek: Long =
-      if ((resumeKey.isDefined || tokenMin.isDefined) && fs.exists(sumPath)) {
-        // The summary is PURELY an optimization (the index pass below
-        // re-checks every entry), so a truncated/corrupt Summary.db
-        // must degrade to the always-safe scan-from-0, never abort
-        // the query a plain Index.db could have planned. Parsing alone
-        // is not enough of a guard: a summary that PARSES but carries a
-        // stale position would land the seek mid-entry and the index
-        // stream would misparse silently — so the candidate position is
-        // verified by actually reading the index entry there and
-        // checking it is the very key the summary sampled.
-        val floorPos = scala.util.Try {
-          val sin = fs.open(sumPath)
-          val summary =
-            try MaFormat.readSummary(sin, version)
-            finally sin.close()
-          // inStart is monotone along the summary's ring order
-          // (false* true*) — binary-search the last false.
-          var lo = 0
-          var hi = summary.length - 1
-          var floor = -1
-          while (lo <= hi) {
-            val mid = (lo + hi) >>> 1
-            if (!inStart(summary(mid)._1)) { floor = mid; lo = mid + 1 } else hi = mid - 1
-          }
-          if (floor < 0) 0L
-          else {
-            val pos = summary(floor)._2
-            require(pos >= 0 && pos < fs.getFileStatus(idxPath).getLen,
-              s"summary position $pos outside Index.db")
-            val vin = fs.open(idxPath)
-            val firstKey =
-              try { vin.seek(pos); MaFormat.indexEntries(vin, version).next()._1 }
-              finally vin.close()
-            require(java.util.Arrays.equals(firstKey, summary(floor)._1),
-              "summary position does not point at its sampled key")
-            pos
-          }
-        }
-        floorPos.getOrElse(0L)
-      } else 0L
+    val indexSeek = indexSeekFloor(file, version, fs, b)
     // One streaming pass over the (remaining) index — O(#splits)
     // retained: scan start, split cuts at every splitBytes of
     // uncompressed payload, and the cap position.
@@ -647,9 +739,9 @@ private[sstable] class MaScan(
       var done = false
       while (!done && it.hasNext) {
         val (k, p) = it.next()
-        if (cmpMax.exists(_(k) > 0)) { endCap = p; done = true }
+        if (b.pastEnd(k)) { endCap = p; done = true }
         else if (seekStart < 0) {
-          if (inStart(k)) { seekStart = p; nextTarget = p + splitBytes }
+          if (b.inStart(k)) { seekStart = p; nextTarget = p + splitBytes }
         } else if (p >= nextTarget) { bounds += p; nextTarget = p + splitBytes }
       }
       if (seekStart < 0) return Nil // slice empty or wholly before/past the file
@@ -660,6 +752,155 @@ private[sstable] class MaScan(
       cuts.zipAll(cuts.drop(1), 0L, endCap).map {
         case (start, end) => MaInputPartition(file, start, end)
       }
+    } finally fin.close()
+  }
+
+  /** Merge slices: input partitions that each cover one contiguous
+    * range of the token ring across EVERY file, so all cells of a key,
+    * from every generation, land in one task (the reference's k-way
+    * merge over token-sorted SSTables, CassandraParser.cpp:375-532,
+    * cut into ring ranges). Every file needs an Index.db and a
+    * Statistics.db, all naming one partitioner.
+    *
+    *  - Cut keys are ring-order quantiles of the files' Summary.db
+    *    samples (of their Index.db entries when a file has none);
+    *    `max(defaultParallelism, uncompressed bytes / splitBytes)`
+    *    slices.
+    *  - One streaming pass per Index.db assigns each file's partitions
+    *    to slices as byte ranges, narrowed by the resume/token bounds
+    *    exactly as [[planSplits]] narrows them, and checks that the
+    *    index keys ascend in ring order.
+    *  - The reader ([[MergedCells]]) heap-merges the ranges of a slice
+    *    by partition key and fails with a [[RingOrderException]] on a
+    *    Data.db key out of ring order or outside its slice. */
+  private def planMergeSlices(
+      files: Seq[String], splitBytes: Long, resumeKey: Option[Array[Byte]],
+      parallelism: Int, conf: org.apache.hadoop.conf.Configuration): Array[InputPartition] = {
+    val fs = (f: String) => new Path(f).getFileSystem(conf)
+    val partitioner = options.getOrElse("partitioner",
+      MaSSTableSource.mergePartitioner(files, conf).getOrElse(
+        throw new IllegalStateException("merge slices need an Index.db and a " +
+          "Statistics.db naming one partitioner beside every Data.db under " +
+          MaSSTableSource.inputPaths(options).mkString(", "))))
+    val sortKey = MaSSTableSource.ringSortKey(partitioner)
+    val b = new RingBounds(partitioner, resumeKey)
+    val live = files.filterNot(f =>
+      outsideBounds(f, MaSSTableSource.versionOf(new Path(f).getName), fs(f), b))
+    val samples = live.flatMap(f => sampleKeys(f, fs(f)))
+      .filter(k => b.inStart(k) && !b.pastEnd(k))
+      .map(sortKey)
+      .sortWith(MaSSTableSource.compareBytes(_, _) < 0)
+    val bytes = live.map(f => uncompressedLen(f, fs(f))).sum
+    val nSlices = math.min(math.max(parallelism.toLong, bytes / splitBytes), samples.size.toLong)
+    val cuts = {
+      val picked = (1L until nSlices).map(i => samples((i * samples.size / nSlices).toInt))
+      picked.headOption.toSeq ++ picked.sliding(2).collect {
+        case Seq(a, c) if MaSSTableSource.compareBytes(a, c) < 0 => c
+      }
+    }.toArray
+    val perSlice = Array.fill(cuts.length + 1)(Seq.newBuilder[MaInputPartition])
+    live.foreach(f => mergeRanges(f, fs(f), cuts, sortKey, b, partitioner).foreach {
+      case (slice, range) => perSlice(slice) += range
+    })
+    perSlice.indices.flatMap { i =>
+      val ranges = perSlice(i).result()
+      if (ranges.isEmpty) None
+      else Some(MaMergeSlice(ranges.toArray, partitioner,
+        if (i == 0) null else cuts(i - 1),
+        if (i == cuts.length) null else cuts(i)))
+    }.toArray
+  }
+
+  /** Ring-order samples of one file's keys: its Summary.db entries, or
+    * — without a readable summary — every n-th Index.db entry, n
+    * doubling whenever more than 4096 are kept (bounded memory over a
+    * multi-million-entry index). */
+  private def sampleKeys(file: String, fs: org.apache.hadoop.fs.FileSystem): Seq[Array[Byte]] = {
+    val version = MaSSTableSource.versionOf(new Path(file).getName)
+    val sumPath = sibling(file, "Summary.db")
+    val fromSummary =
+      if (!fs.exists(sumPath)) None
+      else scala.util.Try {
+        val in = fs.open(sumPath)
+        try MaFormat.readSummary(in, version).map(_._1).toSeq finally in.close()
+      }.toOption
+    fromSummary.getOrElse {
+      val in = fs.open(sibling(file, "Index.db"))
+      try {
+        var kept = Vector.empty[Array[Byte]]
+        var step = 1L
+        var n = 0L
+        MaFormat.indexEntries(in, version).foreach { case (k, _) =>
+          if (n % step == 0) kept :+= k
+          n += 1
+          if (kept.size > 4096) {
+            kept = kept.zipWithIndex.collect { case (s, i) if i % 2 == 0 => s }
+            step *= 2
+          }
+        }
+        kept
+      } finally in.close()
+    }
+  }
+
+  /** One file's byte ranges per merge slice, from one streaming pass
+    * over its Index.db (from the summary floor when the scan seeks).
+    * Consecutive index keys must ascend in the ring order, and their
+    * positions too: anything else is a [[RingOrderException]], never a
+    * silent mis-merge. */
+  private def mergeRanges(
+      file: String, fs: org.apache.hadoop.fs.FileSystem, cuts: Array[Array[Byte]],
+      sortKey: Array[Byte] => Array[Byte], b: RingBounds,
+      partitioner: String): Seq[(Int, MaInputPartition)] = {
+    val version = MaSSTableSource.versionOf(new Path(file).getName)
+    val idxPath = sibling(file, "Index.db")
+    // The slice of a key: the number of cut keys at or before it.
+    def sliceOf(sk: Array[Byte]): Int = {
+      var lo = 0
+      var hi = cuts.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (MaSSTableSource.compareBytes(cuts(mid), sk) <= 0) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
+    val seek = indexSeekFloor(file, version, fs, b)
+    val fin = fs.open(idxPath)
+    try {
+      if (seek > 0) fin.seek(seek)
+      val it = MaFormat.indexEntries(fin, version)
+      // An empty index over a non-empty Data.db: one whole-file range;
+      // the reader's slice check fails loudly on any key it does not own.
+      if (!it.hasNext && seek == 0)
+        return if (fs.getFileStatus(new Path(file)).getLen == 0) Nil
+               else Seq(0 -> MaInputPartition(file, 0L, Long.MaxValue))
+      val out = Seq.newBuilder[(Int, MaInputPartition)]
+      var prevKey: Array[Byte] = null
+      var prevSort: Array[Byte] = null
+      var prevPos = -1L
+      var slice = -1
+      var start = 0L
+      var endCap = Long.MaxValue
+      var done = false
+      while (!done && it.hasNext) {
+        val (k, p) = it.next()
+        val sk = sortKey(k)
+        if (prevSort != null &&
+            (MaSSTableSource.compareBytes(prevSort, sk) >= 0 || p <= prevPos))
+          throw RingOrderException.outOfOrder(idxPath.toString, p, prevKey, k, partitioner)
+        prevKey = k; prevSort = sk; prevPos = p
+        if (b.pastEnd(k)) { endCap = p; done = true }
+        else if (b.inStart(k)) {
+          val s = sliceOf(sk)
+          if (s != slice) {
+            if (slice >= 0) out += slice -> MaInputPartition(file, start, p)
+            slice = s
+            start = p
+          }
+        }
+      }
+      if (slice >= 0) out += slice -> MaInputPartition(file, start, endCap)
+      out.result()
     } finally fin.close()
   }
 
@@ -679,6 +920,35 @@ private[sstable] class MaScan(
   * reads to EOF). */
 private[sstable] case class MaInputPartition(
     file: String, start: Long = 0L, end: Long = Long.MaxValue) extends InputPartition
+
+/** One merge slice: a byte range of every file that holds keys of the
+  * ring range [lo, hi) (bounds as [[MaSSTableSource.ringSortKey]]
+  * bytes, null for an open end). */
+private[sstable] case class MaMergeSlice(
+    ranges: Array[MaInputPartition], partitioner: String,
+    lo: Array[Byte], hi: Array[Byte]) extends InputPartition
+
+/** A partition key out of its partitioner's ring order — in an Index.db
+  * or a Data.db read as merge slices. Merging such a file would
+  * silently split or duplicate keys, so the read stops instead. */
+final class RingOrderException(message: String) extends IllegalStateException(message)
+
+object RingOrderException {
+  private def show(k: Array[Byte]): String =
+    new String(k, java.nio.charset.StandardCharsets.UTF_8)
+
+  def outOfOrder(file: String, offset: Long, previous: Array[Byte], key: Array[Byte],
+      partitioner: String): RingOrderException =
+    new RingOrderException(s"$file: partition key '${show(key)}' at offset $offset " +
+      s"is not after the preceding key '${show(previous)}' in $partitioner ring order")
+
+  def outsideSlice(file: String, offset: Long, key: Array[Byte], bound: Array[Byte],
+      before: Boolean, partitioner: String): RingOrderException =
+    new RingOrderException(s"$file: partition key '${show(key)}' at offset $offset " +
+      (if (before) s"precedes its merge slice's first key '${show(bound)}'"
+       else s"is at or past its merge slice's end key '${show(bound)}'") +
+      s" in $partitioner ring order")
+}
 
 /** Counts consumed bytes so the row reader can stop at its split's end
   * offset; `count` starts at the split's absolute start position. */
@@ -725,170 +995,281 @@ private[sstable] class MaReaderFactory(
   private def opt(name: String): Option[String] =
     options.get(name).filter(_.trim.nonEmpty)
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val MaInputPartition(file, splitStart, splitEnd) =
-      partition.asInstanceOf[MaInputPartition]
-    val resumeKeySpec = options.getOrElse("resumeKey", "")
-    val verifyChecksums = options.getOrElse("verifyChecksums", "true").toBoolean
-    new PartitionReader[InternalRow] {
-      private val path = new Path(file)
-      private val fs = path.getFileSystem(hadoopConf.value)
-      // Per-file metadata: explicit options win; a sibling
-      // Statistics.db supplies the rest (reference read_metadata,
-      // SSTable.cpp:275). The delta bases in particular are PER FILE —
-      // generations of one table each carry their own — so the
-      // stats-discovered values are the only correct ones for a
-      // multi-generation directory read.
-      private val stats: Option[StatsFile.TableMeta] =
-        MaSSTableSource.statsFor(file, fs)
-      private val version = MaSSTableSource.versionOf(path.getName)
-      private val columns: Seq[(String, MaFormat.ColType)] =
-        opt("columns").map(parseColumns)
-          .orElse(stats.flatMap(_.columns))
-          .getOrElse {
-            // Legacy ja/ka framing is self-describing; only the "ma"
-            // row format needs the column list to frame values.
-            if (version >= "ma") throw new IllegalArgumentException(
-              s"no `columns` option and no readable sibling Statistics.db for $file")
-            Nil
-          }
-      private val clustering: Seq[MaFormat.ColType] =
-        opt("clustering")
-          .map(_.split(",").toSeq.map(t => MaFormat.colType(t.trim)))
-          .orElse(stats.map(_.clustering)).getOrElse(Nil)
-      private val staticColumns: Seq[(String, MaFormat.ColType)] =
-        opt("staticColumns").map(parseColumns)
-          .orElse(stats.map(_.staticColumns)).getOrElse(Nil)
-      private val minTimestamp: Long =
-        opt("minTimestamp").map(_.toLong)
-          .orElse(stats.map(_.minTimestamp)).getOrElse(0L)
-      private val minTtl: Long =
-        opt("minTtl").map(_.toLong)
-          .orElse(stats.map(_.minTtl)).getOrElse(0L)
-      private val partitioner: String =
-        opt("partitioner")
-          .orElse(stats.flatMap(_.partitioner)).getOrElse("byteOrdered")
-      private val raw = fs.open(path)
-      // A sibling CompressionInfo.db means the Data.db is
-      // chunk-compressed (the Cassandra default) — layer the block
-      // decoder under the format reader transparently.
-      private val ciPath = new Path(
-        file.stripSuffix("Data.db") + "CompressionInfo.db")
-      private val in: CountingInputStream = {
-        val (base, basePos): (java.io.InputStream, Long) =
-          if (fs.exists(ciPath)) {
-            val ciIn = fs.open(ciPath)
-            val info = try CompressedBlocks.readCompressionInfo(ciIn) finally ciIn.close()
-            // Mid-file start: jump the RAW stream to the chunk holding
-            // the split's start offset (the chunk-granular seek the
-            // CompressionInfo offsets enable), then decompress forward.
-            val startChunk = (splitStart / info.chunkLen).toInt
-            if (startChunk > 0) raw.seek(info.offsets(startChunk))
-            // Checksum regime per format version (SSTable.cpp:102-104):
-            // Adler32 over compressed bytes for jb..la, CRC32 over
-            // compressed bytes for ma+, CRC32 over UNCOMPRESSED bytes
-            // before jb.
-            (new CompressedBlocks.ChunkedInputStream(
-              raw, info, fs.getFileStatus(path).getLen,
-              useCrc32 = version >= "ma" || version < "jb",
-              checksumCompressed = version >= "jb",
-              startChunk = startChunk,
-              verify = verifyChecksums),
-              startChunk.toLong * info.chunkLen)
-          } else {
-            if (splitStart > 0) raw.seek(splitStart)
-            (raw, splitStart)
-          }
-        val cis = new CountingInputStream(base, basePos)
-        // Discard the in-chunk remainder between the chunk boundary and
-        // the split's partition-start offset.
-        val garbage = new Array[Byte](65536)
-        while (cis.count < splitStart) {
-          val n = cis.read(garbage, 0,
-            math.min(splitStart - cis.count, garbage.length.toLong).toInt)
-          require(n > 0, s"EOF before split start $splitStart in $file")
-        }
-        cis
-      }
-      // Stop at the first partition boundary at or past the split end.
-      private val stop = () => in.count >= splitEnd
-      private val clusteringIdentity =
-        options.getOrElse("clusteringIdentity", "false").toBoolean
-      private val cells: Iterator[MaFormat.MaCell] =
-        if (version >= "ma")
-          new MaFormat.Reader(in, columns, minTimestamp, minTtl,
-            clustering, staticColumns, stop, clusteringIdentity)
-        else new MaFormat.KaReader(in, stop, clusteringIdentity, version)
-      private var current: MaFormat.MaCell = _
-
-      // Project only the pruned columns into the output row.
-      private val fieldIdx = requiredFields.map(
-        MaSSTableSource.OutputSchema.fieldNames.indexOf(_))
-
-      /** Keys surface as StringType (the KV operators compare and
-        * resume on them as text); Cassandra keys are arbitrary bytes,
-        * so REJECT non-UTF8 keys loudly — silently mangling them via
-        * replacement chars could merge distinct keys. ASCII fast path;
-        * non-ASCII keys pay one round-trip validation. */
-      private def keyString(b: Array[Byte]): UTF8String = {
-        var i = 0
-        var ascii = true
-        while (i < b.length && ascii) { if (b(i) < 0) ascii = false; i += 1 }
-        if (!ascii &&
-            !java.util.Arrays.equals(
-              UTF8String.fromBytes(b).toString.getBytes("UTF-8"), b))
-          throw new IllegalArgumentException(
-            s"non-UTF8 partition key in $file (${b.length} bytes): this source " +
-              "exposes keys as text; binary-keyed tables are not supported")
-        UTF8String.fromBytes(b)
-      }
-
-      // Residual resume/slice filters: the Index.db seek skips whole
-      // partitions at plan time, but an indexless file (or the boundary
-      // partitions of an indexed one) still needs the exact key/token
-      // bounds applied per cell.
-      private val resumeKeyBytes: Array[Byte] =
-        if (resumeKeySpec.isEmpty) null
-        else resumeKeySpec.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-
-      private val ringGe = MaSSTableSource.ringCompare(partitioner) _
-      private val tokenMinCmp: Array[Byte] => Int =
-        options.get("tokenMin").filter(_.nonEmpty)
-          .map(MaSSTableSource.tokenCompare(partitioner, _)).orNull
-      private val tokenMaxCmp: Array[Byte] => Int =
-        options.get("tokenMax").filter(_.nonEmpty)
-          .map(MaSSTableSource.tokenCompare(partitioner, _)).orNull
-
-      override def next(): Boolean = {
-        while (cells.hasNext) {
-          val c = cells.next()
-          if ((resumeKeyBytes == null || ringGe(c.key, resumeKeyBytes) >= 0) &&
-              (tokenMinCmp == null || tokenMinCmp(c.key) >= 0) &&
-              (tokenMaxCmp == null || tokenMaxCmp(c.key) <= 0)) {
-            current = c
-            return true
-          }
-        }
-        false
-      }
-
-      override def get(): InternalRow = {
-        val c = current
-        val full: Array[Any] = Array(
-          keyString(c.key),
-          if (c.col == null) null else UTF8String.fromString(c.col),
-          c.ts,
-          c.value,
-          c.deleted,
-          c.expiring,
-          if (c.ttlSec < 0) null else c.ttlSec,
-          if (c.deletionTs == MaFormat.NoDeletion) null else c.deletionTs,
-          c.marker,
-          c.counter)
-        InternalRow.fromSeq(fieldIdx.map(full(_)).toIndexedSeq)
-      }
-
-      override def close(): Unit = in.close()
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    partition match {
+      case MaInputPartition(file, start, end) =>
+        new CellRowReader(new FileCells(file, start, end, ring = null))
+      case MaMergeSlice(ranges, partitioner, lo, hi) =>
+        val ring = new SliceRing(partitioner, lo, hi)
+        new CellRowReader(new MergedCells(ranges.map(r =>
+          new FileCells(r.file, r.start, r.end, ring))))
     }
+
+  /** The ring order and key range of a merge slice. */
+  private final class SliceRing(
+      val partitioner: String, lo: Array[Byte], hi: Array[Byte]) {
+    val sortKey: Array[Byte] => Array[Byte] = MaSSTableSource.ringSortKey(partitioner)
+
+    /** Fail unless `sk` (of `key`, at `offset` of `file`) follows
+      * `prevSort` and lies inside the slice. */
+    def check(file: String, offset: Long, prevKey: Array[Byte], prevSort: Array[Byte],
+        key: Array[Byte], sk: Array[Byte]): Unit = {
+      if (prevSort != null && MaSSTableSource.compareBytes(prevSort, sk) >= 0)
+        throw RingOrderException.outOfOrder(file, offset, prevKey, key, partitioner)
+      if (lo != null && MaSSTableSource.compareBytes(sk, lo) < 0)
+        throw RingOrderException.outsideSlice(file, offset, key, lo, before = true, partitioner)
+      if (hi != null && MaSSTableSource.compareBytes(sk, hi) >= 0)
+        throw RingOrderException.outsideSlice(file, offset, key, hi, before = false, partitioner)
+    }
+  }
+
+  /** A stream of decoded cells, each with its partition key as text. */
+  private trait CellStream extends java.io.Closeable {
+    /** Move to the next cell; false at the end. */
+    def next(): Boolean
+    def cell: MaFormat.MaCell
+    def key: UTF8String
+  }
+
+  /** The cells of one Data.db byte range, after the residual
+    * resume/slice filters; `advance()` moves `head` to the next one
+    * (null at the end). Nothing is read before the first `advance()`:
+    * Spark's input metrics count only bytes read after the reader is
+    * created. With a
+    * `ring` (merge slices) every new partition key is checked against
+    * the previous one and the slice bounds, and carries its ring sort
+    * key (`headSort`). */
+  private final class FileCells(file: String, splitStart: Long, splitEnd: Long,
+      ring: SliceRing) extends CellStream {
+    private val path = new Path(file)
+    private val fs = path.getFileSystem(hadoopConf.value)
+    // Per-file metadata: explicit options win; a sibling
+    // Statistics.db supplies the rest (reference read_metadata,
+    // SSTable.cpp:275). The delta bases in particular are PER FILE —
+    // generations of one table each carry their own — so the
+    // stats-discovered values are the only correct ones for a
+    // multi-generation directory read.
+    private val stats: Option[StatsFile.TableMeta] =
+      MaSSTableSource.statsFor(file, fs)
+    private val version = MaSSTableSource.versionOf(path.getName)
+    private val columns: Seq[(String, MaFormat.ColType)] =
+      opt("columns").map(parseColumns)
+        .orElse(stats.flatMap(_.columns))
+        .getOrElse {
+          // Legacy ja/ka framing is self-describing; only the "ma"
+          // row format needs the column list to frame values.
+          if (version >= "ma") throw new IllegalArgumentException(
+            s"no `columns` option and no readable sibling Statistics.db for $file")
+          Nil
+        }
+    private val clustering: Seq[MaFormat.ColType] =
+      opt("clustering")
+        .map(_.split(",").toSeq.map(t => MaFormat.colType(t.trim)))
+        .orElse(stats.map(_.clustering)).getOrElse(Nil)
+    private val staticColumns: Seq[(String, MaFormat.ColType)] =
+      opt("staticColumns").map(parseColumns)
+        .orElse(stats.map(_.staticColumns)).getOrElse(Nil)
+    private val minTimestamp: Long =
+      opt("minTimestamp").map(_.toLong)
+        .orElse(stats.map(_.minTimestamp)).getOrElse(0L)
+    private val minTtl: Long =
+      opt("minTtl").map(_.toLong)
+        .orElse(stats.map(_.minTtl)).getOrElse(0L)
+    private val partitioner: String =
+      opt("partitioner")
+        .orElse(stats.flatMap(_.partitioner)).getOrElse("byteOrdered")
+    private val verifyChecksums = options.getOrElse("verifyChecksums", "true").toBoolean
+    private val raw = fs.open(path)
+    // A sibling CompressionInfo.db means the Data.db is
+    // chunk-compressed (the Cassandra default) — layer the block
+    // decoder under the format reader transparently.
+    private val ciPath = new Path(
+      file.stripSuffix("Data.db") + "CompressionInfo.db")
+    private val in: CountingInputStream = {
+      val (base, basePos): (java.io.InputStream, Long) =
+        if (fs.exists(ciPath)) {
+          val ciIn = fs.open(ciPath)
+          val info = try CompressedBlocks.readCompressionInfo(ciIn) finally ciIn.close()
+          // Mid-file start: jump the RAW stream to the chunk holding
+          // the split's start offset (the chunk-granular seek the
+          // CompressionInfo offsets enable), then decompress forward.
+          val startChunk = (splitStart / info.chunkLen).toInt
+          if (startChunk > 0) raw.seek(info.offsets(startChunk))
+          // Checksum regime per format version (SSTable.cpp:102-104):
+          // Adler32 over compressed bytes for jb..la, CRC32 over
+          // compressed bytes for ma+, CRC32 over UNCOMPRESSED bytes
+          // before jb.
+          (new CompressedBlocks.ChunkedInputStream(
+            raw, info, fs.getFileStatus(path).getLen,
+            useCrc32 = version >= "ma" || version < "jb",
+            checksumCompressed = version >= "jb",
+            startChunk = startChunk,
+            verify = verifyChecksums),
+            startChunk.toLong * info.chunkLen)
+        } else {
+          if (splitStart > 0) raw.seek(splitStart)
+          (raw, splitStart)
+        }
+      val cis = new CountingInputStream(base, basePos)
+      // Discard the in-chunk remainder between the chunk boundary and
+      // the split's partition-start offset.
+      val garbage = new Array[Byte](65536)
+      while (cis.count < splitStart) {
+        val n = cis.read(garbage, 0,
+          math.min(splitStart - cis.count, garbage.length.toLong).toInt)
+        require(n > 0, s"EOF before split start $splitStart in $file")
+      }
+      cis
+    }
+    // Consulted before every partition header: remember where the
+    // partition starts, and stop at the first boundary at or past the
+    // split end.
+    private var partitionOffset = splitStart
+    private val stop = () => { partitionOffset = in.count; in.count >= splitEnd }
+    private val clusteringIdentity =
+      options.getOrElse("clusteringIdentity", "false").toBoolean
+    private val cells: Iterator[MaFormat.MaCell] =
+      if (version >= "ma")
+        new MaFormat.Reader(in, columns, minTimestamp, minTtl,
+          clustering, staticColumns, stop, clusteringIdentity)
+      else new MaFormat.KaReader(in, stop, clusteringIdentity, version)
+
+    // Residual resume/slice filters: the Index.db seek skips whole
+    // partitions at plan time, but an indexless file (or the boundary
+    // partitions of an indexed one) still needs the exact key/token
+    // bounds applied per cell.
+    private val resumeKeyBytes: Array[Byte] =
+      options.get("resumeKey").filter(_.nonEmpty)
+        .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).orNull
+    private val ringGe = MaSSTableSource.ringCompare(partitioner) _
+    private val tokenMinCmp: Array[Byte] => Int =
+      options.get("tokenMin").filter(_.nonEmpty)
+        .map(MaSSTableSource.tokenCompare(partitioner, _)).orNull
+    private val tokenMaxCmp: Array[Byte] => Int =
+      options.get("tokenMax").filter(_.nonEmpty)
+        .map(MaSSTableSource.tokenCompare(partitioner, _)).orNull
+
+    /** The next cell, null at the end; its key as text and, with a
+      * ring, its ring sort key. */
+    var head: MaFormat.MaCell = _
+    var headKey: UTF8String = _
+    var headSort: Array[Byte] = _
+    // The decoders hand out ONE key array per partition, so a new array
+    // is a new partition.
+    private var lastKeyBytes: Array[Byte] = _
+
+    /** Keys surface as StringType (the KV operators compare and
+      * resume on them as text); Cassandra keys are arbitrary bytes,
+      * so REJECT non-UTF8 keys loudly — silently mangling them via
+      * replacement chars could merge distinct keys. ASCII fast path;
+      * non-ASCII keys pay one round-trip validation. */
+    private def keyString(b: Array[Byte]): UTF8String = {
+      var i = 0
+      var ascii = true
+      while (i < b.length && ascii) { if (b(i) < 0) ascii = false; i += 1 }
+      if (!ascii &&
+          !java.util.Arrays.equals(
+            UTF8String.fromBytes(b).toString.getBytes("UTF-8"), b))
+        throw new IllegalArgumentException(
+          s"non-UTF8 partition key in $file (${b.length} bytes): this source " +
+            "exposes keys as text; binary-keyed tables are not supported")
+      UTF8String.fromBytes(b)
+    }
+
+    def advance(): Unit = {
+      head = null
+      while (head == null && cells.hasNext) {
+        val c = cells.next()
+        if (c.key ne lastKeyBytes) {
+          if (ring != null) {
+            val sk = ring.sortKey(c.key)
+            ring.check(file, partitionOffset, lastKeyBytes, headSort, c.key, sk)
+            headSort = sk
+          }
+          lastKeyBytes = c.key
+          headKey = keyString(c.key)
+        }
+        if ((resumeKeyBytes == null || ringGe(c.key, resumeKeyBytes) >= 0) &&
+            (tokenMinCmp == null || tokenMinCmp(c.key) >= 0) &&
+            (tokenMaxCmp == null || tokenMaxCmp(c.key) <= 0))
+          head = c
+      }
+    }
+    override def next(): Boolean = { advance(); head != null }
+    override def cell: MaFormat.MaCell = head
+    override def key: UTF8String = headKey
+
+    override def close(): Unit = in.close()
+  }
+
+  /** The cells of a merge slice: the files' streams heap-merged by
+    * partition key in ring order, a whole partition at a time, so every
+    * cell of a key — from every generation — arrives adjacent. O(files)
+    * state: one look-ahead cell per stream, read on the first `next()`. */
+  private final class MergedCells(sources: Array[FileCells]) extends CellStream {
+    private val heap = new java.util.PriorityQueue[Integer](math.max(1, sources.length),
+      (a: Integer, b: Integer) => {
+        val d = MaSSTableSource.compareBytes(sources(a).headSort, sources(b).headSort)
+        if (d != 0) d else Integer.compare(a, b)
+      })
+    private var seeded = false
+    private var cur = -1
+    private var curPartition: Array[Byte] = _
+
+    override def next(): Boolean = {
+      if (!seeded) {
+        seeded = true
+        sources.indices.foreach { i =>
+          sources(i).advance()
+          if (sources(i).head != null) heap.add(i)
+        }
+      } else if (cur >= 0) {
+        val f = sources(cur)
+        f.advance()
+        if (f.head != null) {
+          if (f.head.key eq curPartition) return true
+          heap.add(cur)
+        }
+      }
+      if (heap.isEmpty) false
+      else {
+        cur = heap.poll()
+        curPartition = sources(cur).head.key
+        true
+      }
+    }
+    override def cell: MaFormat.MaCell = sources(cur).head
+    override def key: UTF8String = sources(cur).headKey
+
+    override def close(): Unit = sources.foreach(_.close())
+  }
+
+  /** Cells as rows of the pruned output schema, from one file range or
+    * a merge slice. */
+  private final class CellRowReader(source: CellStream)
+      extends PartitionReader[InternalRow] {
+    // Project only the pruned columns into the output row.
+    private val fieldIdx = requiredFields.map(
+      MaSSTableSource.OutputSchema.fieldNames.indexOf(_))
+
+    override def next(): Boolean = source.next()
+
+    override def get(): InternalRow = {
+      val c = source.cell
+      val full: Array[Any] = Array(
+        source.key,
+        if (c.col == null) null else UTF8String.fromString(c.col),
+        c.ts,
+        c.value,
+        c.deleted,
+        c.expiring,
+        if (c.ttlSec < 0) null else c.ttlSec,
+        if (c.deletionTs == MaFormat.NoDeletion) null else c.deletionTs,
+        c.marker,
+        c.counter)
+      InternalRow.fromSeq(fieldIdx.map(full(_)).toIndexedSeq)
+    }
+
+    override def close(): Unit = source.close()
   }
 }

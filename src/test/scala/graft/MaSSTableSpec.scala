@@ -2942,4 +2942,284 @@ class MaSSTableSpec extends AnyFunSuite {
       s"stats-discovered resume must keep the ring suffix; " +
         s"missing=${expect -- got} extra=${got -- expect}")
   }
+
+  // ---- generation merge (Kv.migrate's per-key merge kernel) ----------
+
+  private val PartitionerClass = Map(
+    "murmur3" -> "Murmur3Partitioner", "random" -> "RandomPartitioner",
+    "byteOrdered" -> "ByteOrderedPartitioner")
+
+  private val MergeCols = Seq("click", "nclicks", "hits")
+
+  /** Seeded multi-generation fixture over two dirs: "mc" and legacy
+    * "ka" files, partitions in the partitioner's ring order, each with
+    * Index.db and Statistics.db, most with Summary.db (the rest make
+    * the planner sample Index.db), half LZ4-compressed. Partition
+    * tombstones, whole-key ma markers, row deletions, ka range markers,
+    * cell tombstones, TTLs, counter shards (column `hits`), and in
+    * `clustered` mode clustering-identity rows; every timestamp is
+    * distinct. Returns the dirs and the key pool. */
+  private def mergeFixture(rng: scala.util.Random, partitioner: String,
+      clustered: Boolean): (Seq[String], Seq[String]) = {
+    val base = 1000L
+    val used = scala.collection.mutable.HashSet.empty[Long]
+    def nextTs(): Long = {
+      var t = 0L
+      while ({ t = base + 1 + rng.nextInt(1000000); !used.add(t) }) ()
+      t
+    }
+    def value(c: String): Array[Byte] =
+      if (c == "click") s"v${rng.nextInt(1000)}".getBytes(UTF_8)
+      else longBytes(rng.nextInt(1000).toLong)
+    val keys = (1 to 40).map(i => f"pk-$i%02d")
+    val ring = MaSSTableSource.ringCompare(partitioner) _
+    val dirs = Seq(Files.createTempDirectory("merge-a"), Files.createTempDirectory("merge-b"))
+    val nGens = 2 + rng.nextInt(3)
+    (1 to nGens).foreach { gen =>
+      val dir = dirs(if (gen == nGens) 1 else 0)
+      val legacy = rng.nextInt(3) == 0
+      val (prefix, version) = if (legacy) (s"ks-tbl-ka-$gen", "ka") else (s"mc-$gen-big", "mc")
+      val picked = keys.filter(_ => rng.nextInt(10) < 6)
+      val fileKeys = (if (picked.isEmpty) keys.take(1) else picked)
+        .sortWith((a, b) => ring(a.getBytes(UTF_8), b.getBytes(UTF_8)) < 0)
+      val ka = new KaEnc
+      val e: Enc = if (legacy) ka else new Enc
+      val index = fileKeys.map { k =>
+        val offset = e.bos.size().toLong
+        val partDel = if (rng.nextInt(10) == 0) nextTs() else MaFormat.NoDeletion
+        val rowCks = if (clustered) Seq("a", "b").filter(_ => rng.nextBoolean()) else Seq("")
+        if (legacy) {
+          ka.partition(k, partDel)
+          rowCks.foreach { ck =>
+            def name(c: String): Array[Byte] =
+              if (clustered) ka.composite(Seq(ck, c)) else c.getBytes(UTF_8)
+            if (rng.nextInt(8) == 0) {
+              if (clustered)
+                ka.rangeTombstoneRaw(ka.composite(Seq(ck)), ka.composite(Seq(ck)), nextTs())
+              else {
+                val (lo, hi) = Seq(("a", "m"), ("h", "o"), ("c", "d"))(rng.nextInt(3))
+                ka.rangeTombstone(lo, hi, nextTs())
+              }
+            }
+            MergeCols.foreach { c =>
+              val n = name(c)
+              val counter = c == "hits"
+              ka.short(n.length).bytes(n)
+              rng.nextInt(10) match {
+                case 0 => // cell tombstone (value: local deletion time)
+                  ka.byte(0x01 | (if (counter) 0x04 else 0))
+                  if (counter) ka.longlong(0L)
+                  ka.longlong(nextTs()); ka.out.writeInt(4); ka.out.writeInt(0)
+                case 1 if !counter => // expiring
+                  val v = value(c)
+                  ka.byte(0x02); ka.out.writeInt(10 + rng.nextInt(1000)); ka.out.writeInt(0)
+                  ka.longlong(nextTs()); ka.out.writeInt(v.length); ka.bytes(v)
+                case _ =>
+                  val v = value(c)
+                  ka.byte(if (counter) 0x04 else 0)
+                  if (counter) ka.longlong(0L)
+                  ka.longlong(nextTs()); ka.out.writeInt(v.length); ka.bytes(v)
+              }
+            }
+          }
+          ka.endRow()
+        } else {
+          e.partitionHeader(k, partDel)
+          // Whole-key marker row (parity mode: a lone bound).
+          if (!clustered && rng.nextInt(10) == 0) {
+            e.byte(0x02).byte(1).short(0).vint(0).vint(0).longlong(nextTs())
+            e.out.writeInt(0)
+          }
+          rowCks.foreach { ck =>
+            val rowDel = rng.nextInt(10) == 0
+            e.byte(0x20 | (if (rowDel) 0x10 else 0))
+            if (clustered) clusteringBlock(e, Seq(Some((ck.getBytes(UTF_8), false))))
+            e.vint(0).vint(0)
+            if (rowDel) e.vint(nextTs() - base).vint(0)
+            MergeCols.foreach { c =>
+              val ts = nextTs() - base
+              def v(): Unit = {
+                val b = value(c)
+                if (c == "nclicks") e.bytes(b) else e.vint(b.length.toLong).bytes(b)
+              }
+              rng.nextInt(10) match {
+                case 0 => e.byte(0x01 | 0x04).vint(ts).vint(0)
+                case 1 => e.byte(0x02).vint(ts).vint(0).vint(10L + rng.nextInt(1000)); v()
+                case _ => e.byte(0x00).vint(ts); v()
+              }
+            }
+          }
+          e.endOfPartition()
+        }
+        k -> offset
+      }
+      if (rng.nextBoolean())
+        writeCompressed(dir, prefix, e.result, "LZ4Compressor", chunkLen = 512,
+          checksum = if (legacy) "adler32-compressed" else "crc32-compressed")
+      else Files.write(dir.resolve(s"$prefix-Data.db"), e.result)
+      val positions = writeIndex(dir, prefix, index, version)
+      if (rng.nextInt(4) != 0)
+        writeSummary(dir, prefix,
+          index.map(_._1).zip(positions).zipWithIndex.collect { case (s, i) if i % 2 == 0 => s },
+          version, Some((index.head._1, index.last._1)))
+      Files.write(dir.resolve(s"$prefix-Statistics.db"),
+        statsBytes(Marshal + PartitionerClass(partitioner),
+          if (legacy) None
+          else Some(StatsHeader(base, 0L, Marshal + "UTF8Type",
+            clustering = if (clustered) Seq(Marshal + "UTF8Type") else Nil, statics = Nil,
+            regulars = Seq(
+              "click" -> (Marshal + "UTF8Type"),
+              "nclicks" -> (Marshal + "LongType"),
+              "hits" -> (Marshal + "CounterColumnType"))))))
+    }
+    (dirs.map(_.toString), keys)
+  }
+
+  private def canonMerged(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.select(col("key"), col("col"), unix_micros(col("ts")), col("seq"), hex(col("value")),
+        col("ttl_s"), col("counter"), col("deleted"))
+      .collect().map(_.toString).sorted.toSeq
+
+  test("generation merge equals lww(applyMarkerTombstones(bag)) on seeded generations, both routes") {
+    val rng = new scala.util.Random(20261017L)
+    (1 to 12).foreach { trial =>
+      val partitioner = Seq("murmur3", "random", "byteOrdered")(trial % 3)
+      val clustered = trial % 4 == 0
+      val counterSum = trial % 2 == 1
+      val (dirs, keys) = mergeFixture(rng, partitioner, clustered)
+      def token(k: String): String = partitioner match {
+        case "murmur3" => graft.functions.CassandraMurmur3.token(k.getBytes(UTF_8)).toString
+        case "random" => graft.functions.CassandraRandomMd5.tokenHex(k)
+        case _ => k
+      }
+      val (k1, k2) = (keys(rng.nextInt(keys.size)), keys(rng.nextInt(keys.size)))
+      val (resumeKey, tokenRange) = (trial / 3) % 3 match {
+        case 0 => (None, None)
+        case 1 => (Some(k1), None)
+        case _ =>
+          val ring = MaSSTableSource.ringCompare(partitioner) _
+          val Seq(lo, hi) = Seq(k1, k2).sortWith((a, b) => ring(a.getBytes(UTF_8), b.getBytes(UTF_8)) < 0)
+          (None, Some((token(lo), token(hi))))
+      }
+      val what = s"trial $trial ($partitioner, clustered=$clustered, counterSum=$counterSum, " +
+        s"resume=$resumeKey, tokens=$tokenRange)"
+
+      // The declarative merge over the single-scan cell bag.
+      val bag = dirs.map(graft.kv.Kv.cellsFromSSTables(spark, _, "", resumeKey,
+          tokenRange = tokenRange, clusteringIdentity = clustered))
+        .reduce(_ unionAll _)
+        .transform(df => resumeKey.fold(df)(k => df.filter(col("key") >= k)))
+      val marked = graft.kv.Kv.applyMarkerTombstones(bag)
+      val expected = canonMerged(
+        if (counterSum) graft.kv.Kv.mergeWithCounterSum(marked) else graft.kv.Kv.lww(marked))
+      assert(expected.nonEmpty || tokenRange.isDefined, s"$what: empty fixture")
+
+      // Merge slices: no exchange, same rows.
+      assert(MaSSTableSource.mergeSlicesApply(spark, dirs), what)
+      val merged = graft.kv.Kv.mergeSSTables(spark, dirs, "", resumeKey,
+        tokenRange = tokenRange, clusteringIdentity = clustered, counterSum = counterSum)
+      assert(canonMerged(merged) === expected, s"$what: merge slices")
+      val plan = merged.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"), s"$what: merge slices must not shuffle:\n$plan")
+      if (resumeKey.isEmpty && tokenRange.isEmpty)
+        assert(merged.rdd.getNumPartitions > 1, s"$what: expected several merge slices")
+
+      // The fallback route: the same kernel behind Spark's own exchange.
+      val raw = {
+        val r = spark.read.format("graft.sources.sstable.MaSSTableSource")
+          .option("clusteringIdentity", clustered.toString)
+        val r2 = resumeKey.fold(r)(k => r.option("resumeKey", k))
+        tokenRange.fold(r2) { case (lo, hi) => r2.option("tokenMin", lo).option("tokenMax", hi) }
+          .load(dirs: _*)
+          .select(org.apache.spark.sql.graftbridge.GenerationMergeApi.InputColumns.map(col): _*)
+          .transform(df => resumeKey.fold(df)(k => df.filter(col("key") >= k)))
+      }
+      val fallback = org.apache.spark.sql.graftbridge.GenerationMergeApi
+        .merge(raw, counterSum, inputGrouped = false)
+      assert(canonMerged(fallback) === expected, s"$what: fallback route")
+    }
+  }
+
+  test("a Data.db key out of ring order fails the merge with a named error") {
+    // byteOrdered ring: the index lists a, b, c in order, but the
+    // Data.db holds c before b (two partitions swapped). The summary
+    // samples only "a", so one slice reads the whole file.
+    def part(e: Enc, k: String): Unit = {
+      e.partitionHeader(k)
+      e.byte(0x20).vint(0).vint(0)
+      e.byte(0x00).vint(1L).vint(1).bytes("v".getBytes(UTF_8))
+      e.byte(0x00).vint(1L).bytes(longBytes(1L))
+      e.endOfPartition()
+    }
+    val e = new Enc
+    val offsets = Seq("a", "c", "b").map { k => val o = e.bos.size().toLong; part(e, k); o }
+    val dir = Files.createTempDirectory("merge-swapped")
+    Files.write(dir.resolve("mc-1-big-Data.db"), e.result)
+    val idx = writeIndex(dir, "mc-1-big", Seq("a" -> offsets(0), "b" -> offsets(1), "c" -> offsets(2)))
+    writeSummary(dir, "mc-1-big", Seq("a" -> idx.head))
+    Files.write(dir.resolve("mc-1-big-Statistics.db"),
+      statsBytes(Marshal + "ByteOrderedPartitioner", Some(StatsHeader(
+        0L, 0L, Marshal + "UTF8Type", Nil, Nil,
+        regulars = Seq("click" -> (Marshal + "UTF8Type"), "nclicks" -> (Marshal + "LongType"))))))
+    assert(MaSSTableSource.mergeSlicesApply(spark, Seq(dir.toString)))
+    def chain(t: Throwable): Seq[Throwable] = if (t == null) Nil else t +: chain(t.getCause)
+    val ex = intercept[Exception] {
+      graft.kv.Kv.mergeSSTables(spark, Seq(dir.toString), ColsSpec).collect()
+    }
+    val named = chain(ex).collectFirst {
+      case r: graft.sources.sstable.RingOrderException => r.getMessage
+    }.getOrElse(fail(s"expected a RingOrderException, got: ${chain(ex).map(_.toString)}"))
+    assert(named.contains("mc-1-big-Data.db") && named.contains(s"offset ${offsets(2)}") &&
+      named.contains("'b'") && named.contains("'c'"), named)
+
+    // The planner's index pass checks the index itself the same way.
+    writeIndex(dir, "mc-1-big", Seq("a" -> offsets(0), "c" -> offsets(1), "b" -> offsets(2)))
+    val planEx = intercept[graft.sources.sstable.RingOrderException] {
+      graft.kv.Kv.mergeSSTables(spark, Seq(dir.toString), ColsSpec).collect()
+    }
+    assert(planEx.getMessage.contains("mc-1-big-Index.db") &&
+      planEx.getMessage.contains("'b'") && planEx.getMessage.contains("'c'"), planEx.getMessage)
+  }
+
+  test("the generation merge publishes its counters as SQL metrics during a migrate") {
+    val (dirs, _) = mergeFixture(new scala.util.Random(7L), "murmur3", clustered = false)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[
+      org.apache.spark.sql.execution.SparkPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    val target = Files.createTempDirectory("merge-metrics").resolve("t").toString
+    spark.listenerManager.register(listener)
+    val stats = try graft.kv.Kv.migrate(spark, dirs, "", target).toOption.get
+      finally spark.listenerManager.unregister(listener)
+    // Listener events arrive asynchronously; the merge runs under the
+    // migrate's first action (the cached winners).
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
+      def merges: Seq[org.apache.spark.sql.graftbridge.GenerationMergeExec] =
+        plans.toArray(Array.empty[org.apache.spark.sql.execution.SparkPlan]).toSeq
+          .flatMap(p => collect(p) {
+          case c: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
+            collect(c.relation.cachedPlan) {
+              case m: org.apache.spark.sql.graftbridge.GenerationMergeExec => m
+            }
+        }.flatten)
+    }
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (Plans.merges.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
+    val m = Plans.merges.headOption.getOrElse(fail("no GenerationMergeExec in the migrate's plans"))
+      .metrics.map { case (k, v) => k -> v.value }
+    val raw = spark.read.format("graft.sources.sstable.MaSSTableSource").load(dirs: _*)
+    val winners = graft.kv.Kv.mergeSSTables(spark, dirs, "")
+    assert(m("inputCells") === raw.filter(!col("marker")).count())
+    assert(m("markers") === raw.filter(col("deletion_ts").isNotNull).count())
+    assert(m("keys") === raw.select("key").distinct().count())
+    assert(m("winners") === winners.count())
+    assert(m("deletedWinners") === stats.deletedDropped)
+    assert(m("suppressedCells") > 0, s"the fixture's tombstones suppress cells: $m")
+    assert(stats.written + stats.expired + stats.skippedExisting + stats.deletedDropped ===
+      m("winners"), s"$stats vs $m")
+  }
 }

@@ -80,6 +80,29 @@ class PlanSpec extends AnyFunSuite {
     assert(exchanges <= 2, s"kv_tombstone_merge: too many shuffles\n$plan")
   }
 
+  test("Kv.migrate's generation merge: no exchange on indexed input, one hash exchange without") {
+    // Indexed generations (Index/Summary/Statistics, Murmur3 order):
+    // merge slices feed the kernel directly, one scan stage.
+    val indexed = graft.tools.SSTableThroughput.synthesize(1000, 3)
+    val spec = "click:text,nclicks:long"
+    val merged = graft.kv.Kv.mergeSSTables(spark, Seq(indexed.toString), spec)
+    val plan = merged.queryExecution.executedPlan.toString
+    assert(plan.contains("GenerationMerge"), plan)
+    assert(!plan.contains("Exchange"), s"merge slices must not shuffle:\n$plan")
+    assert(merged.rdd.getNumPartitions === spark.sparkContext.defaultParallelism,
+      "one merge slice per core")
+    // The same files without Index.db: Spark's own hash exchange.
+    val bare = java.nio.file.Files.createTempDirectory("merge-bare")
+    java.nio.file.Files.list(indexed).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.endsWith("-Data.db"))
+      .foreach(p => java.nio.file.Files.copy(p, bare.resolve(p.getFileName)))
+    val fallback = graft.kv.Kv.mergeSSTables(spark, Seq(bare.toString), spec)
+    val fbPlan = fallback.queryExecution.executedPlan.toString
+    assert(fbPlan.linesIterator.count(_.contains("Exchange")) === 1 &&
+      fbPlan.contains("Exchange hashpartitioning(key"), s"one hash exchange on key:\n$fbPlan")
+    assert(fallback.count() === merged.count())
+  }
+
   test("sessionization rides one hash shuffle (windows + agg share the key partitioning)") {
     val plan = planOf("events_sessionize")
     val hashExchanges = plan.linesIterator

@@ -29,15 +29,17 @@ object SSTableBenchMain {
     val totalCells = parts.toLong * 2 * gens
 
     graft.tools.SSTableThroughput.warm(spark, dir)
-    val (tDecode, tMigrate, decoded, exported) =
-      graft.tools.SSTableThroughput.measureOnce(spark, dir)
+    val m = graft.tools.SSTableThroughput.measureOnce(spark, dir)
+    import m.{decodeSec => tDecode, migrateSec => tMigrate, decoded, exported}
     def num(d: Double) =
       String.format(java.util.Locale.ROOT, "%.0f", Double.box(d))
     println(
       s"""{"metric":"sstable_migrate","cells":$totalCells,"gens":$gens,"threads":$threads,""" +
       s""""decode_sec":${num(tDecode * 1000).toDouble / 1000},"decoded":$decoded,""" +
       s""""decode_cells_per_sec":${num(decoded / tDecode)},""" +
-      s""""decode_cells_per_sec_per_core":${num(decoded / tDecode / threads.toDouble)},""" +
+      s""""decode_tasks":${m.decodeTasks},""" +
+      s""""decode_cells_per_sec_per_task":${num(
+        graft.tools.SSTableThroughput.decodeRatePerTask(m, threads.toInt))},""" +
       s""""migrate_sec":${num(tMigrate * 1000).toDouble / 1000},""" +
       s""""migrate_cells_per_sec":${num(totalCells / tMigrate)},""" +
       s""""migrate_cells_per_sec_per_core":${num(totalCells / tMigrate / threads.toDouble)},""" +
