@@ -380,7 +380,10 @@ object Kv {
     * range of every generation per task) into the per-key kernel, no
     * exchange; SSTables without Index.db/Statistics.db take one hash
     * exchange on key into the same kernel. Policies are column
-    * arithmetic, and the create-only check is one key anti-join.
+    * arithmetic, and the create-only check is one key anti-join. The
+    * whole run is one Spark action
+    * ([[graft.sinks.KeyedSink.appendWinners]]): every statistic is an
+    * observed metric of the write itself.
     */
   def migrate(
       spark: SparkSession,
@@ -397,12 +400,11 @@ object Kv {
       sinceTsUs: Option[Long] = None): Either[DataFrame, graft.sinks.KeyedSink.WriteStats] = {
     val merged = mergeSSTables(spark, sstableDirs, columnsSpec, resumeKey,
       verifyChecksums, tokenRange, clusteringIdentity, counterSum)
-    // A cell whose WINNING version is a cell-tombstone is dead — the
-    // reference drops it at export and counts it skipped
-    // (CassandraParser.cpp:481,524); exporting the null-valued winner
-    // would resurrect deleted data in the target.
+    // The export columns of a winner. A cell whose WINNING version is
+    // a cell-tombstone is dead — the reference drops it at export and
+    // counts it skipped (CassandraParser.cpp:481,524); exporting the
+    // null-valued winner would resurrect deleted data in the target.
     def records(df: DataFrame): DataFrame = df
-      .filter(!col("deleted"))
       .withColumn("expiry_us",
         when(col("ttl_s").isNotNull,
           unix_micros(col("ts")) + col("ttl_s") * 1000000L))
@@ -412,35 +414,27 @@ object Kv {
     // which re-reads and re-offers everything and leans on create-only
     // to dedupe): a record whose WINNING cell is at or below the
     // previous run's high-water timestamp was already shipped, so it
-    // is dropped before export and counted. The filter sits on the
+    // is dropped before export and counted. The watermark applies to the
     // MERGED winners, not the raw cells: an old cell must still lose
     // the LWW to a newer one (and a newer tombstone must still kill
     // it), so merge correctness is unchanged — only the export set
     // shrinks.
-    def fresh(df: DataFrame): DataFrame =
-      sinceTsUs.fold(df)(w => df.filter(unix_micros(col("ts")) > w))
+    val unchanged: Column = sinceTsUs.fold(lit(false))(w =>
+      !col("deleted") && unix_micros(col("ts")) <= w)
     if (dryRun)
-      Left(records(fresh(merged))
+      Left(records(merged.filter(!col("deleted") && !unchanged))
         .withColumn("cell_text",
           concat(col("col"), lit("="), coalesce(col("value").cast("string"), lit(""))))
         .withColumn("cell_hex", lower(hex(col("cell_text"))))
         .select(col("key"), col("col"), col("cell_text"), col("cell_hex"), col("expiry_us"))
         .orderBy(col("key"), col("col")))
-    else {
-      // Persist the merge output (one row per surviving (key, col) —
-      // small relative to the input cells) so the deleted-winner count
-      // and the sink's stats+write actions share one materialization.
-      val cached = merged.persist()
-      try {
-        val deletedDropped = cached.filter(col("deleted")).count()
-        val skippedUnchanged = sinceTsUs.fold(0L)(w =>
-          cached.filter(!col("deleted") && unix_micros(col("ts")) <= w).count())
-        val stats = graft.sinks.KeyedSink.createOnlyAppend(
-          spark, records(fresh(cached)), targetPath, policy)
-        Right(stats.copy(deletedDropped = deletedDropped,
-          skippedUnchanged = skippedUnchanged))
-      } finally cached.unpersist()
-    }
+    else
+      // One action: deleted and unchanged winners are flagged, not
+      // filtered, so the sink's observe node counts them in the same
+      // pass that writes the survivors.
+      Right(graft.sinks.KeyedSink.appendWinners(spark,
+        records(merged.withColumn("_deleted", col("deleted")).withColumn("_unchanged", unchanged)),
+        targetPath, policy))
   }
 
   /** #1 kv_lww_latest */

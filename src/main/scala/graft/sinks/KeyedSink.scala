@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The write-side connector seam — the reference's AerospikeWriter
@@ -54,9 +54,18 @@ object KeyedWriter {
   * target's current keys followed by an append — idempotent, and at
   * 100 TB the join is a shuffle (or broadcast, when the target key set
   * is small) rather than a per-record network round-trip, with the
-  * target scan pruned to the key column only. Statistics come from ONE
-  * aggregation over the annotated frame plus the write pass itself —
-  * the incoming data is scanned twice total, never per-statistic.
+  * target scan pruned to the key column only.
+  *
+  * The parquet export is ONE Spark action, as the reference counts
+  * while it puts: the incoming rows are annotated with the policy and
+  * existence flags, one `CollectMetrics` node (`Dataset.observe`)
+  * counts every [[WriteStats]] field as the rows stream past, and the
+  * filter and the parquet write consume the same pass — nothing is
+  * persisted, nothing is aggregated in a second job. The counts are
+  * exact under task retry: the observe node sits above every exchange,
+  * in the write's result stage, and the DAGScheduler merges a result
+  * task's accumulator updates once per committed partition, so a
+  * retried or speculative attempt never counts twice.
   *
   * TTL policies mirror the reference flags:
   *  - `minTtlUs` (`-L`): records expiring sooner than this are dropped;
@@ -73,11 +82,13 @@ object KeyedSink {
       incoming: Long, written: Long, skippedExisting: Long, expired: Long,
       // Cells whose winning version was a cell-tombstone, dropped before
       // export (the reference's skipped-deleted counter,
-      // CassandraParser.cpp:524). Populated by Kv.migrate, not the sink.
+      // CassandraParser.cpp:524). Counted by Kv.migrate's export; always
+      // 0 from createOnlyAppend.
       deletedDropped: Long = 0L,
       // Surviving records at or below an incremental run's `-W`
       // watermark, skipped before export (already shipped by the
-      // previous run). Populated by Kv.migrate, not the sink.
+      // previous run). Counted by Kv.migrate's export; always 0 from
+      // createOnlyAppend.
       skippedUnchanged: Long = 0L,
       // Per-record writer accounting (the reference's failed counter +
       // retry queue depth). Structurally zero on the parquet path —
@@ -111,8 +122,12 @@ object KeyedSink {
     * a null ttl_us) evaluates to SQL NULL under `cellLive`, which must
     * count as dropped-by-policy in BOTH sinks' accounting rather than
     * vanish from the stats (parquet path) or NPE the partition loop
-    * (foreach path). */
-  def withLiveFlag(incoming: DataFrame, policy: TtlPolicy): DataFrame = {
+    * (foreach path). Under `-f` the key group's first expiry is taken
+    * over the rows where `kept` holds only: a winner the caller drops
+    * before export (deleted, or below a `-W` watermark) is not one of
+    * the record's cells. */
+  def withLiveFlag(incoming: DataFrame, policy: TtlPolicy,
+      kept: Column = lit(true)): DataFrame = {
     val flagged = incoming.withColumn("_live",
       coalesce(cellLive(policy), lit(false)))
     if (!policy.recordTtlFromFirst) flagged
@@ -121,7 +136,7 @@ object KeyedSink {
       // earliest expiry has passed is dead wholesale. Windowed min over
       // the key partition — rides one hash shuffle.
       val w = org.apache.spark.sql.expressions.Window.partitionBy(col("key"))
-      flagged.withColumn("_first_expiry", min(col("expiry_us")).over(w))
+      flagged.withColumn("_first_expiry", min(when(kept, col("expiry_us"))).over(w))
         .withColumn("_live",
           col("_live") &&
             (col("_first_expiry").isNull || col("_first_expiry") > policy.nowUs))
@@ -129,56 +144,85 @@ object KeyedSink {
     }
   }
 
+  /** `incoming` with the policy's `_live` flag (true without a policy)
+    * and the create-only `_exists` flag: true where the key is one of
+    * `existingKeys` (a key-only distinct, left-outer joined), false
+    * everywhere without them. Both sinks drop a row unless it is live
+    * and not existing. */
+  private def annotate(incoming: DataFrame, policy: Option[TtlPolicy],
+      existingKeys: Option[DataFrame], kept: Column = lit(true)): DataFrame = {
+    val flagged = policy.map(withLiveFlag(incoming, _, kept))
+      .getOrElse(incoming.withColumn("_live", lit(true)))
+    existingKeys match {
+      case None => flagged.withColumn("_exists", lit(false))
+      case Some(keys) =>
+        flagged.join(
+            keys.select(col("key")).distinct().withColumn("_exists", lit(true)),
+            Seq("key"), "left_outer")
+          .withColumn("_exists", coalesce(col("_exists"), lit(false)))
+    }
+  }
+
   /** Create-only append of `incoming` into the parquet table at
     * `targetPath`, keyed by the `key` column: rows whose key already
     * exists in the target are skipped (never updated), exactly
-    * AS_POLICY_EXISTS_CREATE. Returns the run's statistics. */
+    * AS_POLICY_EXISTS_CREATE. Returns the run's statistics.
+    *
+    * Create-only applies at RECORD (= key) granularity: multiple rows
+    * of one key within a batch are the record's cells and land
+    * together; a key already in the target skips wholesale. Rows of
+    * the same key arriving in LATER batches are skipped by the
+    * anti-join — exactly the reference's RECORD_EXISTS behavior. */
   def createOnlyAppend(
       spark: SparkSession,
       incoming: DataFrame,
       targetPath: String,
-      policy: Option[TtlPolicy] = None): WriteStats = {
-    val flagged = policy.map(withLiveFlag(incoming, _))
-      .getOrElse(incoming.withColumn("_live", lit(true)))
+      policy: Option[TtlPolicy] = None): WriteStats =
+    appendWinners(spark,
+      incoming.withColumn("_deleted", lit(false)).withColumn("_unchanged", lit(false)),
+      targetPath, policy)
 
+  /** The one export plan behind [[createOnlyAppend]] and
+    * [[graft.kv.Kv.migrate]]: scan → policy and existence flags →
+    * observe → filter → parquet append, as a single Spark action.
+    * Besides its record columns, `winners` carries two boolean flags
+    * for rows the caller drops before the sink: `_deleted` (a
+    * cell-tombstone winner) and `_unchanged` (a winner at or below a
+    * `-W` watermark). Flagged rows ride the plan to the observe node,
+    * are counted in `deletedDropped` / `skippedUnchanged` there, and
+    * are never written; every other counter covers the unflagged rows
+    * only. */
+  private[graft] def appendWinners(
+      spark: SparkSession,
+      winners: DataFrame,
+      targetPath: String,
+      policy: Option[TtlPolicy]): WriteStats = {
     val targetExists = {
       val p = new org.apache.hadoop.fs.Path(targetPath)
       p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
     }
-    val annotated = (
-      if (!targetExists) flagged.withColumn("_exists", lit(false))
-      else {
-        // Key-only scan of the target (column-pruned), then existence flag.
-        val existingKeys = spark.read.parquet(targetPath)
-          .select(col("key")).distinct().withColumn("_exists", lit(true))
-        flagged.join(existingKeys, Seq("key"), "left_outer")
-          .withColumn("_exists", coalesce(col("_exists"), lit(false)))
-      }
-    ).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-
-    // Create-only applies at RECORD (= key) granularity: multiple rows
-    // of one key within a batch are the record's cells and land
-    // together; a key already in the target skips wholesale. Rows of
-    // the same key arriving in LATER batches are skipped by the
-    // anti-join — exactly the reference's RECORD_EXISTS behavior.
-    // `annotated` is persisted so the stats action and the write
-    // action evaluate the target key scan + join once, not twice.
-    try {
-      val s = annotated.agg(
-        count(lit(1)).as("incoming"),
-        sum(when(!col("_live"), 1L).otherwise(0L)).as("expired"),
-        sum(when(col("_live") && col("_exists"), 1L).otherwise(0L)).as("skipped"),
-        sum(when(col("_live") && !col("_exists"), 1L).otherwise(0L)).as("written")
-      ).collect().head
-
-      annotated.filter(col("_live") && !col("_exists"))
-        .drop("_live", "_exists")
-        .write.mode(SaveMode.Append).parquet(targetPath)
-
-      WriteStats(
-        incoming = s.getLong(0), written = s.getLong(3),
-        skippedExisting = s.getLong(2), expired = s.getLong(1))
-    } finally annotated.unpersist()
+    // Key-only (column-pruned) scan of the target, when there is one.
+    val existingKeys = if (targetExists) Some(spark.read.parquet(targetPath)) else None
+    val kept = !col("_deleted") && !col("_unchanged")
+    val live = kept && col("_live")
+    val observed = Observation()
+    annotate(winners, policy, existingKeys, kept)
+      .observe(observed,
+        count_if(col("_deleted")).as("deletedDropped"),
+        count_if(col("_unchanged")).as("skippedUnchanged"),
+        count_if(kept).as("incoming"),
+        count_if(kept && !col("_live")).as("expired"),
+        count_if(live && col("_exists")).as("skippedExisting"),
+        count_if(live && !col("_exists")).as("written"))
+      .filter(live && !col("_exists"))
+      .drop("_deleted", "_unchanged", "_live", "_exists")
+      .write.mode(SaveMode.Append).parquet(targetPath)
+    val m = observed.get
+    def n(name: String): Long = m(name).asInstanceOf[Long]
+    WriteStats(
+      incoming = n("incoming"), written = n("written"),
+      skippedExisting = n("skippedExisting"), expired = n("expired"),
+      deletedDropped = n("deletedDropped"), skippedUnchanged = n("skippedUnchanged"))
   }
 
   /** Create-only export of `incoming` through a pluggable
@@ -212,16 +256,7 @@ object KeyedSink {
       writer: KeyedWriter,
       policy: Option[TtlPolicy] = None,
       existingKeys: Option[DataFrame] = None): WriteStats = {
-    val flagged = policy.map(withLiveFlag(incoming, _))
-      .getOrElse(incoming.withColumn("_live", lit(true)))
-    val annotated = existingKeys match {
-      case None => flagged.withColumn("_exists", lit(false))
-      case Some(keys) =>
-        flagged.join(
-            keys.select(col("key")).distinct().withColumn("_exists", lit(true)),
-            Seq("key"), "left_outer")
-          .withColumn("_exists", coalesce(col("_exists"), lit(false)))
-    }
+    val annotated = annotate(incoming, policy, existingKeys)
     val fields = annotated.schema.fieldNames
     val liveIdx = fields.indexOf("_live")
     val existsIdx = fields.indexOf("_exists")

@@ -440,23 +440,28 @@ object MaFormat {
 
     // --- unfiltered decode (SSTable.cpp) -------------------------------
 
-    /** decode_column_subset (SSTable.cpp:459), small-column-count arm
-      * plus the >= 64 encoded-list arm. */
+    /** decode_column_subset (SSTable.cpp:459), in Cassandra's
+      * `Columns.Serializer` encoding: 0 means every column is present;
+      * under 64 columns the value is a bitmap of the MISSING columns;
+      * from 64 on it is the missing count, followed by the indices of
+      * the present columns when fewer than half are present, else by
+      * the indices of the missing ones. */
     private def readColumnSubset(n: Int): Array[Boolean] = {
       val encoded = readUnsignedVint()
       if (encoded == 0) Array.fill(n)(true)
       else if (n >= 64) {
-        val columnCount = n - encoded.toInt
-        val isPositive = columnCount < n / 2
-        val subset = Array.fill(n)(!isPositive)
+        val missing = encoded.toInt
+        val listsPresent = n - missing < n / 2
+        val subset = Array.fill(n)(!listsPresent)
+        val listed = if (listsPresent) n - missing else missing
         var i = 0
-        while (i < columnCount) { subset(readUnsignedVint().toInt) = isPositive; i += 1 }
+        while (i < listed) { subset(readUnsignedVint().toInt) = listsPresent; i += 1 }
         subset
       } else {
         val subset = new Array[Boolean](n)
         var e = encoded
         var i = 0
-        while (i < n) { subset(i) = (e & 1L) != 0; e >>= 1; i += 1 }
+        while (i < n) { subset(i) = (e & 1L) == 0; e >>= 1; i += 1 }
         subset
       }
     }

@@ -80,9 +80,10 @@ object Streaming {
   /** The reference's whole job as a streaming pipeline: a cell stream
     * continuously exported into a keyed target with create-only
     * semantics and TTL policies, via foreachBatch over
-    * [[graft.sinks.KeyedSink]]. Each micro-batch pays one anti-join
-    * against the target's key column; per-run statistics accumulate in
-    * the returned buffer. */
+    * [[graft.sinks.KeyedSink]]. Each micro-batch is one Spark action:
+    * one anti-join against the target's key column, with the batch's
+    * statistics observed in the same write and accumulated in the
+    * returned buffer. */
   def exportStream(
       cells: DataFrame,
       targetPath: String,

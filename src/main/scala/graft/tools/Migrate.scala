@@ -183,6 +183,8 @@ object Migrate {
         rendered.show(100, truncate = false)
         println(s"[migrate] DRY RUN: ${rendered.count()} records would be written")
       case Right(stats) =>
+        // The counters are the observed metrics of the export's one
+        // write job (KeyedSink.appendWinners), not recounted here.
         println(s"[migrate] incoming=${stats.incoming} written=${stats.written} " +
           s"skipped_existing=${stats.skippedExisting} expired=${stats.expired} " +
           s"deleted_dropped=${stats.deletedDropped} " +

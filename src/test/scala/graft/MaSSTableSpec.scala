@@ -49,6 +49,23 @@ class MaSSTableSpec extends AnyFunSuite {
       val b = s.getBytes(UTF_8); short(b.length); bytes(b)
     }
 
+    /** A row's column subset as Cassandra's Columns.Serializer writes
+      * it: 0 when every column is present; under 64 columns a bitmap of
+      * the MISSING columns; from 64 on the missing count, then the
+      * present indices when fewer than half are present, else the
+      * missing ones. */
+    def subset(present: Seq[Boolean]): this.type = {
+      val n = present.size
+      val (presentIdx, missingIdx) = present.indices.partition(present)
+      if (missingIdx.isEmpty) vint(0)
+      else if (n < 64) vint(missingIdx.foldLeft(0L)((b, i) => b | (1L << i)))
+      else {
+        vint(missingIdx.size.toLong)
+        (if (presentIdx.size < n / 2) presentIdx else missingIdx).foreach(i => vint(i.toLong))
+        this
+      }
+    }
+
     /** Full-width unsigned vint: negative longs (e.g. the LIVE deletion
       * sentinel delta) take the 9-byte form — 0xff then 8 BE bytes. */
     def vintRaw(v: Long): this.type =
@@ -110,7 +127,7 @@ class MaSSTableSpec extends AnyFunSuite {
     // Row 2: no row timestamp; subset = only column 1 (nclicks).
     e.byte(0x00)
       .vint(0).vint(0)
-      .vint(2)                         // subset bitmask: bit1 -> nclicks only
+      .subset(Seq(false, true))        // subset: nclicks only
     e.byte(0x00).vint(2500).bytes(longBytes(9L)) // per-cell ts delta 2500
     e.endOfPartition()
 
@@ -122,6 +139,30 @@ class MaSSTableSpec extends AnyFunSuite {
     assert(java.nio.ByteBuffer.wrap(cells(1).value).getLong === 7L)
     assert(cells.forall(c => !c.deleted && !c.expiring && !c.marker))
     assert(cells.forall(_.deletionTs == MaFormat.NoDeletion))
+  }
+
+  test("column subsets of 64+ columns decode both large-subset arms") {
+    // 70 regular columns: Cassandra lists the PRESENT indices when fewer
+    // than half are present, the MISSING ones otherwise, and writes 0
+    // for a full row that does not set HAS_ALL_COLUMNS.
+    val wide = (0 until 70).map(i => f"c$i%02d" -> CLong)
+    val rows = Seq(
+      Set(3, 40, 65),                        // present-list arm
+      (0 until 70).toSet -- Set(0, 50, 69),  // missing-list arm
+      (0 until 70).toSet)                    // all present, encoded 0
+    val e = new Enc
+    e.partitionHeader("wide")
+    rows.zipWithIndex.foreach { case (present, r) =>
+      e.byte(0x00).vint(0).vint(0).subset((0 until 70).map(present))
+      present.toSeq.sorted.foreach(i => e.byte(0x00).vint(r.toLong).bytes(longBytes(i * 100L + r)))
+    }
+    e.endOfPartition()
+    val got = decode(e.result, cols = wide)
+      .map(c => (c.ts, c.col, java.nio.ByteBuffer.wrap(c.value).getLong))
+    val want = rows.zipWithIndex.flatMap { case (present, r) =>
+      present.toSeq.sorted.map(i => (r.toLong, f"c$i%02d", i * 100L + r))
+    }
+    assert(got === want)
   }
 
   test("deletions round-trip: partition, row, cell tombstones, and markers") {
@@ -215,7 +256,7 @@ class MaSSTableSpec extends AnyFunSuite {
           if (hasAll) flags |= 0x20
           e.byte(flags).vint(0).vint(0)
           if (hasRowTs) e.vint(rowTs)
-          if (!hasAll) e.vint(mask.toLong)
+          if (!hasAll) e.subset(Seq(mask & 1, mask & 2).map(_ != 0))
           Seq(("click", 0), ("nclicks", 1)).foreach { case (name, bit) =>
             if (hasAll || (mask & (1 << bit)) != 0) {
               val useRowTs = hasRowTs && rng.nextBoolean()
@@ -1350,7 +1391,7 @@ class MaSSTableSpec extends AnyFunSuite {
     clusteringBlock(e, Seq(Some(("a".getBytes(UTF_8), false))))
     e.vint(0).vint(0)
     e.vint(200L).vint(0) // row deletion + local deletion time
-    e.vint(1L)           // subset: click only
+    e.subset(Seq(true, false)) // subset: click only
     e.byte(0x00).vint(300L).vint(5).bytes("new-a".getBytes(UTF_8))
     e.endOfPartition()
     val dir = Files.createTempDirectory("ma-rowdel")
@@ -1804,7 +1845,7 @@ class MaSSTableSpec extends AnyFunSuite {
     g1.byte(0x04)
     clusteringBlock(g1, ck("a"))
     g1.vint(0).vint(0).vint(120L)
-    g1.vint(1L) // subset: click only
+    g1.subset(Seq(true, false)) // subset: click only
     g1.byte(0x08).vint(5).bytes("g1-2a".getBytes(UTF_8))
     g1.endOfPartition()
 
@@ -1821,7 +1862,7 @@ class MaSSTableSpec extends AnyFunSuite {
     g2.byte(0x00)
     clusteringBlock(g2, ck("b"))
     g2.vint(0).vint(0)
-    g2.vint(1L) // subset: click only
+    g2.subset(Seq(true, false)) // subset: click only
     g2.byte(0x01 | 0x04).vint(300L).vint(0) // deleted cell, empty value
     g2.endOfPartition()
 
@@ -3196,16 +3237,13 @@ class MaSSTableSpec extends AnyFunSuite {
     val stats = try graft.kv.Kv.migrate(spark, dirs, "", target).toOption.get
       finally spark.listenerManager.unregister(listener)
     // Listener events arrive asynchronously; the merge runs under the
-    // migrate's first action (the cached winners).
+    // migrate's one action, the write.
     object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {
       def merges: Seq[org.apache.spark.sql.graftbridge.GenerationMergeExec] =
         plans.toArray(Array.empty[org.apache.spark.sql.execution.SparkPlan]).toSeq
           .flatMap(p => collect(p) {
-          case c: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-            collect(c.relation.cachedPlan) {
-              case m: org.apache.spark.sql.graftbridge.GenerationMergeExec => m
-            }
-        }.flatten)
+          case m: org.apache.spark.sql.graftbridge.GenerationMergeExec => m
+        })
     }
     val deadline = System.nanoTime() + 30L * 1000000000L
     while (Plans.merges.isEmpty && System.nanoTime() < deadline) Thread.sleep(50)
@@ -3221,5 +3259,103 @@ class MaSSTableSpec extends AnyFunSuite {
     assert(m("suppressedCells") > 0, s"the fixture's tombstones suppress cells: $m")
     assert(stats.written + stats.expired + stats.skippedExisting + stats.deletedDropped ===
       m("winners"), s"$stats vs $m")
+  }
+
+  test("Kv.migrate's observed stats and target rows equal the declarative counts: every policy, target and route") {
+    import graft.sinks.KeyedSink.{TtlPolicy, WriteStats}
+    val (indexed, _) = mergeFixture(new scala.util.Random(20261018L), "murmur3", clustered = false)
+    // The same files without Index.db/Summary.db: the hash-exchange route.
+    val indexless = indexed.map { d =>
+      val out = Files.createTempDirectory("parity-indexless")
+      Files.list(Paths.get(d)).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .filterNot(p => Seq("-Index.db", "-Summary.db").exists(p.getFileName.toString.endsWith))
+        .foreach(p => Files.copy(p, out.resolve(p.getFileName)))
+      out.toString
+    }
+    assert(MaSSTableSource.mergeSlicesApply(spark, indexed))
+    assert(!MaSSTableSource.mergeSlicesApply(spark, indexless))
+
+    // The declarative answer, computed from the merged winners alone.
+    case class Winner(key: String, col: String, ts: Long, hex: String, ttlS: Option[Long],
+        deleted: Boolean) {
+      def expiry: Option[Long] = ttlS.map(ts + _ * 1000000L)
+      def ttlUs: Long = ttlS.fold(0L)(_ * 1000000L)
+      def row: String =
+        org.apache.spark.sql.Row(key, col, ts, hex, expiry.map(Long.box).orNull, ttlUs).toString
+    }
+    val winners = graft.kv.Kv.mergeSSTables(spark, indexed, "")
+      .select(col("key"), col("col"), unix_micros(col("ts")), hex(col("value")), col("ttl_s"),
+        col("deleted"))
+      .collect().toSeq.map(r => Winner(r.getString(0), r.getString(1), r.getLong(2),
+        r.getString(3), Option(r.get(4)).map(_.asInstanceOf[Long]), r.getBoolean(5)))
+    val nowUs = 400L * 1000000L
+    val watermark = 500000L
+    assert(winners.exists(_.deleted) && winners.exists(w => w.expiry.exists(_ <= nowUs)) &&
+      winners.exists(_.ttlS.isEmpty) && winners.exists(_.ts <= watermark),
+      "the fixture must exercise every counter")
+    def expect(policy: Option[TtlPolicy], since: Option[Long],
+        existing: Set[String]): (WriteStats, Seq[String]) = {
+      val recs = winners.filter(w => !w.deleted && since.forall(w.ts > _))
+      val firstExpiry = recs.groupBy(_.key).map { case (k, ws) => k -> ws.flatMap(_.expiry).minOption }
+      def live(w: Winner): Boolean = policy.forall { p =>
+        w.expiry.forall(e => e > p.nowUs && w.ttlUs >= p.minTtlUs) &&
+          !(p.prohibitEternal && w.expiry.isEmpty) &&
+          !(p.recordTtlFromFirst && firstExpiry(w.key).exists(_ <= p.nowUs))
+      }
+      val (liveRecs, expired) = recs.partition(live)
+      val (skipped, written) = liveRecs.partition(w => existing(w.key))
+      (WriteStats(incoming = recs.size, written = written.size,
+        skippedExisting = skipped.size, expired = expired.size,
+        deletedDropped = winners.count(_.deleted),
+        skippedUnchanged = winners.count(w => !w.deleted && since.exists(w.ts <= _))),
+        written.map(_.row))
+    }
+
+    // A filled target holds every third key, under rows of its own.
+    val preKeys = winners.map(_.key).distinct.sorted.zipWithIndex
+      .collect { case (k, i) if i % 3 == 0 => k }.toSet
+    def preload(target: String): Unit =
+      spark.createDataFrame(preKeys.toSeq.map(k => (k, "pre", 1L, 7L))).toDF("key", "col", "seq", "ttl_us")
+        .select(col("key"), col("col"), timestamp_micros(col("seq")).as("ts"), col("seq"),
+          lit(null).cast("binary").as("value"), lit(null).cast("long").as("expiry_us"), col("ttl_us"))
+        .write.parquet(target)
+    def rowsOf(target: String): Seq[String] =
+      if (!Files.exists(Paths.get(target))) Nil
+      else spark.read.parquet(target)
+        .select(col("key"), col("col"), unix_micros(col("ts")), hex(col("value")),
+          col("expiry_us"), col("ttl_us"))
+        .collect().map(_.toString).sorted.toSeq
+
+    val policies = Seq[(String, Option[TtlPolicy], Option[Long])](
+      ("no policy", None, None),
+      ("-L", Some(TtlPolicy(minTtlUs = 500L * 1000000L, nowUs = nowUs)), None),
+      ("-x", Some(TtlPolicy(prohibitEternal = true, nowUs = nowUs)), None),
+      ("-f", Some(TtlPolicy(recordTtlFromFirst = true, nowUs = nowUs)), None),
+      // -W under -f: a key group's first expiry must skip its unchanged winners.
+      ("-W -f", Some(TtlPolicy(recordTtlFromFirst = true, nowUs = nowUs)), Some(watermark)))
+    for ((route, dirs) <- Seq("merge slices" -> indexed, "hash exchange" -> indexless);
+         (name, policy, since) <- policies;
+         filled <- Seq(false, true)) {
+      val what = s"$route, $name, ${if (filled) "filled" else "empty"} target"
+      val target = Files.createTempDirectory("parity").resolve("t").toString
+      if (filled) preload(target)
+      val before = rowsOf(target)
+      val stats = graft.kv.Kv.migrate(spark, dirs, "", target, policy, sinceTsUs = since)
+        .toOption.get
+      val (want, written) = expect(policy, since, if (filled) preKeys else Set.empty)
+      assert(stats === want, what)
+      assert(rowsOf(target) === (before ++ written).sorted, what)
+    }
+
+    // Zero rows in (the resume key lies past every key): every observed
+    // counter reads 0, not null.
+    for (dirs <- Seq(indexed, indexless); filled <- Seq(false, true)) {
+      val target = Files.createTempDirectory("parity-empty").resolve("t").toString
+      if (filled) preload(target)
+      val stats = graft.kv.Kv.migrate(spark, dirs, "", target,
+        Some(TtlPolicy(recordTtlFromFirst = true, nowUs = nowUs)), resumeKey = Some("zz"),
+        sinceTsUs = Some(watermark)).toOption.get
+      assert(stats === WriteStats(0L, 0L, 0L, 0L), s"zero rows into a ${if (filled) "filled" else "new"} target")
+    }
   }
 }

@@ -103,6 +103,104 @@ class PlanSpec extends AnyFunSuite {
     assert(fallback.count() === merged.count())
   }
 
+  test("Kv.migrate exports in one Spark job: one observe node above every exchange, nothing persisted") {
+    import org.apache.spark.sql.execution.{CollectMetricsExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      AdaptiveSparkPlanHelper, ExchangeQueryStageExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.command.DataWritingCommandExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.graftbridge.ListenerBus
+    import graft.sinks.KeyedSink
+    val sc = spark.sparkContext
+    val indexed = graft.tools.SSTableThroughput.synthesize(1000, 3).toString
+    val spec = "click:text,nclicks:long"
+    val policy = Some(KeyedSink.TtlPolicy(minTtlUs = 600L * 1000000L, nowUs = 0L))
+    val target = java.nio.file.Files.createTempDirectory("one-action").resolve("t").toString
+
+    object Plans extends AdaptiveSparkPlanHelper
+    /** Runs `f` and returns the Spark jobs it started and the executed
+      * plans of the writes it ran. */
+    def observed[A](f: => A): (A, Int, Seq[SparkPlan]) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val writes = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+      val jobListener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+      }
+      val planListener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(n: String, qe: org.apache.spark.sql.execution.QueryExecution,
+            ns: Long): Unit =
+          if (Plans.find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+            writes.add(qe.executedPlan)
+        override def onFailure(n: String, qe: org.apache.spark.sql.execution.QueryExecution,
+            e: Exception): Unit = ()
+      }
+      ListenerBus.drain(sc)
+      sc.addSparkListener(jobListener)
+      spark.listenerManager.register(planListener)
+      try {
+        val a = f
+        ListenerBus.drain(sc)
+        (a, jobs.get, writes.toArray(Array.empty[SparkPlan]).toSeq)
+      } finally {
+        sc.removeSparkListener(jobListener)
+        spark.listenerManager.unregister(planListener)
+      }
+    }
+    // The nodes from the root down to the observe node, through AQE's
+    // wrappers and query stages (an exchange stage below the root is a
+    // materialized exchange).
+    def pathToObserve(p: SparkPlan): Option[List[SparkPlan]] = p match {
+      case _: CollectMetricsExec => Some(Nil)
+      case _ =>
+        val children = p match {
+          case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+          case q: QueryStageExec => Seq(q.plan)
+          case _ => p.children
+        }
+        children.view.flatMap(pathToObserve).headOption.map(p :: _)
+    }
+    def assertOneAction(what: String, plans: Seq[SparkPlan]): Unit = {
+      assert(plans.size === 1, s"$what: one write")
+      val plan = plans.head
+      assert(Plans.collect(plan) { case c: CollectMetricsExec => c }.size === 1,
+        s"$what: one observe node\n$plan")
+      val path = pathToObserve(plan).getOrElse(fail(s"$what: no observe node\n$plan"))
+      assert(!path.exists(n => n.isInstanceOf[Exchange] || n.isInstanceOf[ExchangeQueryStageExec]),
+        s"$what: an exchange sits between the observe node and the write\n$plan")
+      assert(Plans.find(plan)(_.isInstanceOf[InMemoryTableScanExec]).isEmpty,
+        s"$what: a cached relation\n$plan")
+    }
+
+    val persisted = sc.getPersistentRDDs.keySet
+    // Empty target, indexed input: the whole migration is one job.
+    val (stats, jobs, plans) = observed(
+      graft.kv.Kv.migrate(spark, Seq(indexed), spec, target, policy).toOption.get)
+    assert(stats.written === 2000L, stats)
+    assert(jobs === 1, s"Spark jobs per migration into an empty target")
+    assertOneAction("migrate into an empty target", plans)
+    assert(sc.getPersistentRDDs.keySet === persisted, "Kv.migrate persisted an RDD")
+
+    // Filled target: the existence join's exchange stays below the observe node.
+    val (again, _, againPlans) = observed(
+      graft.kv.Kv.migrate(spark, Seq(indexed), spec, target, policy).toOption.get)
+    assert(again.skippedExisting === 2000L && again.written === 0L, again)
+    assertOneAction("migrate into a filled target", againPlans)
+    assert(sc.getPersistentRDDs.keySet === persisted, "Kv.migrate persisted an RDD")
+
+    val sparkS = spark
+    import sparkS.implicits._
+    val incoming = Seq(("a", 1L, 0L), ("b", 2L, 0L)).toDF("key", "value", "ttl_us")
+      .withColumn("expiry_us", org.apache.spark.sql.functions.lit(null).cast("long"))
+    val sinkTarget = java.nio.file.Files.createTempDirectory("one-action-sink").resolve("t").toString
+    Seq("new", "filled").foreach { kind =>
+      val (_, _, sinkPlans) = observed(KeyedSink.createOnlyAppend(spark, incoming, sinkTarget))
+      assertOneAction(s"createOnlyAppend into a $kind target", sinkPlans)
+      assert(sc.getPersistentRDDs.keySet === persisted, "createOnlyAppend persisted an RDD")
+    }
+  }
+
   test("sessionization rides one hash shuffle (windows + agg share the key partitioning)") {
     val plan = planOf("events_sessionize")
     val hashExchanges = plan.linesIterator
