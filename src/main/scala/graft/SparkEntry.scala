@@ -149,7 +149,7 @@ object SparkEntry {
     "dedup_ngram_jaccard"      -> (Dedup.ngramJaccard _),
     "dedup_substring"          -> (Dedup.substringPairs _),
     "dedup_clusters"           -> (Dedup.clusters _),
-    "dedup_clusters_star"      -> (Dedup.clustersStar _),
+    "dedup_clusters_star"      -> (Dedup.clusters _),
     "dedup_survivors"          -> (Dedup.survivors _),
     "dedup_survivor_weights"   -> (Dedup.survivorWeights _),
     "dedup_containment"        -> (Dedup.containment _),
@@ -1974,10 +1974,6 @@ object SparkEntry {
       |ORDER BY n_bands""".stripMargin
   }
 
-  /** Connected components over the exact ngram pair graph as a DuckDB
-    * recursive CTE — shared verbatim by dedup_clusters (label
-    * propagation) and dedup_clusters_star (large-star/small-star):
-    * both must produce this exact relation. */
   /** The near-dup cluster verdict chain (shingles -> df cap -> exact
     * Jaccard pairs -> CC) shared by the clusters, survivors and
     * dedup_quality_audit oracles; leaves `cl`(doc_id, cluster_id)
@@ -2033,6 +2029,9 @@ object SparkEntry {
       |    AS eff_token_share
       |FROM w GROUP BY source ORDER BY source""".stripMargin
 
+  /** Connected components over the exact ngram pair graph as a DuckDB
+    * recursive CTE — the oracle of both registry names of the one
+    * kernel, dedup_clusters and dedup_clusters_star. */
   private val ClustersOracleSql: String = ClustersCtePrefix +
     """
       |SELECT doc_id, cluster_id,
@@ -3393,9 +3392,9 @@ object SparkEntry {
         |    / sqrt(list_dot_product(qv, qv) * list_dot_product(cv, cv)) >= 0.3
         |ORDER BY query_id, vec_id""".stripMargin,
 
-    // dedup_clusters_star computes the SAME relation by a different
-    // distributed algorithm (large-star/small-star), so it shares the
-    // connected-components oracle verbatim.
+    // dedup_clusters and dedup_clusters_star are two registry names for
+    // one kernel (Dedup.clusters, large-star/small-star), so they share
+    // the connected-components oracle verbatim.
     "dedup_clusters" -> ClustersOracleSql,
     "dedup_clusters_star" -> ClustersOracleSql,
 

@@ -43,13 +43,6 @@ object Dedup {
         count(lit(1)).as("n_copies"))
       .orderBy(col("survivor_doc_id"))
 
-  /** In-bucket pair generation from a sorted member array: all (a, b)
-    * with a < b, computed locally after the bucket aggregation — pairs
-    * never cross the wire unverified. Native codegen'd expression; the
-    * HOF-lambda formulation evaluated interpreted and was the dedup
-    * suite's hotspot. */
-  private def bucketPairs(ids: Column): Column = Sketches.sortedPairs(ids)
-
   /** Candidate pairs from a banded signature: group by (band, key),
     * cap bucket size, emit local pairs, dedup across bands. The cap is
     * enforced INSIDE the aggregation ([[graft.functions.CollectSetLimit]]):
@@ -120,11 +113,6 @@ object Dedup {
     exactPairCache.getOrCompute(spark, dir) {
       jaccardFrom(pairStatsM(spark, dir)).localCheckpoint()
     }
-
-  /** The exact pipeline BEFORE the session memo/checkpoint — the frame
-    * the plan dumps and shape tests pin (the memo hides the subtree). */
-  private[graft] def ngramJaccardRaw(spark: SparkSession, dir: String): DataFrame =
-    ngramJaccardOf(shingledDocs(spark, dir))
 
   /** Append a constant self-audit column to an approximate pair list:
     * the fraction of the exact pair set ([[exactPairSet]] — shared
@@ -665,7 +653,7 @@ object Dedup {
     * Jaccard ≈ |A|/|B| — arbitrarily far below any symmetric
     * threshold; the aggregation/quotation/boilerplate-expansion
     * class, [[substringPairs]]'s set-similarity sibling). Shares the
-    * [[coAndSizes]] inverted-index kernel with the Jaccard pipeline
+    * [[postingPairCounts]] inverted-index kernel with the Jaccard pipeline
     * verbatim — same shingle rule, same df cap, same candidate set —
     * so the two reports can never disagree about what a pair's
     * overlap IS, only rank it differently. Pairs orient small→big by
@@ -686,11 +674,6 @@ object Dedup {
     approxPairCache.getOrCompute(spark, dir, "containment")(
       containmentFrom(pairStatsM(spark, dir)).localCheckpoint())
       .orderBy(col("doc_small"), col("doc_big"))
-
-  /** The containment pipeline BEFORE the session memo — the frame the
-    * plan dumps pin (the memo hides the subtree). */
-  private[graft] def containmentRaw(spark: SparkSession, dir: String): DataFrame =
-    containmentFrom(pairStatsOf(shingledDocs(spark, dir)))
 
   private def containmentFrom(stats: DataFrame): DataFrame = {
     val aSmall = col("n_a") < col("n_b") ||
@@ -734,75 +717,64 @@ object Dedup {
     Tables.documents(spark, dir)
       .select(col("doc_id"), shingles(col("text"), 3).as("sh"))
 
-  /** The inverted-index kernel shared by the Jaccard and containment
-    * pipelines: per-shingle capped posting lists, per-doc
-    * retained-shingle counts, and the co-occurrence pair counts —
-    * ONE definition so the two similarity semantics can never see
-    * different candidate sets. */
+  /** Materialized shingle postings, session-memoized for the
+    * full-corpus pipelines so the Jaccard and containment reports share
+    * ONE inverted-index build. */
   private val postingsCache = new graft.functions.SessionScopedCache[DataFrame]("dedup.postings")
 
-  private def coAndSizes(docs: DataFrame,
-      postingsMemoKey: Option[String] = None): (DataFrame, DataFrame) = {
-    // One inverted index serves both sides: per-shingle posting lists
-    // (null once df exceeds the cap — bounded buffer), from which both
-    // the pair counts and the per-doc retained-shingle counts derive.
-    // Materialized (lazily, on first consumer): the capped posting
-    // lists are df-cap-bounded — ≤ cap ids per retained shingle, tens
-    // of MB at any corpus size that fits the shingle universe — and
-    // feed THREE consumers (the co-pair count, the per-doc sizes, and
-    // through sizes the broadcast tiny-doc annotation); without the
-    // checkpoint each consumer re-ran the whole inverted-index build
-    // (the 19 M-row string-keyed explode + collect aggregation, the
-    // pipeline's single most expensive stage). At real scale this
-    // materialization is the inverted-index table a dedup service
-    // persists — the lshCurve signature-matrix convention (r17, guide
-    // §1.2/§5: cut lineage where recomputing beats memory).
-    val postingsPipeline = docs
-      .select(col("doc_id"), explode(col("sh")).as("shingle"))
-      .groupBy(col("shingle"))
+  /** The inverted index behind every exact pair pipeline (shingles for
+    * Jaccard and containment, winnowed fingerprints for substring
+    * pairs): one row per term with the ids of the docs holding it. The
+    * df cap sits INSIDE the aggregation ([[graft.functions.CollectSetLimit]]):
+    * a term in more than 200 docs costs a bounded buffer and yields
+    * null, and is dropped — it has no discriminating power and would
+    * blow the pair count up quadratically. */
+  private def cappedPostings(docs: DataFrame, terms: Column): DataFrame =
+    docs.select(col("doc_id"), explode(terms).as("term"))
+      .groupBy(col("term"))
       .agg(graft.functions.CollectSetLimit
         .collectSetLimit(col("doc_id"), 200).as("ids"))
       .filter(col("ids").isNotNull)
-      .localCheckpoint(false)
-    // With a key (the full-corpus pipelines), the materialized postings
-    // are additionally session-memoized so the Jaccard and containment
-    // pipelines share ONE build; sampled/incremental callers pass None
-    // and keep a private checkpoint.
-    val postings0 = postingsMemoKey.fold(postingsPipeline)(k =>
-      postingsCache.getOrCompute(docs.sparkSession, k)(postingsPipeline))
 
-    val sizes = postings0
+  /** The two frames every exact pair pipeline derives from its
+    * (materialized) [[cappedPostings]] — ONE definition, so the
+    * similarity semantics built on them can never see different
+    * candidate sets:
+    *  - per-doc retained-term counts, (doc_id, `sizeName`);
+    *  - in-posting co-occurrence counts, (doc_a, doc_b, `countName`),
+    *    doc_a < doc_b.
+    *
+    * Pair counts run over the PACKED pair stream (r17):
+    * one (a << 32 | b) long per in-posting pair instead of a two-field
+    * struct row, so the count aggregation runs through codegen's
+    * single-long fast hash map and the exchange carries 8 bytes per
+    * pair. Measured at sf1 (125 M pair instances over 112.7 M distinct
+    * pairs): struct + groupBy 80.2 s → packed + groupBy 22.8 s. A
+    * partition-local sort/run-length kernel measured 27.1 s on the same
+    * stream AND hid the frame's statistics behind a LogicalRDD
+    * (static-broadcast pathology — see candidatesFromBands), so the
+    * plain aggregation wins twice. The stream is hash-repartitioned to
+    * a SCALE-DERIVED partition count before the aggregation
+    * ([[pairStreamPartitions]]): ~90% of the packed
+    * keys are singletons, so partial aggregation reduces nothing and
+    * the cost is the per-task aggregation map — right-sizing the task
+    * count bounds every map at ~1 M keys, and the groupBy reuses the
+    * repartition's hashpartitioning (ONE exchange of bare 8-byte keys).
+    * Measured at sf1: 32 parts 30.8 s → 128 parts 13.7 s (512
+    * overshoots: 23.9 s — block and dispatch overhead). */
+  private def postingPairCounts(postings: DataFrame,
+      sizeName: String, countName: String): (DataFrame, DataFrame) = {
+    val sizes = postings
       .select(explode(col("ids")).as("doc_id"))
       .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_sh"))
-
-    // Pair counts over the PACKED pair stream (r17, guide §2.3/§4.2):
-    // one (a << 32 | b) long per in-posting pair instead of a
-    // two-field struct row, so the count aggregation runs through
-    // codegen's single-long fast hash map and the exchange carries
-    // 8 bytes per pair. Measured at sf1 (125 M pair instances over
-    // 112.7 M distinct pairs): struct + groupBy 80.2 s → packed +
-    // groupBy 22.8 s. A partition-local sort/run-length kernel
-    // measured 27.1 s on the same stream AND hid the frame's
-    // statistics behind a LogicalRDD (static-broadcast pathology —
-    // see candidatesFromBands), so the plain aggregation wins twice.
-    // The stream is hash-repartitioned to a SCALE-DERIVED partition
-    // count before the aggregation ([[pairStreamPartitions]], r17
-    // session 3, guide §2.2/§2.5): ~90% of the packed keys are
-    // singletons, so partial aggregation reduces nothing and the cost
-    // is the per-task aggregation map — right-sizing the task count
-    // bounds every map at ~1 M keys, and the groupBy reuses the
-    // repartition's hashpartitioning (ONE exchange, now of bare 8-byte
-    // keys with no useless map-side partial building multi-million-row
-    // maps below it). Measured at sf1: 32 parts 30.8 s → 128 parts
-    // 13.7 s (512 overshoots: 23.9 s — block and dispatch overhead).
-    val coCounts = postings0.filter(size(col("ids")) >= 2)
+      .agg(count(lit(1)).as(sizeName))
+    val coCounts = postings.filter(size(col("ids")) >= 2)
       .select(explode(Sketches.sortedPairsPacked(col("ids"))).as("pk"))
-      .repartition(pairStreamPartitions(postings0), col("pk"))
-      .groupBy(col("pk")).agg(count(lit(1)).as("n_common"))
+      .repartition(pairStreamPartitions(postings), col("pk"))
+      .groupBy(col("pk")).agg(count(lit(1)).as(countName))
       .select(shiftrightunsigned(col("pk"), 32).as("doc_a"),
         col("pk").bitwiseAND(lit(0xffffffffL)).as("doc_b"),
-        col("n_common"))
+        col(countName))
     (coCounts, sizes)
   }
 
@@ -893,7 +865,22 @@ object Dedup {
     * re-ran it. */
   private[graft] def pairStatsOf(docs: DataFrame,
       postingsMemoKey: Option[String] = None): DataFrame = {
-    val (coCounts, sizes) = coAndSizes(docs, postingsMemoKey)
+    // Materialized (lazily, on first consumer): the capped posting
+    // lists are df-cap-bounded — ≤ cap ids per retained shingle, tens
+    // of MB at any corpus size that fits the shingle universe — and
+    // feed THREE consumers (the co-pair count, the per-doc sizes, and
+    // through sizes the broadcast tiny-doc annotation); without the
+    // checkpoint each consumer re-ran the whole inverted-index build
+    // (the 19 M-row string-keyed explode + collect aggregation, the
+    // pipeline's single most expensive stage). With a key (the
+    // full-corpus pipelines) the materialized postings are also
+    // session-memoized; sampled callers pass None and keep a private
+    // checkpoint.
+    val postings = cappedPostings(docs, col("sh")).localCheckpoint(false)
+    val (coCounts, sizes) = postingPairCounts(
+      postingsMemoKey.fold(postings)(k =>
+        postingsCache.getOrCompute(docs.sparkSession, k)(postings)),
+      "n_sh", "n_common")
 
     val tiny = sizes.filter(col("n_sh") <= 2)
     val kept = coCounts
@@ -974,41 +961,18 @@ object Dedup {
     * from [[substringPairsRaw]]'s own plan). */
   private[graft] def substringPostingsRaw(
       spark: SparkSession, dir: String): DataFrame =
-    Tables.documents(spark, dir)
-      .select(col("doc_id"),
-        explode(Sketches.winnowFingerprint(lower(col("text")), 8, 4)).as("fpv"))
-      .groupBy(col("fpv"))
-      .agg(graft.functions.CollectSetLimit
-        .collectSetLimit(col("doc_id"), 200).as("ids"))
-      .filter(col("ids").isNotNull)
+    cappedPostings(Tables.documents(spark, dir),
+      Sketches.winnowFingerprint(lower(col("text")), 8, 4))
 
   private[graft] def substringPairsRaw(spark: SparkSession, dir: String): DataFrame = {
     val minShared = 3
     // Lazily materialized for the same reason as the shingle postings
-    // in coAndSizes: df-cap-bounded lists, two consumers, and the
+    // in pairStatsOf: df-cap-bounded lists, two consumers, and the
     // winnow + explode + collect build is the stage's dominant cost.
-    val postings0 = substringPostingsRaw(spark, dir).localCheckpoint(false)
-
-    val sizes = postings0
-      .select(explode(col("ids")).as("doc_id"))
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_fp"))
-
-    // Pair counts over the PACKED pair stream (the coAndSizes r17
-    // treatment: one long per pair through the single-long fast hash
-    // map — measured 3.5× on the shingle co-pair stream). The
-    // n_shared ≥ 3 cut then drops the singleton mass before any join,
-    // so no tiny-doc annotation is needed here. Same scale-derived
-    // repartition ahead of the aggregation as coAndSizes
-    // ([[pairStreamPartitions]]): ~1 M pair instances per task keeps
-    // the count map in memory at any corpus size.
-    val coCounts = postings0.filter(size(col("ids")) >= 2)
-      .select(explode(Sketches.sortedPairsPacked(col("ids"))).as("pk"))
-      .repartition(pairStreamPartitions(postings0), col("pk"))
-      .groupBy(col("pk")).agg(count(lit(1)).as("n_shared"))
-      .select(shiftrightunsigned(col("pk"), 32).as("doc_a"),
-        col("pk").bitwiseAND(lit(0xffffffffL)).as("doc_b"),
-        col("n_shared"))
+    // The n_shared ≥ 3 cut then drops the singleton pair mass before
+    // any join, so no tiny-doc annotation is needed here.
+    val (coCounts, sizes) = postingPairCounts(
+      substringPostingsRaw(spark, dir).localCheckpoint(false), "n_fp", "n_shared")
 
     // Unhinted size joins — see ngramJaccard: the size frame is
     // corpus-cardinality, the pair frame is capped; AQE broadcasts
@@ -1026,92 +990,22 @@ object Dedup {
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
-  /** #37b dedup_clusters: connected components over the near-dup pair
-    * graph — the step a dedup pipeline needs AFTER pair generation
-    * (pairs → transitive closure → cluster id → survivor pick).
-    * Iterative min-label propagation: each round joins current labels
-    * onto the edge list and keeps the minimum neighbor label;
-    * converges in component-diameter rounds (near-dup clusters are
-    * tiny, so the driver-side loop is O(1) rounds of fully distributed
-    * joins — the standard large-graph CC shape; at trillion-edge scale
-    * you'd switch to large-star/small-star, same skeleton). Emits
-    * (doc_id, cluster_id = min doc in component, cluster_size) for
-    * every clustered doc. */
+  /** #37b dedup_clusters (and #37d dedup_clusters_star, the same
+    * registry entry under its second name): connected components over
+    * the near-dup pair graph — the step a dedup pipeline needs AFTER
+    * pair generation (pairs → transitive closure → cluster id →
+    * survivor pick). Computed by [[ccStar]] over the exact ngram pair
+    * set ([[exactPairSet]], the same memoized checkpoint the sketch
+    * audits read). Emits (doc_id, cluster_id = min doc in component,
+    * cluster_size) for every clustered doc.
+    *
+    * The assignment is itself a shared pipeline artifact (survivors,
+    * survivor weights and both curation reports derive from it), so it
+    * memoizes per (session, dir) like the pair set it consumes: the
+    * component kernel runs once per session, not once per consumer. */
   def clusters(spark: SparkSession, dir: String): DataFrame =
-    // The clustered-doc assignment is itself a shared pipeline artifact
-    // (survivors and the curation funnel re-derive from it, and its
-    // result is already a lineage-free localCheckpoint), so it
-    // memoizes per (session, dir) like the pair set it consumes: the
-    // iterative CC loop runs once per session, not once per consumer.
     approxPairCache.getOrCompute(spark, dir, "clusters")(
-      clustersUncached(spark, dir))
-
-  private def clustersUncached(spark: SparkSession, dir: String): DataFrame = {
-    // The pair frame is the SAME exact ngram pair set the sketch
-    // audits consume — [[exactPairSet]]'s per-(session, dir) memoized
-    // checkpoint — so across a session the ngram pipeline runs once,
-    // not once per consumer (clusters / clusters_star / survivors /
-    // both audits); the union below then re-reads the materialized
-    // frame per branch instead of re-running the pipeline. The pair
-    // graph is orders of magnitude smaller than the corpus (bounded by
-    // the capped candidate generation), so it rides a FRACTION of the
-    // session's shuffle parallelism — derived from the conf, so a
-    // cluster-sized session scales the loop without a code change.
-    val pairs = exactPairSet(spark, dir)
-    val edgeParts = math.max(2, spark.conf.get("spark.sql.shuffle.partitions").toInt / 8)
-    val edges = pairs
-      .unionAll(pairs.select(col("doc_b").as("doc_a"), col("doc_a").as("doc_b")))
-      .repartition(edgeParts)
-      .persist()
-    var cached = edges.select(col("doc_a").as("v")).distinct()
-      .withColumn("label", col("v"))
-      .persist()
-    var labels = cached
-    try {
-      var changed = 1L
-      var iter = 0
-      val maxIters = 25
-      while (changed > 0 && iter < maxIters) {
-        val nbrMin = edges
-          .join(labels.select(col("v").as("doc_b"), col("label")), "doc_b")
-          .groupBy(col("doc_a").as("v"))
-          .agg(min(col("label")).as("nbr_min"))
-        // Single join carries old + new label so the convergence count
-        // rides the same materialization instead of a second join.
-        val joined0 = labels
-          .join(nbrMin, Seq("v"), "left_outer")
-          .select(col("v"), col("label").as("_old"),
-            least(col("label"), coalesce(col("nbr_min"), col("label"))).as("label"))
-        // Every 5th round, truncate lineage with an eager local
-        // checkpoint (plan depth otherwise grows per iteration and
-        // analysis cost with it); other rounds just cache.
-        val joined =
-          if (iter % 5 == 4) joined0.localCheckpoint() else joined0.persist()
-        changed = joined.filter(col("label") =!= col("_old")).count()
-        cached.unpersist()
-        cached = joined
-        labels = joined.select(col("v"), col("label"))
-        iter += 1
-      }
-      // An unconverged exit would silently return WRONG cluster ids —
-      // fail loudly instead (a graph whose diameter beats the cap needs
-      // the large-star/small-star variant, not more iterations).
-      require(changed == 0,
-        s"cluster label propagation did not converge in $maxIters iterations " +
-          s"($changed labels still changing)")
-      val sizes = labels.groupBy(col("label")).agg(count(lit(1)).as("cluster_size"))
-      val result = labels.join(sizes, "label")
-        .select(col("v").as("doc_id"), col("label").as("cluster_id"),
-          col("cluster_size"))
-        .orderBy(col("doc_id"))
-      // Materialize the (tiny) result once into a lineage-free local
-      // checkpoint so EVERY loop cache can be released before
-      // returning — consumers re-read the checkpoint, not the loop's
-      // cached frames. Without this the final iteration's cache had to
-      // stay resident for the caller, stranding one frame per call.
-      result.localCheckpoint()
-    } finally { cached.unpersist(); edges.unpersist() }
-  }
+      ccStar(spark, exactPairSet(spark, dir)))
 
   /** One large-star round (Kiveris et al., "Connected Components in
     * MapReduce and Beyond", Alg. 2): every node u links each LARGER
@@ -1186,13 +1080,16 @@ object Dedup {
       .toDF("doc_id", "cluster_id", "cluster_size")
   }
 
-  /** Connected components by alternating large-star/small-star rounds
-    * over a (doc_a, doc_b) pair frame — O(log² n) rounds regardless of
-    * component DIAMETER (min-label propagation needs diameter-many
-    * rounds, its one structural limit). Convergence is edge-set
-    * stability, checked with a (count, hash-sum) signature so each
-    * round costs one tiny action. Same output contract and cache
-    * hygiene as [[clusters]]. Graphs at or under `smallGraphEdgeCap`
+  /** The one connected-components kernel ([[clusters]], [[knnCc]] and
+    * `Multimodal.phashClusters` all call it): alternating
+    * large-star/small-star rounds over a (doc_a, doc_b) pair frame —
+    * O(log² n) rounds regardless of component DIAMETER, so a long
+    * near-dup chain converges as fast as a star. Convergence is
+    * edge-set stability, checked with a (count, hash-sum) signature so
+    * each round costs one tiny action. Emits (doc_id, cluster_id = min
+    * id in the component, cluster_size) ordered by doc_id, as a
+    * lineage-free frame: every round cache is released before it
+    * returns. Graphs at or under `smallGraphEdgeCap`
     * edges short-circuit to [[ccLocal]] (identical output) — the round
     * loop's fixed overhead dwarfs the work there, and the cap bounds
     * the collect by construction. */
@@ -1246,16 +1143,6 @@ object Dedup {
     } finally cached.unpersist()
   }
 
-  /** #37d dedup_clusters_star: [[clusters]]' output contract computed
-    * by [[ccStar]] — the variant to reach for when near-dup chains make
-    * component diameter unbounded (label propagation's round count) at
-    * trillion-edge scale. Shares the dedup_clusters DuckDB oracle. */
-  def clustersStar(spark: SparkSession, dir: String): DataFrame =
-    // Shares [[exactPairSet]]'s materialized pair frame and memoizes
-    // its own checkpointed result — see clusters.
-    approxPairCache.getOrCompute(spark, dir, "clusters_star")(
-      ccStar(spark, exactPairSet(spark, dir)))
-
   /** #37c dedup_survivors: the dedup pipeline's final step — drop every
     * clustered doc except its cluster's min-id survivor, keeping all
     * unclustered docs. The corpus never shuffles for the check: the
@@ -1266,8 +1153,8 @@ object Dedup {
     * surviving corpus as (doc_id, n_chars) plus a flag for whether the
     * doc won a cluster (vs was never duplicated). */
   def survivors(spark: SparkSession, dir: String): DataFrame = {
-    // One clusters() call: its result is a materialized local
-    // checkpoint, so both derived sides re-read that, not the pipeline.
+    // One clusters() call: its result is materialized and lineage-free,
+    // so both derived sides re-read that, not the pipeline.
     val cl = clusters(spark, dir)
     val dropped = cl.filter(col("doc_id") =!= col("cluster_id"))
       .select(col("doc_id"), lit(true).as("_dup"))

@@ -35,10 +35,6 @@ object Exact {
   def d4w(c: Column): Column =
     round(c, 4).cast("decimal(28,4)").cast("double")
 
-  /** SQL fragment mirroring [[d4w]] for the DuckDB oracle. */
-  def d4wSql(expr: String): String =
-    s"CAST(CAST(ROUND($expr, 4) AS DECIMAL(28,4)) AS DOUBLE)"
-
   /** 4-place presentation of an INTEGER ratio num/den — the tie-free
     * form of [[d4]] for the one input class where d4 is not
     * engine-exact. INPUTS MUST BE INTEGER-VALUED (any numeric type is
@@ -120,13 +116,4 @@ object Exact {
     * half-away-from-zero, so the rounded value itself is exact and
     * engine-independent. */
   def pres(c: Column): Column = round(c, 2).cast("double")
-
-  /** SQL fragment mirroring [[pres]] for the DuckDB oracle. */
-  def presSql(expr: String): String = s"CAST(ROUND($expr, 2) AS DOUBLE)"
-
-  /** SQL fragment mirroring [[dec]] for the DuckDB oracle. */
-  def decSql(expr: String, scale: Int): String = s"CAST($expr AS DECIMAL(30,$scale))"
-
-  /** SQL fragment mirroring [[dsum]] for the DuckDB oracle. */
-  def dsumSql(expr: String, scale: Int): String = s"SUM(${decSql(expr, scale)})"
 }

@@ -84,32 +84,6 @@ object Curation {
       .orderBy(col("stage"))
   }
 
-  /** #37g dedup_quality_audit: the dedup×quality INTERACTION report —
-    * for each dedup verdict (`unique`: in no near-dup cluster;
-    * `winner`: a cluster's kept representative; `dropped`: a cluster
-    * member the survivor pick removes) the docs/tokens it covers, the
-    * mean quality score and the share of low-quality docs. This is the
-    * audit a curation rollout reads before ORDERING its stages: if
-    * `dropped` skews low-quality, dedup is doing part of the quality
-    * gate's work (dups are disproportionately boilerplate — the
-    * RefinedWeb observation) and the gates can run in either order; if
-    * it doesn't, quality-after-dedup and dedup-after-quality keep
-    * different corpora and the rollout must pick deliberately.
-    *
-    * Means are exact: [[Text.quality]]'s d4 score is recovered to its
-    * integer 1e-4 units per doc (ROUND(score·10⁴) — exact recovery of
-    * an already-4-dec value, the kmeans min_cos precedent), summed as
-    * BIGINT (order-free), presented with ONE [[ratio4]] division —
-    * `mean_q4` is the mean score in 1e-4 units. `low_frac` gates on
-    * the rounded score at 0.5, the curve's middle threshold (the
-    * curation_report precedent, so the cut bites identically in the
-    * oracle).
-    *
-    * Scale shape: the cluster verdict frame is duplication-bounded
-    * (only docs IN clusters, from the session-memoized checkpoint) so
-    * its join onto the quality scan broadcasts; the rollup is
-    * map-side-combinable onto a ≤3-row frame. Nothing corpus-sized
-    * shuffles. */
   /** #44w split_leakage: the near-duplicate TRAIN/TEST contamination
     * audit over the split manifest — for every unordered split pair
     * (dense 6-cell matrix, zeros included: the contamination_matrix
@@ -157,6 +131,32 @@ object Curation {
       .orderBy(col("split_a"), col("split_b"))
   }
 
+  /** #37g dedup_quality_audit: the dedup×quality INTERACTION report —
+    * for each dedup verdict (`unique`: in no near-dup cluster;
+    * `winner`: a cluster's kept representative; `dropped`: a cluster
+    * member the survivor pick removes) the docs/tokens it covers, the
+    * mean quality score and the share of low-quality docs. This is the
+    * audit a curation rollout reads before ORDERING its stages: if
+    * `dropped` skews low-quality, dedup is doing part of the quality
+    * gate's work (dups are disproportionately boilerplate — the
+    * RefinedWeb observation) and the gates can run in either order; if
+    * it doesn't, quality-after-dedup and dedup-after-quality keep
+    * different corpora and the rollout must pick deliberately.
+    *
+    * Means are exact: [[Text.quality]]'s d4 score is recovered to its
+    * integer 1e-4 units per doc (ROUND(score·10⁴) — exact recovery of
+    * an already-4-dec value, the kmeans min_cos precedent), summed as
+    * BIGINT (order-free), presented with ONE [[ratio4]] division —
+    * `mean_q4` is the mean score in 1e-4 units. `low_frac` gates on
+    * the rounded score at 0.5, the curve's middle threshold (the
+    * curation_report precedent, so the cut bites identically in the
+    * oracle).
+    *
+    * Scale shape: the cluster verdict frame is duplication-bounded
+    * (only docs IN clusters, from the session-memoized checkpoint) so
+    * its join onto the quality scan broadcasts; the rollup is
+    * map-side-combinable onto a ≤3-row frame. Nothing corpus-sized
+    * shuffles. */
   def dedupQualityAudit(spark: SparkSession, dir: String): DataFrame = {
     val cl = Dedup.clusters(spark, dir).select(col("doc_id"), col("cluster_id"))
     val verdict = when(col("cluster_id").isNull, lit("unique"))

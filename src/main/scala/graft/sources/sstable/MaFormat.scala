@@ -230,12 +230,6 @@ object MaFormat {
     }
   }
 
-  def readIndexEntries(in: InputStream, version: String = "ma"): Array[(Array[Byte], Long)] =
-    indexEntries(in, version).toArray
-
-  def readIndexPositions(in: InputStream, version: String = "ma"): Array[Long] =
-    readIndexEntries(in, version).map(_._2)
-
   /** Summary.db — the downsampled index the reference loads whole
     * ("Summary is designed to keep in memory", SSTable.cpp:121-180
     * find_partition_in_summary): header of BIG-endian minIndexInterval
@@ -312,35 +306,14 @@ object MaFormat {
     * whole ring range, so a token-sliced scan can skip a
     * non-overlapping SSTable entirely at plan time, before its
     * Index.db is even opened. Minimal/truncated summaries (or our own
-    * older fixtures) simply end after the entries — any EOF or
-    * implausible length yields None and the caller falls back to the
-    * per-partition index pass, which is always safe. */
+    * older fixtures) simply end after the entries — parsed by
+    * [[readSummaryWithBounds]], and any failure there (EOF, implausible
+    * header or key length, corrupt entry block) yields None: the caller
+    * falls back to the per-partition index pass, which is always
+    * safe. */
   def readSummaryBounds(in: InputStream, version: String)
-      : Option[(Array[Byte], Array[Byte])] = scala.util.Try {
-    val din = new DataInputStream(in)
-    val scratch = new Array[Byte](8)
-    din.readFully(scratch, 0, 4) // minIndexInterval
-    val size = din.readInt()
-    val memSize = din.readLong()
-    if (version >= "ka") din.readFully(scratch, 0, 8)
-    require(size >= 0 && memSize >= (4L * size) && memSize <= Int.MaxValue,
-      s"implausible Summary.db header: size=$size memSize=$memSize")
-    var toSkip = memSize
-    val junk = new Array[Byte](65536)
-    while (toSkip > 0) {
-      val n = din.read(junk, 0, math.min(toSkip, junk.length.toLong).toInt)
-      require(n > 0, "EOF inside the Summary.db entry block")
-      toSkip -= n
-    }
-    def keyWithLength(): Array[Byte] = {
-      val len = din.readInt()
-      require(len >= 0 && len <= (1 << 20), s"implausible summary key length $len")
-      val k = new Array[Byte](len)
-      din.readFully(k)
-      k
-    }
-    (keyWithLength(), keyWithLength())
-  }.toOption
+      : Option[(Array[Byte], Array[Byte])] =
+    scala.util.Try(readSummaryWithBounds(in, version)._2).toOption.flatten
 
   /** One decoded unfiltered: a cell, or a range-tombstone marker.
     * "ma" markers carry col = null; "ka" range tombstones carry the

@@ -129,28 +129,45 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("clusters are the connected components of the pair graph") {
-    val pairs = Dedup.ngramJaccard(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val got = Dedup.clusters(spark, sf).collect()
-      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-    // In-memory union-find oracle.
-    val parent = scala.collection.mutable.Map.empty[Long, Long]
-    def find(x: Long): Long = {
-      val p = parent.getOrElseUpdate(x, x)
-      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    // The unit corpus and the bigger sf0.01 corpus (the oracle-check
+    // scale), where clusters of several shapes exist.
+    val sf01 = new java.io.File(new java.io.File(sf).getParentFile, "sf0.01").getPath
+    for (dir <- Seq(sf, sf01)) {
+      val pairs = Dedup.ngramJaccard(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1)))
+      val got = Dedup.clusters(spark, dir).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      // In-memory union-find oracle.
+      val parent = scala.collection.mutable.Map.empty[Long, Long]
+      def find(x: Long): Long = {
+        val p = parent.getOrElseUpdate(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      pairs.foreach { case (a, b) =>
+        val (ra, rb) = (find(a), find(b))
+        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      val roots = parent.keys.map(v => v -> find(v)).toMap
+      val sizes = roots.groupBy(_._2).map { case (r, m) => r -> m.size.toLong }
+      assert(got.nonEmpty, s"$dir should contain near-dup clusters")
+      assert(got.keySet === roots.keySet, dir)
+      got.foreach { case (v, (cid, sz)) =>
+        assert(cid === roots(v), s"$dir: doc $v cluster")
+        assert(sz === sizes(roots(v)), s"$dir: doc $v cluster size")
+        assert(sz >= 2, "every clustered doc has at least one dup partner")
+      }
     }
-    pairs.foreach { case (a, b) =>
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-    val roots = parent.keys.map(v => v -> find(v)).toMap
-    val sizes = roots.groupBy(_._2).map { case (r, m) => r -> m.size.toLong }
-    assert(got.keySet === roots.keySet)
-    got.foreach { case (v, (cid, sz)) =>
-      assert(cid === roots(v), s"doc $v cluster")
-      assert(sz === sizes(roots(v)), s"doc $v cluster size")
-      assert(sz >= 2, "every clustered doc has at least one dup partner")
-    }
+  }
+
+  test("dedup_clusters_star reads the dedup_clusters memo entry: no second build") {
+    // Two registry names for one kernel: after dedup_clusters has built
+    // the session's cluster frame, the second name must be a memo hit.
+    Dedup.clusters(spark, sf).collect()
+    val before = graft.functions.DriverMemo.buildCount()
+    val star = SparkEntry.queries("dedup_clusters_star")(spark, sf).collect()
+    assert(graft.functions.DriverMemo.buildCount() === before,
+      "dedup_clusters_star built its own cluster frame")
+    assert(star.nonEmpty)
   }
 
   test("embedding LSH emits per-vector best candidates with valid cosines") {
@@ -167,22 +184,40 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("large-star/small-star clusters match label propagation on the real corpus") {
-    // Same pair graph, two algorithms, one relation — parity on the
-    // bigger sf0.01 corpus (the driver-gate scale), where clusters of
-    // several shapes exist.
-    val dir = "/root/testdata/sf0.01"
-    val lp = Dedup.clusters(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val star = Dedup.clustersStar(spark, dir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    // The distributed star rounds (cap = 0 skips the driver union-find)
+    // against a different algorithm: min-label propagation run on the
+    // driver to its fixpoint, with no round cap, over the sf0.01 pair
+    // graph, where clusters of several shapes exist.
+    val dir = new java.io.File(new java.io.File(sf).getParentFile, "sf0.01").getPath
+    val sparkS = spark
+    import sparkS.implicits._
+    val pairs = Dedup.ngramJaccard(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val label = scala.collection.mutable.Map.empty[Long, Long]
+    pairs.foreach { case (a, b) => label(a) = a; label(b) = b }
+    var changed = true
+    while (changed) {
+      changed = false
+      pairs.foreach { case (a, b) =>
+        val m = math.min(label(a), label(b))
+        if (label(a) != m) { label(a) = m; changed = true }
+        if (label(b) != m) { label(b) = m; changed = true }
+      }
+    }
+    val sizes = label.values.groupBy(identity).map { case (c, vs) => c -> vs.size.toLong }
+    val lp = label.map { case (v, c) => (v, c, sizes(c)) }.toSet
+    val star = Dedup.ccStar(spark, pairs.toSeq.toDF("doc_a", "doc_b"), smallGraphEdgeCap = 0L)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(lp.nonEmpty)
     assert(star === lp)
+    val served = Dedup.clusters(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    assert(served === lp)
   }
 
   test("star rounds converge on a high-diameter graph that defeats label propagation") {
-    // A 120-node path has diameter 119 — far past the label loop's
-    // 25-iteration cap, and exactly the graph class the star variant
-    // exists for: it converges in O(log^2 n) rounds.
+    // A 120-node path has diameter 119: min-label propagation would
+    // need 119 rounds, while the star rounds converge in O(log^2 n).
     val sparkS = spark
     import sparkS.implicits._
     val path = (0L until 119L).map(i => (i, i + 1)).toDF("doc_a", "doc_b")
