@@ -40,6 +40,7 @@ object Bench {
     graft.sources.Tables.sessionConfs.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    Verify.quietUnpartitionedWindows()
     // Warm the JVM (codegen, shuffle machinery) and parquet footers so
     // per-query timings measure the query, not session initialization.
     // The representative-kernel jobs below exist because queries now

@@ -4,6 +4,15 @@ import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** WindowExec warns "No Partition Defined for Window operation!" for
+    * every window without a partition key. The registry runs such
+    * windows on purpose, over dimension-sized aggregates where one
+    * partition is the intended plan. Only this logger is raised. */
+  def quietUnpartitionedWindows(): Unit =
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -15,14 +24,7 @@ object Verify {
     graft.sources.Tables.sessionConfs.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // WindowExec warns "No Partition Defined for Window operation!" for
-    // every window without a partition key. The dumped queries run such
-    // windows on purpose: bounded ones over dimension-sized aggregates
-    // (a handful to a few thousand rows), where one partition is the
-    // intended plan. Only this logger is raised; every other keeps WARN.
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window.WindowExec",
-      org.apache.logging.log4j.Level.ERROR)
+    quietUnpartitionedWindows()
     new java.io.File(outDir).mkdirs()
     // Session-memo footprint policy at the stage boundary (same knob
     // as Bench): a 151-query dump session accumulates checkpointed

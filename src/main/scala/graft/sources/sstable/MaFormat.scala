@@ -98,6 +98,19 @@ object MaFormat {
 
   /** The no-deletion sentinel (Cassandra DeletionTime.LIVE). */
   val NoDeletion: Long = Long.MinValue
+
+  /** A length prefix no well-formed Data.db holds (negative, or past the
+    * Int range), thrown before anything is allocated; the source's
+    * reader rethrows it [[at]] the Data.db path and partition offset. */
+  final class CorruptLengthException(message: String, cause: Throwable = null)
+      extends IllegalStateException(message, cause) {
+    def at(file: String, offset: Long): CorruptLengthException =
+      new CorruptLengthException(s"$file: $message in the partition at offset $offset", this)
+  }
+  private def checkedLength(n: Long): Int =
+    if (n < 0 || n > Int.MaxValue) throw new CorruptLengthException(s"corrupt length prefix $n")
+    else n.toInt
+
   /** The no-TTL sentinel inside the decoder (reference uses u64 max). */
   private val NoTtl: Long = -1L
 
@@ -471,7 +484,7 @@ object MaFormat {
           val lane = (header >> shift) & 3L
           if (lane == 0L) {
             val size = clustering(c).fixedSize match {
-              case -1 => readUnsignedVint().toInt
+              case -1 => checkedLength(readUnsignedVint())
               case s => s
             }
             if (sb != null)
@@ -669,13 +682,13 @@ object MaFormat {
         if (expiring) ttl = readUnsignedVint() + minTtl
       }
       val colName =
-        if (complexPath) s"$name[${renderPath(readBytes(readUnsignedVint().toInt))}]"
+        if (complexPath) s"$name[${renderPath(readBytes(checkedLength(readUnsignedVint())))}]"
         else name
       val value =
         if ((cellFlags & HAS_EMPTY_VALUE_MASK) == 0) {
           val size =
             if (tpe.fixedSize >= 0) tpe.fixedSize
-            else readUnsignedVint().toInt
+            else checkedLength(readUnsignedVint())
           readBytes(size)
         } else null
       // Counter columns keep their flag so Kv routes them to
@@ -943,7 +956,7 @@ object MaFormat {
                 expiring = true
               }
               val ts = din.readLong()
-              val value = new Array[Byte](din.readInt())
+              val value = new Array[Byte](checkedLength(din.readInt()))
               din.readFully(value)
               nextCell = MaCell(key, colName, ts, value,
                 deleted = (flags & DELETION_MASK) != 0, expiring = expiring,

@@ -1,5 +1,7 @@
 package graft.sources.sstable
 
+import java.nio.ByteBuffer
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util
 
 import scala.jdk.CollectionConverters._
@@ -25,6 +27,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * CLI, which takes only paths. Explicit options override the
   * discovered values; note the delta bases are per file, so the
   * options only make sense for single-generation reads.
+  *
+  * One ring order: every SSTable and its Index.db are written in the
+  * partitioner's (token, key) order, and everything that asks "where is
+  * this key on the ring, and is it inside the scan?" asks one
+  * [[RingOrder]] (one byte encoding of keys and token bounds) and one
+  * [[RingBounds]] (the resume/slice predicate): the plan-time file skip,
+  * summary floor and Index.db pass, the merge-slice cuts, the reader's
+  * residual filter and `describe`'s `in_slice`. Each file's order comes
+  * from one rule, [[MaSSTableSource.partitionerOf]].
   *
   * Options:
   *  - `path`: file or directory of `*-Data.db` files; several via
@@ -56,23 +67,24 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - `resumeKey`: resume the scan from this key (the reference's `-s`
   *    flag): with an Index.db the seek skips every earlier partition at
   *    plan time (partitions read in index/ring order); without one the
-  *    reader filters per cell — same rows either way
+  *    reader filters per partition — same rows either way
   *  - `tokenMin`, `tokenMax`: inclusive TOKEN bounds on the partitioner
   *    ring — the shard predicate a distributed migration uses (worker i
   *    of N reads ring·i/N ≤ token ≤ ring·(i+1)/N), generalizing the
   *    reference's resume seek from "start at key" to "read my slice".
-  *    Format follows the partitioner: a signed decimal long for
-  *    `murmur3`, 32 lowercase hex chars (the |MD5| token) for `random`,
-  *    raw key text for `byteOrdered`. With an Index.db BOTH bounds
-  *    prune at plan time (the scan starts at the first in-range
-  *    partition and STOPS at the first past-range one — partitions
-  *    outside the slice are never read); the reader always applies the
-  *    exact residual per cell
-  *  - `partitioner`: the ring order the resume seek walks, matching
-  *    the reference's assign_token + init_at_key (CassandraParser.cpp
-  *    :198): `byteOrdered` (default, raw-key memcmp), `murmur3`
-  *    ((sign-bug Murmur3 token, key) order), `random` ((abs-MD5
-  *    token, key) order)
+  *    Format follows the partitioner ([[RingOrder.bound]]): a signed
+  *    decimal long for `murmur3`, 32 lowercase hex chars (the |MD5|
+  *    token) for `random`, raw key text for `byteOrdered`. With an
+  *    Index.db BOTH bounds prune at plan time (the scan starts at the
+  *    first in-range partition and STOPS at the first past-range one —
+  *    partitions outside the slice are never read); the reader always
+  *    applies the exact [[RingBounds]] residual, once per partition
+  *  - `partitioner`: the [[RingOrder]] the resume seek and the slice
+  *    walk, matching the reference's assign_token + init_at_key
+  *    (CassandraParser.cpp:198): `byteOrdered` (raw-key memcmp),
+  *    `murmur3` ((sign-bug Murmur3 token, key) order), `random`
+  *    ((abs-MD5 token, key) order). Unset, each file's Statistics.db
+  *    names it, else byteOrdered ([[MaSSTableSource.partitionerOf]])
   *  - `splitBytes`: target UNCOMPRESSED bytes per input split (default
   *    128 MiB). A Data.db with a sibling Index.db splits into multiple
   *    InputPartitions at partition-start offsets taken from the index
@@ -91,16 +103,16 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * Scale shape: without splitting, a multi-hundred-GB SSTable is one
   * task; with Index.db present the parallelism ceiling is
-  * uncompressed-bytes / splitBytes, a resume key prunes the ring
-  * prefix at plan time under any of the three partitioner orders, and
-  * a token slice prunes BOTH ends (each of N workers reads only its
-  * 1/N of every SSTable). The planner STREAMS the index (one entry in
-  * memory at a time, O(#splits) retained — a 100 GB Data.db's index
-  * runs to millions of entries), and a sibling Summary.db seeds the
-  * seek exactly as the reference's find_partition_in_summary
-  * (SSTable.cpp:121): binary-search the in-memory sampled keys, then
-  * read the index only from the floor entry on — the bytes before it
-  * are never touched.
+  * uncompressed-bytes / splitBytes, and the scan's [[RingBounds]] prune
+  * at plan time — a resume key the ring prefix under any of the three
+  * [[RingOrder]]s, a token slice BOTH ends (each of N workers reads only
+  * its 1/N of every SSTable). Both planners make one pass per Index.db
+  * that STREAMS the index (one entry in memory at a time, O(#ranges)
+  * retained — a 100 GB Data.db's index runs to millions of entries),
+  * and a sibling Summary.db seeds the seek exactly as the reference's
+  * find_partition_in_summary (SSTable.cpp:121): binary-search the
+  * in-memory sampled keys, then read the index only from the floor
+  * entry on — the bytes before it are never touched.
   * Column pruning IS pushed down
   * (SupportsPushDownRequiredColumns): a pruned-away value column still
   * has to be skipped byte-wise (the format is a stream), but pruned
@@ -190,83 +202,29 @@ object MaSSTableSource {
 
   /** Unsigned bytewise compare, shorter-is-smaller on a shared prefix —
     * the memcmp order Cassandra keys and UTF8String both use. */
-  def compareBytes(a: Array[Byte], b: Array[Byte]): Int = {
+  def compareBytes(a: Array[Byte], b: Array[Byte]): Int =
+    compareBytes(a, a.length, b, b.length)
+
+  /** [[compareBytes]] of the first `aLen` bytes of `a` and `bLen` of `b`. */
+  private[sstable] def compareBytes(a: Array[Byte], aLen: Int, b: Array[Byte], bLen: Int): Int = {
     var i = 0
-    val n = math.min(a.length, b.length)
+    val n = math.min(aLen, bLen)
     while (i < n) {
       val d = (a(i) & 0xff) - (b(i) & 0xff)
       if (d != 0) return d
       i += 1
     }
-    a.length - b.length
+    aLen - bLen
   }
 
-  /** Ring-order compare under the table's partitioner — the order the
-    * reference's resume seek walks (CassandraParser.cpp:198-207
-    * assign_token + init_at_key): (token, key) for the hashing
-    * partitioners, raw key memcmp for ByteOrdered/OrderPreserving.
-    * The Index.db is written in this same order, so the seek is a
-    * linear find over its entries. */
-  def ringCompare(partitioner: String)(a: Array[Byte], b: Array[Byte]): Int =
-    partitioner match {
-      case "byteOrdered" => compareBytes(a, b)
-      case "murmur3" =>
-        val d = java.lang.Long.compare(
-          graft.functions.CassandraMurmur3.token(a),
-          graft.functions.CassandraMurmur3.token(b))
-        if (d != 0) d else compareBytes(a, b)
-      case "random" =>
-        val d = compareBytes(
-          graft.functions.CassandraRandomMd5.tokenBytes(a),
-          graft.functions.CassandraRandomMd5.tokenBytes(b))
-        if (d != 0) d else compareBytes(a, b)
-      case other => throw new IllegalArgumentException(
-        s"unknown partitioner: $other (byteOrdered | murmur3 | random)")
-    }
-
-  /** Comparator of a key's TOKEN against a bound given in the
-    * partitioner's own token notation (`tokenMin`/`tokenMax` option
-    * values): signed decimal long for murmur3, 32-hex |MD5| for random,
-    * raw key text for byteOrdered. Token-only — no key tie-break — so
-    * a bound compares equal across every key sharing its token, which
-    * is what an inclusive slice wants. */
-  def tokenCompare(partitioner: String, bound: String): Array[Byte] => Int =
-    partitioner match {
-      case "byteOrdered" =>
-        val b = bound.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        k => compareBytes(k, b)
-      case "murmur3" =>
-        val b = bound.trim.toLong
-        k => java.lang.Long.compare(graft.functions.CassandraMurmur3.token(k), b)
-      case "random" =>
-        require(bound.length == 32 && bound.forall(c =>
-          (c >= '0' && c <= '9') || (c >= 'a' && c <= 'f')),
-          s"random-partitioner token bound must be 32 lowercase hex chars: $bound")
-        val b = bound.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
-        k => compareBytes(graft.functions.CassandraRandomMd5.tokenBytes(k), b)
-      case other => throw new IllegalArgumentException(
-        s"unknown partitioner: $other (byteOrdered | murmur3 | random)")
-    }
-
-  /** A byte string per key whose unsigned lexicographic order
-    * ([[compareBytes]]) is the [[ringCompare]] order: the token in a
-    * fixed-width, order-preserving encoding, then the raw key. Merge
-    * slices compute it once per partition and compare bytes after. */
-  def ringSortKey(partitioner: String): Array[Byte] => Array[Byte] =
-    partitioner match {
-      case "byteOrdered" => k => k
-      case "murmur3" => k =>
-        // Flipping the sign bit makes the signed token sort unsigned.
-        val t = graft.functions.CassandraMurmur3.token(k) ^ Long.MinValue
-        val out = new Array[Byte](8 + k.length)
-        var i = 0
-        while (i < 8) { out(i) = (t >>> (56 - 8 * i)).toByte; i += 1 }
-        System.arraycopy(k, 0, out, 8, k.length)
-        out
-      case "random" => k => graft.functions.CassandraRandomMd5.tokenBytes(k) ++ k
-      case other => throw new IllegalArgumentException(
-        s"unknown partitioner: $other (byteOrdered | murmur3 | random)")
-    }
+  /** The partitioner a scan of one file walks: the `partitioner` option
+    * when set, else the one its Statistics.db names (the reference's
+    * read_metadata VALIDATION component), else byteOrdered. `stats` is
+    * read only when the option is unset. */
+  private[sstable] def partitionerOf(options: Map[String, String],
+      stats: => Option[StatsFile.TableMeta]): RingOrder =
+    RingOrder(options.get("partitioner").filter(_.trim.nonEmpty)
+      .orElse(stats.flatMap(_.partitioner)).getOrElse("byteOrdered"))
 
   /** Can [[graft.kv.Kv.migrate]] read `paths` as merge slices? True when
     * every Data.db under them has an Index.db and a Statistics.db, and
@@ -274,17 +232,19 @@ object MaSSTableSource {
     * sibling metadata is opened; a file whose Statistics.db does not
     * parse answers false, so the ordinary scan reports it. */
   def mergeSlicesApply(spark: org.apache.spark.sql.SparkSession, paths: Seq[String]): Boolean =
-    mergePartitioner(paths.flatMap(listDataFiles(spark.sparkContext, _)),
+    mergePartitioner(Map.empty, paths.flatMap(listDataFiles(spark.sparkContext, _)),
       spark.sparkContext.hadoopConfiguration).isDefined
 
-  /** The partitioner of a merge-slice read of `files`: the one all
-    * their Statistics.db name, when every file also has an Index.db. */
-  private[sstable] def mergePartitioner(
-      files: Seq[String], conf: org.apache.hadoop.conf.Configuration): Option[String] = {
+  /** The ring order of a merge-slice read of `files`: the one
+    * [[partitionerOf]] gives every file, when each also has an Index.db
+    * and a Statistics.db naming a partitioner, and all agree. */
+  private[sstable] def mergePartitioner(options: Map[String, String],
+      files: Seq[String], conf: org.apache.hadoop.conf.Configuration): Option[RingOrder] = {
     val declared = files.map { f =>
       val fs = new Path(f).getFileSystem(conf)
       if (!fs.exists(new Path(f.stripSuffix("Data.db") + "Index.db"))) None
-      else scala.util.Try(statsFor(f, fs)).toOption.flatten.flatMap(_.partitioner)
+      else scala.util.Try(statsFor(f, fs)).toOption.flatten.filter(_.partitioner.isDefined)
+        .map(s => partitionerOf(options, Some(s)))
     }.distinct
     if (declared.size == 1) declared.head else None
   }
@@ -344,7 +304,7 @@ object MaSSTableSource {
     StructField("first_key", StringType, nullable = true),
     StructField("last_key", StringType, nullable = true),
     // With a token slice: does this file's [first, last] ring range
-    // overlap the slice? (null when bounds or partitioner unknown.)
+    // overlap the slice? (null without Summary.db bounds.)
     StructField("in_slice", BooleanType, nullable = true),
     StructField("meta_error", StringType, nullable = true),
     // Keyspace/table deduced from the on-disk layout — the reference's
@@ -388,8 +348,9 @@ object MaSSTableSource {
     * for an open end). When given, each row carries `in_slice` — does
     * the file's Summary-bound ring range overlap the slice? — so a
     * sharded fan-out sizes each worker from slice-local file and
-    * partition counts BEFORE launching anything (the same overlap test
-    * planSplits uses to skip whole files at plan time). */
+    * partition counts BEFORE launching anything (the same
+    * [[RingBounds.overlaps]] test, under the same [[partitionerOf]] rule,
+    * the planner uses to skip whole files at plan time). */
   def describe(spark: org.apache.spark.sql.SparkSession, path: String,
       tokenRange: Option[(String, String)] = None)
       : org.apache.spark.sql.DataFrame = {
@@ -441,19 +402,14 @@ object MaSSTableSource {
           MaFormat.readSummaryWithBounds(_, version))
         val summaryEntries = summaryAll.map(_._1.length)
         val bounds = summaryAll.flatMap(_._2)
-        def keyText(b: Array[Byte]): String =
-          new String(b, java.nio.charset.StandardCharsets.UTF_8)
-        // Slice overlap on the Summary bounds — the planSplits
-        // whole-file test, surfaced as data: the file is OUT only when
-        // even its ring-greatest key precedes the slice start or its
-        // ring-least key is past the end.
+        def keyText(b: Array[Byte]): String = new String(b, UTF_8)
+        // Slice overlap on the Summary bounds — the planner's
+        // whole-file skip, surfaced as data.
         val inSlice: Option[Boolean] = for {
           (tMin, tMax) <- tokenRange
           (firstKey, lastKey) <- bounds
-          part <- stats.flatMap(_.partitioner)
-          cmpMin = Some(tMin).filter(_.nonEmpty).map(tokenCompare(part, _))
-          cmpMax = Some(tMax).filter(_.nonEmpty).map(tokenCompare(part, _))
-        } yield !(cmpMin.exists(_(lastKey) < 0) || cmpMax.exists(_(firstKey) > 0))
+        } yield new RingBounds(partitionerOf(Map.empty, stats), None, Some(tMin), Some(tMax))
+          .overlaps(firstKey, lastKey)
         val metaError = {
           val es = errors.result()
           if (es.isEmpty) null else es.mkString("; ")
@@ -498,6 +454,89 @@ object MaSSTableSource {
       finally in.close()
     }
   }
+}
+
+/** One partitioner's ring order — the order every SSTable and its
+  * Index.db are written in (the reference's assign_token + init_at_key,
+  * CassandraParser.cpp:198): (token, key) for the hashing partitioners,
+  * the raw key for byteOrdered. Keys and bounds share one byte encoding
+  * under [[MaSSTableSource.compareBytes]]: `sortKey(k)` is the token in
+  * a fixed-width, order-preserving form followed by the raw key;
+  * `bound(s)` is a `tokenMin`/`tokenMax` string as that token prefix,
+  * and [[compareToken]] compares only the prefix, so a bound equals
+  * every key of its token. */
+sealed abstract class RingOrder(val name: String, tokenWidth: Int) extends Serializable {
+  def sortKey(k: Array[Byte]): Array[Byte]
+  def bound(s: String): Array[Byte]
+  final def compareToken(sk: Array[Byte], bound: Array[Byte]): Int =
+    MaSSTableSource.compareBytes(sk, math.min(sk.length, tokenWidth), bound, bound.length)
+}
+
+object RingOrder {
+  /** Raw-key memcmp: a key is its own token; a bound is key text. */
+  case object ByteOrdered extends RingOrder("byteOrdered", Int.MaxValue) {
+    def sortKey(k: Array[Byte]): Array[Byte] = k
+    def bound(s: String): Array[Byte] = s.getBytes(UTF_8)
+  }
+  /** The signed Murmur3 token as 8 big-endian bytes with the sign bit
+    * flipped (so it sorts unsigned); a bound is a signed decimal long. */
+  case object Murmur3 extends RingOrder("murmur3", 8) {
+    def sortKey(k: Array[Byte]): Array[Byte] = ByteBuffer.allocate(8 + k.length)
+      .putLong(graft.functions.CassandraMurmur3.token(k) ^ Long.MinValue).put(k).array()
+    def bound(s: String): Array[Byte] =
+      ByteBuffer.allocate(8).putLong(s.trim.toLong ^ Long.MinValue).array()
+  }
+  /** The 16 |MD5| token bytes; a bound is 32 lowercase hex chars. */
+  case object Random extends RingOrder("random", 16) {
+    def sortKey(k: Array[Byte]): Array[Byte] = ByteBuffer.allocate(16 + k.length)
+      .put(graft.functions.CassandraRandomMd5.tokenBytes(k)).put(k).array()
+    def bound(s: String): Array[Byte] = {
+      require(s.matches("[0-9a-f]{32}"),
+        s"random-partitioner token bound must be 32 lowercase hex chars: $s")
+      java.util.HexFormat.of().parseHex(s)
+    }
+  }
+
+  def apply(partitioner: String): RingOrder = partitioner match {
+    case "byteOrdered" => ByteOrdered
+    case "murmur3" => Murmur3
+    case "random" => Random
+    case other => throw new IllegalArgumentException(
+      s"unknown partitioner: $other (byteOrdered | murmur3 | random)")
+  }
+}
+
+/** The part of the ring a scan reads, in one [[RingOrder]]: keys from
+  * `resumeKey` on (by (token, key)) whose tokens lie in [`tokenMin`,
+  * `tokenMax`]; an absent or empty bound is open. Every test takes sort
+  * keys. The planner, the reader's residual filter and `describe`'s
+  * `in_slice` all ask this one predicate. */
+final class RingBounds(val order: RingOrder, resumeKey: Option[String],
+    tokenMin: Option[String], tokenMax: Option[String]) {
+  private val start = resumeKey.filter(_.nonEmpty).map(k => order.sortKey(k.getBytes(UTF_8))).orNull
+  private val lo = tokenMin.filter(_.nonEmpty).map(order.bound).orNull
+  private val hi = tokenMax.filter(_.nonEmpty).map(order.bound).orNull
+  /** The scan starts past the ring's first key. */
+  val seeks: Boolean = start != null || lo != null
+  /** Some bound narrows the scan. */
+  val narrowed: Boolean = seeks || hi != null
+
+  def inStart(sk: Array[Byte]): Boolean =
+    (start == null || MaSSTableSource.compareBytes(sk, start) >= 0) &&
+      (lo == null || order.compareToken(sk, lo) >= 0)
+  def pastEnd(sk: Array[Byte]): Boolean = hi != null && order.compareToken(sk, hi) > 0
+  def contains(sk: Array[Byte]): Boolean = inStart(sk) && !pastEnd(sk)
+  /** Can a file whose raw keys run from `first` to `last` hold one inside? */
+  def overlaps(first: Array[Byte], last: Array[Byte]): Boolean =
+    inStart(order.sortKey(last)) && !pastEnd(order.sortKey(first))
+}
+
+object RingBounds {
+  /** Does a scan with these options set a bound? */
+  def set(options: Map[String, String]): Boolean =
+    Seq("resumeKey", "tokenMin", "tokenMax").exists(options.get(_).exists(_.nonEmpty))
+  def apply(order: RingOrder, options: Map[String, String]): RingBounds =
+    new RingBounds(order, options.get("resumeKey"), options.get("tokenMin"), options.get("tokenMax"))
 }
 
 private[sstable] class MaTable(private[sstable] val props: Map[String, String])
@@ -549,10 +588,7 @@ private[sstable] class MaScanBuilder(options: Map[String, String])
         // UTF-16 code units, which diverges for supplementary-plane
         // keys.
         val tightest = contributing.map(_._2).reduce((a, b) =>
-          if (MaSSTableSource.compareBytes(
-              a.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-              b.getBytes(java.nio.charset.StandardCharsets.UTF_8)) >= 0) a
-          else b)
+          if (MaSSTableSource.compareBytes(a.getBytes(UTF_8), b.getBytes(UTF_8)) >= 0) a else b)
         opts = opts + ("resumeKey" -> tightest)
         pushed = contributing.map(_._1)
       }
@@ -573,32 +609,13 @@ private[sstable] class MaScan(
 
   override def planInputPartitions(): Array[InputPartition] = {
     val splitBytes = options.getOrElse("splitBytes", (128L * 1024 * 1024).toString).toLong
-    val resumeKey = options.get("resumeKey")
-      .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     val spark = org.apache.spark.sql.SparkSession.active
     val conf = spark.sparkContext.hadoopConfiguration
     val files = MaSSTableSource.inputPaths(options)
       .flatMap(MaSSTableSource.listDataFiles(spark.sparkContext, _))
     if (options.get("mergeSlices").contains("true"))
-      planMergeSlices(files, splitBytes, resumeKey, spark.sparkContext.defaultParallelism, conf)
-    else files.flatMap(planSplits(_, splitBytes, resumeKey, conf)).toArray
-  }
-
-  /** The resume/slice bounds of the scan in one partitioner's ring
-    * order. */
-  private final class RingBounds(partitioner: String, resumeKey: Option[Array[Byte]]) {
-    private val ringGe = MaSSTableSource.ringCompare(partitioner) _
-    private val cmpMin = options.get("tokenMin").filter(_.nonEmpty)
-      .map(MaSSTableSource.tokenCompare(partitioner, _))
-    private val cmpMax = options.get("tokenMax").filter(_.nonEmpty)
-      .map(MaSSTableSource.tokenCompare(partitioner, _))
-    /** Some bound narrows the scan. */
-    val narrowed: Boolean = resumeKey.isDefined || cmpMin.isDefined || cmpMax.isDefined
-    /** The scan starts past the ring's first key. */
-    val seeks: Boolean = resumeKey.isDefined || cmpMin.isDefined
-    def inStart(k: Array[Byte]): Boolean =
-      resumeKey.forall(rk => ringGe(k, rk) >= 0) && cmpMin.forall(_(k) >= 0)
-    def pastEnd(k: Array[Byte]): Boolean = cmpMax.exists(_(k) > 0)
+      planMergeSlices(files, splitBytes, spark.sparkContext.defaultParallelism, conf)
+    else files.flatMap(planSplits(_, splitBytes, conf)).toArray
   }
 
   private def sibling(file: String, component: String): Path =
@@ -629,10 +646,7 @@ private[sstable] class MaScan(
     b.narrowed && fs.exists(sumPath) && {
       val sin = fs.open(sumPath)
       val bounds = try MaFormat.readSummaryBounds(sin, version) finally sin.close()
-      bounds.exists { case (firstKey, lastKey) =>
-        !b.inStart(lastKey) ||  // even the ring-greatest key precedes the start
-          b.pastEnd(firstKey)   // even the ring-least key is past the end
-      }
+      bounds.exists { case (firstKey, lastKey) => !b.overlaps(firstKey, lastKey) }
     }
   }
 
@@ -671,7 +685,8 @@ private[sstable] class MaScan(
       var floor = -1
       while (lo <= hi) {
         val mid = (lo + hi) >>> 1
-        if (!b.inStart(summary(mid)._1)) { floor = mid; lo = mid + 1 } else hi = mid - 1
+        if (!b.inStart(b.order.sortKey(summary(mid)._1))) { floor = mid; lo = mid + 1 }
+        else hi = mid - 1
       }
       if (floor < 0) 0L
       else {
@@ -689,70 +704,89 @@ private[sstable] class MaScan(
     }.getOrElse(0L)
   }
 
-  /** Split one Data.db at Index.db partition boundaries: pick the first
-    * partition-start offset at or past each multiple of the target
-    * split size (offsets are positions in the UNCOMPRESSED stream —
-    * the only safe cut points the format has). With a resume key, all
-    * partitions ordered strictly before it are skipped at PLAN time —
-    * the reference's `-s` Summary/Index seek; the reader still filters
-    * residually so indexless files return the same rows. The index is
-    * tiny relative to its Data.db, so the driver-side read is the same
-    * cost class as parquet footer planning. */
-  private def planSplits(
-      file: String, splitBytes: Long, resumeKey: Option[Array[Byte]],
-      conf: org.apache.hadoop.conf.Configuration): Seq[InputPartition] = {
-    val dataPath = new Path(file)
-    val fs = dataPath.getFileSystem(conf)
-    val version = MaSSTableSource.versionOf(dataPath.getName)
-    val sliced = options.get("tokenMin").exists(_.nonEmpty) ||
-      options.get("tokenMax").exists(_.nonEmpty)
-    // Ring order for the resume/slice seek: explicit option, else the
-    // partitioner recorded in this file's own Statistics.db (the
-    // reference's read_metadata VALIDATION component).
-    val partitioner = options.getOrElse("partitioner",
-      (if (resumeKey.isDefined || sliced)
-         MaSSTableSource.statsFor(file, fs).flatMap(_.partitioner)
-       else None).getOrElse("byteOrdered"))
-    val b = new RingBounds(partitioner, resumeKey)
-    if (outsideBounds(file, version, fs, b)) return Seq.empty
+  /** One streaming pass over a file's Index.db — the only one both
+    * planners make; O(#ranges) retained. It starts at the summary floor
+    * when the scan seeks. The first entry inside `b` opens a range,
+    * `opens(sortKey, position)` — asked of every later entry inside `b`
+    * — says where the next one starts, and the first entry past the end
+    * caps the last, so partitions outside the bounds are never read.
+    * Each range comes with the sort key of its first partition. An
+    * empty Index.db yields the whole file, with a null key.
+    *
+    * With `checkOrder`, consecutive keys must ascend in the ring order,
+    * and their positions too: anything else is a [[RingOrderException]],
+    * never a silent mis-merge. Plain scans leave it off — without a
+    * bound they walk byteOrdered whatever the files' partitioner. */
+  private def indexRanges(file: String, fs: org.apache.hadoop.fs.FileSystem, b: RingBounds,
+      checkOrder: Boolean)(opens: (Array[Byte], Long) => Boolean)
+      : Seq[(Array[Byte], MaInputPartition)] = {
+    val version = MaSSTableSource.versionOf(new Path(file).getName)
     val idxPath = sibling(file, "Index.db")
-    val whole = Seq(MaInputPartition(file, 0L, Long.MaxValue))
-    if (!fs.exists(idxPath)) return whole
-    val totalUncompressed = uncompressedLen(file, fs)
-    // Seek: the index is written in the table's ring/key order, so the
-    // first entry at-or-after the resume key / token-slice start is the
-    // scan start and the first entry PAST the slice end caps it — every
-    // partition outside [start, cap) is never read at all.
-    val indexSeek = indexSeekFloor(file, version, fs, b)
-    // One streaming pass over the (remaining) index — O(#splits)
-    // retained: scan start, split cuts at every splitBytes of
-    // uncompressed payload, and the cap position.
+    val seek = indexSeekFloor(file, version, fs, b)
     val fin = fs.open(idxPath)
     try {
-      if (indexSeek > 0) fin.seek(indexSeek)
+      if (seek > 0) fin.seek(seek)
       val it = MaFormat.indexEntries(fin, version)
-      if (it.isEmpty && indexSeek == 0) return whole // empty Index.db
-      var seekStart = -1L
+      if (!it.hasNext && seek == 0) return Seq((null, MaInputPartition(file)))
+      val out = Seq.newBuilder[(Array[Byte], MaInputPartition)]
+      var prevKey: Array[Byte] = null
+      var prevSort: Array[Byte] = null
+      var prevPos = -1L
+      var first: Array[Byte] = null
+      var start = -1L
       var endCap = Long.MaxValue
-      val bounds = Seq.newBuilder[Long]
-      var nextTarget = 0L
       var done = false
       while (!done && it.hasNext) {
         val (k, p) = it.next()
-        if (b.pastEnd(k)) { endCap = p; done = true }
-        else if (seekStart < 0) {
-          if (b.inStart(k)) { seekStart = p; nextTarget = p + splitBytes }
-        } else if (p >= nextTarget) { bounds += p; nextTarget = p + splitBytes }
+        val sk = b.order.sortKey(k)
+        if (checkOrder) {
+          if (prevSort != null &&
+              (MaSSTableSource.compareBytes(prevSort, sk) >= 0 || p <= prevPos))
+            throw RingOrderException.outOfOrder(idxPath.toString, p, prevKey, k, b.order.name)
+          prevKey = k; prevSort = sk; prevPos = p
+        }
+        if (b.pastEnd(sk)) { endCap = p; done = true }
+        else if (b.inStart(sk) && (opens(sk, p) || start < 0)) {
+          if (start >= 0) out += first -> MaInputPartition(file, start, p)
+          first = sk
+          start = p
+        }
       }
-      if (seekStart < 0) return Nil // slice empty or wholly before/past the file
-      val lastBound = math.min(endCap, totalUncompressed)
-      if (lastBound - seekStart <= splitBytes)
-        return Seq(MaInputPartition(file, seekStart, endCap))
-      val cuts = seekStart +: bounds.result()
-      cuts.zipAll(cuts.drop(1), 0L, endCap).map {
-        case (start, end) => MaInputPartition(file, start, end)
-      }
+      if (start >= 0) out += first -> MaInputPartition(file, start, endCap)
+      out.result()
     } finally fin.close()
+  }
+
+  /** Split one Data.db at Index.db partition boundaries: a new split
+    * starts at the first partition-start offset at or past each
+    * `splitBytes` of the previous split's start (offsets are positions
+    * in the UNCOMPRESSED stream — the only safe cut points the format
+    * has). The scan's [[RingBounds]] skip whole files on their Summary.db
+    * bounds and every partition outside them at plan time — the
+    * reference's `-s` Summary/Index seek, generalized to token slices;
+    * the reader still filters residually, so indexless files return the
+    * same rows. The ring order is consulted only when a bound is set, so
+    * a plain scan opens no Statistics.db here. The index is tiny
+    * relative to its Data.db, so the driver-side read is the same cost
+    * class as parquet footer planning. */
+  private def planSplits(
+      file: String, splitBytes: Long,
+      conf: org.apache.hadoop.conf.Configuration): Seq[InputPartition] = {
+    val dataPath = new Path(file)
+    val fs = dataPath.getFileSystem(conf)
+    val b = RingBounds(
+      if (RingBounds.set(options))
+        MaSSTableSource.partitionerOf(options, MaSSTableSource.statsFor(file, fs))
+      else RingOrder.ByteOrdered,
+      options)
+    if (outsideBounds(file, MaSSTableSource.versionOf(dataPath.getName), fs, b)) Nil
+    else if (!fs.exists(sibling(file, "Index.db"))) Seq(MaInputPartition(file))
+    else {
+      var next = Long.MinValue
+      indexRanges(file, fs, b, checkOrder = false) { (_, p) =>
+        p >= next && { next = p + splitBytes; true }
+      }.map(_._2)
+    }
   }
 
   /** Merge slices: input partitions that each cover one contiguous
@@ -766,29 +800,26 @@ private[sstable] class MaScan(
     *    samples (of their Index.db entries when a file has none);
     *    `max(defaultParallelism, uncompressed bytes / splitBytes)`
     *    slices.
-    *  - One streaming pass per Index.db assigns each file's partitions
-    *    to slices as byte ranges, narrowed by the resume/token bounds
-    *    exactly as [[planSplits]] narrows them, and checks that the
-    *    index keys ascend in ring order.
+    *  - The files' [[indexRanges]] passes assign each file's partitions
+    *    to slices as byte ranges, inside the scan's [[RingBounds]], and
+    *    check that the index keys ascend in ring order.
     *  - The reader ([[MergedCells]]) heap-merges the ranges of a slice
     *    by partition key and fails with a [[RingOrderException]] on a
     *    Data.db key out of ring order or outside its slice. */
   private def planMergeSlices(
-      files: Seq[String], splitBytes: Long, resumeKey: Option[Array[Byte]],
+      files: Seq[String], splitBytes: Long,
       parallelism: Int, conf: org.apache.hadoop.conf.Configuration): Array[InputPartition] = {
     val fs = (f: String) => new Path(f).getFileSystem(conf)
-    val partitioner = options.getOrElse("partitioner",
-      MaSSTableSource.mergePartitioner(files, conf).getOrElse(
-        throw new IllegalStateException("merge slices need an Index.db and a " +
-          "Statistics.db naming one partitioner beside every Data.db under " +
-          MaSSTableSource.inputPaths(options).mkString(", "))))
-    val sortKey = MaSSTableSource.ringSortKey(partitioner)
-    val b = new RingBounds(partitioner, resumeKey)
+    val order = MaSSTableSource.mergePartitioner(options, files, conf).getOrElse(
+      throw new IllegalStateException("merge slices need an Index.db and a " +
+        "Statistics.db naming one partitioner beside every Data.db under " +
+        MaSSTableSource.inputPaths(options).mkString(", ")))
+    val b = RingBounds(order, options)
     val live = files.filterNot(f =>
       outsideBounds(f, MaSSTableSource.versionOf(new Path(f).getName), fs(f), b))
     val samples = live.flatMap(f => sampleKeys(f, fs(f)))
-      .filter(k => b.inStart(k) && !b.pastEnd(k))
-      .map(sortKey)
+      .map(order.sortKey)
+      .filter(b.contains)
       .sortWith(MaSSTableSource.compareBytes(_, _) < 0)
     val bytes = live.map(f => uncompressedLen(f, fs(f))).sum
     val nSlices = math.min(math.max(parallelism.toLong, bytes / splitBytes), samples.size.toLong)
@@ -798,14 +829,36 @@ private[sstable] class MaScan(
         case Seq(a, c) if MaSSTableSource.compareBytes(a, c) < 0 => c
       }
     }.toArray
+    // The slice of a sort key: the number of cut keys at or before it
+    // (slice 0 for the whole-file range of an empty Index.db).
+    def sliceOf(sk: Array[Byte]): Int = {
+      var lo = 0
+      var hi = if (sk == null) 0 else cuts.length
+      while (lo < hi) {
+        val mid = (lo + hi) >>> 1
+        if (MaSSTableSource.compareBytes(cuts(mid), sk) <= 0) lo = mid + 1 else hi = mid
+      }
+      lo
+    }
     val perSlice = Array.fill(cuts.length + 1)(Seq.newBuilder[MaInputPartition])
-    live.foreach(f => mergeRanges(f, fs(f), cuts, sortKey, b, partitioner).foreach {
-      case (slice, range) => perSlice(slice) += range
-    })
+    live.foreach { f =>
+      var slice = -1
+      val ranges = indexRanges(f, fs(f), b, checkOrder = true) { (sk, _) =>
+        val s = sliceOf(sk)
+        s != slice && { slice = s; true }
+      }
+      ranges.foreach {
+        // An empty index over an empty Data.db holds nothing; over a
+        // non-empty one it is one whole-file range, and the reader's
+        // slice check fails loudly on any key it does not own.
+        case (null, _) if fs(f).getFileStatus(new Path(f)).getLen == 0 =>
+        case (sk, range) => perSlice(sliceOf(sk)) += range
+      }
+    }
     perSlice.indices.flatMap { i =>
       val ranges = perSlice(i).result()
       if (ranges.isEmpty) None
-      else Some(MaMergeSlice(ranges.toArray, partitioner,
+      else Some(MaMergeSlice(ranges.toArray,
         if (i == 0) null else cuts(i - 1),
         if (i == cuts.length) null else cuts(i)))
     }.toArray
@@ -843,67 +896,6 @@ private[sstable] class MaScan(
     }
   }
 
-  /** One file's byte ranges per merge slice, from one streaming pass
-    * over its Index.db (from the summary floor when the scan seeks).
-    * Consecutive index keys must ascend in the ring order, and their
-    * positions too: anything else is a [[RingOrderException]], never a
-    * silent mis-merge. */
-  private def mergeRanges(
-      file: String, fs: org.apache.hadoop.fs.FileSystem, cuts: Array[Array[Byte]],
-      sortKey: Array[Byte] => Array[Byte], b: RingBounds,
-      partitioner: String): Seq[(Int, MaInputPartition)] = {
-    val version = MaSSTableSource.versionOf(new Path(file).getName)
-    val idxPath = sibling(file, "Index.db")
-    // The slice of a key: the number of cut keys at or before it.
-    def sliceOf(sk: Array[Byte]): Int = {
-      var lo = 0
-      var hi = cuts.length
-      while (lo < hi) {
-        val mid = (lo + hi) >>> 1
-        if (MaSSTableSource.compareBytes(cuts(mid), sk) <= 0) lo = mid + 1 else hi = mid
-      }
-      lo
-    }
-    val seek = indexSeekFloor(file, version, fs, b)
-    val fin = fs.open(idxPath)
-    try {
-      if (seek > 0) fin.seek(seek)
-      val it = MaFormat.indexEntries(fin, version)
-      // An empty index over a non-empty Data.db: one whole-file range;
-      // the reader's slice check fails loudly on any key it does not own.
-      if (!it.hasNext && seek == 0)
-        return if (fs.getFileStatus(new Path(file)).getLen == 0) Nil
-               else Seq(0 -> MaInputPartition(file, 0L, Long.MaxValue))
-      val out = Seq.newBuilder[(Int, MaInputPartition)]
-      var prevKey: Array[Byte] = null
-      var prevSort: Array[Byte] = null
-      var prevPos = -1L
-      var slice = -1
-      var start = 0L
-      var endCap = Long.MaxValue
-      var done = false
-      while (!done && it.hasNext) {
-        val (k, p) = it.next()
-        val sk = sortKey(k)
-        if (prevSort != null &&
-            (MaSSTableSource.compareBytes(prevSort, sk) >= 0 || p <= prevPos))
-          throw RingOrderException.outOfOrder(idxPath.toString, p, prevKey, k, partitioner)
-        prevKey = k; prevSort = sk; prevPos = p
-        if (b.pastEnd(k)) { endCap = p; done = true }
-        else if (b.inStart(k)) {
-          val s = sliceOf(sk)
-          if (s != slice) {
-            if (slice >= 0) out += slice -> MaInputPartition(file, start, p)
-            slice = s
-            start = p
-          }
-        }
-      }
-      if (slice >= 0) out += slice -> MaInputPartition(file, start, endCap)
-      out.result()
-    } finally fin.close()
-  }
-
   override def createReaderFactory(): PartitionReaderFactory =
     new MaReaderFactory(
       options,
@@ -922,11 +914,10 @@ private[sstable] case class MaInputPartition(
     file: String, start: Long = 0L, end: Long = Long.MaxValue) extends InputPartition
 
 /** One merge slice: a byte range of every file that holds keys of the
-  * ring range [lo, hi) (bounds as [[MaSSTableSource.ringSortKey]]
-  * bytes, null for an open end). */
+  * ring range [lo, hi) (bounds as [[RingOrder.sortKey]] bytes, null for
+  * an open end). */
 private[sstable] case class MaMergeSlice(
-    ranges: Array[MaInputPartition], partitioner: String,
-    lo: Array[Byte], hi: Array[Byte]) extends InputPartition
+    ranges: Array[MaInputPartition], lo: Array[Byte], hi: Array[Byte]) extends InputPartition
 
 /** A partition key out of its partitioner's ring order — in an Index.db
   * or a Data.db read as merge slices. Merging such a file would
@@ -934,8 +925,7 @@ private[sstable] case class MaMergeSlice(
 final class RingOrderException(message: String) extends IllegalStateException(message)
 
 object RingOrderException {
-  private def show(k: Array[Byte]): String =
-    new String(k, java.nio.charset.StandardCharsets.UTF_8)
+  private def show(k: Array[Byte]): String = new String(k, UTF_8)
 
   def outOfOrder(file: String, offset: Long, previous: Array[Byte], key: Array[Byte],
       partitioner: String): RingOrderException =
@@ -998,30 +988,11 @@ private[sstable] class MaReaderFactory(
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     partition match {
       case MaInputPartition(file, start, end) =>
-        new CellRowReader(new FileCells(file, start, end, ring = null))
-      case MaMergeSlice(ranges, partitioner, lo, hi) =>
-        val ring = new SliceRing(partitioner, lo, hi)
-        new CellRowReader(new MergedCells(ranges.map(r =>
-          new FileCells(r.file, r.start, r.end, ring))))
+        new CellRowReader(new FileCells(file, start, end, slice = null))
+      case slice: MaMergeSlice =>
+        new CellRowReader(new MergedCells(slice.ranges.map(r =>
+          new FileCells(r.file, r.start, r.end, slice))))
     }
-
-  /** The ring order and key range of a merge slice. */
-  private final class SliceRing(
-      val partitioner: String, lo: Array[Byte], hi: Array[Byte]) {
-    val sortKey: Array[Byte] => Array[Byte] = MaSSTableSource.ringSortKey(partitioner)
-
-    /** Fail unless `sk` (of `key`, at `offset` of `file`) follows
-      * `prevSort` and lies inside the slice. */
-    def check(file: String, offset: Long, prevKey: Array[Byte], prevSort: Array[Byte],
-        key: Array[Byte], sk: Array[Byte]): Unit = {
-      if (prevSort != null && MaSSTableSource.compareBytes(prevSort, sk) >= 0)
-        throw RingOrderException.outOfOrder(file, offset, prevKey, key, partitioner)
-      if (lo != null && MaSSTableSource.compareBytes(sk, lo) < 0)
-        throw RingOrderException.outsideSlice(file, offset, key, lo, before = true, partitioner)
-      if (hi != null && MaSSTableSource.compareBytes(sk, hi) >= 0)
-        throw RingOrderException.outsideSlice(file, offset, key, hi, before = false, partitioner)
-    }
-  }
 
   /** A stream of decoded cells, each with its partition key as text. */
   private trait CellStream extends java.io.Closeable {
@@ -1032,15 +1003,14 @@ private[sstable] class MaReaderFactory(
   }
 
   /** The cells of one Data.db byte range, after the residual
-    * resume/slice filters; `advance()` moves `head` to the next one
+    * [[RingBounds]] filter; `advance()` moves `head` to the next one
     * (null at the end). Nothing is read before the first `advance()`:
     * Spark's input metrics count only bytes read after the reader is
-    * created. With a
-    * `ring` (merge slices) every new partition key is checked against
-    * the previous one and the slice bounds, and carries its ring sort
-    * key (`headSort`). */
+    * created. In a merge `slice` every new partition key is checked
+    * against the previous one and the slice bounds, and carries its ring
+    * sort key (`headSort`). */
   private final class FileCells(file: String, splitStart: Long, splitEnd: Long,
-      ring: SliceRing) extends CellStream {
+      slice: MaMergeSlice) extends CellStream {
     private val path = new Path(file)
     private val fs = path.getFileSystem(hadoopConf.value)
     // Per-file metadata: explicit options win; a sibling
@@ -1075,9 +1045,6 @@ private[sstable] class MaReaderFactory(
     private val minTtl: Long =
       opt("minTtl").map(_.toLong)
         .orElse(stats.map(_.minTtl)).getOrElse(0L)
-    private val partitioner: String =
-      opt("partitioner")
-        .orElse(stats.flatMap(_.partitioner)).getOrElse("byteOrdered")
     private val verifyChecksums = options.getOrElse("verifyChecksums", "true").toBoolean
     private val raw = fs.open(path)
     // A sibling CompressionInfo.db means the Data.db is
@@ -1134,29 +1101,22 @@ private[sstable] class MaReaderFactory(
           clustering, staticColumns, stop, clusteringIdentity)
       else new MaFormat.KaReader(in, stop, clusteringIdentity, version)
 
-    // Residual resume/slice filters: the Index.db seek skips whole
+    // Residual resume/slice filter: the Index.db seek skips whole
     // partitions at plan time, but an indexless file (or the boundary
-    // partitions of an indexed one) still needs the exact key/token
-    // bounds applied per cell.
-    private val resumeKeyBytes: Array[Byte] =
-      options.get("resumeKey").filter(_.nonEmpty)
-        .map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).orNull
-    private val ringGe = MaSSTableSource.ringCompare(partitioner) _
-    private val tokenMinCmp: Array[Byte] => Int =
-      options.get("tokenMin").filter(_.nonEmpty)
-        .map(MaSSTableSource.tokenCompare(partitioner, _)).orNull
-    private val tokenMaxCmp: Array[Byte] => Int =
-      options.get("tokenMax").filter(_.nonEmpty)
-        .map(MaSSTableSource.tokenCompare(partitioner, _)).orNull
+    // partitions of an indexed one) still needs the exact bounds, once
+    // per partition.
+    private val bounds = RingBounds(MaSSTableSource.partitionerOf(options, stats), options)
+    private val order = bounds.order
 
-    /** The next cell, null at the end; its key as text and, with a
-      * ring, its ring sort key. */
+    /** The next cell, null at the end; its key as text and, in a merge
+      * slice, its ring sort key. */
     var head: MaFormat.MaCell = _
     var headKey: UTF8String = _
     var headSort: Array[Byte] = _
     // The decoders hand out ONE key array per partition, so a new array
     // is a new partition.
     private var lastKeyBytes: Array[Byte] = _
+    private var inBounds = false
 
     /** Keys surface as StringType (the KV operators compare and
       * resume on them as text); Cassandra keys are arbitrary bytes,
@@ -1178,22 +1138,37 @@ private[sstable] class MaReaderFactory(
 
     def advance(): Unit = {
       head = null
-      while (head == null && cells.hasNext) {
-        val c = cells.next()
-        if (c.key ne lastKeyBytes) {
-          if (ring != null) {
-            val sk = ring.sortKey(c.key)
-            ring.check(file, partitionOffset, lastKeyBytes, headSort, c.key, sk)
-            headSort = sk
+      try {
+        while (head == null && cells.hasNext) {
+          val c = cells.next()
+          if (c.key ne lastKeyBytes) {
+            val sk = if (slice != null || bounds.narrowed) order.sortKey(c.key) else null
+            if (slice != null) {
+              checkSlice(c.key, sk)
+              headSort = sk
+            }
+            inBounds = sk == null || bounds.contains(sk)
+            lastKeyBytes = c.key
+            headKey = keyString(c.key)
           }
-          lastKeyBytes = c.key
-          headKey = keyString(c.key)
+          if (inBounds) head = c
         }
-        if ((resumeKeyBytes == null || ringGe(c.key, resumeKeyBytes) >= 0) &&
-            (tokenMinCmp == null || tokenMinCmp(c.key) >= 0) &&
-            (tokenMaxCmp == null || tokenMaxCmp(c.key) <= 0))
-          head = c
+      } catch {
+        case e: MaFormat.CorruptLengthException => throw e.at(file, partitionOffset)
       }
+    }
+
+    /** Fail unless partition key `key` (sort key `sk`) follows the
+      * previous one and lies inside the merge slice. */
+    private def checkSlice(key: Array[Byte], sk: Array[Byte]): Unit = {
+      if (headSort != null && MaSSTableSource.compareBytes(headSort, sk) >= 0)
+        throw RingOrderException.outOfOrder(file, partitionOffset, lastKeyBytes, key, order.name)
+      if (slice.lo != null && MaSSTableSource.compareBytes(sk, slice.lo) < 0)
+        throw RingOrderException.outsideSlice(file, partitionOffset, key, slice.lo,
+          before = true, order.name)
+      if (slice.hi != null && MaSSTableSource.compareBytes(sk, slice.hi) >= 0)
+        throw RingOrderException.outsideSlice(file, partitionOffset, key, slice.hi,
+          before = false, order.name)
     }
     override def next(): Boolean = { advance(); head != null }
     override def cell: MaFormat.MaCell = head

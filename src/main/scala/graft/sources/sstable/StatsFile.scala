@@ -70,7 +70,7 @@ object StatsFile {
 
   /** Partitioner class → the source's `partitioner` option value
     * (Partitioners.cpp partitioner_from_name). */
-  private def partitionerOf(className: String): Option[String] =
+  private def partitionerName(className: String): Option[String] =
     if (className.endsWith("Murmur3Partitioner")) Some("murmur3")
     else if (className.endsWith("RandomPartitioner")) Some("random")
     else if (className.endsWith("ByteOrderedPartitioner") ||
@@ -138,7 +138,7 @@ object StatsFile {
       else {
         val v = new DataInputStream(
           new ByteArrayInputStream(bytes, validationOff, bytes.length - validationOff))
-        partitionerOf(readString16(v))
+        partitionerName(readString16(v))
       }
 
     // ka files have no serialization header (the legacy framing is
@@ -180,6 +180,6 @@ object StatsFile {
     skipHistogram()
     skipHistogram()
     d.skipBytes(5 * 8 + 2 * 4)
-    TableMeta(0L, 0L, Nil, Nil, None, partitionerOf(readString16(d)))
+    TableMeta(0L, 0L, Nil, Nil, None, partitionerName(readString16(d)))
   }
 }

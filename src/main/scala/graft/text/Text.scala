@@ -237,10 +237,11 @@ object Text {
     * stage, before any exchange. False positives (and only they)
     * survive to the exact semi-join, so the result is bit-identical to
     * [[decontaminate]] and shares its DuckDB oracle verbatim; the
-    * filter is sized for ~1% FP at a benchmark-suite-sized eval set
-    * (the artifact scales with the EVAL slice, which is bounded by
-    * construction — benchmarks are thousands of docs — never with the
-    * corpus). PlanSpec pins might_contain into the scan-side filter. */
+    * filter is sized for ~1% FP at the eval slice's distinct n-gram
+    * count, capped at 2^23 bits (the artifact, and the task binary of
+    * every stage that probes it, scales with the EVAL slice, never with
+    * the corpus). PlanSpec pins might_contain into the scan-side
+    * filter. */
   def decontaminateBloom(spark: SparkSession, dir: String): DataFrame =
     decontaminateImpl(spark, dir, bloomPrefilter = true)
 
@@ -258,12 +259,13 @@ object Text {
     val trainGrams = train.select(col("doc_id"), explode(col("sh")).as("ngram"))
     val prefiltered =
       if (bloomPrefilter) {
-        val bf = Sketches.bloomFit(evalNgrams, "ngram",
-          expectedItems = 1L << 20, numBits = 1L << 23)
-        // Empty eval slice → null aggregate → nothing can match.
-        if (bf == null) trainGrams.filter(lit(false))
-        else trainGrams.filter(
-          Sketches.bloomMightContain(bf, xxhash64(col("ngram"))))
+        val n = evalNgrams.count()
+        // Empty eval slice → nothing can match.
+        if (n == 0) trainGrams.filter(lit(false))
+        else trainGrams.filter(Sketches.bloomMightContain(
+          Sketches.bloomFit(evalNgrams, "ngram", expectedItems = n, numBits = math.min(
+            org.apache.spark.util.sketch.BloomFilter.optimalNumOfBits(n, 0.01), 1L << 23)),
+          xxhash64(col("ngram"))))
       } else trainGrams
     val hits = prefiltered
       .join(evalNgrams, Seq("ngram"), "left_semi")

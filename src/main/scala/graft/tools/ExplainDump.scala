@@ -9,11 +9,11 @@ import org.apache.spark.sql.SparkSession
   * test suite (dev tool).
   *
   * Usage: `runMain graft.tools.ExplainDump [sfDir] [out] [only]`.
-  * With no `only`, regenerates the whole artifact. With `only` (a
+  * With no `only`, regenerates the whole artifact (not committed:
+  * PlanSpec's exchange budgets pin the plan shapes). With `only` (a
   * comma-separated query list), regenerates JUST those sections and
-  * splices them into the existing file — the one-operator workflow:
-  * a new operator's commit carries a PLANS.md diff that is exactly
-  * that operator's section. Full regeneration remains the periodic
+  * splices them into an existing dump, so its diff is exactly those
+  * sections. Full regeneration remains the periodic
   * honesty pass (a few sections are AQE-racy — the FINAL plan can
   * legitimately differ run-to-run when stage completion order changes
   * a runtime re-plan — so whole-file diffs may carry a handful of

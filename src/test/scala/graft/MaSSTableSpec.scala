@@ -2986,6 +2986,29 @@ class MaSSTableSpec extends AnyFunSuite {
 
   // ---- generation merge (Kv.migrate's per-key merge kernel) ----------
 
+  /** Ring-order compare under the table's partitioner — the order the
+    * reference's resume seek walks (CassandraParser.cpp:198-207
+    * assign_token + init_at_key): (token, key) for the hashing
+    * partitioners, raw key memcmp for ByteOrdered/OrderPreserving.
+    * The spec's own reference for the order, independent of the
+    * source's [[graft.sources.sstable.RingOrder]] encoding. */
+  private def ringCompare(partitioner: String)(a: Array[Byte], b: Array[Byte]): Int =
+    partitioner match {
+      case "byteOrdered" => MaSSTableSource.compareBytes(a, b)
+      case "murmur3" =>
+        val d = java.lang.Long.compare(
+          graft.functions.CassandraMurmur3.token(a),
+          graft.functions.CassandraMurmur3.token(b))
+        if (d != 0) d else MaSSTableSource.compareBytes(a, b)
+      case "random" =>
+        val d = MaSSTableSource.compareBytes(
+          graft.functions.CassandraRandomMd5.tokenBytes(a),
+          graft.functions.CassandraRandomMd5.tokenBytes(b))
+        if (d != 0) d else MaSSTableSource.compareBytes(a, b)
+      case other => throw new IllegalArgumentException(
+        s"unknown partitioner: $other (byteOrdered | murmur3 | random)")
+    }
+
   private val PartitionerClass = Map(
     "murmur3" -> "Murmur3Partitioner", "random" -> "RandomPartitioner",
     "byteOrdered" -> "ByteOrderedPartitioner")
@@ -3013,7 +3036,7 @@ class MaSSTableSpec extends AnyFunSuite {
       if (c == "click") s"v${rng.nextInt(1000)}".getBytes(UTF_8)
       else longBytes(rng.nextInt(1000).toLong)
     val keys = (1 to 40).map(i => f"pk-$i%02d")
-    val ring = MaSSTableSource.ringCompare(partitioner) _
+    val ring = ringCompare(partitioner) _
     val dirs = Seq(Files.createTempDirectory("merge-a"), Files.createTempDirectory("merge-b"))
     val nGens = 2 + rng.nextInt(3)
     (1 to nGens).foreach { gen =>
@@ -3138,7 +3161,7 @@ class MaSSTableSpec extends AnyFunSuite {
         case 0 => (None, None)
         case 1 => (Some(k1), None)
         case _ =>
-          val ring = MaSSTableSource.ringCompare(partitioner) _
+          val ring = ringCompare(partitioner) _
           val Seq(lo, hi) = Seq(k1, k2).sortWith((a, b) => ring(a.getBytes(UTF_8), b.getBytes(UTF_8)) < 0)
           (None, Some((token(lo), token(hi))))
       }
@@ -3357,5 +3380,172 @@ class MaSSTableSpec extends AnyFunSuite {
         sinceTsUs = Some(watermark)).toOption.get
       assert(stats === WriteStats(0L, 0L, 0L, 0L), s"zero rows into a ${if (filled) "filled" else "new"} target")
     }
+  }
+
+  // ---- the shared ring order ----------------------------------------
+
+  test("RingOrder sort keys and token bounds agree with the reference ring order, every partitioner") {
+    import graft.sources.sstable.{RingBounds, RingOrder}
+    val rng = new scala.util.Random(20261019L)
+    // Short keys over a small alphabet: prefixes of each other and
+    // duplicates are common.
+    val base = Seq.fill(60)(Seq.fill(rng.nextInt(5))("ab-z"(rng.nextInt(4))).mkString)
+    val keys = (base ++ base.take(10) ++ base.filter(_.nonEmpty).map(k => k.take(k.length - 1)))
+      .map(_.getBytes(UTF_8))
+    def hex(b: Array[Byte]): String = b.map(x => f"${x & 0xff}%02x").mkString
+    for (partitioner <- Seq("murmur3", "random", "byteOrdered")) {
+      val order = RingOrder(partitioner)
+      assert(order.name === partitioner)
+      val ring = ringCompare(partitioner) _
+      for (a <- keys; b <- keys)
+        assert(Integer.signum(MaSSTableSource.compareBytes(order.sortKey(a), order.sortKey(b))) ===
+          Integer.signum(ring(a, b)), s"$partitioner: '${new String(a, UTF_8)}' vs '${new String(b, UTF_8)}'")
+      // Each bound in the partitioner's notation, with the old token
+      // comparison of a key against it.
+      val bounds: Seq[(String, Array[Byte] => Int)] = partitioner match {
+        case "murmur3" =>
+          (Seq(Long.MinValue, Long.MaxValue, rng.nextLong()) ++
+            keys.take(8).map(graft.functions.CassandraMurmur3.token)).map { t =>
+            (if (rng.nextBoolean()) t.toString else s" $t ") ->
+              ((k: Array[Byte]) => java.lang.Long.compare(graft.functions.CassandraMurmur3.token(k), t))
+          }
+        case "random" =>
+          (Seq("0" * 32, "7" + "f" * 31, hex(Array.fill(16)(rng.nextInt(256).toByte))) ++
+            keys.take(8).map(k => graft.functions.CassandraRandomMd5.tokenHex(new String(k, UTF_8))))
+            .map(t => t -> ((k: Array[Byte]) =>
+              hex(graft.functions.CassandraRandomMd5.tokenBytes(k)).compareTo(t)))
+        case _ =>
+          (keys.take(8).map(new String(_, UTF_8)) :+ "b").map(t => t -> ((k: Array[Byte]) =>
+            MaSSTableSource.compareBytes(k, t.getBytes(UTF_8))))
+      }
+      for ((t, old) <- bounds; k <- keys) {
+        val sk = order.sortKey(k)
+        val what = s"$partitioner: key '${new String(k, UTF_8)}' vs bound '$t'"
+        assert(Integer.signum(order.compareToken(sk, order.bound(t))) === Integer.signum(old(k)), what)
+        if (t.nonEmpty) {
+          assert(new RingBounds(order, None, Some(t), None).inStart(sk) === (old(k) >= 0), what)
+          assert(new RingBounds(order, None, None, Some(t)).pastEnd(sk) === (old(k) > 0), what)
+        }
+      }
+      // A resume key bounds by (token, key).
+      for (r <- keys.filter(_.nonEmpty).take(10); k <- keys)
+        assert(new RingBounds(order, Some(new String(r, UTF_8)), None, None)
+          .inStart(order.sortKey(k)) === (ring(k, r) >= 0), partitioner)
+    }
+    val bad = intercept[IllegalArgumentException](RingOrder("random").bound("ABC"))
+    assert(bad.getMessage.contains("32 lowercase hex chars"))
+    assert(intercept[IllegalArgumentException](RingOrder("murmur4")).getMessage
+      .contains("unknown partitioner: murmur4"))
+  }
+
+  test("describe's in_slice is true exactly for the files a token-sliced scan plans") {
+    val rng = new scala.util.Random(20261020L)
+    for (partitioner <- Seq("murmur3", "random", "byteOrdered")) {
+      val ring = ringCompare(partitioner) _
+      val keys = (1 to 40).map(i => f"pk-$i%02d")
+        .sortWith((a, b) => ring(a.getBytes(UTF_8), b.getBytes(UTF_8)) < 0)
+      def token(k: String): String = partitioner match {
+        case "murmur3" => graft.functions.CassandraMurmur3.token(k.getBytes(UTF_8)).toString
+        case "random" => graft.functions.CassandraRandomMd5.tokenHex(k)
+        case _ => k
+      }
+      // Five files, each a contiguous ring run of the keys, so a file's
+      // summary bounds overlap a slice exactly when it holds a key of it.
+      val dir = Files.createTempDirectory(s"in-slice-$partitioner")
+      val runs = (1 to 5).map { gen =>
+        val from = rng.nextInt(keys.size)
+        val run = keys.slice(from, from + 1 + rng.nextInt(10))
+        val e = new Enc
+        val entries = run.map { k =>
+          val off = e.bos.size().toLong
+          e.partitionHeader(k)
+          e.byte(0x20).vint(0).vint(0)
+          e.byte(0x00).vint(1L).vint(1).bytes("v".getBytes(UTF_8))
+          e.byte(0x04).vint(1L)
+          e.endOfPartition()
+          k -> off
+        }
+        val prefix = s"mc-$gen-big"
+        Files.write(dir.resolve(s"$prefix-Data.db"), e.result)
+        writeIndex(dir, prefix, entries)
+        writeSummary(dir, prefix, entries.take(1), bounds = Some((run.head, run.last)))
+        Files.write(dir.resolve(s"$prefix-Statistics.db"),
+          statsBytes(Marshal + PartitionerClass(partitioner), Some(StatsHeader(
+            0L, 0L, Marshal + "UTF8Type", Nil, Nil,
+            regulars = Seq("click" -> (Marshal + "UTF8Type"), "nclicks" -> (Marshal + "LongType"))))))
+        s"$prefix-Data.db" -> run
+      }.toMap
+      (1 to 8).foreach { trial =>
+        val Seq(a, b) = Seq(rng.nextInt(keys.size), rng.nextInt(keys.size)).sorted
+        val lo = if (trial % 4 == 1) "" else token(keys(a))
+        val hi = if (trial % 4 == 2) "" else token(keys(b))
+        val inSlice = MaSSTableSource.describe(spark, dir.toString, Some((lo, hi)))
+          .collect().map(r => r.getString(0) -> r.getAs[Boolean]("in_slice")).toMap
+        val r = spark.read.format("graft.sources.sstable.MaSSTableSource")
+          .option("path", dir.toString)
+        val df = Seq("tokenMin" -> lo, "tokenMax" -> hi).filter(_._2.nonEmpty)
+          .foldLeft(r) { case (rr, (k, v)) => rr.option(k, v) }.load()
+        val planned = df.queryExecution.optimizedPlan.collect {
+          case sr: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+            MaSSTableSource.scanPartitionFiles(sr.scan).get
+        }.head.map(f => new java.io.File(f).getName).toSet
+        val what = s"$partitioner trial $trial [$lo, $hi]"
+        assert(inSlice.collect { case (f, true) => f }.toSet === planned, what)
+        val inRange = keys.slice(if (lo.isEmpty) 0 else a, if (hi.isEmpty) keys.size else b + 1).toSet
+        assert(planned === runs.collect { case (f, run) if run.exists(inRange) => f }.toSet, what)
+        assert(df.select(col("key")).collect().map(_.getString(0)).toSet ===
+          runs.values.flatten.toSet.intersect(inRange), what)
+      }
+    }
+  }
+
+  // ---- corrupt length prefixes ----------------------------------------
+
+  private def failureMessages(read: => Any): Seq[String] = {
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    messages(intercept[Exception](read))
+  }
+
+  test("a negative value length in an ma Data.db is a named error with the file and partition offset") {
+    val e = new Enc
+    def partition(k: String, valueLength: Long): Unit = {
+      e.partitionHeader(k)
+      e.byte(0x20).vint(0).vint(0)
+      e.byte(0x00).vint(1L).vint(valueLength).bytes("v".getBytes(UTF_8))
+      e.byte(0x04).vint(1L)
+      e.endOfPartition()
+    }
+    partition("a", 1)
+    val offset = e.bos.size()
+    // The value length of partition "b" with its 32-bit sign bit flipped.
+    partition("b", 1L | 0x80000000L)
+    val dir = Files.createTempDirectory("ma-bad-length")
+    Files.write(dir.resolve("mc-1-big-Data.db"), e.result)
+    val msgs = failureMessages(spark.read.format("graft.sources.sstable.MaSSTableSource")
+      .option("path", dir.toString).option("columns", ColsSpec).load().collect())
+    assert(msgs.exists(m => m.contains("mc-1-big-Data.db: corrupt length prefix 2147483649") &&
+      m.contains(s"in the partition at offset $offset")), msgs.mkString(" | "))
+    assert(!msgs.exists(_.contains("NegativeArraySize")), msgs.mkString(" | "))
+  }
+
+  test("a negative value length in a ka Data.db is a named error with the file and partition offset") {
+    val e = new KaEnc
+    e.partition("a")
+    e.cell("click", 10L, "v".getBytes(UTF_8))
+    e.endRow()
+    val offset = e.bos.size()
+    e.partition("b")
+    // The cell's 32-bit value length with its sign bit flipped.
+    e.string("click"); e.byte(0); e.longlong(20L)
+    e.out.writeInt(1 | Int.MinValue); e.bytes("w".getBytes(UTF_8))
+    e.endRow()
+    val dir = Files.createTempDirectory("ka-bad-length")
+    Files.write(dir.resolve("ks-tbl-ka-1-Data.db"), e.result)
+    val msgs = failureMessages(spark.read.format("graft.sources.sstable.MaSSTableSource")
+      .option("path", dir.toString).option("columns", ColsSpec).load().collect())
+    assert(msgs.exists(m => m.contains("ks-tbl-ka-1-Data.db: corrupt length prefix -2147483647") &&
+      m.contains(s"in the partition at offset $offset")), msgs.mkString(" | "))
+    assert(!msgs.exists(_.contains("NegativeArraySize")), msgs.mkString(" | "))
   }
 }
