@@ -21,9 +21,6 @@ import graft.sources.Tables
   */
 object Dedup {
 
-  /** Tokenize to lowercase word array. */
-  def tokens(text: Column): Column = split(lower(text), "\\s+")
-
   /** Distinct lowercase k-word shingles of the raw text (the near-dup
     * unit) — native single-pass expression; see
     * [[Sketches.wordShingles]] for why not the declarative HOF stack. */
@@ -114,6 +111,13 @@ object Dedup {
       jaccardFrom(pairStatsM(spark, dir)).localCheckpoint()
     }
 
+  /** Memoized approximate pair lists, one entry per sketch family —
+    * the same session-shared-artifact discipline as [[ngramJaccardM]]:
+    * a pair list is the frame a pipeline's downstream stages (and
+    * repeated calls) consume, and it is capped-tiny, so it
+    * materializes once per (session, dir, family). */
+  private val approxPairCache = new graft.functions.SessionScopedCache[DataFrame]("dedup.approx")
+
   /** Append a constant self-audit column to an approximate pair list:
     * the fraction of the exact pair set ([[exactPairSet]] — shared
     * across both sketch audits) that the approximate list recovered —
@@ -123,42 +127,15 @@ object Dedup {
     * and the output both re-read it instead of re-running the sketch
     * pipeline; the recall itself is a 1-row global AGGREGATE broadcast
     * back onto the pairs — no single-task global window anywhere, so
-    * the shape survives a corpus-proportional pair frame at 100 TB.
-    *
-    * `sampleMod`: optional sampled audit for scales where even one
-    * shared exact-pair pass is a full corpus job — ground truth is
-    * computed only over the deterministic 1-in-`mod` doc sample
-    * (md5-bucket on doc_id) and recall over sampled-endpoint pairs,
-    * cutting the audit's pair volume by ~mod² and its corpus pass by
-    * ~mod. The emitted column keeps its name and meaning (recall vs
-    * the in-sample exact pairs). */
-  /** Memoized approximate pair lists, one entry per sketch family —
-    * the same session-shared-artifact discipline as [[ngramJaccardM]]:
-    * a pair list is the frame a pipeline's downstream stages (and
-    * repeated calls) consume, and it is capped-tiny, so it
-    * materializes once per (session, dir, family). */
-  private val approxPairCache = new graft.functions.SessionScopedCache[DataFrame]("dedup.approx")
-
+    * the shape survives a corpus-proportional pair frame at 100 TB. */
   private def withPairRecall(approx: => DataFrame, memoKey: String,
-      spark: SparkSession, dir: String,
-      sampleMod: Option[Int] = None): DataFrame = {
-    // Keyed WITHOUT sampleMod: the cached pair list is the same frame
-    // for every audit mode (only the recall branch depends on the
-    // sample), so one materialization serves them all.
+      spark: SparkSession, dir: String): DataFrame = {
     val approxM = approxPairCache.getOrCompute(
       spark, dir, memoKey)(approx.localCheckpoint())
-    val inSample = (id: Column) => sampleMod.fold(lit(true))(m =>
-      pmod(crc32(id.cast("string")), lit(m.toLong)) === 0L)
-    val exact = sampleMod match {
-      case None => exactPairSet(spark, dir)
-      case Some(_) => ngramJaccardOf(
-          shingledDocs(spark, dir).filter(inSample(col("doc_id"))))
-        .select(col("doc_a"), col("doc_b"))
-    }
     val recall = approxM
-      .filter(inSample(col("doc_a")) && inSample(col("doc_b")))
       .select(col("doc_a"), col("doc_b")).withColumn("_a", lit(1))
-      .join(exact.withColumn("_e", lit(1)), Seq("doc_a", "doc_b"), "full_outer")
+      .join(exactPairSet(spark, dir).withColumn("_e", lit(1)), Seq("doc_a", "doc_b"),
+        "full_outer")
       .agg((sum(when(col("_e") === 1 && col("_a") === 1, 1.0).otherwise(0.0)) /
         greatest(sum(when(col("_e") === 1, 1.0).otherwise(0.0)), lit(1.0)))
         .as("recall_vs_exact"))
@@ -170,9 +147,8 @@ object Dedup {
     * → 32 bands × 4 rows → bucket join → exact-Jaccard verify ≥ 0.5.
     * Band probability at j=0.9 is ≈ 1, at j=0.02 (the corpus noise
     * floor) is ≈ 0 — candidates are a tiny fraction of n². */
-  def minhashLsh(spark: SparkSession, dir: String,
-      auditSampleMod: Option[Int] = None): DataFrame =
-    withPairRecall(minhashPairs(spark, dir), "minhash", spark, dir, auditSampleMod)
+  def minhashLsh(spark: SparkSession, dir: String): DataFrame =
+    withPairRecall(minhashPairs(spark, dir), "minhash", spark, dir)
 
   /** The banded sig frame (shingle → 128-hash MinHash sig → 32 band
     * keys) — exposed so plan tests can pin the sketch pipeline's
@@ -599,9 +575,8 @@ object Dedup {
   /** #36 dedup_simhash: 64-bit SimHash over 3-word shingles; candidates
     * share one of 8 8-bit bands (pigeonhole: any pair with Hamming ≤ 7
     * is guaranteed a clean band), verified at Hamming ≤ 7. */
-  def simhash(spark: SparkSession, dir: String,
-      auditSampleMod: Option[Int] = None): DataFrame =
-    withPairRecall(simhashPairs(spark, dir), "simhash", spark, dir, auditSampleMod)
+  def simhash(spark: SparkSession, dir: String): DataFrame =
+    withPairRecall(simhashPairs(spark, dir), "simhash", spark, dir)
 
   /** The verified simhash pair list before the recall audit — see
     * [[minhashPairs]]. */
@@ -712,7 +687,7 @@ object Dedup {
       .agg(coalesce(max(col("n")), lit(0L))).head().getLong(0)
 
   /** The corpus as (doc_id, 3-word shingle set) — the shared input of
-    * the exact pipeline and its sampled-audit variant. */
+    * the exact pipeline and the sketch pipelines. */
   private def shingledDocs(spark: SparkSession, dir: String): DataFrame =
     Tables.documents(spark, dir)
       .select(col("doc_id"), shingles(col("text"), 3).as("sh"))
@@ -803,38 +778,6 @@ object Dedup {
       .min(Int.MaxValue.toLong).toInt
   }
 
-  /** Exact Jaccard-≥0.5 pairs over the df-capped shingle universe.
-    *
-    * r17 rework of the counting stage (guide §2.3/§4.2, measured at
-    * sf1 where the co-pair stream is 125 M instances over 112.7 M
-    * distinct pairs — 90% singletons — and the old formulation spent
-    * 112 s):
-    *
-    *  1. The in-posting pair stream is PACKED — one long (a << 32 | b)
-    *     per pair ([[Sketches.sortedPairsPacked]], loud 31-bit id
-    *     precondition) instead of an allocated InternalRow per pair —
-    *     so the count aggregation runs through codegen's single-long
-    *     primitive fast hash map and the exchange carries 8 bytes per
-    *     pair instead of 16 + struct overhead.
-    *  2. The sizes joins are fed a 10× SMALLER pair frame: a pair with
-    *     n_common = 1 can only reach jaccard ≥ 0.5 when
-    *     n_a + n_b ≤ 3, i.e. both endpoints hold ≤ 2 retained
-    *     shingles — so the c = 1 mass (101.6 M of 112.7 M pairs at
-    *     sf1) routes through a tiny-docs branch that joins only the
-    *     n_sh ≤ 2 doc dimension (empty on this corpus, and bounded by
-    *     the short-doc population generally), while the c ≥ 2 pairs
-    *     (11.2 M) take the full sizes joins. NOT prefix filtering:
-    *     measured first (54 M candidates — this corpus's capped
-    *     shingle space is too dense for Bayardo prefixes to pay).
-    *
-    * Emitted (doc_a, doc_b, jaccard) values are bit-identical to the
-    * unpacked single-branch formulation: same n_common counts, same
-    * long arithmetic, same division, and the two branches partition
-    * the pair space on n_common so no pair is lost or duplicated. */
-  private[graft] def ngramJaccardOf(docs: DataFrame,
-      postingsMemoKey: Option[String] = None): DataFrame =
-    jaccardFrom(pairStatsOf(docs, postingsMemoKey))
-
   private def jaccardFrom(stats: DataFrame): DataFrame = stats
     .select(col("doc_a"), col("doc_b"),
       (col("n_common").cast("double") /
@@ -852,19 +795,35 @@ object Dedup {
     * gate expression, so emitted rows and values are unchanged — the
     * dual gate here only prunes pairs that can pass neither.
     *
-    * The c = 1 mass (101.6 M of 112.7 M pairs at sf1) is dropped
-    * BEFORE the size joins: with n_common = 1, jaccard ≥ 0.5 needs
-    * n_a + n_b ≤ 3 (both endpoints hold ≤ 2 retained shingles) and
-    * containment ≥ 0.8 needs min(n_a, n_b) = 1 — so the keep-filter is
-    * annotated by BROADCAST left joins against the n_sh ≤ 2 doc
-    * dimension (near-empty on any real corpus: a doc retaining ≤ 2
-    * capped shingles has ≲ 4 words; bounded by the short-doc
-    * population, never by corpus size). Map-side probes, no shuffle,
-    * one pass over the pair stream — a two-branch union formulation
-    * measured 2× the whole coCounts aggregation because each branch
-    * re-ran it. */
-  private[graft] def pairStatsOf(docs: DataFrame,
-      postingsMemoKey: Option[String] = None): DataFrame = {
+    * r17 rework of the counting stage (guide §2.3/§4.2, measured at
+    * sf1 where the co-pair stream is 125 M instances over 112.7 M
+    * distinct pairs — 90% singletons — and the old formulation spent
+    * 112 s):
+    *
+    *  1. The in-posting pair stream is PACKED — one long (a << 32 | b)
+    *     per pair ([[Sketches.sortedPairsPacked]], loud 31-bit id
+    *     precondition) instead of an allocated InternalRow per pair —
+    *     so the count aggregation runs through codegen's single-long
+    *     primitive fast hash map and the exchange carries 8 bytes per
+    *     pair instead of 16 + struct overhead.
+    *  2. The c = 1 mass (101.6 M of 112.7 M pairs at sf1) is dropped
+    *     BEFORE the size joins: with n_common = 1, jaccard ≥ 0.5 needs
+    *     n_a + n_b ≤ 3 (both endpoints hold ≤ 2 retained shingles) and
+    *     containment ≥ 0.8 needs min(n_a, n_b) = 1 — so the keep-filter
+    *     is annotated by BROADCAST left joins against the n_sh ≤ 2 doc
+    *     dimension (near-empty on any real corpus: a doc retaining ≤ 2
+    *     capped shingles has ≲ 4 words; bounded by the short-doc
+    *     population, never by corpus size). Map-side probes, no
+    *     shuffle, one pass over the pair stream — a two-branch union
+    *     formulation measured 2× the whole coCounts aggregation because
+    *     each branch re-ran it. NOT prefix filtering: measured first
+    *     (54 M candidates — this corpus's capped shingle space is too
+    *     dense for Bayardo prefixes to pay).
+    *
+    * Emitted values are bit-identical to the unpacked formulation:
+    * same n_common counts, same long arithmetic. The materialized
+    * postings are session-memoized under `postingsMemoKey`. */
+  private[graft] def pairStatsOf(docs: DataFrame, postingsMemoKey: String): DataFrame = {
     // Materialized (lazily, on first consumer): the capped posting
     // lists are df-cap-bounded — ≤ cap ids per retained shingle, tens
     // of MB at any corpus size that fits the shingle universe — and
@@ -872,14 +831,10 @@ object Dedup {
     // through sizes the broadcast tiny-doc annotation); without the
     // checkpoint each consumer re-ran the whole inverted-index build
     // (the 19 M-row string-keyed explode + collect aggregation, the
-    // pipeline's single most expensive stage). With a key (the
-    // full-corpus pipelines) the materialized postings are also
-    // session-memoized; sampled callers pass None and keep a private
-    // checkpoint.
-    val postings = cappedPostings(docs, col("sh")).localCheckpoint(false)
+    // pipeline's single most expensive stage).
     val (coCounts, sizes) = postingPairCounts(
-      postingsMemoKey.fold(postings)(k =>
-        postingsCache.getOrCompute(docs.sparkSession, k)(postings)),
+      postingsCache.getOrCompute(docs.sparkSession, postingsMemoKey)(
+        cappedPostings(docs, col("sh")).localCheckpoint(false)),
       "n_sh", "n_common")
 
     val tiny = sizes.filter(col("n_sh") <= 2)
@@ -925,7 +880,7 @@ object Dedup {
   private val pairStatsCache = new graft.functions.SessionScopedCache[DataFrame]("dedup.pair_stats")
   private def pairStatsM(spark: SparkSession, dir: String): DataFrame =
     pairStatsCache.getOrCompute(spark, dir)(
-      pairStatsOf(shingledDocs(spark, dir), Some(dir)).localCheckpoint())
+      pairStatsOf(shingledDocs(spark, dir), dir).localCheckpoint())
 
 
   /** #37e dedup_substring: SUBSTRING-level duplicate pairs — the

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.{element_at, explode}
 import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types._
 
@@ -142,6 +143,14 @@ object Centroids {
 
   def nearestCentroids(c: Column, cents: Array[Array[Double]], nProbe: Int): Column =
     ColumnBridge.column(NearestCentroids(ColumnBridge.expression(c), cents, nProbe))
+
+  /** IVF list routing of a vector column. With `nProbe = 1` it is the
+    * vector's list assignment: the id of its nearest centroid, one
+    * scalar per row. With `nProbe > 1` it is a generator of the
+    * `nProbe` lists a query probes, best first, one row each. */
+  def lists(c: Column, cents: Array[Array[Double]], nProbe: Int = 1): Column =
+    if (nProbe == 1) element_at(nearestCentroids(c, cents, 1), 1)
+    else explode(nearestCentroids(c, cents, nProbe))
 
   // ---- product quantization (PQ) --------------------------------------
 

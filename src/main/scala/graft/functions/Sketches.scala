@@ -77,12 +77,6 @@ object Sketches {
     out(0) = h1; out(1) = h2
   }
 
-  def hash64(s: UTF8String): Long = {
-    val tmp = new Array[Long](2)
-    murmur128(s.getBytes, tmp)
-    tmp(0)
-  }
-
   /** MinHash signature: k minima over the shingle set. */
   def minhash(shingles: ArrayData, k: Int): ArrayData = {
     val mins = Array.fill(k)(Long.MaxValue)

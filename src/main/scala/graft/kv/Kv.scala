@@ -31,8 +31,7 @@ import graft.sources.Tables
   *    one ranking window over (key, col), ordered by (ts, seq) desc —
   *    a single hash shuffle, AQE-coalesced;
   *  - row/range tombstones (update_tombstones, CassandraParser.cpp:337)
-  *    are windowed conditional maxima over the key partition — they ride
-  *    the same shuffle instead of a second join;
+  *    are one marker anti-join, [[applyMarkerTombstones]];
   *  - TTL/expiry (AerospikeWriter.cpp TTL policies) is pure column
   *    arithmetic in exact integer µs space — fully codegen'd, no state.
   *
@@ -141,11 +140,14 @@ object Kv {
     resumeKey.foldLeft(withSlice)((r, k) => r.option("resumeKey", k)).load(paths: _*)
   }
 
-  /** Tombstone application for SSTable cell bags ([[cellsFromSSTables]]
-    * shape): every marker suppresses the cells of its key that are at
-    * or before its timestamp — bounded to the [range_start, range_end]
-    * column range when the marker is a legacy range tombstone, the
-    * whole key otherwise. An anti-join (key equality + residual
+  /** Tombstone application for cell bags of the [[cellsFromSSTables]]
+    * shape (any bag with `range_start`/`range_end` columns): every
+    * marker suppresses the cells of its key that are at or before its
+    * timestamp (CassandraParser.cpp:481 keeps a cell only when
+    * `minTime < column.ts`) — bounded to the [range_start, range_end]
+    * column range when the marker is a range tombstone
+    * (update_tombstones, CassandraParser.cpp:337-372), the whole key
+    * otherwise. An anti-join (key equality + residual
     * condition), so several differently-bounded markers per key each
     * apply; the marker side is tiny and AQE broadcasts it. */
   def applyMarkerTombstones(cellBag: DataFrame): DataFrame = {
@@ -236,38 +238,6 @@ object Kv {
     lww(cellBag.filter(!col("counter")))
       .unionByName(summed).unionByName(dead)
   }
-
-  /** Per-key newest tombstone timestamp — a tiny frame (one row per
-    * tombstoned key), map-side-combined before its shuffle. */
-  private def deletionMarkers(cellBag: DataFrame): DataFrame =
-    cellBag.filter(col("col") === TombstoneCol)
-      .groupBy(col("key"))
-      .agg(max(col("ts")).as("del_ts"))
-
-  /** Row-tombstone application: a tombstone cell suppresses every cell of
-    * its key with ts <= tombstone ts (CassandraParser.cpp:481 keeps a cell
-    * only when `minTime < column.ts`). The marker set is aggregated
-    * separately and joined back — it is small relative to the corpus,
-    * so AQE broadcasts it and the data cells never shuffle for the
-    * tombstone check (the windowed-max form would funnel every cell of
-    * a hot key through one task). */
-  def applyRowTombstones(cellBag: DataFrame): DataFrame =
-    cellBag
-      .filter(col("col") =!= TombstoneCol)
-      .join(deletionMarkers(cellBag), Seq("key"), "left_outer")
-      .filter(col("del_ts").isNull || col("ts") > col("del_ts"))
-      .drop("del_ts")
-
-  /** Range-tombstone application: the marker deletes only cells whose
-    * column name falls in [rangeStart, rangeEnd] and that are older than
-    * the marker (update_tombstones, CassandraParser.cpp:337-372). */
-  def applyRangeTombstones(cellBag: DataFrame, rangeStart: String, rangeEnd: String): DataFrame =
-    cellBag
-      .filter(col("col") =!= TombstoneCol)
-      .join(deletionMarkers(cellBag), Seq("key"), "left_outer")
-      .filter(col("del_ts").isNull || col("ts") > col("del_ts") ||
-              !col("col").between(rangeStart, rangeEnd))
-      .drop("del_ts")
 
   /** Cell expiration in exact integer µs space: ttl_us derived from the
     * cell value (deterministic synthetic TTL: value*10 seconds), expiry =
@@ -450,15 +420,19 @@ object Kv {
       .agg(count(lit(1)).as("n_cols"), max(col("ts")).as("last_write"))
       .orderBy(col("key"))
 
-  /** #3 kv_tombstone_merge: row tombstones then LWW. */
+  /** #3 kv_tombstone_merge: row tombstones (whole-key markers) then LWW. */
   def tombstoneMerge(spark: SparkSession, dir: String): DataFrame =
-    lww(applyRowTombstones(cells(spark, dir)))
+    lww(applyMarkerTombstones(cells(spark, dir)
+        .withColumn("range_start", lit(null).cast("string"))
+        .withColumn("range_end", lit(null).cast("string"))))
       .select(col("key"), col("col"), col("ts"), col("value"))
       .orderBy(col("key"), col("col"))
 
   /** #4 kv_range_tombstone: range ['click','purchase'] tombstones then LWW. */
   def rangeTombstone(spark: SparkSession, dir: String): DataFrame =
-    lww(applyRangeTombstones(cells(spark, dir), "click", "purchase"))
+    lww(applyMarkerTombstones(cells(spark, dir)
+        .withColumn("range_start", lit("click"))
+        .withColumn("range_end", lit("purchase"))))
       .select(col("key"), col("col"), col("ts"), col("value"))
       .orderBy(col("key"), col("col"))
 

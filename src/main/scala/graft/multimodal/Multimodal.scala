@@ -274,10 +274,6 @@ object Multimodal {
     media.select(col("doc_id"),
       graft.functions.Blockhash.blockhash64(col("h"), col("nb")).as("phash"))
 
-  /** Per-payload perceptual hashes of the media corpus. */
-  def phashes(spark: SparkSession, dir: String): DataFrame =
-    phashesOf(mediaTable(spark, dir).toDF())
-
   /** The [[phashDedup]] input corpus: the media payloads plus
     * deterministically planted companions — an EXACT copy for every
     * 20th doc and an 8-byte in-place head edit (≤3 regions at

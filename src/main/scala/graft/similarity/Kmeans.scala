@@ -145,8 +145,7 @@ object Kmeans {
   /** `emb` plus its nearest-centroid `cluster` column (codegen'd, the
     * centroids embedded in the plan). */
   def assignedTo(emb: DataFrame, cents: Array[Array[Double]]): DataFrame =
-    emb.withColumn("cluster",
-      element_at(Centroids.nearestCentroids(col("embedding"), cents, 1), 1))
+    emb.withColumn("cluster", Centroids.lists(col("embedding"), cents))
 
   /** The report-knob trainer memoized per (session, dir, k, rounds,
     * sampleCap) — the [[graft.similarity.Similarity.knnPrep]] /

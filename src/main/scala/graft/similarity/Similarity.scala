@@ -15,11 +15,25 @@ import graft.sources.Tables
   * corpus is never sorted. The LSH/IVF variants prune the corpus to
   * bucket collisions first, the formulation that stays an equality
   * join at 100 TB: candidates ∝ corpus/2^bits per table, not ∝ corpus.
+  *
+  * The IVF/PQ family (ann_ivf_topk, ann_pq_topk, ann_ivf_pq_topk,
+  * ann_tuning_curve and the persisted IVF index behind ann_incremental,
+  * ann_recall_audit, ann_index_balance and ann_index_drift) is one
+  * IVFADC index definition (Jégou et al. 2011): [[sampleOf]] is the
+  * trainer sample, [[coarseQuantizer]] the list centroids,
+  * [[Centroids.lists]] the list assignment and query probe,
+  * [[pqCodebooks]] the PQ codebooks, [[adcTopK]] the ADC shortlist with
+  * its exact re-rank, and [[bestMatches]] the per-batch-vector probe of
+  * the persisted index. Each report builds only its candidate frame.
   */
 object Similarity {
 
   private val K = 10
   private val NumQueries = 10
+
+  /** The corpus vectors, (vec_id, embedding). */
+  private def vectors(spark: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
 
   /** The benchmark query set: the first `NumQueries` vectors. */
   private def queries(spark: SparkSession, dir: String): DataFrame =
@@ -81,9 +95,7 @@ object Similarity {
 
   private def bruteTopKM(spark: SparkSession, dir: String): DataFrame =
     bruteTopKCache.getOrCompute(spark, dir) {
-      val corpus = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding"))
-      topKRaw(corpus
+      topKRaw(vectors(spark, dir)
         .join(broadcast(queries(spark, dir)), col("vec_id") =!= col("query_id"))
         .select(col("query_id"), col("vec_id"),
           Sketches.cosineSim(col("q_emb"), col("embedding")).as("cos")))
@@ -95,24 +107,83 @@ object Similarity {
   def bruteForceTopK(spark: SparkSession, dir: String): DataFrame =
     bruteTopKM(spark, dir).orderBy(col("query_id"), col("rank"))
 
-  /** The deterministic 1024-vector trainer sample (every-3rd vec_id,
-    * id-ordered — the fixed-seed reproducibility rule) shared by the
-    * IVF coarse quantizer, the PQ codebooks, and the IVF-PQ composite,
-    * memoized per (session, dir): the sample and the Lloyd fits on it
-    * are pure functions of the corpus, and each ANN report re-collected
-    * the identical sample (a TakeOrdered corpus job) on every call
-    * (r17, guide §1.2/§4.5 — train once, serve many). */
+  // ---- the IVF/PQ index definition ----------------------------------
+
+  private val NLists = 16
+  private val NProbe = 4
+  private val PqM = 8
+  private val PqCodes = 16
+  private val Shortlist = 50
+
+  /** The deterministic 1024-vector trainer sample of a (vec_id,
+    * embedding) frame: every-3rd vec_id, id-ordered — the fixed-seed
+    * reproducibility rule (orderBy before limit: a bare limit takes
+    * arbitrary rows, which would silently break the reproducibility of
+    * the fitted centroids). */
+  private def sampleOf(corpus: DataFrame): Array[Array[Float]] =
+    corpus.filter(pmod(col("vec_id"), lit(3)) === 0)
+      .orderBy(col("vec_id")).limit(1024)
+      .collect().map(_.getSeq[Float](1).toArray)
+
+  /** [[sampleOf]] the whole corpus, shared by the IVF coarse quantizer,
+    * the PQ codebooks, and the IVF-PQ composite, memoized per (session,
+    * dir): the sample and the Lloyd fits on it are pure functions of
+    * the corpus, and each ANN report re-collected the identical sample
+    * (a TakeOrdered corpus job) on every call (r17, guide §1.2/§4.5 —
+    * train once, serve many). */
   private val annSampleMemo =
     new graft.functions.SessionScopedCache[Array[Array[Float]]]("similarity.ann_sample")
 
   private def trainerSample(spark: SparkSession, dir: String): Array[Array[Float]] =
-    annSampleMemo.getOrCompute(spark, dir) {
-      Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding"))
-        .filter(pmod(col("vec_id"), lit(3)) === 0)
-        .orderBy(col("vec_id")).limit(1024)
-        .collect().map(_.getSeq[Float](1).toArray)
-    }
+    annSampleMemo.getOrCompute(spark, dir)(sampleOf(vectors(spark, dir)))
+
+  /** The coarse quantizer: `NLists` spherical k-means centroids, 5
+    * Lloyd rounds on a trainer sample. */
+  private def coarseQuantizer(sample: Array[Array[Float]]): Array[Array[Double]] =
+    Centroids.fit(sample, NLists, iters = 5)
+
+  /** The PQ codebooks: per sub-block L2 k-means, `PqCodes` codewords
+    * for each of the `PqM` sub-blocks, 5 Lloyd rounds on a trainer
+    * sample. */
+  private def pqCodebooks(sample: Array[Array[Float]]): Array[Array[Array[Double]]] = {
+    // A dimension that doesn't divide into m sub-blocks would silently
+    // drop the tail dims from encode/ADC (and bias every score) — fail
+    // loudly instead.
+    require(sample.head.length % PqM == 0,
+      s"PQ requires dim % m == 0, got dim=${sample.head.length}, m=$PqM")
+    val sub = sample.head.length / PqM
+    Array.tabulate(PqM)(j =>
+      Centroids.fitL2(sample.map(_.slice(j * sub, (j + 1) * sub)),
+        PqCodes, iters = 5))
+  }
+
+  /** The query set probing its `NProbe` nearest lists: one row per
+    * (query, probed list). */
+  private def probedQueries(spark: SparkSession, dir: String,
+      cents: Array[Array[Double]]): DataFrame =
+    queries(spark, dir).select(col("query_id"), col("q_emb"),
+      Centroids.lists(col("q_emb"), cents, NProbe).as("centroid"))
+
+  /** The PQ serving tail over a candidate frame (query_id, q_emb,
+    * vec_id, codes): each query ADC-scans the candidates' CODES for a
+    * shortlist of `Shortlist`, and exact cosine re-ranks only the
+    * shortlist against the raw `corpus` vectors (≤ Shortlist·|queries|
+    * rows), with the recall@k audit. */
+  private def adcTopK(spark: SparkSession, dir: String, corpus: DataFrame,
+      books: Array[Array[Array[Double]]])(cand: DataFrame): DataFrame = {
+    val adcShort = cand
+      .select(col("query_id"), col("vec_id"),
+        Centroids.pqAdcScore(col("q_emb"), col("codes"), books).as("adc"))
+      .groupBy(col("query_id"))
+      .agg(TopKByScore.topkByScore(col("adc"), col("vec_id"), Shortlist).as("top"))
+      .select(col("query_id"), explode(col("top")).as("c"))
+      .select(col("query_id"), col("c.id").as("vec_id"))
+    withRecall(spark, dir, topK(adcShort
+      .join(corpus, "vec_id")
+      .join(broadcast(queries(spark, dir)), "query_id")
+      .select(col("query_id"), col("vec_id"),
+        Sketches.cosineSim(col("q_emb"), col("embedding")).as("cos"))))
+  }
 
   /** #40i ann_range_search: RANGE similarity query — every corpus
     * vector with cosine ≥ τ of each query, the "all neighbors above a
@@ -126,8 +197,7 @@ object Similarity {
     * the same way they do for top-k — the range filter swaps in for
     * the rank cut. */
   def rangeSearch(spark: SparkSession, dir: String, tau: Double = 0.3): DataFrame = {
-    Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
+    vectors(spark, dir)
       .join(broadcast(queries(spark, dir)), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         Sketches.cosineSim(col("q_emb"), col("embedding")).as("cos"))
@@ -183,9 +253,7 @@ object Similarity {
         .select(col(idCol), col(embCol),
           col("pos").as("table_id"), col("col").as("bucket"))
 
-    val corpusB = banded(
-      Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")),
-      "vec_id", "embedding")
+    val corpusB = banded(vectors(spark, dir), "vec_id", "embedding")
     val queriesB = banded(queries(spark, dir), "query_id", "q_emb")
 
     val cand = corpusB
@@ -207,24 +275,11 @@ object Similarity {
     * narrow pass, the assignment can be persisted/partitioned-by), and
     * every query touches ~nProbe/nLists of the corpus. */
   def ivfTopK(spark: SparkSession, dir: String): DataFrame = {
-    val nLists = 16
-    val nProbe = 4
-
-    val corpus = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    // The memoized deterministic sample (orderBy before limit: a bare
-    // limit takes arbitrary rows, which would silently break the
-    // fixed-seed reproducibility of the fitted centroids).
-    val sample = trainerSample(spark, dir)
-    val cents = Centroids.fit(sample, nLists, iters = 5)
-
-    val corpusAssigned = corpus.withColumn("centroid",
-      element_at(Centroids.nearestCentroids(col("embedding"), cents, 1), 1))
-    val queriesProbed = queries(spark, dir).select(
-      col("query_id"), col("q_emb"),
-      explode(Centroids.nearestCentroids(col("q_emb"), cents, nProbe)).as("centroid"))
-
+    val cents = coarseQuantizer(trainerSample(spark, dir))
+    val corpusAssigned = vectors(spark, dir)
+      .withColumn("centroid", Centroids.lists(col("embedding"), cents))
     withRecall(spark, dir, topK(corpusAssigned
-      .join(broadcast(queriesProbed), Seq("centroid"))
+      .join(broadcast(probedQueries(spark, dir, cents)), Seq("centroid"))
       .filter(col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
         Sketches.cosineSim(col("q_emb"), col("embedding")).as("cos"))))
@@ -244,39 +299,11 @@ object Similarity {
     * entire point of PQ serving — and the re-rank join touches ≤
     * 50·|queries| raw vectors. Self-reports recall@k like LSH/IVF. */
   def pqTopK(spark: SparkSession, dir: String): DataFrame = {
-    val m = 8
-    val kCodes = 16
-    val shortlist = 50
-
-    val corpus = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    // The same memoized deterministic sample as IVF.
-    val sample = trainerSample(spark, dir)
-    // A dimension that doesn't divide into m sub-blocks would silently
-    // drop the tail dims from encode/ADC (and bias every score) — fail
-    // loudly instead.
-    require(sample.head.length % m == 0,
-      s"PQ requires dim % m == 0, got dim=${sample.head.length}, m=$m")
-    val sub = sample.head.length / m
-    val books = Array.tabulate(m)(j =>
-      Centroids.fitL2(sample.map(_.slice(j * sub, (j + 1) * sub)),
-        kCodes, iters = 5))
-
-    val codes = corpus.select(col("vec_id"),
-      Centroids.pqEncode(col("embedding"), books).as("codes"))
-    val adcShort = codes
-      .join(broadcast(queries(spark, dir)), col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        Centroids.pqAdcScore(col("q_emb"), col("codes"), books).as("adc"))
-      .groupBy(col("query_id"))
-      .agg(TopKByScore.topkByScore(col("adc"), col("vec_id"), shortlist).as("top"))
-      .select(col("query_id"), explode(col("top")).as("c"))
-      .select(col("query_id"), col("c.id").as("vec_id"))
-
-    withRecall(spark, dir, topK(adcShort
-      .join(corpus, "vec_id")
-      .join(broadcast(queries(spark, dir)), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        Sketches.cosineSim(col("q_emb"), col("embedding")).as("cos"))))
+    val corpus = vectors(spark, dir)
+    val books = pqCodebooks(trainerSample(spark, dir))
+    adcTopK(spark, dir, corpus, books)(corpus
+      .select(col("vec_id"), Centroids.pqEncode(col("embedding"), books).as("codes"))
+      .join(broadcast(queries(spark, dir)), col("vec_id") =!= col("query_id")))
   }
 
   /** #40l ann_ivf_pq_topk: the composed production ANN shape — IVF
@@ -297,48 +324,18 @@ object Similarity {
     * Each corpus vector lives in exactly one list, so a (query, vec)
     * candidate pair is generated at most once — no dedup pass. */
   def ivfPqTopK(spark: SparkSession, dir: String): DataFrame = {
-    val nLists = 16
-    val nProbe = 4
-    val m = 8
-    val kCodes = 16
-    val shortlist = 50
-
-    val corpus = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    // The shared memoized deterministic sample.
+    val corpus = vectors(spark, dir)
     val sample = trainerSample(spark, dir)
-    val cents = Centroids.fit(sample, nLists, iters = 5)
-    require(sample.head.length % m == 0,
-      s"PQ requires dim % m == 0, got dim=${sample.head.length}, m=$m")
-    val sub = sample.head.length / m
-    val books = Array.tabulate(m)(j =>
-      Centroids.fitL2(sample.map(_.slice(j * sub, (j + 1) * sub)),
-        kCodes, iters = 5))
-
+    val cents = coarseQuantizer(sample)
+    val books = pqCodebooks(sample)
     // ONE index-build pass: list assignment and codes ride the same
     // narrow projection of the scan.
     val indexed = corpus.select(col("vec_id"),
-      element_at(Centroids.nearestCentroids(col("embedding"), cents, 1), 1)
-        .as("centroid"),
+      Centroids.lists(col("embedding"), cents).as("centroid"),
       Centroids.pqEncode(col("embedding"), books).as("codes"))
-    val queriesProbed = queries(spark, dir).select(
-      col("query_id"), col("q_emb"),
-      explode(Centroids.nearestCentroids(col("q_emb"), cents, nProbe)).as("centroid"))
-
-    val adcShort = indexed
-      .join(broadcast(queriesProbed), Seq("centroid"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .select(col("query_id"), col("vec_id"),
-        Centroids.pqAdcScore(col("q_emb"), col("codes"), books).as("adc"))
-      .groupBy(col("query_id"))
-      .agg(TopKByScore.topkByScore(col("adc"), col("vec_id"), shortlist).as("top"))
-      .select(col("query_id"), explode(col("top")).as("c"))
-      .select(col("query_id"), col("c.id").as("vec_id"))
-
-    withRecall(spark, dir, topK(adcShort
-      .join(corpus, "vec_id")
-      .join(broadcast(queries(spark, dir)), "query_id")
-      .select(col("query_id"), col("vec_id"),
-        Sketches.cosineSim(col("q_emb"), col("embedding")).as("cos"))))
+    adcTopK(spark, dir, corpus, books)(indexed
+      .join(broadcast(probedQueries(spark, dir, cents)), Seq("centroid"))
+      .filter(col("vec_id") =!= col("query_id")))
   }
 
   /** #40m ann_tuning_curve: the IVF index-tuning report — recall@10
@@ -359,16 +356,13 @@ object Similarity {
     * runs on a sampled query set exactly like the per-query recall
     * audit the other ANN operators carry. */
   def ivfTuningCurve(spark: SparkSession, dir: String): DataFrame = {
-    val nLists = 16
     val maxProbe = 8
     val probes = Seq(1, 2, 4, 8)
 
-    val corpus = Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding"))
-    val sample = trainerSample(spark, dir)
-    val cents = Centroids.fit(sample, nLists, iters = 5)
-
-    val corpusAssigned = corpus.withColumn("centroid",
-      element_at(Centroids.nearestCentroids(col("embedding"), cents, 1), 1))
+    val corpus = vectors(spark, dir)
+    val cents = coarseQuantizer(trainerSample(spark, dir))
+    val corpusAssigned = corpus
+      .withColumn("centroid", Centroids.lists(col("embedding"), cents))
     val qprobe = queries(spark, dir).select(
       col("query_id"), col("q_emb"),
       posexplode(Centroids.nearestCentroids(col("q_emb"), cents, maxProbe)))
@@ -625,8 +619,7 @@ object Similarity {
   private[graft] def knnPrep(
       spark: SparkSession, dir: String): (Int, Array[Array[Double]]) =
     knnPrepCache.getOrCompute(spark, dir) {
-      val corpus = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding"))
+      val corpus = vectors(spark, dir)
       // Footer-metadata count, not a count() scan job (r13 #7 closed
       // as specified): the nLists rule needs |corpus| BEFORE planning,
       // and the parquet footers carry it exactly — a driver-side
@@ -654,11 +647,9 @@ object Similarity {
       val kG = 5
       // Parallelism floor on the corpus scan: both self-join sides pay
       // the k×d assignment expression per row before the exchange.
-      val corpus = Tables.withMinParallelism(
-        Tables.embeddings(spark, dir).select(col("vec_id"), col("embedding")))
+      val corpus = Tables.withMinParallelism(vectors(spark, dir))
       val (_, cents) = knnPrep(spark, dir)
-      val asn = corpus.withColumn("centroid",
-        element_at(Centroids.nearestCentroids(col("embedding"), cents, 1), 1))
+      val asn = corpus.withColumn("centroid", Centroids.lists(col("embedding"), cents))
       val scored = asn
         .join(asn.select(col("centroid"),
           col("vec_id").as("dst_id"), col("embedding").as("d_emb")), Seq("centroid"))
@@ -819,21 +810,18 @@ object Similarity {
     val table =
       s"graft_ann_ivf_idx_${graft.sources.PersistedIndex.tableKey(dir, salt)}"
     graft.sources.PersistedIndex.dropAndClean(spark, table)
-    val corpus = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-      .filter(ivfIncBucket(col("vec_id")) < hiExcl)
-    val sample = corpus.filter(pmod(col("vec_id"), lit(3)) === 0)
-      .orderBy(col("vec_id")).limit(1024)
-      .collect().map(_.getSeq[Float](1).toArray)
-    val cents = Centroids.fit(sample, 16, iters = 5)
-    val assigned = corpus.select(col("vec_id"), col("embedding"),
-      element_at(Centroids.nearestCentroids(col("embedding"), cents, 1), 1)
-        .as("centroid"))
+    val corpus = vectors(spark, dir).filter(ivfIncBucket(col("vec_id")) < hiExcl)
+    val cents = coarseQuantizer(sampleOf(corpus))
     graft.sources.Bucketing.writeBucketed(
-      assigned.select(col("centroid"), col("vec_id"), col("embedding")),
-      table, "centroid", nBuckets = 8)
+      postingsOf(corpus, cents), table, "centroid", nBuckets = 8)
     IvfIndex(table, cents)
   }
+
+  /** The postings rows of (vec_id, embedding) vectors under the
+    * centroids `cents`: (centroid, vec_id, embedding). */
+  private def postingsOf(vecs: DataFrame, cents: Array[Array[Double]]): DataFrame =
+    vecs.select(Centroids.lists(col("embedding"), cents).as("centroid"),
+      col("vec_id"), col("embedding"))
 
   /** Ingest a searched batch into the postings table under the FROZEN
     * quantizer (the -W high-water analog for vectors): assignments of
@@ -847,17 +835,40 @@ object Similarity {
     // postings and inflate n_candidates silently.
     graft.sources.PersistedIndex.appendExactlyOnce(
       spark, idx.table, loIncl, hiExcl) {
-      val inc = Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding"))
+      val inc = vectors(spark, dir)
         .filter(ivfIncBucket(col("vec_id")) >= loIncl &&
           ivfIncBucket(col("vec_id")) < hiExcl)
       graft.sources.Bucketing.appendBucketed(
-        inc.select(
-          element_at(Centroids.nearestCentroids(col("embedding"), idx.cents, 1), 1)
-            .as("centroid"),
-          col("vec_id"), col("embedding")),
-        idx.table, "centroid", nBuckets = 8)
+        postingsOf(inc, idx.cents), idx.table, "centroid", nBuckets = 8)
     }
+
+  /** Each batch vector (vec_id, embedding) probing its `NProbe`
+    * nearest lists of the persisted index: per `new_id`, the probed
+    * candidate count and the best corpus match (`best_match`,
+    * `best_cos`) under the house (cos DESC, id ASC) tie rule. A batch
+    * vector whose probed lists are all empty has no row. */
+  private def bestMatches(spark: SparkSession, idx: IvfIndex,
+      batch: DataFrame): DataFrame = {
+    val probed = batch.select(
+      col("vec_id").as("new_id"), col("embedding").as("q_emb"),
+      Centroids.lists(col("embedding"), idx.cents, NProbe).as("centroid"))
+    // No broadcast hint: at gated scale AQE broadcasts the probed
+    // batch on its measured size; at production scale a 10%-of-corpus
+    // batch x nProbe rows of 64-float embeddings can exceed broadcast
+    // limits, and the postings side's bucketed layout makes the
+    // shuffle-free side the INDEX either way (review r15 — the
+    // dedup_incremental discipline).
+    spark.table(idx.table)
+      .join(probed, Seq("centroid"))
+      .select(col("new_id"), col("vec_id").as("corpus_id"),
+        Sketches.cosineSim(col("q_emb"), col("embedding")).as("cos"))
+      .groupBy(col("new_id"))
+      .agg(count(lit(1)).as("n_candidates"),
+        TopKByScore.topkByScore(col("cos"), col("corpus_id"), 1).as("top"))
+      .select(col("new_id"), col("n_candidates"),
+        element_at(col("top"), 1).getField("id").as("best_match"),
+        element_at(col("top"), 1).getField("score").as("best_cos"))
+  }
 
   /** #40m ann_incremental: similarity search of a NEW vector batch
     * against the PERSISTED IVF index — the operational form every
@@ -880,32 +891,9 @@ object Similarity {
     * frozen-quantizer parity spec's day-0 form). */
   private[graft] def ivfIncrementalOver(spark: SparkSession, dir: String,
       idx: IvfIndex, incLo: Long): DataFrame = {
-    val nProbe = 4
-    val inc = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-      .filter(ivfIncBucket(col("vec_id")) >= incLo)
-    val probed = inc.select(
-      col("vec_id").as("new_id"), col("embedding").as("q_emb"),
-      explode(Centroids.nearestCentroids(col("embedding"), idx.cents, nProbe))
-        .as("centroid"))
-    // No broadcast hint: at gated scale AQE broadcasts the probed
-    // batch on its measured size; at production scale a 10%-of-corpus
-    // batch x nProbe rows of 64-float embeddings can exceed broadcast
-    // limits, and the postings side's bucketed layout makes the
-    // shuffle-free side the INDEX either way (review r15 — the
-    // dedup_incremental discipline).
-    val scored = spark.table(idx.table)
-      .join(probed, Seq("centroid"))
-      .select(col("new_id"), col("vec_id").as("corpus_id"),
-        Sketches.cosineSim(col("q_emb"), col("embedding")).as("cos"))
-    val best = scored.groupBy(col("new_id"))
-      .agg(count(lit(1)).as("n_candidates"),
-        TopKByScore.topkByScore(col("cos"), col("corpus_id"), 1).as("top"))
-      .select(col("new_id"), col("n_candidates"),
-        element_at(col("top"), 1).getField("id").as("best_match"),
-        element_at(col("top"), 1).getField("score").as("best_cos"))
+    val inc = vectors(spark, dir).filter(ivfIncBucket(col("vec_id")) >= incLo)
     inc.select(col("vec_id"))
-      .join(best, col("vec_id") === col("new_id"), "left_outer")
+      .join(bestMatches(spark, idx, inc), col("vec_id") === col("new_id"), "left_outer")
       .select(col("vec_id"),
         coalesce(col("n_candidates"), lit(0L)).as("n_candidates"),
         col("best_match"), col("best_cos"),
@@ -943,23 +931,7 @@ object Similarity {
     * form; `audLo` must sit inside the index's batch range). */
   private[graft] def ivfRecallAuditOver(spark: SparkSession, dir: String,
       idx: IvfIndex, audLo: Long): DataFrame = {
-    val nProbe = 4
-    val aud = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), col("embedding"))
-      .filter(ivfIncBucket(col("vec_id")) >= audLo)
-    val probed = aud.select(
-      col("vec_id").as("new_id"), col("embedding").as("q_emb"),
-      explode(Centroids.nearestCentroids(col("embedding"), idx.cents, nProbe))
-        .as("centroid"))
-    val ivfBest = spark.table(idx.table)
-      .join(probed, Seq("centroid"))
-      .select(col("new_id"), col("vec_id").as("corpus_id"),
-        Sketches.cosineSim(col("q_emb"), col("embedding")).as("cos"))
-      .groupBy(col("new_id"))
-      .agg(count(lit(1)).as("n_candidates"),
-        TopKByScore.topkByScore(col("cos"), col("corpus_id"), 1).as("top"))
-      .select(col("new_id"), col("n_candidates"),
-        element_at(col("top"), 1).getField("id").as("best_match"))
+    val aud = vectors(spark, dir).filter(ivfIncBucket(col("vec_id")) >= audLo)
     val brute = spark.table(idx.table)
       .crossJoin(broadcast(aud.select(
         col("vec_id").as("new_id"), col("embedding").as("q_emb"))))
@@ -971,7 +943,7 @@ object Similarity {
         element_at(col("top"), 1).getField("id").as("true_match"))
     val corpN = spark.table(idx.table).agg(count(lit(1)).as("n_corpus"))
     aud.select(col("vec_id").as("new_id"))
-      .join(ivfBest, Seq("new_id"), "left_outer")
+      .join(bestMatches(spark, idx, aud), Seq("new_id"), "left_outer")
       .join(brute, Seq("new_id"), "left_outer")
       .agg(
         count(lit(1)).as("n_audit"),
@@ -1066,11 +1038,9 @@ object Similarity {
           count(lit(1)) * lit(1000000L)).as(mName))
     val corpus = meanAgg(spark.table(idx.table), "n_corpus", "mean_cos_corpus")
     val batch = meanAgg(
-      Tables.embeddings(spark, dir)
-        .select(col("vec_id"), col("embedding"))
+      vectors(spark, dir)
         .filter(ivfIncBucket(col("vec_id")) >= incLo)
-        .withColumn("centroid",
-          element_at(Centroids.nearestCentroids(col("embedding"), idx.cents, 1), 1)),
+        .withColumn("centroid", Centroids.lists(col("embedding"), idx.cents)),
       "n_batch", "mean_cos_batch")
     corpus.crossJoin(broadcast(batch))
       .select(col("n_corpus"), col("n_batch"),

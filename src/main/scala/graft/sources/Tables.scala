@@ -119,9 +119,7 @@ object Tables {
     // cap-bounded buffers (≤ 200 longs each) while covering per-task
     // group counts at any corpus size where shuffle partitions scale
     // with the data; the sort fallback remains for degenerate tasks.
-    // Env-overridable for deployments with fatter aggregation buffers.
-    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" ->
-      sys.env.getOrElse("GRAFT_OBJAGG_FALLBACK_KEYS", "1000000"))
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "1000000")
 
   /** Events with `ts` normalized to a microsecond TimestampType column,
     * whatever encoding the parquet writer chose. Known vintages:

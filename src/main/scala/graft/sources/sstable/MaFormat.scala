@@ -406,20 +406,7 @@ object MaFormat {
       val b = new Array[Byte](n); din.readFully(b); b
     }
 
-    /** Cassandra unsigned vint (Buffer.cpp:read_unsigned_vint): the
-      * count of leading one bits in the first byte is the count of
-      * continuation bytes; remaining first-byte bits are the high bits
-      * of the big-endian value. */
-    private def readUnsignedVint(): Long = {
-      val first = readByte()
-      if (first < 0x7f) return first.toLong
-      var extraBytes = 0
-      while (extraBytes < 8 && (first & (0x80 >> extraBytes)) != 0) extraBytes += 1
-      var v: Long = (first & (0xff >> extraBytes)).toLong
-      var i = 0
-      while (i < extraBytes) { v = (v << 8) | readByte(); i += 1 }
-      v
-    }
+    private def readUnsignedVint(): Long = readUnsignedVintFrom(din)
 
     /** 16-bit-length-prefixed string bytes (Buffer.cpp:read_string). */
     private def readString(): Array[Byte] = readBytes(readShort())

@@ -24,9 +24,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * from its serialization header and validation metadata (the
   * reference's read_metadata, SSTable.cpp:275; SSTableSchema.cpp:121),
   * so none of those options are needed — exactly like the reference
-  * CLI, which takes only paths. Explicit options override the
-  * discovered values; note the delta bases are per file, so the
-  * options only make sense for single-generation reads.
+  * CLI, which takes only paths. Explicit schema and partitioner
+  * options override the discovered values; the delta bases are per
+  * file and come only from Statistics.db (0 without one).
   *
   * One ring order: every SSTable and its Index.db are written in the
   * partitioner's (token, key) order, and everything that asks "where is
@@ -63,7 +63,6 @@ import org.apache.spark.unsafe.types.UTF8String
   *    marker/row deletion as whole-partition
   *  - `staticColumns`: the static-row column schema (same shape as
   *    `columns`); required if the table has static columns
-  *  - `minTimestamp`, `minTtl`: the Statistics.db delta-encoding bases
   *  - `resumeKey`: resume the scan from this key (the reference's `-s`
   *    flag): with an Index.db the seek skips every earlier partition at
   *    plan time (partitions read in index/ring order); without one the
@@ -1039,12 +1038,8 @@ private[sstable] class MaReaderFactory(
     private val staticColumns: Seq[(String, MaFormat.ColType)] =
       opt("staticColumns").map(parseColumns)
         .orElse(stats.map(_.staticColumns)).getOrElse(Nil)
-    private val minTimestamp: Long =
-      opt("minTimestamp").map(_.toLong)
-        .orElse(stats.map(_.minTimestamp)).getOrElse(0L)
-    private val minTtl: Long =
-      opt("minTtl").map(_.toLong)
-        .orElse(stats.map(_.minTtl)).getOrElse(0L)
+    private val minTimestamp: Long = stats.map(_.minTimestamp).getOrElse(0L)
+    private val minTtl: Long = stats.map(_.minTtl).getOrElse(0L)
     private val verifyChecksums = options.getOrElse("verifyChecksums", "true").toBoolean
     private val raw = fs.open(path)
     // A sibling CompressionInfo.db means the Data.db is

@@ -14,7 +14,7 @@ import java.nio.charset.StandardCharsets.UTF_8
   * histograms, fixed stats, then the partitioner string
   * (SSTable.cpp:313-318). With a sibling Statistics.db the Data.db
   * source is fully self-describing: no columns / clustering /
-  * staticColumns / minTimestamp / minTtl / partitioner options needed,
+  * staticColumns / partitioner options needed,
   * exactly like the reference CLI. Beyond the reference's "ma"
   * ceiling, the 3.x m-family successors (mb..me — TOC layout
   * unchanged; their deltas live in the skipped StatsMetadata

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -35,7 +35,9 @@ class KvSpec extends AnyFunSuite {
   test("tombstone application commutes with LWW for surviving cells") {
     // Filtering tombstoned cells then compacting equals compacting the
     // annotated bag then filtering — both orders must agree.
-    val a = canon(Kv.lww(Kv.applyRowTombstones(Kv.cells(spark, sf)))
+    val a = canon(Kv.lww(Kv.applyMarkerTombstones(Kv.cells(spark, sf)
+        .withColumn("range_start", lit(null).cast("string"))
+        .withColumn("range_end", lit(null).cast("string"))))
       .select("key", "col", "value"))
     val cellsDf = Kv.cells(spark, sf)
     val b = {
@@ -48,6 +50,33 @@ class KvSpec extends AnyFunSuite {
         .select("key", "col", "value"))
     }
     assert(a === b)
+  }
+
+  test("marker tombstones: a cell at exactly its marker's ts dies, whole key or column range") {
+    // The reference keeps a cell only when `minTime < ts`
+    // (CassandraParser.cpp:481), so the boundary cell is deleted and a
+    // cell 1 µs later survives.
+    import spark.implicits._
+    val m = 200000000L
+    val bag = Seq(
+      ("k1", "click", m + 1, 1L, 1.0),
+      ("k1", "purchase", m, 2L, 2.0),
+      ("k1", "view", m - 1, 3L, 3.0),
+      ("k1", Kv.TombstoneCol, m, 4L, 0.0),
+      ("k2", "purchase", m - 1, 5L, 5.0))
+      .toDF("key", "col", "ts_us", "seq", "value")
+      .select(col("key"), col("col"), timestamp_micros(col("ts_us")).as("ts"),
+        col("seq"), col("value"))
+    def survivors(rangeStart: Column, rangeEnd: Column): Set[(String, String)] =
+      Kv.applyMarkerTombstones(bag
+          .withColumn("range_start", rangeStart).withColumn("range_end", rangeEnd))
+        .collect().map(r => (r.getAs[String]("key"), r.getAs[String]("col"))).toSet
+    val noRange = lit(null).cast("string")
+    // Null range columns: the marker kills every column of its key.
+    assert(survivors(noRange, noRange) === Set(("k1", "click"), ("k2", "purchase")))
+    // A [click, purchase] range: "view" sits outside it and survives.
+    assert(survivors(lit("click"), lit("purchase")) ===
+      Set(("k1", "click"), ("k1", "view"), ("k2", "purchase")))
   }
 
   test("counter merge total equals the sum over any generation split") {

@@ -2237,7 +2237,7 @@ class MaSSTableSpec extends AnyFunSuite {
       .filter(col("col") === graft.kv.Kv.TombstoneCol || col("col") === "click")
       .drop("counter")
 
-    val merged = graft.kv.Kv.lww(graft.kv.Kv.applyRowTombstones(cells))
+    val merged = graft.kv.Kv.lww(graft.kv.Kv.applyMarkerTombstones(cells))
       // TTL filter at an export cutoff past u3's expiry (ts 100us +
       // 10s TTL): expiry = write ts + ttl.
       .withColumn("expiry_us",
