@@ -157,16 +157,22 @@ object Bench {
       scala.util.Try(graft.functions.SessionScopedCache.retainedBytes(spark)).getOrElse(0L)
     def entriesNow(): Int =
       scala.util.Try(graft.functions.SessionScopedCache.retainedEntries(spark)).getOrElse(0)
+    /** Classes Spark's code generator has compiled in this JVM: a
+      * codegen-cache miss counts one, a hit none. */
+    def compilesNow(): Long =
+      org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     /** One timed attempt with its GC-time and session-memo deltas
       * (bytes AND entry count — a small memo with an expensive
       * pipeline shows up in entries, not bytes — AND the process-wide
-      * [[graft.functions.DriverMemo]] build delta). */
+      * [[graft.functions.DriverMemo]] build delta), and the number of
+      * generated classes it compiled: a warm attempt compiles none, so
+      * a recompile regression shows in the artifact. */
     case class Attempt(
         res: Either[String, Double], gcMs: Long, memoBytes: Long, memoEntries: Int,
-        memoBuilds: Long)
+        memoBuilds: Long, compiles: Long = 0L)
     def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Attempt = {
       val gc0 = gcNowMs(); val mem0 = retainedNow(); val ent0 = entriesNow()
-      val bld0 = graft.functions.DriverMemo.buildCount()
+      val bld0 = graft.functions.DriverMemo.buildCount(); val cmp0 = compilesNow()
       val t0 = System.nanoTime()
       val res = try {
         fn(spark, sfDir).count()
@@ -175,7 +181,7 @@ object Bench {
         Left(jsonSafe(s"${t.getClass.getSimpleName}: ${Option(t.getMessage).getOrElse("")}"))
       }
       Attempt(res, gcNowMs() - gc0, retainedNow() - mem0, entriesNow() - ent0,
-        graft.functions.DriverMemo.buildCount() - bld0)
+        graft.functions.DriverMemo.buildCount() - bld0, compilesNow() - cmp0)
     }
     // Session-memo footprint policy (VERDICT r10 #8): the memoized
     // checkpoint frames are accounted per query boundary; past the cap
@@ -275,9 +281,9 @@ object Bench {
         "keyed_export" -> keAttempts.map(a => Attempt(Right(a._1), 0L, 0L, 0, 0L))))
     val results: Seq[(String, Either[String, Double])] = raw.map {
       case (name, attempts) =>
-        val times = attempts.collect { case Attempt(Right(s), _, _, _, _) => s }
+        val times = attempts.collect { case Attempt(Right(s), _, _, _, _, _) => s }
         name -> (if (times.size == attempts.size) Right(times.min)
-                 else Left(attempts.collectFirst { case Attempt(Left(e), _, _, _, _) => e }.get))
+                 else Left(attempts.collectFirst { case Attempt(Left(e), _, _, _, _, _) => e }.get))
     }
     // Compact per-query times (ms precision) keep the summary line
     // small enough to survive a tail-bounded log capture.
@@ -296,8 +302,8 @@ object Bench {
     // a single loaded snapshot.
     val attemptsJson = raw.map { case (k, atts) =>
       s"\"$k\":" + atts.map {
-        case Attempt(Right(s), _, _, _, _) => num(s, 6)
-        case Attempt(Left(_), _, _, _, _) => "-1"
+        case Attempt(Right(s), _, _, _, _, _) => num(s, 6)
+        case Attempt(Left(_), _, _, _, _, _) => "-1"
       }.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     // Build-inclusive first attempt as its own column (VERDICT r16 #7):
@@ -308,19 +314,22 @@ object Bench {
     // lets round-over-round comparisons use either basis.
     val firstAttemptsJson = raw.map { case (k, atts) =>
       s""""$k":""" + (atts.headOption match {
-        case Some(Attempt(Right(s), _, _, _, _)) => num(s, 3)
+        case Some(Attempt(Right(s), _, _, _, _, _)) => num(s, 3)
         case _ => "-1"
       })
     }.mkString("{", ",", "}")
     // Per-attempt attribution (queries only — the sstable rows measure
-    // a synthesized fixture, not session state): GC-time deltas in ms
-    // and session-memo growth in bytes. A skewed attempt now carries
-    // its own explanation in the artifact.
+    // a synthesized fixture, not session state): GC-time deltas in ms,
+    // session-memo growth in bytes and generated classes compiled. A
+    // skewed attempt now carries its own explanation in the artifact.
     val gcJson = rawQueries.map { case (k, atts) =>
       s"\"$k\":" + atts.map(_.gcMs.toString).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val memoJson = rawQueries.map { case (k, atts) =>
       s"\"$k\":" + atts.map(_.memoBytes.toString).mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    val compilesJson = rawQueries.map { case (k, atts) =>
+      s"\"$k\":" + atts.map(_.compiles.toString).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val errors = results.collect { case (k, Left(e)) => s"\"$k\":\"$e\"" }
       .mkString("{", ",", "}")
@@ -339,7 +348,7 @@ object Bench {
     // min hides it.
     val medians: Seq[(String, Double)] = raw.collect {
       case (name, atts) if atts.forall(_.res.isRight) =>
-        val ts = atts.collect { case Attempt(Right(s), _, _, _, _) => s }.sorted
+        val ts = atts.collect { case Attempt(Right(s), _, _, _, _, _) => s }.sorted
         name -> ts(ts.size / 2)
     }
     val mediansJson = medians.map { case (k, m) => s""""$k":${num(m, 3)}""" }
@@ -471,6 +480,7 @@ object Bench {
         s""""$k":{"first":${num(firstSec, 3)},"median":${num(med, 3)},""" +
           s""""gc_ms":${first.gcMs},"memo_entries":${first.memoEntries},""" +
           s""""memo_bytes":${first.memoBytes},"memo_builds":${first.memoBuilds},""" +
+          s""""codegen_compiles":${first.compiles},""" +
           s""""cause":"$cause"}"""
     }.mkString("{", ",", "}")
     // The quiet-box gate (VERDICT r13 #1): committed evidence — the
@@ -601,7 +611,7 @@ object Bench {
         s""""expired":${st.expired},"failed":${st.failed},"retried":${st.retried}}"""
       }
     val summaryLine =
-      s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":$qs,"failed":$nFailed,"errors":$errors,"sf":"$sfDir","order":"name-asc","medians":$mediansJson,"ambient":$ambientJson,"quiet_box":$quiet,"steady_host":$steady,"baseline_persisted":$persistOk,"persist_refusal":$persistRefusal,"steady_pointer":$steadyPointer,"rebase_refused":$rebaseRefused,"regressed":$regressed,"regressed_vs":$priorName,"sstable":$sstableJson,"streaming":$streamingJson,"keyed_export":$keyedJson,"retained_hw_bytes":$retainedHw,"retained_hw_query":"$retainedHwQuery","memo_cap_bytes":$memoCap,"memo_evictions":$memoEvictions,"spikes":$spikesJson,"gc_ms":$gcJson,"memo_bytes":$memoJson,"first_attempts":$firstAttemptsJson,"attempts":$attemptsJson}"""
+      s"""{"metric":"total","value":${num(total, 3)},"unit":"sec","queries":$qs,"failed":$nFailed,"errors":$errors,"sf":"$sfDir","order":"name-asc","medians":$mediansJson,"ambient":$ambientJson,"quiet_box":$quiet,"steady_host":$steady,"baseline_persisted":$persistOk,"persist_refusal":$persistRefusal,"steady_pointer":$steadyPointer,"rebase_refused":$rebaseRefused,"regressed":$regressed,"regressed_vs":$priorName,"sstable":$sstableJson,"streaming":$streamingJson,"keyed_export":$keyedJson,"retained_hw_bytes":$retainedHw,"retained_hw_query":"$retainedHwQuery","memo_cap_bytes":$memoCap,"memo_evictions":$memoEvictions,"spikes":$spikesJson,"gc_ms":$gcJson,"memo_bytes":$memoJson,"codegen_compiles":$compilesJson,"first_attempts":$firstAttemptsJson,"attempts":$attemptsJson}"""
     // Belt and braces: the artifact also lands in files next to the
     // build, immune to any stdout truncation. bench_full.json is the
     // committed full artifact (attempts + attribution); bench_prev.json

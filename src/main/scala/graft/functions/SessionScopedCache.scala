@@ -39,6 +39,14 @@ import org.apache.spark.sql.execution.LogicalRDD
   * own compute — so a build may look up other keys of the same
   * instance (the phash clusters build reads the phash pairs entry).
   *
+  * METADATA LOOKUPS: an instance made with `countsAsBuild = false`
+  * memoizes a metadata read, not a pipeline. The one such instance is
+  * [[graft.sources.Tables]]' `tables.schema`: one Parquet schema per
+  * table path, keyed by that table's own files, so rewriting one table
+  * re-infers only that table's schema. Its misses are not builds: they
+  * add nothing to [[DriverMemo]] or to [[SessionScopedCache.retainedEntries]],
+  * so a bench attempt's memo counters name pipeline builds only.
+  *
   * LIFETIME: a weak-keyed map alone cannot free entries — a Dataset
   * strongly references its SparkSession, so a cached frame resurrects
   * its own key (the value→key caveat in the WeakHashMap javadoc).
@@ -56,7 +64,8 @@ import org.apache.spark.sql.execution.LogicalRDD
   * frees its blocks, so the next consumer rebuilds instead of reading
   * a gutted checkpoint.
   */
-private[graft] final class SessionScopedCache[V](val name: String) {
+private[graft] final class SessionScopedCache[V](val name: String,
+    val countsAsBuild: Boolean = true) {
   import SessionScopedCache._
 
   register(this)
@@ -85,7 +94,7 @@ private[graft] final class SessionScopedCache[V](val name: String) {
     val entries = perSession(spark)
     @tailrec def slot(): Entry[V] = {
       val mine = new Entry[V](fp, new FutureTask[V](() => {
-        DriverMemo.recordBuild()
+        if (countsAsBuild) DriverMemo.recordBuild()
         build
       }))
       entries.putIfAbsent(key, mine) match {
@@ -187,7 +196,7 @@ private[graft] object SessionScopedCache {
     * was expensive, but the entry-count delta is 1 the attempt that
     * built it and 0 every attempt after. */
   def retainedEntries(spark: SparkSession): Int =
-    instances.asScala.map(_.entries(spark).size).sum
+    instances.asScala.filter(_.countsAsBuild).map(_.entries(spark).size).sum
 
   /** Drop one entry by its `instance#key` name (as printed by
     * [[retainedInfo]]), unpersisting its blocks. */

@@ -3,7 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Table registry for the graft engine.
   *
@@ -11,14 +11,36 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * projection pushdown (parquet today; any DataSource V2 source later).
   * Callers never hand-roll paths, so swapping the storage layer (or
   * pointing at a 100 TB bucketed layout) is a one-line change here.
+  *
+  * A warm query compiles nothing and infers no schema:
+  *  - Schema memo. [[apply]] infers a table's Parquet schema once per
+  *    content version and reads with it afterwards. The schema is
+  *    Spark's own inference, run once on a miss, so it is exact. The
+  *    memo is a [[graft.functions.SessionScopedCache]] keyed by the
+  *    table path, so its fingerprint covers only that table's files:
+  *    rewriting one table re-infers that table alone. An inference is
+  *    a Spark job: on 4 vCPU at sf0.01 a read costs 85–117 ms with it
+  *    and 10–17 ms with the schema given. A lookup is a metadata read,
+  *    not a pipeline build, so it does not count in
+  *    [[graft.functions.DriverMemo]].
+  *  - Codegen cache. [[sessionConfs]] sizes Spark's JVM-wide cache of
+  *    generated classes to hold a whole registry pass (see there).
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private val schemas =
+    new graft.functions.SessionScopedCache[StructType]("tables.schema", countsAsBuild = false)
+
+  /** Table `name` under `dir`, read with its memoized schema. A missing
+    * table throws Spark's own path-not-found error from the inference. */
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val schema = schemas.getOrCompute(spark, path)(spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** `df` repartitioned ROUND-ROBIN to the session's shuffle
     * parallelism when its scan plans FEWER partitions — the
@@ -119,7 +141,19 @@ object Tables {
     // cap-bounded buffers (≤ 200 longs each) while covering per-task
     // group counts at any corpus size where shuffle partitions scale
     // with the data; the sort fallback remains for degenerate tasks.
-    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "1000000")
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "1000000",
+    // Spark's JVM-wide cache of generated classes (a static conf, read
+    // once, when the code generator first runs). The default keeps 100
+    // classes, but one pass over the registry at sf0.01, in Verify's
+    // order, compiles 2,475–2,477 distinct ones (CodegenMetrics, two
+    // runs), and the 12-query benchmark mix alone compiles 335–350:
+    // the LRU evicted every class before the next pass asked for it
+    // again, so each warm pass of the mix recompiled 171–197 of them.
+    // 4,096 holds a whole registry pass with headroom. Holding that
+    // pass costs ~19 MB of metaspace and ~76 MB of heap against the
+    // default (measured after a full GC); a class is held only once
+    // compiled, so a session that runs fewer queries holds fewer.
+    "spark.sql.codegen.cache.maxEntries" -> "4096")
 
   /** Events with `ts` normalized to a microsecond TimestampType column,
     * whatever encoding the parquet writer chose. Known vintages:

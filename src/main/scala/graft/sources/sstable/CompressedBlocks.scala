@@ -95,9 +95,13 @@ object CompressedBlocks {
     private def decompress(compressed: Array[Byte], outLen: Int): Array[Byte] =
       info.codec match {
         case Lz4 =>
-          // Leading 4-byte little-endian uncompressed length.
+          // Leading 4-byte little-endian uncompressed length, at most
+          // one chunk: a corrupt prefix fails here, before allocating.
           val n = (compressed(0) & 0xff) | ((compressed(1) & 0xff) << 8) |
             ((compressed(2) & 0xff) << 16) | ((compressed(3) & 0xff) << 24)
+          if (n < 0 || n > info.chunkLen)
+            throw new MaFormat.CorruptLengthException(
+              s"corrupt LZ4 length prefix $n in chunk $chunkIdx (chunk length ${info.chunkLen})")
           val out = new Array[Byte](n)
           lz4.decompress(compressed, 4, out, 0, n)
           out

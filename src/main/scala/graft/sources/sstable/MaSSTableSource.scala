@@ -385,7 +385,7 @@ object MaSSTableSource {
           }
         }
         val stats = withSibling("Statistics.db")(
-          StatsFile.read(_, version))
+          StatsFile.read(_, version, stem + "Statistics.db"))
         val ci = withSibling("CompressionInfo.db")(
           CompressedBlocks.readCompressionInfo)
         val indexPartitions = withSibling("Index.db") { in =>
@@ -449,7 +449,7 @@ object MaSSTableSource {
     if (!fs.exists(sp)) None
     else {
       val in = fs.open(sp)
-      try Some(StatsFile.read(in, versionOf(new Path(dataFile).getName)))
+      try Some(StatsFile.read(in, versionOf(new Path(dataFile).getName), sp.toString))
       finally in.close()
     }
   }
@@ -1076,10 +1076,12 @@ private[sstable] class MaReaderFactory(
       // Discard the in-chunk remainder between the chunk boundary and
       // the split's partition-start offset.
       val garbage = new Array[Byte](65536)
-      while (cis.count < splitStart) {
+      try while (cis.count < splitStart) {
         val n = cis.read(garbage, 0,
           math.min(splitStart - cis.count, garbage.length.toLong).toInt)
         require(n > 0, s"EOF before split start $splitStart in $file")
+      } catch {
+        case e: MaFormat.CorruptLengthException => throw e.at(file, splitStart)
       }
       cis
     }

@@ -86,10 +86,11 @@ object StatsFile {
   /** Parse per the file's format version ([[MaSSTableSource.versionOf]]
     * of the sibling Data.db): "ka"+ is the component TOC; "ja" is the
     * fixed pre-TOC layout. Anything older is RandomPartitioner with no
-    * readable schema (reference read_metadata's final arm). */
-  def read(in: InputStream, version: String): TableMeta = {
+    * readable schema (reference read_metadata's final arm). `file`
+    * names the component in errors. */
+  def read(in: InputStream, version: String, file: String = "Statistics.db"): TableMeta = {
     val bytes = in.readAllBytes()
-    if (version >= "ka") readToc(bytes, version)
+    if (version >= "ka") readToc(bytes, version, file)
     else if (version >= "ja") readJa(bytes)
     else TableMeta(0L, 0L, Nil, Nil, None, Some("random"))
   }
@@ -103,7 +104,7 @@ object StatsFile {
     * right behind them. Offsets stay absolute, so component parsing is
     * version-identical; we validate both TOC checksums and fail loudly
     * on mismatch rather than misparse a shifted table. */
-  private def readToc(bytes: Array[Byte], version: String): TableMeta = {
+  private def readToc(bytes: Array[Byte], version: String, file: String): TableMeta = {
     val toc = new DataInputStream(new ByteArrayInputStream(bytes))
     val checked = version >= "na"
     val crc = new java.util.zip.CRC32
@@ -149,19 +150,28 @@ object StatsFile {
     val h = new DataInputStream(
       new ByteArrayInputStream(bytes, headerOff, bytes.length - headerOff))
     def vint(): Long = MaFormat.readUnsignedVintFrom(h)
+    // A string length or an entry count: every string and entry takes
+    // at least one byte, so neither can exceed the bytes left.
+    def length(): Int = {
+      val at = bytes.length - h.available()
+      val n = vint()
+      if (n < 0 || n > h.available()) throw new MaFormat.CorruptLengthException(
+        s"$file: corrupt length prefix $n at offset $at, ${h.available()} bytes left")
+      n.toInt
+    }
     def vstr(): String = {
-      val b = new Array[Byte](vint().toInt)
+      val b = new Array[Byte](length())
       h.readFully(b)
       new String(b, UTF_8)
     }
     def readColumns(): Seq[(String, MaFormat.ColType)] =
-      Seq.fill(vint().toInt)((vstr(), colTypeOf(vstr())))
+      Seq.fill(length())((vstr(), colTypeOf(vstr())))
 
     val minTimestamp = vint()
     vint() // minLocalDeletionTime (unused, as in the reference)
     val minTtl = vint()
     vstr() // key type — keys are raw bytes here, the class is not needed
-    val clustering = Seq.fill(vint().toInt)(colTypeOf(vstr()))
+    val clustering = Seq.fill(length())(colTypeOf(vstr()))
     val staticColumns = readColumns()
     val columns = readColumns()
     TableMeta(minTimestamp, minTtl, clustering, staticColumns, Some(columns),

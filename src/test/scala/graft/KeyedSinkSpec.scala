@@ -11,7 +11,7 @@ import graft.sinks.KeyedSink.{TtlPolicy, WriteStats}
 /** The create-only keyed sink contract (reference: AerospikeWriter's
   * AS_POLICY_EXISTS_CREATE + TTL flags + end-of-run stats).
   */
-class KeyedSinkSpec extends AnyFunSuite {
+class KeyedSinkSpec extends AnyFunSuite with StreamCheckpoints {
   import SparkTestSession._
 
   private def freshDir(): String =
@@ -199,7 +199,8 @@ class KeyedSinkSpec extends AnyFunSuite {
     val input = MemoryStream[KeyedSinkSpec.Rec]
     val export = new KeyedSink.StreamingExport(
       new KeyedSinkSpec.MemoryStoreWriter(failKeysFirstN = inject), policy)
-    val q = input.toDF().writeStream.foreachBatch(export.writeBatch _).start()
+    val q = input.toDF().writeStream.foreachBatch(export.writeBatch _)
+      .option("checkpointLocation", checkpoint()).start()
     input.addData(batch1); q.processAllAvailable()
     input.addData(batch2); q.processAllAvailable()
     q.stop()

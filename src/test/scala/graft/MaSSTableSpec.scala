@@ -3548,4 +3548,50 @@ class MaSSTableSpec extends AnyFunSuite {
       m.contains(s"in the partition at offset $offset")), msgs.mkString(" | "))
     assert(!msgs.exists(_.contains("NegativeArraySize")), msgs.mkString(" | "))
   }
+
+  test("a corrupt LZ4 length prefix is a named error with the file, not a huge allocation") {
+    val e = new Enc
+    e.partitionHeader("k")
+    e.byte(0x20).vint(0).vint(0)
+    e.byte(0x00).vint(1).vint(1).bytes("v".getBytes(UTF_8))
+    e.byte(0x04).vint(1)
+    e.endOfPartition()
+    val dir = Files.createTempDirectory("lz4-bad-length")
+    writeCompressed(dir, "mc-1-big", e.result, "LZ4Compressor", chunkLen = 1024)
+    val dataFile = dir.resolve("mc-1-big-Data.db")
+    val bytes = Files.readAllBytes(dataFile)
+    // One chunk: [4-byte LE length][LZ4 block][CRC32 of both]. Flip bit
+    // 30 of the length, then re-sign the chunk so only the length check
+    // can catch it.
+    bytes(3) = (bytes(3) ^ 0x40).toByte
+    val crc = new java.util.zip.CRC32
+    crc.update(bytes, 0, bytes.length - 4)
+    java.nio.ByteBuffer.wrap(bytes, bytes.length - 4, 4).putInt(crc.getValue.toInt)
+    Files.write(dataFile, bytes)
+    val flipped = e.result.length | (1 << 30)
+    val msgs = failureMessages(spark.read.format("graft.sources.sstable.MaSSTableSource")
+      .option("path", dir.toString).option("columns", ColsSpec).load().collect())
+    assert(msgs.exists(_.contains(
+      s"mc-1-big-Data.db: corrupt LZ4 length prefix $flipped in chunk 0 (chunk length 1024)")),
+      msgs.mkString(" | "))
+    assert(!msgs.exists(m => m.contains("OutOfMemory") || m.contains("checksum mismatch")),
+      msgs.mkString(" | "))
+  }
+
+  test("a corrupt Statistics.db length prefix is a named error with the file and offset") {
+    val bytes = statsBytes(Marshal + "Murmur3Partitioner", Some(StatsHeader(
+      0L, 0L, Marshal + "UTF8Type", clustering = Nil, statics = Nil,
+      regulars = Seq("click" -> (Marshal + "UTF8Type")))))
+    // The key class's one-byte vint length, flipped into a 4-byte vint
+    // far past the bytes left.
+    val at = bytes.indexOfSlice((Marshal + "UTF8Type").getBytes(UTF_8)) - 1
+    bytes(at) = (bytes(at) ^ 0xc0).toByte
+    val dir = Files.createTempDirectory("stats-bad-length")
+    Files.write(dir.resolve("mc-1-big-Statistics.db"), bytes)
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    val err = intercept[MaFormat.CorruptLengthException](
+      MaSSTableSource.statsFor(dir.resolve("mc-1-big-Data.db").toString, fs))
+    assert(err.getMessage.contains("mc-1-big-Statistics.db: corrupt length prefix") &&
+      err.getMessage.contains(s"at offset $at"), err.getMessage)
+  }
 }

@@ -16,7 +16,7 @@ import graft.streaming.Streaming.{Ev, Session}
   * over the sf0.001 events fed through a MemoryStream and must produce
   * exactly the batch answers.
   */
-class StreamingSpec extends AnyFunSuite {
+class StreamingSpec extends AnyFunSuite with StreamCheckpoints {
   import SparkTestSession._
 
   private def loadEvents(): Seq[Ev] = {
@@ -42,6 +42,7 @@ class StreamingSpec extends AnyFunSuite {
       .format("memory").queryName("win_agg")
       .outputMode("complete")
       .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpoint())
       .start()
     q.awaitTermination(120000)
 
@@ -72,6 +73,7 @@ class StreamingSpec extends AnyFunSuite {
       .format("memory").queryName("create_only")
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpoint())
       .start()
     q.awaitTermination(120000)
 
@@ -92,7 +94,7 @@ class StreamingSpec extends AnyFunSuite {
       .selectExpr("CAST(user_id AS STRING) AS key", "value",
         "CAST(NULL AS BIGINT) AS expiry_us", "CAST(0 AS BIGINT) AS ttl_us")
     val (writer, stats) = Streaming.exportStream(cellStream, target)
-    val q = writer.start()
+    val q = writer.option("checkpointLocation", checkpoint()).start()
     // Two distinct micro-batches: the second re-offers an existing key.
     input.addData(Seq(
       Ev(1L, 10L, new Timestamp(1000), "click", 1.0),
@@ -131,6 +133,7 @@ class StreamingSpec extends AnyFunSuite {
       .format("memory").queryName("wm_dedup")
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpoint())
       .start()
     q.awaitTermination(120000)
     val got = spark.table("wm_dedup").as[Ev].collect()
@@ -164,6 +167,7 @@ class StreamingSpec extends AnyFunSuite {
       .format("memory").queryName("attr_join")
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpoint())
       .start()
     q.awaitTermination(120000)
 
@@ -197,6 +201,7 @@ class StreamingSpec extends AnyFunSuite {
       .format("memory").queryName("sessions")
       .outputMode("append")
       .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpoint())
       .start()
     q.awaitTermination(120000)
 
@@ -231,6 +236,7 @@ class StreamingSpec extends AnyFunSuite {
       input.toDF().withWatermark("ts", "2 hours"), k = 32).writeStream
       .format("memory").queryName("top_types")
       .outputMode("complete")
+      .option("checkpointLocation", checkpoint())
       .start()
     chunks.foreach { c => input.addData(c); q.processAllAvailable() }
     q.stop()
@@ -268,6 +274,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = Streaming.zscoreAnomalies(input.toDS()).writeStream
       .format("memory").queryName("zscore_anoms")
       .outputMode("append")
+      .option("checkpointLocation", checkpoint())
       .start()
     input.addData(a); q.processAllAvailable()
     input.addData(b); q.processAllAvailable()
@@ -325,6 +332,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = Streaming.cusumAlarms(input.toDS()).writeStream
       .format("memory").queryName("rate_alarms")
       .outputMode("append")
+      .option("checkpointLocation", checkpoint())
       .start()
     // Three time-contiguous micro-batches + the closers: the state
     // machine's output must not depend on where the splits fall.
@@ -398,6 +406,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = streamDf.writeStream
       .format("memory").queryName("native_sessions")
       .outputMode("append")
+      .option("checkpointLocation", checkpoint())
       .start()
     q.processAllAvailable()
     input.addData(Seq(flush))
@@ -431,6 +440,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = streamDf.writeStream
       .format("memory").queryName("dedup_stream")
       .outputMode("append")
+      .option("checkpointLocation", checkpoint())
       .start()
     q.processAllAvailable()
     input.addData(replayLater)
@@ -471,6 +481,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = Streaming.holtPoints(input.toDS()).writeStream
       .format("memory").queryName("holt_points")
       .outputMode("append")
+      .option("checkpointLocation", checkpoint())
       .start()
     all.grouped(math.max(1, all.length / 3 + 1)).foreach { c =>
       input.addData(c); q.processAllAvailable()
@@ -575,7 +586,7 @@ class StreamingSpec extends AnyFunSuite {
     val q = Streaming.sessionizeNativeStream(
         input.toDF().withWatermark("ts", "1 hour"))
       .writeStream.format("memory").queryName("gap_boundary_sessions")
-      .outputMode("append").start()
+      .outputMode("append").option("checkpointLocation", checkpoint()).start()
     q.processAllAvailable()
     input.addData(Seq(flush))
     q.processAllAvailable()
