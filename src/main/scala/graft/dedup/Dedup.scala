@@ -153,16 +153,8 @@ object Dedup {
   /** The banded sig frame (shingle → 128-hash MinHash sig → 32 band
     * keys) — exposed so plan tests can pin the sketch pipeline's
     * codegen coverage on the frame where the expressions execute. */
-  private[graft] def minhashBanded(spark: SparkSession, dir: String): DataFrame = {
-    val numHashes = 128
-    val bands = 32
-    val sigs = shingledDocs(spark, dir).select(col("doc_id"),
-      Sketches.minhashSigs(col("sh"), numHashes).as("sig"))
-    sigs.select(
-      col("doc_id"),
-      posexplode(Sketches.bandHashes(col("sig"), bands)))
-      .select(col("doc_id"), col("pos").as("band"), col("col").as("band_key"))
-  }
+  private[graft] def minhashBanded(spark: SparkSession, dir: String): DataFrame =
+    bandedOf(shingledDocs(spark, dir))
 
   /** The verified minhash pair list BEFORE the recall audit — the
     * frame the audit materializes; exposed so plan tests can pin the
@@ -248,8 +240,10 @@ object Dedup {
   /** (doc_id, band, band_key) — 128-hash / 32-band signatures, the
     * banding both the index build and the increment side run. */
   private def bandedOf(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      posexplode(Sketches.bandHashes(Sketches.minhashSigs(col("sh"), 128), 32)))
+    // The signature is its own projection, so the shingle and sketch
+    // expressions fuse in one codegen'd Project below the Generate.
+    docs.select(col("doc_id"), Sketches.minhashSigs(col("sh"), 128).as("sig"))
+      .select(col("doc_id"), posexplode(Sketches.bandHashes(col("sig"), 32)))
       .select(col("doc_id"), col("pos").as("band"), col("col").as("band_key"))
 
   /** Build the index pair over docs with [[incBucket]] < `hiExcl`
@@ -1107,20 +1101,27 @@ object Dedup {
     * on their own whenever the set actually is small. Emits the
     * surviving corpus as (doc_id, n_chars) plus a flag for whether the
     * doc won a cluster (vs was never duplicated). */
-  def survivors(spark: SparkSession, dir: String): DataFrame = {
+  def survivors(spark: SparkSession, dir: String): DataFrame =
     // One clusters() call: its result is materialized and lineage-free,
     // so both derived sides re-read that, not the pipeline.
-    val cl = clusters(spark, dir)
-    val dropped = cl.filter(col("doc_id") =!= col("cluster_id"))
-      .select(col("doc_id"), lit(true).as("_dup"))
+    survivorsOf(Tables.documents(spark, dir)
+      .select(col("doc_id"), length(col("text")).as("n_chars")), clusters(spark, dir))
+
+  /** The survivors of `corpus` (doc_id, size) under the cluster frame
+    * `cl` (doc_id, cluster_id, ...): every clustered doc but its
+    * cluster's min-id winner drops, unclustered docs stay, and a
+    * `cluster_survivor` flag marks the winners. The text
+    * ([[survivors]]) and media (`Multimodal.phashSurvivors`) pipelines
+    * share this step; neither join is hinted (see [[survivors]]). */
+  private[graft] def survivorsOf(corpus: DataFrame, cl: DataFrame): DataFrame = {
+    val dropped = cl.filter(col("doc_id") =!= col("cluster_id")).select(col("doc_id"))
     val winners = cl.filter(col("doc_id") === col("cluster_id"))
       .select(col("doc_id"), lit(true).as("_won"))
-    Tables.documents(spark, dir)
-      .select(col("doc_id"), length(col("text")).as("n_chars"))
+    corpus
       .join(dropped, Seq("doc_id"), "left_anti")
       .join(winners, Seq("doc_id"), "left_outer")
-      .select(col("doc_id"), col("n_chars"),
-        coalesce(col("_won"), lit(false)).as("cluster_survivor"))
+      .select(corpus.columns.map(col).toSeq :+
+        coalesce(col("_won"), lit(false)).as("cluster_survivor"): _*)
       .orderBy(col("doc_id"))
   }
 

@@ -23,64 +23,11 @@ import org.apache.spark.unsafe.types.UTF8String
   * the raw bytes, no boxing, no UDF serialization.
   */
 object CassandraMurmur3 {
-  import Murmur3Core.{fmix, getblock, rotl64}
-
-  /** Token of a partition key, Cassandra-style (h1 of the 128-bit hash,
-    * with Cassandra's sign-extension and MIN_VALUE quirks). */
+  /** Token of a partition key, Cassandra-style: h1 of the 128-bit hash
+    * with the tail bytes sign-extended (Cassandra's bug, kept on
+    * purpose), and Long.MinValue pinned to Long.MaxValue. */
   def token(key: Array[Byte]): Long = {
-    val length = key.length
-    val nblocks = length / 16
-    var h1 = 0L
-    var h2 = 0L
-    val c1 = Murmur3Core.C1
-    val c2 = Murmur3Core.C2
-
-    var i = 0
-    while (i < nblocks) {
-      var k1 = getblock(key, i * 16)
-      var k2 = getblock(key, i * 16 + 8)
-      k1 *= c1; k1 = rotl64(k1, 31); k1 *= c2; h1 ^= k1
-      h1 = rotl64(h1, 27); h1 += h2; h1 = h1 * 5 + 0x52dce729L
-      k2 *= c2; k2 = rotl64(k2, 33); k2 *= c1; h2 ^= k2
-      h2 = rotl64(h2, 31); h2 += h1; h2 = h2 * 5 + 0x38495ab5L
-      i += 1
-    }
-
-    val offset = nblocks * 16
-    var k1 = 0L
-    var k2 = 0L
-    // Tail bytes are sign-extended (Cassandra's bug, kept on purpose).
-    val tail = length & 15
-    if (tail >= 15) k2 ^= key(offset + 14).toLong << 48
-    if (tail >= 14) k2 ^= key(offset + 13).toLong << 40
-    if (tail >= 13) k2 ^= key(offset + 12).toLong << 32
-    if (tail >= 12) k2 ^= key(offset + 11).toLong << 24
-    if (tail >= 11) k2 ^= key(offset + 10).toLong << 16
-    if (tail >= 10) k2 ^= key(offset + 9).toLong << 8
-    if (tail >= 9) {
-      k2 ^= key(offset + 8).toLong
-      k2 *= c2; k2 = rotl64(k2, 33); k2 *= c1; h2 ^= k2
-    }
-    if (tail >= 8) k1 ^= key(offset + 7).toLong << 56
-    if (tail >= 7) k1 ^= key(offset + 6).toLong << 48
-    if (tail >= 6) k1 ^= key(offset + 5).toLong << 40
-    if (tail >= 5) k1 ^= key(offset + 4).toLong << 32
-    if (tail >= 4) k1 ^= key(offset + 3).toLong << 24
-    if (tail >= 3) k1 ^= key(offset + 2).toLong << 16
-    if (tail >= 2) k1 ^= key(offset + 1).toLong << 8
-    if (tail >= 1) {
-      k1 ^= key(offset).toLong
-      k1 *= c1; k1 = rotl64(k1, 31); k1 *= c2; h1 ^= k1
-    }
-
-    h1 ^= length.toLong
-    h2 ^= length.toLong
-    h1 += h2
-    h2 += h1
-    h1 = fmix(h1)
-    h2 = fmix(h2)
-    h1 += h2
-    // h2 += h1 — dead for the token (only h1 is the token)
+    val h1 = Murmur3Core.hash128(key, -1L, null)
     if (h1 == Long.MinValue) Long.MaxValue else h1
   }
 

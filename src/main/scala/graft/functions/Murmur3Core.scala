@@ -1,10 +1,10 @@
 package graft.functions
 
-/** Shared MurmurHash3 x64_128 building blocks. Two variants build on
-  * these: [[CassandraMurmur3]] (Cassandra's sign-extended tail +
-  * MIN_VALUE pin) and [[Sketches.murmur128]] (standard zero-extended
-  * tail) — the deliberate difference between them lives entirely in
-  * their tail handling, not in this shared mixing core.
+/** The one MurmurHash3 x64_128 body. Two variants call it:
+  * [[CassandraMurmur3]] (Cassandra's sign-extended tail + MIN_VALUE pin)
+  * and [[Sketches.murmur128]] (standard zero-extended tail). The
+  * deliberate difference between them is only how [[hash128]] extends
+  * the tail bytes (`tailMask`) and what the caller does with h1.
   */
 private[functions] object Murmur3Core {
   final val C1 = 0x87c37b91114253d5L
@@ -30,4 +30,43 @@ private[functions] object Murmur3Core {
       ((key(bo + 5) & 0xffL) << 40) |
       ((key(bo + 6) & 0xffL) << 48) |
       ((key(bo + 7) & 0xffL) << 56)
+
+  /** MurmurHash3 x64_128 of `key`: returns h1 and, when `out` is not
+    * null, writes (h1, h2) into it — so neither caller allocates. Each
+    * tail byte enters as `byte & tailMask`: 0xff zero-extends (the
+    * standard hash), -1 keeps Java's sign extension (Cassandra's). */
+  def hash128(key: Array[Byte], tailMask: Long, out: Array[Long]): Long = {
+    val length = key.length
+    val nblocks = length / 16
+    var h1 = 0L
+    var h2 = 0L
+    var i = 0
+    while (i < nblocks) {
+      var k1 = getblock(key, i * 16)
+      var k2 = getblock(key, i * 16 + 8)
+      k1 *= C1; k1 = rotl64(k1, 31); k1 *= C2; h1 ^= k1
+      h1 = rotl64(h1, 27); h1 += h2; h1 = h1 * 5 + 0x52dce729L
+      k2 *= C2; k2 = rotl64(k2, 33); k2 *= C1; h2 ^= k2
+      h2 = rotl64(h2, 31); h2 += h1; h2 = h2 * 5 + 0x38495ab5L
+      i += 1
+    }
+    // Tail: bytes 8..14 feed k2, bytes 0..7 feed k1, each shifted to its
+    // little-endian lane.
+    val o = nblocks * 16
+    val tail = length & 15
+    var k1 = 0L
+    var k2 = 0L
+    var j = tail
+    while (j > 8) { j -= 1; k2 ^= (key(o + j) & tailMask) << (8 * (j - 8)) }
+    if (tail > 8) { k2 *= C2; k2 = rotl64(k2, 33); k2 *= C1; h2 ^= k2 }
+    while (j > 0) { j -= 1; k1 ^= (key(o + j) & tailMask) << (8 * j) }
+    if (tail > 0) { k1 *= C1; k1 = rotl64(k1, 31); k1 *= C2; h1 ^= k1 }
+
+    h1 ^= length.toLong; h2 ^= length.toLong
+    h1 += h2; h2 += h1
+    h1 = fmix(h1); h2 = fmix(h2)
+    h1 += h2; h2 += h1
+    if (out != null) { out(0) = h1; out(1) = h2 }
+    h1
+  }
 }

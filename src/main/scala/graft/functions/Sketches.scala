@@ -23,59 +23,15 @@ object Sketches {
 
   // -- static kernels (called from generated code) ------------------------
 
-  import Murmur3Core.{fmix, getblock, rotl64}
+  import Murmur3Core.fmix
 
   /** Standard MurmurHash3 x64_128 (zero-extended tail — these sketches
     * don't need Cassandra's quirks; see [[CassandraMurmur3]] for those).
     * Writes (h1, h2) into `out` to keep per-shingle loops allocation-free.
     * Used as the base for Kirsch-Mitzenmacher double hashing:
     * hash_i = h1 + i*h2, so each shingle is hashed once regardless of k. */
-  def murmur128(key: Array[Byte], out: Array[Long]): Unit = {
-    val length = key.length
-    val nblocks = length / 16
-    var h1 = 0L; var h2 = 0L
-    val c1 = Murmur3Core.C1
-    val c2 = Murmur3Core.C2
-    var i = 0
-    while (i < nblocks) {
-      var k1 = getblock(key, i * 16)
-      var k2 = getblock(key, i * 16 + 8)
-      k1 *= c1; k1 = rotl64(k1, 31); k1 *= c2; h1 ^= k1
-      h1 = rotl64(h1, 27); h1 += h2; h1 = h1 * 5 + 0x52dce729L
-      k2 *= c2; k2 = rotl64(k2, 33); k2 *= c1; h2 ^= k2
-      h2 = rotl64(h2, 31); h2 += h1; h2 = h2 * 5 + 0x38495ab5L
-      i += 1
-    }
-    val o = nblocks * 16
-    var k1 = 0L; var k2 = 0L
-    val tail = length & 15
-    if (tail >= 15) k2 ^= (key(o + 14) & 0xffL) << 48
-    if (tail >= 14) k2 ^= (key(o + 13) & 0xffL) << 40
-    if (tail >= 13) k2 ^= (key(o + 12) & 0xffL) << 32
-    if (tail >= 12) k2 ^= (key(o + 11) & 0xffL) << 24
-    if (tail >= 11) k2 ^= (key(o + 10) & 0xffL) << 16
-    if (tail >= 10) k2 ^= (key(o + 9) & 0xffL) << 8
-    if (tail >= 9) {
-      k2 ^= key(o + 8) & 0xffL
-      k2 *= c2; k2 = rotl64(k2, 33); k2 *= c1; h2 ^= k2
-    }
-    if (tail >= 8) k1 ^= (key(o + 7) & 0xffL) << 56
-    if (tail >= 7) k1 ^= (key(o + 6) & 0xffL) << 48
-    if (tail >= 6) k1 ^= (key(o + 5) & 0xffL) << 40
-    if (tail >= 5) k1 ^= (key(o + 4) & 0xffL) << 32
-    if (tail >= 4) k1 ^= (key(o + 3) & 0xffL) << 24
-    if (tail >= 3) k1 ^= (key(o + 2) & 0xffL) << 16
-    if (tail >= 2) k1 ^= (key(o + 1) & 0xffL) << 8
-    if (tail >= 1) {
-      k1 ^= key(o) & 0xffL
-      k1 *= c1; k1 = rotl64(k1, 31); k1 *= c2; h1 ^= k1
-    }
-    h1 ^= length.toLong; h2 ^= length.toLong
-    h1 += h2; h2 += h1
-    h1 = fmix(h1); h2 = fmix(h2)
-    h1 += h2; h2 += h1
-    out(0) = h1; out(1) = h2
-  }
+  def murmur128(key: Array[Byte], out: Array[Long]): Unit =
+    Murmur3Core.hash128(key, 0xffL, out)
 
   /** MinHash signature: k minima over the shingle set. */
   def minhash(shingles: ArrayData, k: Int): ArrayData = {

@@ -381,20 +381,10 @@ object Multimodal {
     * winner flag (the dedup_survivors contract on media). Anti-join
     * unhinted: AQE broadcasts the dropped set only while it really is
     * small — a heavily-duplicated media corpus must not force it. */
-  def phashSurvivors(spark: SparkSession, dir: String): DataFrame = {
-    val cl = phashClusters(spark, dir)
-    val dropped = cl.filter(col("doc_id") =!= col("cluster_id"))
-      .select(col("doc_id"))
-    val winners = cl.filter(col("doc_id") === col("cluster_id"))
-      .select(col("doc_id"), lit(true).as("_won"))
-    phashCorpusHex(spark, dir)
-      .select(col("doc_id"), col("nb").as("n_bytes"))
-      .join(dropped, Seq("doc_id"), "left_anti")
-      .join(winners, Seq("doc_id"), "left_outer")
-      .select(col("doc_id"), col("n_bytes"),
-        coalesce(col("_won"), lit(false)).as("cluster_survivor"))
-      .orderBy(col("doc_id"))
-  }
+  def phashSurvivors(spark: SparkSession, dir: String): DataFrame =
+    graft.dedup.Dedup.survivorsOf(
+      phashCorpusHex(spark, dir).select(col("doc_id"), col("nb").as("n_bytes")),
+      phashClusters(spark, dir))
 
   /** #45 mm_binary_pipeline: media synthesis → batched stub decode →
     * per-doc feature presentation. The normalized float features are

@@ -1,6 +1,7 @@
 package graft.sources.sstable
 
-import java.io.{DataInputStream, EOFException, InputStream}
+import java.io.{EOFException, InputStream}
+import java.nio.{ByteBuffer, ByteOrder}
 
 /** Byte-level decoder for the Cassandra "ma"+ SSTable Data.db payload —
   * the reference's actual ingest entry point (SSTable.cpp, NewSStable:
@@ -8,8 +9,7 @@ import java.io.{DataInputStream, EOFException, InputStream}
   * read_column_data :688; vint decode Buffer.cpp read_unsigned_vint).
   *
   * Scope (the engine's owned subset, see SURVEY §3): "ma"+ Data.db
-  * streams, plain or chunk-compressed ([[CompressedBlocks]] layers the
-  * block decode + checksum verify underneath), plus the legacy
+  * streams, plain or chunk-compressed, plus the legacy
   * "ja"/"ka" cell framing ([[KaReader]]). Clustering columns and
   * static rows are handled as in the reference by default: clustering
   * VALUES are parsed and skipped (SSTable.cpp:489 — "not currently in
@@ -33,6 +33,12 @@ import java.io.{DataInputStream, EOFException, InputStream}
   * row-shared or per-cell TTL, row-shared or per-cell timestamps,
   * min-timestamp/min-TTL delta encoding, and the column-subset
   * bitmask.
+  *
+  * Every reader here decodes from one [[ByteCursor]]: the primitive
+  * reads, the vints and the one length rule live there, and so does the
+  * choice between raw and chunk-compressed bytes ([[CompressedBlocks]]
+  * refills the cursor with decompressed, checksum-verified chunks). The
+  * `InputStream` forms read a whole in-memory stream.
   */
 object MaFormat {
 
@@ -99,17 +105,15 @@ object MaFormat {
   /** The no-deletion sentinel (Cassandra DeletionTime.LIVE). */
   val NoDeletion: Long = Long.MinValue
 
-  /** A length prefix no well-formed Data.db holds (negative, or past the
-    * Int range), thrown before anything is allocated; the source's
-    * reader rethrows it [[at]] the Data.db path and partition offset. */
+  /** A length prefix no well-formed component holds (negative, or past
+    * the bytes left in it — [[ByteCursor]]'s one length rule — or an LZ4
+    * block length past its chunk), thrown before anything is allocated;
+    * the source's reader rethrows a Data.db one [[inPartition]]. */
   final class CorruptLengthException(message: String, cause: Throwable = null)
       extends IllegalStateException(message, cause) {
-    def at(file: String, offset: Long): CorruptLengthException =
-      new CorruptLengthException(s"$file: $message in the partition at offset $offset", this)
+    def inPartition(offset: Long): CorruptLengthException =
+      new CorruptLengthException(s"$message in the partition at offset $offset", this)
   }
-  private def checkedLength(n: Long): Int =
-    if (n < 0 || n > Int.MaxValue) throw new CorruptLengthException(s"corrupt length prefix $n")
-    else n.toInt
 
   /** The no-TTL sentinel inside the decoder (reference uses u64 max). */
   private val NoTtl: Long = -1L
@@ -162,39 +166,17 @@ object MaFormat {
   private[sstable] def renderClusteringValue(tpe: ColType, b: Array[Byte]): String =
     tpe match {
       case CInt32 if b.length == 4 =>
-        val signed = ((b(0) & 0xff) << 24) | ((b(1) & 0xff) << 16) |
-          ((b(2) & 0xff) << 8) | (b(3) & 0xff)
-        "x" + f"${(signed ^ 0x80000000).toLong & 0xffffffffL}%08x"
+        "x" + f"${(ByteBuffer.wrap(b).getInt ^ 0x80000000).toLong & 0xffffffffL}%08x"
       case CLong | CTimestamp if b.length == 8 =>
-        var v = 0L
-        var i = 0
-        while (i < 8) { v = (v << 8) | (b(i) & 0xff).toLong; i += 1 }
-        "x" + f"${v ^ Long.MinValue}%016x"
+        "x" + f"${ByteBuffer.wrap(b).getLong ^ Long.MinValue}%016x"
       case CFloat if b.length == 4 =>
-        val bits = ((b(0) & 0xff) << 24) | ((b(1) & 0xff) << 16) |
-          ((b(2) & 0xff) << 8) | (b(3) & 0xff)
+        val bits = ByteBuffer.wrap(b).getInt
         val key = if (bits < 0) ~bits else bits ^ 0x80000000
         "x" + f"${key.toLong & 0xffffffffL}%08x"
       case CBool if b.length == 1 =>
         "x" + f"${b(0) & 0xff}%02x"
       case _ => renderClusteringValue(b)
     }
-
-  /** Cassandra unsigned vint (Buffer.cpp:read_unsigned_vint): the count
-    * of leading one bits in the first byte is the count of continuation
-    * bytes; remaining first-byte bits are the high bits of the
-    * big-endian value. Shared by the row decoder and the Index.db
-    * reader. */
-  private[sstable] def readUnsignedVintFrom(din: DataInputStream): Long = {
-    val first = din.readUnsignedByte()
-    if (first < 0x7f) return first.toLong
-    var extraBytes = 0
-    while (extraBytes < 8 && (first & (0x80 >> extraBytes)) != 0) extraBytes += 1
-    var v: Long = (first & (0xff >> extraBytes)).toLong
-    var i = 0
-    while (i < extraBytes) { v = (v << 8) | din.readUnsignedByte(); i += 1 }
-    v
-  }
 
   /** Index.db entries (the seek source behind the reference's
     * `-s`/`-S` Summary/Index resume, Cassandra2Aerospike.cpp): a
@@ -211,24 +193,16 @@ object MaFormat {
     * 100 GB Data.db of 10 KB partitions carries ~10M entries) retains
     * only what it keeps, not the whole file. Combine with
     * [[readSummary]] to skip the index prefix without reading it. */
-  def indexEntries(in: InputStream, version: String = "ma"): Iterator[(Array[Byte], Long)] = {
-    val din = new DataInputStream(in)
+  def indexEntries(in: ByteCursor, version: String = "ma"): Iterator[(Array[Byte], Long)] = {
     val vintFramed = version >= "ma"
     new Iterator[(Array[Byte], Long)] {
       private var nextEntry: (Array[Byte], Long) = _
       private var eof = false
       private def advance(): Unit = {
         try {
-          val key = new Array[Byte](din.readUnsignedShort())
-          din.readFully(key)
-          val pos = if (vintFramed) readUnsignedVintFrom(din) else din.readLong()
-          val promoted =
-            if (vintFramed) readUnsignedVintFrom(din) else din.readInt().toLong
-          var skipped = 0L
-          while (skipped < promoted) {
-            val n = din.skipBytes(math.min(promoted - skipped, Int.MaxValue.toLong).toInt)
-            if (n <= 0) { din.readUnsignedByte(); skipped += 1 } else skipped += n
-          }
+          val key = in.bytes(in.u16Length())
+          val pos = if (vintFramed) in.vint() else in.i64()
+          in.skip(if (vintFramed) in.vintLength() else in.i32Length()) // promoted index
           nextEntry = (key, pos)
         } catch { case _: EOFException => eof = true; nextEntry = null }
       }
@@ -256,59 +230,38 @@ object MaFormat {
     * summary is O(partitions/128) — the in-memory seek structure that
     * lets a planner jump into a huge Index.db instead of scanning it
     * from byte 0. */
-  def readSummary(in: InputStream, version: String): Array[(Array[Byte], Long)] = {
-    val din = new DataInputStream(in)
-    // readFully, not skipBytes: DataInputStream.skipBytes stops at the
-    // first short skip() without being at EOF on some stream impls,
-    // which would silently misalign every header field after it.
-    val scratch = new Array[Byte](8)
-    din.readFully(scratch, 0, 4) // minIndexInterval
-    val size = din.readInt()
-    val memSize = din.readLong()
-    if (version >= "ka") din.readFully(scratch, 0, 8)
-    require(size >= 0 && memSize >= (4L * size) && memSize <= Int.MaxValue,
-      s"implausible Summary.db header: size=$size memSize=$memSize")
-    val toc = new Array[Byte](memSize.toInt)
-    din.readFully(toc)
-    def i32(off: Int): Int =
-      (toc(off) & 0xff) | ((toc(off + 1) & 0xff) << 8) |
-        ((toc(off + 2) & 0xff) << 16) | ((toc(off + 3) & 0xff) << 24)
-    def i64(off: Int): Long = {
-      var v = 0L
-      var i = 7
-      while (i >= 0) { v = (v << 8) | (toc(off + i) & 0xff); i -= 1 }
-      v
-    }
+  def readSummary(in: ByteCursor, version: String): Array[(Array[Byte], Long)] = {
+    in.skip(4) // minIndexInterval
+    val size = in.i32Length()
+    val memSize = in.i64Length()
+    if (version >= "ka") in.skip(8)
+    require(memSize >= (4L * size), s"implausible Summary.db header: size=$size memSize=$memSize")
+    val toc = in.bytes(memSize)
+    val le = ByteBuffer.wrap(toc).order(ByteOrder.LITTLE_ENDIAN)
     Array.tabulate(size) { i =>
-      val off = i32(4 * i)
-      val end = if (i + 1 < size) i32(4 * (i + 1)) else memSize.toInt
+      val off = le.getInt(4 * i)
+      val end = if (i + 1 < size) le.getInt(4 * (i + 1)) else memSize
       require(off >= 4 * size && end - off >= 8 && end <= memSize,
         s"corrupt Summary.db toc entry $i: [$off,$end)")
-      (java.util.Arrays.copyOfRange(toc, off, end - 8), i64(end - 8))
+      (java.util.Arrays.copyOfRange(toc, off, end - 8), le.getLong(end - 8))
     }
   }
+
+  /** [[readSummary]] of a whole Summary.db stream. */
+  def readSummary(in: InputStream, version: String): Array[(Array[Byte], Long)] =
+    readSummary(ByteCursor(in.readAllBytes(), "Summary.db"), version)
 
   /** One pass over a whole Summary.db: the sampled entries AND the
     * trailing (first, last) bound keys (each None-safe independently) —
     * for callers that want both without opening the file twice
     * (describe over thousands of SSTables on a high-latency
-    * filesystem). The stream is positioned right after the entry block
+    * filesystem). The cursor is positioned right after the entry block
     * once [[readSummary]] returns, which is exactly where the bound
     * pair starts. */
-  def readSummaryWithBounds(in: InputStream, version: String)
+  def readSummaryWithBounds(in: ByteCursor, version: String)
       : (Array[(Array[Byte], Long)], Option[(Array[Byte], Array[Byte])]) = {
     val entries = readSummary(in, version)
-    val bounds = scala.util.Try {
-      val din = new DataInputStream(in)
-      def keyWithLength(): Array[Byte] = {
-        val len = din.readInt()
-        require(len >= 0 && len <= (1 << 20), s"implausible summary key length $len")
-        val k = new Array[Byte](len)
-        din.readFully(k)
-        k
-      }
-      (keyWithLength(), keyWithLength())
-    }.toOption
+    val bounds = scala.util.Try((in.bytes(in.i32Length()), in.bytes(in.i32Length()))).toOption
     (entries, bounds)
   }
 
@@ -324,9 +277,14 @@ object MaFormat {
     * header or key length, corrupt entry block) yields None: the caller
     * falls back to the per-partition index pass, which is always
     * safe. */
-  def readSummaryBounds(in: InputStream, version: String)
+  def readSummaryBounds(in: ByteCursor, version: String)
       : Option[(Array[Byte], Array[Byte])] =
     scala.util.Try(readSummaryWithBounds(in, version)._2).toOption.flatten
+
+  /** [[readSummaryBounds]] of a whole Summary.db stream. */
+  def readSummaryBounds(in: InputStream, version: String)
+      : Option[(Array[Byte], Array[Byte])] =
+    readSummaryBounds(ByteCursor(in.readAllBytes(), "Summary.db"), version)
 
   /** One decoded unfiltered: a cell, or a range-tombstone marker.
     * "ma" markers carry col = null; "ka" range tombstones carry the
@@ -347,7 +305,7 @@ object MaFormat {
       marker: Boolean,
       counter: Boolean = false)
 
-  /** Streaming reader state over a DataInputStream.
+  /** Streaming reader state over a Data.db [[ByteCursor]].
     *
     * `clustering` lists the clustering-key column TYPES in schema order
     * (names are never needed — SSTableSchema.cpp:131 parses only the
@@ -376,16 +334,22 @@ object MaFormat {
     * their planned end offset without reading into the next split's
     * partitions. */
   final class Reader(
-      in: InputStream,
+      in: ByteCursor,
       columns: Seq[(String, ColType)],
       minTimestamp: Long,
       minTtl: Long,
-      clustering: Seq[ColType] = Nil,
-      staticColumns: Seq[(String, ColType)] = Nil,
-      stopAfter: () => Boolean = () => false,
-      clusteringIdentity: Boolean = false) extends Iterator[MaCell] {
+      clustering: Seq[ColType],
+      staticColumns: Seq[(String, ColType)],
+      stopAfter: () => Boolean,
+      clusteringIdentity: Boolean) extends Iterator[MaCell] {
 
-    private val din = new DataInputStream(in)
+    /** Over a whole in-memory Data.db stream. */
+    def this(in: InputStream, columns: Seq[(String, ColType)], minTimestamp: Long, minTtl: Long,
+        clustering: Seq[ColType] = Nil, staticColumns: Seq[(String, ColType)] = Nil,
+        stopAfter: () => Boolean = () => false, clusteringIdentity: Boolean = false) =
+      this(ByteCursor(in.readAllBytes(), "Data.db"), columns, minTimestamp, minTtl,
+        clustering, staticColumns, stopAfter, clusteringIdentity)
+
     private var atEndOfPartition = true
     private var eof = false
     private var key: Array[Byte] = _
@@ -396,21 +360,6 @@ object MaFormat {
       * pairing state, always null in parity mode. */
     private var openMarker: (String, Long) = _
 
-    // --- primitive decode (Buffer.cpp) ---------------------------------
-
-    private def readByte(): Int = din.readUnsignedByte()
-    private def readShort(): Int = din.readUnsignedShort()
-    private def readLongLong(): Long = din.readLong()
-    private def skip(n: Int): Unit = { var i = 0; while (i < n) { din.readByte(); i += 1 } }
-    private def readBytes(n: Int): Array[Byte] = {
-      val b = new Array[Byte](n); din.readFully(b); b
-    }
-
-    private def readUnsignedVint(): Long = readUnsignedVintFrom(din)
-
-    /** 16-bit-length-prefixed string bytes (Buffer.cpp:read_string). */
-    private def readString(): Array[Byte] = readBytes(readShort())
-
     // --- unfiltered decode (SSTable.cpp) -------------------------------
 
     /** decode_column_subset (SSTable.cpp:459), in Cassandra's
@@ -420,7 +369,7 @@ object MaFormat {
       * the present columns when fewer than half are present, else by
       * the indices of the missing ones. */
     private def readColumnSubset(n: Int): Array[Boolean] = {
-      val encoded = readUnsignedVint()
+      val encoded = in.vint()
       if (encoded == 0) Array.fill(n)(true)
       else if (n >= 64) {
         val missing = encoded.toInt
@@ -428,7 +377,7 @@ object MaFormat {
         val subset = Array.fill(n)(!listsPresent)
         val listed = if (listsPresent) n - missing else missing
         var i = 0
-        while (i < listed) { subset(readUnsignedVint().toInt) = listsPresent; i += 1 }
+        while (i < listed) { subset(in.vint().toInt) = listsPresent; i += 1 }
         subset
       } else {
         val subset = new Array[Boolean](n)
@@ -464,19 +413,19 @@ object MaFormat {
       val sb = if (clusteringIdentity && n > 0) new StringBuilder else null
       var c = 0
       while (c < n) {
-        val header = readUnsignedVint()
+        val header = in.vint()
         val limit = math.min(n, c + 32)
         var shift = 0
         while (c < limit) {
           val lane = (header >> shift) & 3L
           if (lane == 0L) {
             val size = clustering(c).fixedSize match {
-              case -1 => checkedLength(readUnsignedVint())
+              case -1 => in.vintLength()
               case s => s
             }
             if (sb != null)
-              sb.append(renderClusteringValue(clustering(c), readBytes(size)))
-            else skip(size)
+              sb.append(renderClusteringValue(clustering(c), in.bytes(size)))
+            else in.skip(size)
           } else if (lane == 1L && sb != null) sb.append(NullValue)
           // lane 2 (empty value) renders as the empty string.
           if (sb != null) sb.append(ClusteringSep)
@@ -502,22 +451,22 @@ object MaFormat {
       * start side / P alone on the end side, so `between(start, end)`
       * covers exactly the deleted rows' cell names. */
     private def readMarker(isStatic: Boolean): List[MaCell] = {
-      val tpe = readByte()
-      val size = readShort()
+      val tpe = in.u8()
+      val size = in.u16()
       val prefix = if (!isStatic) readClusteringValues(size) else ""
-      readUnsignedVint() // row size
-      readUnsignedVint() // previous unfiltered size
-      val markedForDeletion = readLongLong()
-      skip(4) // local deletion time
+      in.vint() // row size
+      in.vint() // previous unfiltered size
+      val markedForDeletion = in.i64()
+      in.skip(4) // local deletion time
       if (!clusteringIdentity) {
         // Boundary markers carry a second deletion time (unused).
-        if (tpe == 2 || tpe == 5) skip(12)
+        if (tpe == 2 || tpe == 5) in.skip(12)
         List(MaCell(key, null, markedForDeletion, null,
           deleted = true, expiring = false, ttlSec = NoTtl,
           deletionTs = markedForDeletion, marker = true))
       } else {
         val openDeletion =
-          if (tpe == 2 || tpe == 5) { val d = readLongLong(); skip(4); d }
+          if (tpe == 2 || tpe == 5) { val d = in.i64(); in.skip(4); d }
           else markedForDeletion
         def open(startName: String, d: Long): Unit = {
           require(openMarker == null,
@@ -554,22 +503,22 @@ object MaFormat {
     private def readNormalRow(flags: Int, isStatic: Boolean): List[MaCell] = {
       val prefix = if (!isStatic) readClusteringValues(clustering.size) else ""
       val cols = if (isStatic) staticColumns else columns
-      readUnsignedVint() // row size
-      readUnsignedVint() // previous unfiltered size
+      in.vint() // row size
+      in.vint() // previous unfiltered size
 
       var rowTs = 0L
       var rowTtl = NoTtl
       if ((flags & HAS_TIMESTAMP) != 0) {
-        rowTs = readUnsignedVint() + minTimestamp
+        rowTs = in.vint() + minTimestamp
         if ((flags & HAS_TTL) != 0) {
-          rowTtl = readUnsignedVint() + minTtl
-          readUnsignedVint() // local deletion time
+          rowTtl = in.vint() + minTtl
+          in.vint() // local deletion time
         }
       }
       var rowDeletion =
         if ((flags & HAS_DELETION) != 0) {
-          val d = readUnsignedVint() + minTimestamp
-          readUnsignedVint() // local deletion time
+          val d = in.vint() + minTimestamp
+          in.vint() // local deletion time
           d
         } else partitionDeletion
 
@@ -608,8 +557,8 @@ object MaFormat {
               // applies it with ka-range-tombstone semantics — then a
               // vint cell count, each cell carrying its path.
               if ((flags & HAS_COMPLEX_DELETION) != 0) {
-                val d = readUnsignedVint() + minTimestamp
-                readUnsignedVint() // local deletion time
+                val d = in.vint() + minTimestamp
+                in.vint() // local deletion time
                 if (d != NoDeletion)
                   // Range [name + "[", name + "[\uffff"]: every rendered
                   // sub-cell name sorts inside it, every other column
@@ -619,7 +568,7 @@ object MaFormat {
                     deleted = true, expiring = false, ttlSec = NoTtl,
                     deletionTs = d, marker = true)
               }
-              val n = readUnsignedVint().toInt
+              val n = in.vintLength() // each cell takes at least a byte
               var j = 0
               while (j < n) {
                 out += readCell(name, valueTpe, complexPath = true,
@@ -654,10 +603,10 @@ object MaFormat {
     private def readCell(
         name: String, tpe: ColType, complexPath: Boolean,
         rowTs: Long, rowTtl: Long, rowDeletion: Long): MaCell = {
-      val cellFlags = readByte()
+      val cellFlags = in.u8()
       val ts =
         if ((cellFlags & USE_ROW_TIMESTAMP_MASK) != 0) rowTs
-        else readUnsignedVint() + minTimestamp
+        else in.vint() + minTimestamp
       val deleted = (cellFlags & IS_DELETED_MASK) != 0
       var expiring = (cellFlags & IS_EXPIRING_MASK) != 0
       var ttl = NoTtl
@@ -665,18 +614,15 @@ object MaFormat {
         expiring = rowTtl != NoTtl
         ttl = rowTtl
       } else {
-        if (expiring || deleted) readUnsignedVint() // local deletion time
-        if (expiring) ttl = readUnsignedVint() + minTtl
+        if (expiring || deleted) in.vint() // local deletion time
+        if (expiring) ttl = in.vint() + minTtl
       }
       val colName =
-        if (complexPath) s"$name[${renderPath(readBytes(checkedLength(readUnsignedVint())))}]"
+        if (complexPath) s"$name[${renderPath(in.bytes(in.vintLength()))}]"
         else name
       val value =
         if ((cellFlags & HAS_EMPTY_VALUE_MASK) == 0) {
-          val size =
-            if (tpe.fixedSize >= 0) tpe.fixedSize
-            else checkedLength(readUnsignedVint())
-          readBytes(size)
+          in.bytes(if (tpe.fixedSize >= 0) tpe.fixedSize else in.vintLength())
         } else null
       // Counter columns keep their flag so Kv routes them to
       // SUM-merge instead of LWW (SSTableSchema.cpp counter type;
@@ -691,10 +637,11 @@ object MaFormat {
         if (atEndOfPartition) {
           if (stopAfter()) { eof = true; return }
           // Partition header: key, local deletion (skipped), deletion ts.
-          val k = try readString() catch { case _: EOFException => eof = true; return }
+          // Partition key: 16-bit-length-prefixed (Buffer.cpp:read_string).
+          val k = try in.bytes(in.u16Length()) catch { case _: EOFException => eof = true; return }
           key = k
-          skip(4) // local_deletion
-          partitionDeletion = readLongLong()
+          in.skip(4) // local_deletion
+          partitionDeletion = in.i64()
           atEndOfPartition = false
           // A partition-level deletion is itself an unfiltered fact —
           // emit it as a marker row so it survives even when the
@@ -707,13 +654,13 @@ object MaFormat {
             return
           }
         }
-        val flags = try readByte() catch { case _: EOFException => eof = true; return }
+        val flags = try in.u8() catch { case _: EOFException => eof = true; return }
         if ((flags & END_OF_PARTITION) != 0) {
           require(openMarker == null,
             "partition ended with an unclosed range-tombstone bound")
           atEndOfPartition = true
         } else {
-          val extended = if ((flags & EXTENSION_FLAG) != 0) readByte() else 0
+          val extended = if ((flags & EXTENSION_FLAG) != 0) in.u8() else 0
           val isStatic = (extended & IS_STATIC) != 0
           if (isStatic) require(staticColumns.nonEmpty,
             "static row but no staticColumns schema (pass the staticColumns option)")
@@ -756,10 +703,15 @@ object MaFormat {
     * end-of-component inclusivity is approximated as
     * prefix-inclusive). */
   final class KaReader(
-      in: InputStream,
-      stopAfter: () => Boolean = () => false,
-      clusteringIdentity: Boolean = false,
-      version: String = "ja") extends Iterator[MaCell] {
+      in: ByteCursor,
+      stopAfter: () => Boolean,
+      clusteringIdentity: Boolean,
+      version: String) extends Iterator[MaCell] {
+
+    /** Over a whole in-memory Data.db stream. */
+    def this(in: InputStream, stopAfter: () => Boolean = () => false,
+        clusteringIdentity: Boolean = false, version: String = "ja") =
+      this(ByteCursor(in.readAllBytes(), "Data.db"), stopAfter, clusteringIdentity, version)
 
     private val DELETION_MASK = 0x01
     private val EXPIRATION_MASK = 0x02
@@ -776,16 +728,13 @@ object MaFormat {
     private val rowSizeBytes = if (!preJa) 0 else if (version < "da") 4 else 8
     private var remainingColumns = 0
 
-    private val din = new DataInputStream(in)
     private var eof = false
     private var inPartition = false
     private var key: Array[Byte] = _
     private var partitionDeletion: Long = NoDeletion
     private var nextCell: MaCell = _
 
-    private def readString(): Array[Byte] = {
-      val b = new Array[Byte](din.readUnsignedShort()); din.readFully(b); b
-    }
+    private def readString(): Array[Byte] = in.bytes(in.u16Length())
 
     /** All elements of a well-formed composite name (the same exact-
       * termination rule [[unwrapName]] applies), or null when the
@@ -891,12 +840,9 @@ object MaFormat {
           val k = try readString() catch { case _: EOFException => eof = true; return }
           key = k
           try {
-            if (rowSizeBytes > 0) {
-              val sz = new Array[Byte](rowSizeBytes); din.readFully(sz)
-            }
-            val skip = new Array[Byte](4); din.readFully(skip) // local_deletion
-            partitionDeletion = din.readLong()
-            if (preJa) remainingColumns = din.readInt()
+            in.skip(rowSizeBytes + 4) // row size, local_deletion
+            partitionDeletion = in.i64()
+            if (preJa) remainingColumns = in.i32()
           } catch { case _: EOFException => eof = true; return }
           inPartition = true
           // Emit the partition deletion as a marker row (see Reader).
@@ -917,11 +863,11 @@ object MaFormat {
             val colName =
               if (clusteringIdentity) renderName(name)
               else new String(unwrapName(name), "UTF-8")
-            val flags = din.readUnsignedByte()
+            val flags = in.u8()
             if ((flags & RANGE_TOMBSTONE_MASK) != 0) {
               val rangeEnd = readString()
-              val skip = new Array[Byte](4); din.readFully(skip) // local_deletion
-              val ts = din.readLong()
+              in.skip(4) // local_deletion
+              val ts = in.i64()
               val (start, end) =
                 if (clusteringIdentity)
                   (renderBound(name, isEnd = false),
@@ -935,16 +881,15 @@ object MaFormat {
               var expiring = false
               var ttl = NoTtl
               if ((flags & COUNTER_MASK) != 0) {
-                din.readLong() // counter timestamp-of-last-delete (unused)
+                in.skip(8) // counter timestamp-of-last-delete (unused)
                 counter = true
               } else if ((flags & EXPIRATION_MASK) != 0) {
-                ttl = din.readInt().toLong
-                din.readInt() // expiration time (derivable from ts + ttl)
+                ttl = in.i32().toLong
+                in.skip(4) // expiration time (derivable from ts + ttl)
                 expiring = true
               }
-              val ts = din.readLong()
-              val value = new Array[Byte](checkedLength(din.readInt()))
-              din.readFully(value)
+              val ts = in.i64()
+              val value = in.bytes(in.i32Length())
               nextCell = MaCell(key, colName, ts, value,
                 deleted = (flags & DELETION_MASK) != 0, expiring = expiring,
                 ttlSec = ttl, deletionTs = partitionDeletion, marker = false,

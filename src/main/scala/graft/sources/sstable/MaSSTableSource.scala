@@ -116,6 +116,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * (SupportsPushDownRequiredColumns): a pruned-away value column still
   * has to be skipped byte-wise (the format is a stream), but pruned
   * rows never materialize into InternalRow fields.
+  *
+  * One input path: every component (Data.db, Index.db, Summary.db,
+  * Statistics.db, CompressionInfo.db) is read through one
+  * [[ByteCursor]]. A reader opens one Data.db cursor at its split start,
+  * compressed or not, and takes partition offsets and the split end
+  * from the cursor's uncompressed position; a length prefix past the
+  * bytes left fails with the file and the partition's offset.
   */
 class MaSSTableSource extends TableProvider {
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
@@ -370,30 +377,19 @@ object MaSSTableSource {
         // broken Statistics.db is exactly what a pre-migration triage
         // is looking for.
         val errors = Seq.newBuilder[String]
-        def withSibling[A](component: String)(read: java.io.InputStream => A)
-            : Option[A] = {
+        def withSibling[A](component: String)(read: ByteCursor => A): Option[A] = {
           val p = new Path(stem + component)
           if (!fs.exists(p)) None
-          else scala.util.Try {
-            val in = fs.open(p)
-            try read(in) finally in.close()
-          } match {
+          else scala.util.Try(ByteCursor.read(fs, p)(read)) match {
             case scala.util.Success(a) => Some(a)
             case scala.util.Failure(ex) =>
               errors += s"$component: ${ex.getMessage}"
               None
           }
         }
-        val stats = withSibling("Statistics.db")(
-          StatsFile.read(_, version, stem + "Statistics.db"))
-        val ci = withSibling("CompressionInfo.db")(
-          CompressedBlocks.readCompressionInfo)
-        val indexPartitions = withSibling("Index.db") { in =>
-          var n = 0L
-          val it = MaFormat.indexEntries(in, version)
-          while (it.hasNext) { it.next(); n += 1 }
-          n
-        }
+        val stats = withSibling("Statistics.db")(StatsFile.read(_, version))
+        val ci = withSibling("CompressionInfo.db")(CompressedBlocks.readCompressionInfo)
+        val indexPartitions = withSibling("Index.db")(MaFormat.indexEntries(_, version).size.toLong)
         // One open + one parse per Summary.db for BOTH the entry count
         // and the bound keys (a directory of thousands of files on a
         // high-latency filesystem pays per open).
@@ -447,11 +443,7 @@ object MaSSTableSource {
       fs: org.apache.hadoop.fs.FileSystem): Option[StatsFile.TableMeta] = {
     val sp = new Path(dataFile.stripSuffix("Data.db") + "Statistics.db")
     if (!fs.exists(sp)) None
-    else {
-      val in = fs.open(sp)
-      try Some(StatsFile.read(in, versionOf(new Path(dataFile).getName), sp.toString))
-      finally in.close()
-    }
+    else Some(ByteCursor.read(fs, sp)(StatsFile.read(_, versionOf(new Path(dataFile).getName))))
   }
 }
 
@@ -620,13 +612,9 @@ private[sstable] class MaScan(
   private def sibling(file: String, component: String): Path =
     new Path(file.stripSuffix("Data.db") + component)
 
-  private def uncompressedLen(file: String, fs: org.apache.hadoop.fs.FileSystem): Long = {
-    val ciPath = sibling(file, "CompressionInfo.db")
-    if (fs.exists(ciPath)) {
-      val in = fs.open(ciPath)
-      try CompressedBlocks.readCompressionInfo(in).uncompressedLen finally in.close()
-    } else fs.getFileStatus(new Path(file)).getLen
-  }
+  private def uncompressedLen(file: String, fs: org.apache.hadoop.fs.FileSystem): Long =
+    CompressedBlocks.infoFor(fs, file).map(_.uncompressedLen)
+      .getOrElse(fs.getFileStatus(new Path(file)).getLen)
 
   /** FILE-level ring pruning: the Summary's trailing (first, last)
     * keys bound the whole file's ring range (SSTables are written in
@@ -642,11 +630,9 @@ private[sstable] class MaScan(
       file: String, version: String, fs: org.apache.hadoop.fs.FileSystem,
       b: RingBounds): Boolean = {
     val sumPath = sibling(file, "Summary.db")
-    b.narrowed && fs.exists(sumPath) && {
-      val sin = fs.open(sumPath)
-      val bounds = try MaFormat.readSummaryBounds(sin, version) finally sin.close()
-      bounds.exists { case (firstKey, lastKey) => !b.overlaps(firstKey, lastKey) }
-    }
+    b.narrowed && fs.exists(sumPath) &&
+      ByteCursor.read(fs, sumPath)(MaFormat.readSummaryBounds(_, version))
+        .exists { case (firstKey, lastKey) => !b.overlaps(firstKey, lastKey) }
   }
 
   /** Where the index pass of a seeking scan may start reading Index.db.
@@ -673,10 +659,7 @@ private[sstable] class MaScan(
     val idxPath = sibling(file, "Index.db")
     if (!b.seeks || !fs.exists(sumPath)) 0L
     else scala.util.Try {
-      val sin = fs.open(sumPath)
-      val summary =
-        try MaFormat.readSummary(sin, version)
-        finally sin.close()
+      val summary = ByteCursor.read(fs, sumPath)(MaFormat.readSummary(_, version))
       // inStart is monotone along the summary's ring order
       // (false* true*) — binary-search the last false.
       var lo = 0
@@ -690,12 +673,11 @@ private[sstable] class MaScan(
       if (floor < 0) 0L
       else {
         val pos = summary(floor)._2
-        require(pos >= 0 && pos < fs.getFileStatus(idxPath).getLen,
-          s"summary position $pos outside Index.db")
-        val vin = fs.open(idxPath)
-        val firstKey =
-          try { vin.seek(pos); MaFormat.indexEntries(vin, version).next()._1 }
-          finally vin.close()
+        val firstKey = ByteCursor.read(fs, idxPath) { in =>
+          require(pos >= 0 && pos < in.length, s"summary position $pos outside Index.db")
+          in.seek(pos)
+          MaFormat.indexEntries(in, version).next()._1
+        }
         require(java.util.Arrays.equals(firstKey, summary(floor)._1),
           "summary position does not point at its sampled key")
         pos
@@ -722,38 +704,39 @@ private[sstable] class MaScan(
     val version = MaSSTableSource.versionOf(new Path(file).getName)
     val idxPath = sibling(file, "Index.db")
     val seek = indexSeekFloor(file, version, fs, b)
-    val fin = fs.open(idxPath)
-    try {
-      if (seek > 0) fin.seek(seek)
-      val it = MaFormat.indexEntries(fin, version)
-      if (!it.hasNext && seek == 0) return Seq((null, MaInputPartition(file)))
-      val out = Seq.newBuilder[(Array[Byte], MaInputPartition)]
-      var prevKey: Array[Byte] = null
-      var prevSort: Array[Byte] = null
-      var prevPos = -1L
-      var first: Array[Byte] = null
-      var start = -1L
-      var endCap = Long.MaxValue
-      var done = false
-      while (!done && it.hasNext) {
-        val (k, p) = it.next()
-        val sk = b.order.sortKey(k)
-        if (checkOrder) {
-          if (prevSort != null &&
-              (MaSSTableSource.compareBytes(prevSort, sk) >= 0 || p <= prevPos))
-            throw RingOrderException.outOfOrder(idxPath.toString, p, prevKey, k, b.order.name)
-          prevKey = k; prevSort = sk; prevPos = p
+    ByteCursor.read(fs, idxPath) { in =>
+      in.seek(seek)
+      val it = MaFormat.indexEntries(in, version)
+      if (!it.hasNext && seek == 0) Seq((null, MaInputPartition(file)))
+      else {
+        val out = Seq.newBuilder[(Array[Byte], MaInputPartition)]
+        var prevKey: Array[Byte] = null
+        var prevSort: Array[Byte] = null
+        var prevPos = -1L
+        var first: Array[Byte] = null
+        var start = -1L
+        var endCap = Long.MaxValue
+        var done = false
+        while (!done && it.hasNext) {
+          val (k, p) = it.next()
+          val sk = b.order.sortKey(k)
+          if (checkOrder) {
+            if (prevSort != null &&
+                (MaSSTableSource.compareBytes(prevSort, sk) >= 0 || p <= prevPos))
+              throw RingOrderException.outOfOrder(idxPath.toString, p, prevKey, k, b.order.name)
+            prevKey = k; prevSort = sk; prevPos = p
+          }
+          if (b.pastEnd(sk)) { endCap = p; done = true }
+          else if (b.inStart(sk) && (opens(sk, p) || start < 0)) {
+            if (start >= 0) out += first -> MaInputPartition(file, start, p)
+            first = sk
+            start = p
+          }
         }
-        if (b.pastEnd(sk)) { endCap = p; done = true }
-        else if (b.inStart(sk) && (opens(sk, p) || start < 0)) {
-          if (start >= 0) out += first -> MaInputPartition(file, start, p)
-          first = sk
-          start = p
-        }
+        if (start >= 0) out += first -> MaInputPartition(file, start, endCap)
+        out.result()
       }
-      if (start >= 0) out += first -> MaInputPartition(file, start, endCap)
-      out.result()
-    } finally fin.close()
+    }
   }
 
   /** Split one Data.db at Index.db partition boundaries: a new split
@@ -872,13 +855,10 @@ private[sstable] class MaScan(
     val sumPath = sibling(file, "Summary.db")
     val fromSummary =
       if (!fs.exists(sumPath)) None
-      else scala.util.Try {
-        val in = fs.open(sumPath)
-        try MaFormat.readSummary(in, version).map(_._1).toSeq finally in.close()
-      }.toOption
+      else scala.util.Try(
+        ByteCursor.read(fs, sumPath)(MaFormat.readSummary(_, version)).map(_._1).toSeq).toOption
     fromSummary.getOrElse {
-      val in = fs.open(sibling(file, "Index.db"))
-      try {
+      ByteCursor.read(fs, sibling(file, "Index.db")) { in =>
         var kept = Vector.empty[Array[Byte]]
         var step = 1L
         var n = 0L
@@ -891,7 +871,7 @@ private[sstable] class MaScan(
           }
         }
         kept
-      } finally in.close()
+      }
     }
   }
 
@@ -937,19 +917,6 @@ object RingOrderException {
       (if (before) s"precedes its merge slice's first key '${show(bound)}'"
        else s"is at or past its merge slice's end key '${show(bound)}'") +
       s" in $partitioner ring order")
-}
-
-/** Counts consumed bytes so the row reader can stop at its split's end
-  * offset; `count` starts at the split's absolute start position. */
-private[sstable] final class CountingInputStream(
-    in: java.io.InputStream, var count: Long) extends java.io.InputStream {
-  override def read(): Int = {
-    val b = in.read(); if (b >= 0) count += 1; b
-  }
-  override def read(b: Array[Byte], off: Int, len: Int): Int = {
-    val n = in.read(b, off, len); if (n > 0) count += n; n
-  }
-  override def close(): Unit = in.close()
 }
 
 private[sstable] class MaReaderFactory(
@@ -1040,56 +1007,15 @@ private[sstable] class MaReaderFactory(
         .orElse(stats.map(_.staticColumns)).getOrElse(Nil)
     private val minTimestamp: Long = stats.map(_.minTimestamp).getOrElse(0L)
     private val minTtl: Long = stats.map(_.minTtl).getOrElse(0L)
-    private val verifyChecksums = options.getOrElse("verifyChecksums", "true").toBoolean
-    private val raw = fs.open(path)
-    // A sibling CompressionInfo.db means the Data.db is
-    // chunk-compressed (the Cassandra default) — layer the block
-    // decoder under the format reader transparently.
-    private val ciPath = new Path(
-      file.stripSuffix("Data.db") + "CompressionInfo.db")
-    private val in: CountingInputStream = {
-      val (base, basePos): (java.io.InputStream, Long) =
-        if (fs.exists(ciPath)) {
-          val ciIn = fs.open(ciPath)
-          val info = try CompressedBlocks.readCompressionInfo(ciIn) finally ciIn.close()
-          // Mid-file start: jump the RAW stream to the chunk holding
-          // the split's start offset (the chunk-granular seek the
-          // CompressionInfo offsets enable), then decompress forward.
-          val startChunk = (splitStart / info.chunkLen).toInt
-          if (startChunk > 0) raw.seek(info.offsets(startChunk))
-          // Checksum regime per format version (SSTable.cpp:102-104):
-          // Adler32 over compressed bytes for jb..la, CRC32 over
-          // compressed bytes for ma+, CRC32 over UNCOMPRESSED bytes
-          // before jb.
-          (new CompressedBlocks.ChunkedInputStream(
-            raw, info, fs.getFileStatus(path).getLen,
-            useCrc32 = version >= "ma" || version < "jb",
-            checksumCompressed = version >= "jb",
-            startChunk = startChunk,
-            verify = verifyChecksums),
-            startChunk.toLong * info.chunkLen)
-        } else {
-          if (splitStart > 0) raw.seek(splitStart)
-          (raw, splitStart)
-        }
-      val cis = new CountingInputStream(base, basePos)
-      // Discard the in-chunk remainder between the chunk boundary and
-      // the split's partition-start offset.
-      val garbage = new Array[Byte](65536)
-      try while (cis.count < splitStart) {
-        val n = cis.read(garbage, 0,
-          math.min(splitStart - cis.count, garbage.length.toLong).toInt)
-        require(n > 0, s"EOF before split start $splitStart in $file")
-      } catch {
-        case e: MaFormat.CorruptLengthException => throw e.at(file, splitStart)
-      }
-      cis
-    }
+    // One cursor from the split start, in uncompressed positions whatever
+    // the file's compression; nothing is read until the first advance().
+    private val in = ByteCursor.data(fs, file, splitStart,
+      verify = options.getOrElse("verifyChecksums", "true").toBoolean)
     // Consulted before every partition header: remember where the
     // partition starts, and stop at the first boundary at or past the
     // split end.
     private var partitionOffset = splitStart
-    private val stop = () => { partitionOffset = in.count; in.count >= splitEnd }
+    private val stop = () => { partitionOffset = in.position; partitionOffset >= splitEnd }
     private val clusteringIdentity =
       options.getOrElse("clusteringIdentity", "false").toBoolean
     private val cells: Iterator[MaFormat.MaCell] =
@@ -1151,7 +1077,7 @@ private[sstable] class MaReaderFactory(
           if (inBounds) head = c
         }
       } catch {
-        case e: MaFormat.CorruptLengthException => throw e.at(file, partitionOffset)
+        case e: MaFormat.CorruptLengthException => throw e.inPartition(partitionOffset)
       }
     }
 

@@ -1,6 +1,6 @@
 package graft.sources.sstable
 
-import java.io.{ByteArrayInputStream, DataInputStream, InputStream}
+import java.io.InputStream
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** Statistics.db reader — the reference's metadata discovery
@@ -77,23 +77,18 @@ object StatsFile {
              className.endsWith("OrderPreservingPartitioner")) Some("byteOrdered")
     else None
 
-  private def readString16(d: DataInputStream): String = {
-    val b = new Array[Byte](d.readUnsignedShort())
-    d.readFully(b)
-    new String(b, UTF_8)
-  }
-
   /** Parse per the file's format version ([[MaSSTableSource.versionOf]]
     * of the sibling Data.db): "ka"+ is the component TOC; "ja" is the
     * fixed pre-TOC layout. Anything older is RandomPartitioner with no
-    * readable schema (reference read_metadata's final arm). `file`
-    * names the component in errors. */
-  def read(in: InputStream, version: String, file: String = "Statistics.db"): TableMeta = {
-    val bytes = in.readAllBytes()
-    if (version >= "ka") readToc(bytes, version, file)
-    else if (version >= "ja") readJa(bytes)
+    * readable schema (reference read_metadata's final arm). */
+  def read(in: ByteCursor, version: String): TableMeta =
+    if (version >= "ka") readToc(in, version)
+    else if (version >= "ja") readJa(in)
     else TableMeta(0L, 0L, Nil, Nil, None, Some("random"))
-  }
+
+  /** A whole Statistics.db stream; `file` names the component in errors. */
+  def read(in: InputStream, version: String, file: String = "Statistics.db"): TableMeta =
+    read(ByteCursor(in.readAllBytes(), file), version)
 
   /** Beyond the reference's "ma" ceiling: 4.x "na"/"nb" files checksum
     * this component (Cassandra 4.0 MetadataSerializer, FBUtilities
@@ -104,12 +99,11 @@ object StatsFile {
     * right behind them. Offsets stay absolute, so component parsing is
     * version-identical; we validate both TOC checksums and fail loudly
     * on mismatch rather than misparse a shifted table. */
-  private def readToc(bytes: Array[Byte], version: String, file: String): TableMeta = {
-    val toc = new DataInputStream(new ByteArrayInputStream(bytes))
+  private def readToc(in: ByteCursor, version: String): TableMeta = {
     val checked = version >= "na"
     val crc = new java.util.zip.CRC32
     def readIntChecked(): Int = {
-      val v = toc.readInt()
+      val v = in.i32()
       if (checked) {
         crc.update((v >>> 24) & 0xff); crc.update((v >>> 16) & 0xff)
         crc.update((v >>> 8) & 0xff); crc.update(v & 0xff)
@@ -117,7 +111,7 @@ object StatsFile {
       v
     }
     def validateCrc(what: String): Unit = if (checked) {
-      val stored = toc.readInt()
+      val stored = in.i32()
       if (stored != crc.getValue.toInt) throw new IllegalArgumentException(
         s"Statistics.db $what checksum mismatch: " +
           f"stored 0x$stored%08x != computed 0x${crc.getValue.toInt}%08x")
@@ -137,41 +131,27 @@ object StatsFile {
     val partitioner =
       if (validationOff < 0) None
       else {
-        val v = new DataInputStream(
-          new ByteArrayInputStream(bytes, validationOff, bytes.length - validationOff))
-        partitionerName(readString16(v))
+        in.seek(validationOff)
+        partitionerName(new String(in.bytes(in.u16Length()), UTF_8))
       }
 
     // ka files have no serialization header (the legacy framing is
     // self-describing); only ma+ carries one.
-    if (headerOff < 0 || headerOff >= bytes.length)
+    if (headerOff < 0 || headerOff >= in.length)
       return TableMeta(0L, 0L, Nil, Nil, None, partitioner)
 
-    val h = new DataInputStream(
-      new ByteArrayInputStream(bytes, headerOff, bytes.length - headerOff))
-    def vint(): Long = MaFormat.readUnsignedVintFrom(h)
-    // A string length or an entry count: every string and entry takes
-    // at least one byte, so neither can exceed the bytes left.
-    def length(): Int = {
-      val at = bytes.length - h.available()
-      val n = vint()
-      if (n < 0 || n > h.available()) throw new MaFormat.CorruptLengthException(
-        s"$file: corrupt length prefix $n at offset $at, ${h.available()} bytes left")
-      n.toInt
-    }
-    def vstr(): String = {
-      val b = new Array[Byte](length())
-      h.readFully(b)
-      new String(b, UTF_8)
-    }
+    in.seek(headerOff)
+    // String lengths and entry counts both take the cursor's length
+    // rule: every string and entry takes at least one byte.
+    def vstr(): String = new String(in.bytes(in.vintLength()), UTF_8)
     def readColumns(): Seq[(String, MaFormat.ColType)] =
-      Seq.fill(length())((vstr(), colTypeOf(vstr())))
+      Seq.fill(in.vintLength())((vstr(), colTypeOf(vstr())))
 
-    val minTimestamp = vint()
-    vint() // minLocalDeletionTime (unused, as in the reference)
-    val minTtl = vint()
+    val minTimestamp = in.vint()
+    in.vint() // minLocalDeletionTime (unused, as in the reference)
+    val minTtl = in.vint()
     vstr() // key type — keys are raw bytes here, the class is not needed
-    val clustering = Seq.fill(length())(colTypeOf(vstr()))
+    val clustering = Seq.fill(in.vintLength())(colTypeOf(vstr()))
     val staticColumns = readColumns()
     val columns = readColumns()
     TableMeta(minTimestamp, minTtl, clustering, staticColumns, Some(columns),
@@ -181,15 +161,10 @@ object StatsFile {
   /** "ja" layout (SSTable.cpp:313-318): two histograms (int32 count,
     * count × 2 × int64 each), 5 int64 + 2 int32 of fixed stats, then
     * the partitioner class name. */
-  private def readJa(bytes: Array[Byte]): TableMeta = {
-    val d = new DataInputStream(new ByteArrayInputStream(bytes))
-    def skipHistogram(): Unit = {
-      val n = d.readInt()
-      d.skipBytes(n * 2 * 8)
-    }
-    skipHistogram()
-    skipHistogram()
-    d.skipBytes(5 * 8 + 2 * 4)
-    TableMeta(0L, 0L, Nil, Nil, None, partitionerName(readString16(d)))
+  private def readJa(in: ByteCursor): TableMeta = {
+    in.skip(16L * in.i32Length())
+    in.skip(16L * in.i32Length())
+    in.skip(5 * 8 + 2 * 4)
+    TableMeta(0L, 0L, Nil, Nil, None, partitionerName(new String(in.bytes(in.u16Length()), UTF_8)))
   }
 }

@@ -6,9 +6,9 @@ import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.SparkSession
 
-/** Reference-workload throughput measurement, shared by the per-round
-  * [[graft.Bench]] artifact and the dev-scope SSTableBenchMain: the
-  * reference's ACTUAL job is Data.db decode → k-generation LWW merge →
+/** Reference-workload throughput measurement for the [[graft.Bench]]
+  * artifact's `sstable` block (README: Build & test runs that block
+  * alone): the reference's ACTUAL job is Data.db decode → k-generation LWW merge →
   * tombstone/TTL filtering → create-only export, and the
   * matches-the-reference claim needs a NUMBER in every round's bench
   * artifact, not a one-off table in SCALE.md (VERDICT r8/r9 #6).

@@ -697,18 +697,22 @@ class MaSSTableSpec extends AnyFunSuite {
       val chunkLen = Seq(512, 1024, 1 << 16)(trial % 3)
       val dir = Files.createTempDirectory("chunk-prop")
       writeCompressed(dir, "mc-1-big", payload, codec, chunkLen)
-      val ciIn = Files.newInputStream(dir.resolve("mc-1-big-CompressionInfo.db"))
-      val info = try graft.sources.sstable.CompressedBlocks.readCompressionInfo(ciIn)
-        finally ciIn.close()
-      val dataBytes = Files.readAllBytes(dir.resolve("mc-1-big-Data.db"))
-      val in = new graft.sources.sstable.CompressedBlocks.ChunkedInputStream(
-        new ByteArrayInputStream(dataBytes), info, dataBytes.length)
-      val out = new ByteArrayOutputStream()
+      val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
       val buf = new Array[Byte](1 + rng.nextInt(700)) // odd read sizes
-      var n = in.read(buf, 0, buf.length)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf, 0, buf.length) }
-      assert(java.util.Arrays.equals(out.toByteArray, payload),
-        s"trial $trial ($codec, chunk $chunkLen, size $size) corrupted")
+      // From the start, and from a random mid-stream position (the
+      // chunk-granular start a sub-file split takes).
+      Seq(0, rng.nextInt(size)).foreach { start =>
+        val in = graft.sources.sstable.ByteCursor.data(
+          fs, dir.resolve("mc-1-big-Data.db").toString, start, verify = true)
+        val out = new ByteArrayOutputStream()
+        try while (in.remaining > 0) {
+          val n = math.min(buf.length.toLong, in.remaining).toInt
+          in.readFully(buf, 0, n)
+          out.write(buf, 0, n)
+        } finally in.close()
+        assert(java.util.Arrays.equals(out.toByteArray, payload.drop(start)),
+          s"trial $trial ($codec, chunk $chunkLen, size $size, start $start) corrupted")
+      }
     }
   }
 
@@ -3547,6 +3551,70 @@ class MaSSTableSpec extends AnyFunSuite {
     assert(msgs.exists(m => m.contains("ks-tbl-ka-1-Data.db: corrupt length prefix -2147483647") &&
       m.contains(s"in the partition at offset $offset")), msgs.mkString(" | "))
     assert(!msgs.exists(_.contains("NegativeArraySize")), msgs.mkString(" | "))
+  }
+
+  /** Read `dir` through the source: the length prefix `n` of Data.db
+    * `file`'s partition at `offset` is a named error, raised before the
+    * read allocates or runs off the end of the stream. */
+  private def assertPastEndLength(dir: java.nio.file.Path, file: String, n: Long,
+      offset: Int, columns: String = ColsSpec): Unit = {
+    val msgs = failureMessages(spark.read.format("graft.sources.sstable.MaSSTableSource")
+      .option("path", dir.toString).option("columns", columns).load().collect())
+    assert(msgs.exists(m => m.contains(s"$file: corrupt length prefix $n") &&
+      m.contains(s"in the partition at offset $offset")), msgs.mkString(" | "))
+    assert(!msgs.exists(m => m.contains("EOFException") || m.contains("OutOfMemory")),
+      msgs.mkString(" | "))
+  }
+
+  test("an ma value length past the bytes left is a named error, not an allocation") {
+    val e = new Enc
+    def partition(k: String, valueLength: Long): Unit = {
+      e.partitionHeader(k)
+      e.byte(0x20).vint(0).vint(0)
+      e.byte(0x00).vint(1L).vint(valueLength).bytes("v".getBytes(UTF_8))
+      e.byte(0x04).vint(1L)
+      e.endOfPartition()
+    }
+    partition("a", 1)
+    val offset = e.bos.size()
+    partition("b", 1L << 30)
+    val dir = Files.createTempDirectory("ma-long-length")
+    Files.write(dir.resolve("mc-1-big-Data.db"), e.result)
+    assertPastEndLength(dir, "mc-1-big-Data.db", 1L << 30, offset)
+  }
+
+  test("an ma complex cell-path length past the bytes left is a named error, not an allocation") {
+    val e = new Enc
+    def partition(k: String, pathLength: Long): Unit = {
+      e.partitionHeader(k)
+      e.byte(0x20).vint(0).vint(0)
+      e.byte(0x00).vint(1L).vint(1).bytes("v".getBytes(UTF_8))
+      e.vint(1) // one tags sub-cell, its element in the path
+      e.byte(0x04).vint(2L).vint(pathLength).bytes("red".getBytes(UTF_8))
+      e.endOfPartition()
+    }
+    partition("a", 3)
+    val offset = e.bos.size()
+    partition("b", 1L << 30)
+    val dir = Files.createTempDirectory("ma-long-path")
+    Files.write(dir.resolve("mc-1-big-Data.db"), e.result)
+    assertPastEndLength(dir, "mc-1-big-Data.db", 1L << 30, offset,
+      columns = "click:text,tags:set<text>")
+  }
+
+  test("a ka value length past the bytes left is a named error, not an allocation") {
+    val e = new KaEnc
+    e.partition("a")
+    e.cell("click", 10L, "v".getBytes(UTF_8))
+    e.endRow()
+    val offset = e.bos.size()
+    e.partition("b")
+    e.string("click"); e.byte(0); e.longlong(20L)
+    e.out.writeInt(1 << 30); e.bytes("w".getBytes(UTF_8))
+    e.endRow()
+    val dir = Files.createTempDirectory("ka-long-length")
+    Files.write(dir.resolve("ks-tbl-ka-1-Data.db"), e.result)
+    assertPastEndLength(dir, "ks-tbl-ka-1-Data.db", 1L << 30, offset)
   }
 
   test("a corrupt LZ4 length prefix is a named error with the file, not a huge allocation") {
