@@ -2,8 +2,11 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import org.apache.spark.sql.graftbridge.ColumnBridge
+
 import graft.dedup.Dedup
 import graft.functions.Exact.ratio4Sql
+import graft.functions.SessionScopedCache
 import graft.kv.Kv
 import graft.multimodal.Multimodal
 import graft.operators.{Events, Relational}
@@ -29,8 +32,41 @@ object SparkEntry {
       case None        => queries
     }
 
+  /** Each registry query's analyzed DataFrame, per session, keyed by
+    * (dir, query name) and by the content of `dir`. */
+  private val plans =
+    new SessionScopedCache[DataFrame]("queries.plan", countsAsBuild = false)
+
+  /** The query registry: every query is reached through the session
+    * plan memo, so a warm call re-analyzes nothing.
+    *  - A call looks up (dir, name) in `queries.plan`, a metadata
+    *    [[graft.functions.SessionScopedCache]] validated by the same
+    *    content fingerprint as every other memo: one
+    *    [[graft.sources.Tables.dataFiles]] listing of `dir`. A miss
+    *    builds the query as written; a hit skips the build, so the
+    *    analyzer runs once per query and content version.
+    *  - The call returns a new DataFrame over the cached analyzed plan
+    *    ([[org.apache.spark.sql.graftbridge.ColumnBridge.withNewExecution]]):
+    *    every job of the query still runs, and so do the optimizer, the
+    *    planner and AQE for the caller's action.
+    *  - A rewritten file under `dir` rebuilds the plan. So does the
+    *    release of any block-owning memo entry of the session
+    *    (a fingerprint change, `unpersist`, `evictToCap`,
+    *    `unpersistAll`), so a plan never reads a released checkpoint.
+    *  - A build is taken to depend on the files under `dir` alone, as
+    *    for every memo; a session conf a build reads (the shuffle
+    *    parallelism of [[graft.sources.Tables.withMinParallelism]])
+    *    keeps its value for the plan's content version.
+    * There is no second path: Bench, Verify and the specs all call
+    * this map. */
+  val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (name, build) =>
+      name -> ((spark: SparkSession, dir: String) => ColumnBridge.withNewExecution(
+        plans.getOrCompute(spark, dir, name)(build(spark, dir))))
+    }
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  private def registry: Map[String, (SparkSession, String) => DataFrame] = Map(
     // §2.2 relational/OLAP
     "q1_pricing_summary"       -> (Relational.q1PricingSummary _),
     "q3_shipping_priority"     -> (Relational.q3ShippingPriority _),

@@ -1,6 +1,7 @@
 package graft.functions
 
 import java.util.concurrent.{ConcurrentHashMap, ExecutionException, FutureTask}
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.annotation.tailrec
 import scala.jdk.CollectionConverters._
@@ -39,13 +40,28 @@ import org.apache.spark.sql.execution.LogicalRDD
   * own compute — so a build may look up other keys of the same
   * instance (the phash clusters build reads the phash pairs entry).
   *
-  * METADATA LOOKUPS: an instance made with `countsAsBuild = false`
-  * memoizes a metadata read, not a pipeline. The one such instance is
-  * [[graft.sources.Tables]]' `tables.schema`: one Parquet schema per
-  * table path, keyed by that table's own files, so rewriting one table
-  * re-infers only that table's schema. Its misses are not builds: they
-  * add nothing to [[DriverMemo]] or to [[SessionScopedCache.retainedEntries]],
-  * so a bench attempt's memo counters name pipeline builds only.
+  * METADATA INSTANCES: an instance made with `countsAsBuild = false`
+  * memoizes a metadata read or an analyzed plan, not a pipeline, and
+  * owns no blocks. There are two: [[graft.sources.Tables]]'
+  * `tables.schema` (one Parquet schema per table path, keyed by that
+  * table's own files, so rewriting one table re-infers only that
+  * table's schema) and [[graft.SparkEntry]]'s `queries.plan` (one
+  * analyzed DataFrame per registry query and dir).
+  *  - Their misses are not builds: they add nothing to [[DriverMemo]]
+  *    or to [[SessionScopedCache.retainedEntries]], so a bench
+  *    attempt's memo counters name pipeline builds only.
+  *  - Their entries are invisible to [[SessionScopedCache.retainedInfo]],
+  *    [[SessionScopedCache.retainedBytes]] and
+  *    [[SessionScopedCache.evictToCap]], and dropping one unpersists
+  *    nothing: a cached plan's `LogicalRDD` leaves belong to the
+  *    block-owning entries that built them, which count and free them.
+  *  - They are dropped with the session's block-owning entries. Every
+  *    release of a block-owning entry (a fingerprint change,
+  *    `unpersist`, `evictToCap`, `unpersistAll`) advances the session's
+  *    generation, and a metadata entry made under an older generation
+  *    is rebuilt on its next lookup, so a cached plan never reads a
+  *    released checkpoint. The generation is read before the build, so
+  *    a release that lands while a plan is built also invalidates it.
   *
   * LIFETIME: a weak-keyed map alone cannot free entries — a Dataset
   * strongly references its SparkSession, so a cached frame resurrects
@@ -90,21 +106,24 @@ private[graft] final class SessionScopedCache[V](val name: String,
   def getOrCompute(spark: SparkSession, dir: String, variant: String = "")(
       build: => V): V = {
     val key = Key(dir, variant)
+    // Read before the build: a release during the build leaves this
+    // entry one generation behind, so the next lookup rebuilds it.
+    val gen = if (countsAsBuild) 0L else generation(spark)
     val fp = fingerprint(spark, dir)
     val entries = perSession(spark)
     @tailrec def slot(): Entry[V] = {
-      val mine = new Entry[V](fp, new FutureTask[V](() => {
+      val mine = new Entry[V](fp, gen, new FutureTask[V](() => {
         if (countsAsBuild) DriverMemo.recordBuild()
         build
       }))
       entries.putIfAbsent(key, mine) match {
         case null => mine.task.run(); mine
-        case e if e.fingerprint == fp =>
+        case e if e.fingerprint == fp && e.generation >= gen =>
           if (!e.task.isDone && (e.builder eq Thread.currentThread()))
             throw new IllegalStateException(s"$name: ${key.label} is built from its own build")
           e
         case stale =>
-          if (entries.remove(key, stale)) release(stale)
+          if (entries.remove(key, stale)) release(spark, stale)
           slot()
       }
     }
@@ -129,9 +148,19 @@ private[graft] final class SessionScopedCache[V](val name: String,
     val removed = Option(sessions.synchronized(sessions.get(spark))).flatMap { m =>
       m.keySet.asScala.find(_.label == label).flatMap(k => Option(m.remove(k)))
     }
-    removed.foreach(release)
+    removed.foreach(release(spark, _))
     removed.isDefined
   }
+
+  /** Free a removed entry: a block-owning entry advances the session's
+    * generation first (so no metadata entry built on it is served
+    * again), then unpersists its checkpoint blocks. A metadata entry
+    * owns nothing. */
+  private def release(spark: SparkSession, e: Entry[V]): Unit =
+    if (countsAsBuild) {
+      advanceGeneration(spark)
+      e.value.foreach(rddsOf(_).foreach(_.unpersist(blocking = true)))
+    }
 }
 
 private[graft] object SessionScopedCache {
@@ -141,9 +170,10 @@ private[graft] object SessionScopedCache {
   }
 
   /** One key's value: `task` is run once, by `builder`, the thread
-    * whose lookup installed the entry. */
+    * whose lookup installed the entry. `generation` is the session's
+    * generation when the lookup began (0 in a block-owning instance). */
   private final class Entry[V](val fingerprint: Seq[(String, Long, Long)],
-      val task: FutureTask[V]) {
+      val generation: Long, val task: FutureTask[V]) {
     val builder: Thread = Thread.currentThread()
     def value: Option[V] =
       if (task.isDone) scala.util.Try(task.get()).toOption else None
@@ -171,17 +201,29 @@ private[graft] object SessionScopedCache {
     case _ => Seq.empty
   }
 
-  private def release(e: Entry[_]): Unit =
-    e.value.foreach(rddsOf(_).foreach(_.unpersist(blocking = true)))
+  /** Per session, how many block-owning entries have been released.
+    * Weak-keyed like the entry maps; a dropped session needs none. */
+  private val generations = new java.util.WeakHashMap[SparkSession, AtomicLong]()
+
+  private def generationOf(spark: SparkSession): AtomicLong =
+    generations.synchronized(generations.computeIfAbsent(spark, _ => new AtomicLong()))
+
+  private def generation(spark: SparkSession): Long = generationOf(spark).get()
+
+  private def advanceGeneration(spark: SparkSession): Unit =
+    generationOf(spark).incrementAndGet()
+
+  private def blockOwners: Seq[SessionScopedCache[_]] =
+    instances.asScala.toSeq.filter(_.countsAsBuild)
 
   /** Per-entry retained block bytes (memory + disk) for `spark`,
-    * across every instance, keyed `instance#key`. The bytes come from
-    * the SparkContext's own storage listing, so the number is the
-    * session's real footprint, not an estimate. */
+    * across every block-owning instance, keyed `instance#key`. The
+    * bytes come from the SparkContext's own storage listing, so the
+    * number is the session's real footprint, not an estimate. */
   def retainedInfo(spark: SparkSession): Map[String, Long] = {
     val storage = spark.sparkContext.getRDDStorageInfo
       .map(i => i.id -> (i.memSize + i.diskSize)).toMap
-    instances.asScala.flatMap(_.entries(spark)).map { case (k, v) =>
+    blockOwners.flatMap(_.entries(spark)).map { case (k, v) =>
       k -> rddsOf(v).map(r => storage.getOrElse(r.id, 0L)).sum
     }.toMap
   }
@@ -196,7 +238,7 @@ private[graft] object SessionScopedCache {
     * was expensive, but the entry-count delta is 1 the attempt that
     * built it and 0 every attempt after. */
   def retainedEntries(spark: SparkSession): Int =
-    instances.asScala.filter(_.countsAsBuild).map(_.entries(spark).size).sum
+    blockOwners.map(_.entries(spark).size).sum
 
   /** Drop one entry by its `instance#key` name (as printed by
     * [[retainedInfo]]), unpersisting its blocks. */

@@ -548,7 +548,7 @@ object MaFormat {
         if (present(i)) {
           cols(i) match {
             case (name0, CComplex(valueTpe)) =>
-              val name = prefix + name0
+              val name = named(prefix, name0)
               // Complex column (Cassandra UnfilteredSerializer
               // writeComplexColumn): optional complex deletion — a
               // column-scoped tombstone over every sub-cell of this
@@ -576,7 +576,7 @@ object MaFormat {
                 j += 1
               }
             case (name, tpe) =>
-              out += readCell(prefix + name, tpe, complexPath = false,
+              out += readCell(named(prefix, name), tpe, complexPath = false,
                 rowTs, rowTtl, rowDeletion)
           }
         }
@@ -584,6 +584,12 @@ object MaFormat {
       }
       out.result()
     }
+
+    /** A cell's name under its row's clustering `prefix`. Without one
+      * (every row in parity mode, static rows) it is the schema's own
+      * String, which the SSTable source maps to its cached UTF-8 name. */
+    private def named(prefix: String, name: String): String =
+      if (prefix.isEmpty) name else prefix + name
 
     /** Cell-path rendering for complex sub-cell names: printable ASCII
       * paths read as text, anything else (or a `]` that would break

@@ -8,6 +8,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
@@ -960,12 +961,15 @@ private[sstable] class MaReaderFactory(
           new FileCells(r.file, r.start, r.end, slice))))
     }
 
-  /** A stream of decoded cells, each with its partition key as text. */
+  /** A stream of decoded cells, each with its partition key and its
+    * column name as text. */
   private trait CellStream extends java.io.Closeable {
     /** Move to the next cell; false at the end. */
     def next(): Boolean
     def cell: MaFormat.MaCell
     def key: UTF8String
+    /** The cell's column name; null for a marker. */
+    def col: UTF8String
   }
 
   /** The cells of one Data.db byte range, after the residual
@@ -1005,6 +1009,14 @@ private[sstable] class MaReaderFactory(
     private val staticColumns: Seq[(String, MaFormat.ColType)] =
       opt("staticColumns").map(parseColumns)
         .orElse(stats.map(_.staticColumns)).getOrElse(Nil)
+    // The schema's column names as UTF-8, keyed by the decoder's own
+    // String instances: a plain cell names its column with exactly that
+    // instance, so it is found without hashing or re-encoding.
+    // Clustered, complex and legacy names are built per cell.
+    private val schemaNames = new java.util.IdentityHashMap[String, UTF8String]()
+    (columns ++ staticColumns).foreach { case (n, _) =>
+      schemaNames.put(n, UTF8String.fromString(n))
+    }
     private val minTimestamp: Long = stats.map(_.minTimestamp).getOrElse(0L)
     private val minTtl: Long = stats.map(_.minTtl).getOrElse(0L)
     // One cursor from the split start, in uncompressed positions whatever
@@ -1096,6 +1108,12 @@ private[sstable] class MaReaderFactory(
     override def next(): Boolean = { advance(); head != null }
     override def cell: MaFormat.MaCell = head
     override def key: UTF8String = headKey
+    override def col: UTF8String = head.col match {
+      case null => null
+      case n =>
+        val u = schemaNames.get(n)
+        if (u != null) u else UTF8String.fromString(n)
+    }
 
     override def close(): Unit = in.close()
   }
@@ -1138,34 +1156,46 @@ private[sstable] class MaReaderFactory(
     }
     override def cell: MaFormat.MaCell = sources(cur).head
     override def key: UTF8String = sources(cur).headKey
+    override def col: UTF8String = sources(cur).col
 
     override def close(): Unit = sources.foreach(_.close())
   }
 
   /** Cells as rows of the pruned output schema, from one file range or
-    * a merge slice. */
+    * a merge slice. Each cell writes only the pruned fields, into the
+    * reader's one row; the scan's projection copies it before the next
+    * `get()`, as with Spark's own file readers. */
   private final class CellRowReader(source: CellStream)
       extends PartitionReader[InternalRow] {
-    // Project only the pruned columns into the output row.
-    private val fieldIdx = requiredFields.map(
+    // Output position i holds OutputSchema field fields(i).
+    private val fields = requiredFields.map(
       MaSSTableSource.OutputSchema.fieldNames.indexOf(_))
+    private val row = new UnsafeRowWriter(fields.length)
 
     override def next(): Boolean = source.next()
 
     override def get(): InternalRow = {
       val c = source.cell
-      val full: Array[Any] = Array(
-        source.key,
-        if (c.col == null) null else UTF8String.fromString(c.col),
-        c.ts,
-        c.value,
-        c.deleted,
-        c.expiring,
-        if (c.ttlSec < 0) null else c.ttlSec,
-        if (c.deletionTs == MaFormat.NoDeletion) null else c.deletionTs,
-        c.marker,
-        c.counter)
-      InternalRow.fromSeq(fieldIdx.map(full(_)).toIndexedSeq)
+      row.reset()
+      row.zeroOutNullBytes()
+      var i = 0
+      while (i < fields.length) {
+        fields(i) match {
+          case 0 => row.write(i, source.key)
+          case 1 => val n = source.col; if (n == null) row.setNullAt(i) else row.write(i, n)
+          case 2 => row.write(i, c.ts)
+          case 3 => if (c.value == null) row.setNullAt(i) else row.write(i, c.value)
+          case 4 => row.write(i, c.deleted)
+          case 5 => row.write(i, c.expiring)
+          case 6 => if (c.ttlSec < 0) row.setNullAt(i) else row.write(i, c.ttlSec)
+          case 7 =>
+            if (c.deletionTs == MaFormat.NoDeletion) row.setNullAt(i) else row.write(i, c.deletionTs)
+          case 8 => row.write(i, c.marker)
+          case 9 => row.write(i, c.counter)
+        }
+        i += 1
+      }
+      row.getRow
     }
 
     override def close(): Unit = source.close()

@@ -24,6 +24,15 @@ object ColumnBridge {
   def toScalaConverter(dt: org.apache.spark.sql.types.DataType): Any => Any =
     org.apache.spark.sql.catalyst.CatalystTypeConverters.createToScalaConverter(dt)
 
+  /** A new DataFrame over `df`'s analyzed plan, with a QueryExecution of
+    * its own: the analyzer returns the already-analyzed plan at once,
+    * while the optimizer, the planner and AQE run again for each action
+    * of the new frame, as for any freshly built one (a second action on
+    * `df` itself would reuse its executed plan and shuffle outputs). */
+  def withNewExecution(df: DataFrame): DataFrame =
+    classic.Dataset.ofRows(df.sparkSession.asInstanceOf[classic.SparkSession],
+      df.queryExecution.analyzed)
+
   /** Apply an extensions installer's injected FUNCTIONS to an already
     * running session (the standard `withExtensions` route only works at
     * session build time; tests and notebooks attach to live sessions). */
