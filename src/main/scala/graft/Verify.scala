@@ -1,8 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+import graft.oracle.Oracle
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json ([[Oracle]]) for the DuckDB compare. */
 object Verify {
   /** WindowExec warns "No Partition Defined for Window operation!" for
     * every window without a partition key. The registry runs such
@@ -59,27 +60,13 @@ object Verify {
       }
     }
     System.err.println(s"[verify] retained high-water: $retainedHw bytes")
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), Oracle.json())
     // Locale.ROOT: a comma-decimal JVM locale would render 0,123 and
     // break the driver's json.load (Bench.scala pins ROOT for the
     // same reason — ADVICE r14).
     val timesJson = times
       .map { case (k, s) =>
-        s"${q(k)}: ${String.format(java.util.Locale.ROOT, "%.3f", Double.box(s))}" }
+        s"${Oracle.jsonString(k)}: ${String.format(java.util.Locale.ROOT, "%.3f", Double.box(s))}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/verify_times.json"), timesJson)
     spark.stop()

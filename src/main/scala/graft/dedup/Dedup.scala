@@ -1181,7 +1181,8 @@ object Dedup {
     * nearest-candidate form is also what a dedup pipeline consumes).
     * Under the full hash gate: the seed-derived planes are inlined as
     * literals in the DuckDB replay, and both audit scalars use exact
-    * (order-proof) aggregations — see SparkEntry.embeddingDedupOracleSql. */
+    * (order-proof) aggregations — see
+    * graft.oracle.SimilarityOracle.embeddingDedupOracleSql. */
   /** Memoized per-vector LSH-best frame — see the bestM comment below. */
   private val bestCache = new graft.functions.SessionScopedCache[DataFrame]("dedup.emb_best")
 
@@ -1327,7 +1328,7 @@ object Dedup {
     * unrolled Lloyd chain with the oracle's `kdef` CTE computing the
     * same doubling rule, and everything after it is per-cluster joins
     * + the proven list_dot_product cosine fold
-    * (SparkEntry.dedupSemanticOracleSql). */
+    * (graft.oracle.SimilarityOracle.dedupSemanticOracleSql). */
   /** Accounted session memo for [[semantic]]'s assigned-corpus frame. */
   private val semanticAssignCache =
     new graft.functions.SessionScopedCache[DataFrame]("dedup.semantic_assign")

@@ -27,8 +27,9 @@ import graft.sources.Tables
   * centroid (standard Lloyd's).
   *
   * Under the full hash gate since r11: both stages replay in DuckDB
-  * as unrolled Lloyd chains (SparkEntry.embKmeansOracleSql — the
-  * bpe_train unroll precedent), on top of the spec that recovers
+  * as unrolled Lloyd chains
+  * (graft.oracle.SimilarityOracle.embKmeansOracleSql — the bpe_train
+  * unroll precedent), on top of the spec that recovers
   * planted clusters exactly and pins repartition-proofness.
   */
 object Kmeans {

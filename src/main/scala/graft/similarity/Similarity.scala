@@ -62,10 +62,10 @@ object Similarity {
     * result carries its own checkable quality number. All three
     * approximate variants are additionally under the full hash gate:
     * LSH's planes are seed-derived constants
-    * (SparkEntry.annLshOracleSql inlines them), and the IVF/PQ
-    * codebook fits are deterministic by construction since the
-    * Centroids rewrite, so their trainers replay as unrolled Lloyd
-    * chains (SparkEntry.annIvfOracleSql / annPqOracleSql). The exact
+    * (graft.oracle.SimilarityOracle.annLshOracleSql inlines them), and
+    * the IVF/PQ codebook fits are deterministic by construction since
+    * the Centroids rewrite, so their trainers replay as unrolled Lloyd
+    * chains (SimilarityOracle.annIvfOracleSql / annPqOracleSql). The exact
     * truth is ONE brute-force pass per (session, dir) — the memoized
     * [[bruteTopKM]] frame every ANN report (and the tuning curve)
     * audits against (r17, guide §1.2: four approximate operators ×

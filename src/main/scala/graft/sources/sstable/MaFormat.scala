@@ -247,10 +247,6 @@ object MaFormat {
     }
   }
 
-  /** [[readSummary]] of a whole Summary.db stream. */
-  def readSummary(in: InputStream, version: String): Array[(Array[Byte], Long)] =
-    readSummary(ByteCursor(in.readAllBytes(), "Summary.db"), version)
-
   /** One pass over a whole Summary.db: the sampled entries AND the
     * trailing (first, last) bound keys (each None-safe independently) —
     * for callers that want both without opening the file twice
@@ -280,11 +276,6 @@ object MaFormat {
   def readSummaryBounds(in: ByteCursor, version: String)
       : Option[(Array[Byte], Array[Byte])] =
     scala.util.Try(readSummaryWithBounds(in, version)._2).toOption.flatten
-
-  /** [[readSummaryBounds]] of a whole Summary.db stream. */
-  def readSummaryBounds(in: InputStream, version: String)
-      : Option[(Array[Byte], Array[Byte])] =
-    readSummaryBounds(ByteCursor(in.readAllBytes(), "Summary.db"), version)
 
   /** One decoded unfiltered: a cell, or a range-tombstone marker.
     * "ma" markers carry col = null; "ka" range tombstones carry the

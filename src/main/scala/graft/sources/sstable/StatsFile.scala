@@ -1,6 +1,5 @@
 package graft.sources.sstable
 
-import java.io.InputStream
 import java.nio.charset.StandardCharsets.UTF_8
 
 /** Statistics.db reader — the reference's metadata discovery
@@ -85,10 +84,6 @@ object StatsFile {
     if (version >= "ka") readToc(in, version)
     else if (version >= "ja") readJa(in)
     else TableMeta(0L, 0L, Nil, Nil, None, Some("random"))
-
-  /** A whole Statistics.db stream; `file` names the component in errors. */
-  def read(in: InputStream, version: String, file: String = "Statistics.db"): TableMeta =
-    read(ByteCursor(in.readAllBytes(), file), version)
 
   /** Beyond the reference's "ma" ceiling: 4.x "na"/"nb" files checksum
     * this component (Cassandra 4.0 MetadataSerializer, FBUtilities

@@ -61,18 +61,16 @@ object StreamingThroughput {
   private val Types = Array("view", "click", "purchase", "refund")
   private val Users = 2000
 
-  /** The fixed event set: `n` events over `users` users in event-time
+  /** The stateful-shuffle partition count of every drain. */
+  private val Partitions = 8
+
+  /** The fixed event set: `n` events over 2,000 users in event-time
     * order; every 50th event replays the previous event_id (the
-    * at-least-once duplicate the dedup stage exists to drop). The
-    * `users` knob is the STATE-SIZE axis of the store sweep: session
-    * and z-score state scale with distinct users, dedup state with
-    * distinct event ids inside the watermark horizon (evicted only at
-    * the 3-hour jump every 20 rounds, so fewer rounds = more resident
-    * ids). */
-  def synthEvents(n: Int, users: Int = Users): Seq[Ev] = {
+    * at-least-once duplicate the dedup stage exists to drop). */
+  def synthEvents(n: Int): Seq[Ev] = {
     (0 until n).map { i =>
-      val round = i / users
-      val user = i % users
+      val round = i / Users
+      val user = i % Users
       // 5-minute cadence inside a block of 20 rounds, then a 3-hour
       // jump: closes every open session (30-min gap) and advances the
       // watermark past the dedup horizon.
@@ -92,13 +90,7 @@ object StreamingThroughput {
     * across operators and partitions, so they can exceed wall time). */
   case class DrainStats(
       secs: Double, batches: Int, addBatchMs: Long, walCommitMs: Long,
-      stateCommitMs: Long, stateUpdateMs: Long,
-      /** Peak across batches of the summed per-operator
-        * memoryUsedBytes — the state-bytes axis of the store sweep.
-        * (For RocksDB this reports the provider's own memory metric;
-        * the HDFS map store's number is the honest heap-resident
-        * figure the crossover argument needs.) */
-      stateBytes: Long = 0L)
+      stateCommitMs: Long, stateUpdateMs: Long)
 
   /** The ingest pipeline under measurement (dedup → session_window). */
   private def ingestPipeline(input: MemoryStream[Ev]): DataFrame =
@@ -148,21 +140,16 @@ object StreamingThroughput {
     * their state stores) must not leak into the bench session
     * (ADVICE r12). */
   private def drain(
-      spark: SparkSession, evs: Seq[Ev], chunks: Int, partitions: Int,
-      pipelines: Seq[MemoryStream[Ev] => DataFrame],
-      storeProvider: Option[String] = None): Seq[DrainStats] = {
+      spark: SparkSession, evs: Seq[Ev], chunks: Int,
+      pipelines: Seq[MemoryStream[Ev] => DataFrame]): Seq[DrainStats] = {
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
     val shuffleKey = "spark.sql.shuffle.partitions"
     val noDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val storeKey = "spark.sql.streaming.stateStore.providerClass"
     val priorParts = spark.conf.get(shuffleKey)
     val priorNoData = spark.conf.get(noDataKey)
-    val priorStore = spark.conf.getOption(storeKey)
-    spark.conf.set(shuffleKey, partitions.toString)
+    spark.conf.set(shuffleKey, Partitions.toString)
     spark.conf.set(noDataKey, "false")
-    storeProvider.foreach(spark.conf.set(storeKey, _))
-    if (storeProvider.contains(RocksDbProvider)) quietRocksDbJniLogger()
     val ck = ckptRoot()
     try {
       val input = MemoryStream[Ev]
@@ -191,78 +178,28 @@ object StreamingThroughput {
             Option(p.durationMs.get(k)).map(_.longValue).getOrElse(0L)).sum
           DrainStats(secs, prog.length, dur("addBatch"), dur("walCommit"),
             prog.flatMap(_.stateOperators).map(_.commitTimeMs).sum,
-            prog.flatMap(_.stateOperators).map(_.allUpdatesTimeMs).sum,
-            prog.map(_.stateOperators.map(_.memoryUsedBytes).sum)
-              .maxOption.getOrElse(0L))
+            prog.flatMap(_.stateOperators).map(_.allUpdatesTimeMs).sum)
         }
       } finally queries.foreach(q => scala.util.Try(q.stop()))
     } finally {
       spark.conf.set(shuffleKey, priorParts)
       spark.conf.set(noDataKey, priorNoData)
-      priorStore match {
-        case Some(v) => spark.conf.set(storeKey, v)
-        case None    => spark.conf.unset(storeKey)
-      }
-      // Unload every state-store provider this drain loaded. A
-      // provider left in StateStore's cache keeps its native handles
-      // and background work alive against a checkpoint we are about
-      // to delete — across a sweep that accumulates one live RocksDB
-      // instance (compaction + maintenance threads) per drain, and at
-      // JVM exit those threads log through the JNI callback while the
-      // VM is shutting down: getJniEnv cannot attach and Logv
-      // segfaults on the null env (the r15 re-run's SIGABRT/SIGSEGV —
-      // the measurement itself had COMPLETED). Stopping here closes
-      // the native handles while the JVM is fully alive; the next
-      // drain's first store access restarts the maintenance task.
+      // Unload every state-store provider this drain loaded: a
+      // provider left in StateStore's cache keeps its background
+      // maintenance work alive against the checkpoint deleted below.
+      // The next drain's first store access restarts the maintenance
+      // task.
       scala.util.Try(
         org.apache.spark.sql.execution.streaming.state.StateStore.stop())
       deleteRecursively(ck)
     }
   }
 
-  /** The RocksDB state-store provider (in-box since Spark 3.2) — the
-    * production-standard store for large state; measured against the
-    * default HDFS-backed map store by [[measureOnce]]'s `storeProvider`
-    * knob so the headline config is a measured choice. */
-  val RocksDbProvider: String =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** Pin against the r14 state sweep's JVM SIGSEGV (hs_err_pid26906:
-    * crash inside `rocksdb::LoggerJniCallback::Logv` 19 minutes into
-    * the 2M-user RocksDB cell). Spark's RocksDB wrapper registers a
-    * JNI logger whose native→JVM callback level FOLLOWS this class's
-    * slf4j logger level (RocksDB.createLogger starts at ERROR_LEVEL
-    * and raises to WARN/INFO/DEBUG when the corresponding slf4j level
-    * is enabled — verified in the 4.1.2 bytecode). With the root
-    * logger at WARN, every native WARN-level message during heavy
-    * compaction crosses the JNI boundary into the JVM logger from a
-    * RocksDB background thread — the exact frame that segfaulted.
-    * Pinning THIS logger to ERROR keeps the callback out of the hot
-    * path entirely (RocksDB emits essentially no ERROR traffic), so
-    * crash-relevant native→JVM logging never runs. Idempotent; called
-    * whenever a drain selects the RocksDB provider. */
-  def quietRocksDbJniLogger(): Unit =
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.streaming.state.RocksDB",
-      org.apache.logging.log4j.Level.ERROR)
-
   /** The headline drain: both deployed pipelines together; returns
     * wall seconds (the `streaming_throughput` bench row). */
-  def measureOnce(
-      spark: SparkSession, evs: Seq[Ev], chunks: Int = 8,
-      partitions: Int = 8, storeProvider: Option[String] = None): Double =
-    drain(spark, evs, chunks, partitions,
-      Seq(ingestPipeline, in => monitorPipeline(spark, in)),
-      storeProvider).head.secs
-
-  /** [[measureOnce]] returning the full [[DrainStats]] (incl. the
-    * state-bytes peak) — the store sweep's state-size axis. */
-  def measureStatsOnce(
-      spark: SparkSession, evs: Seq[Ev], chunks: Int = 8,
-      partitions: Int = 8, storeProvider: Option[String] = None): DrainStats =
-    drain(spark, evs, chunks, partitions,
-      Seq(ingestPipeline, in => monitorPipeline(spark, in)),
-      storeProvider).head
+  def measureOnce(spark: SparkSession, evs: Seq[Ev], chunks: Int = 8): Double =
+    drain(spark, evs, chunks,
+      Seq(ingestPipeline, in => monitorPipeline(spark, in))).head.secs
 
   /** The attribution pass (VERDICT r12 #1): each stage drained alone
     * over the same event set, so the artifact splits micro-batch
@@ -272,10 +209,9 @@ object StreamingThroughput {
     * (attribution, not a regression row — the headline row keeps
     * min-of-3). */
   def measureStages(
-      spark: SparkSession, evs: Seq[Ev], chunks: Int = 8,
-      partitions: Int = 8): Seq[(String, DrainStats)] = {
+      spark: SparkSession, evs: Seq[Ev], chunks: Int = 8): Seq[(String, DrainStats)] = {
     def one(name: String, mk: MemoryStream[Ev] => DataFrame) =
-      name -> drain(spark, evs, chunks, partitions, Seq(mk)).head
+      name -> drain(spark, evs, chunks, Seq(mk)).head
     Seq(
       one("machinery", machineryPipeline),
       one("dedup", in =>
@@ -289,9 +225,7 @@ object StreamingThroughput {
     * per-micro-batch fixed cost, a = the event-proportional work);
     * two points pin both. Published so "the ceiling is micro-batch
     * fixed cost" is a measured claim, not prose. */
-  def sweepPoint(
-      spark: SparkSession, evs: Seq[Ev], chunks: Int,
-      partitions: Int = 8): Double =
-    drain(spark, evs, chunks, partitions,
+  def sweepPoint(spark: SparkSession, evs: Seq[Ev], chunks: Int): Double =
+    drain(spark, evs, chunks,
       Seq(ingestPipeline, in => monitorPipeline(spark, in))).head.secs
 }

@@ -7,5 +7,5 @@ package graft
 object DumpOracle {
   def main(args: Array[String]): Unit =
     java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(args(1)), SparkEntry.oracleSql(args(0)))
+      java.nio.file.Paths.get(args(1)), graft.oracle.Oracle.sql(args(0)))
 }

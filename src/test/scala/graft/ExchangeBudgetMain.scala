@@ -1,6 +1,6 @@
 package graft
 
-/** Dev tool (test scope, like ProfileMain): prints every SparkEntry
+/** Dev tool (test scope, like DumpOracle): prints every SparkEntry
   * query's `Exchange hashpartitioning` count from the SAME pre-AQE plan
   * string PlanSpec's planOf reads, in the SAME Map iteration order — the
   * source of the pinned budget table in PlanSpec's exchange-budget gate.

@@ -7,7 +7,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.sources.sstable.{MaFormat, MaSSTableSource, StatsFile}
+import graft.sources.sstable.{ByteCursor, MaFormat, MaSSTableSource, StatsFile}
 import graft.sources.sstable.MaFormat._
 
 /** Round-trip spec for the minimal "ma" SSTable reader: an independent
@@ -1019,8 +1019,8 @@ class MaSSTableSpec extends AnyFunSuite {
     Seq("mc", "ja").foreach { version =>
       val dir = Files.createTempDirectory("ma-summary-rt")
       writeSummary(dir, "t", sampled, version)
-      val in = Files.newInputStream(dir.resolve("t-Summary.db"))
-      val got = try MaFormat.readSummary(in, version) finally in.close()
+      val got = MaFormat.readSummary(
+        ByteCursor(Files.readAllBytes(dir.resolve("t-Summary.db")), "Summary.db"), version)
       assert(got.map { case (k, p) => (new String(k, UTF_8), p) }.toSeq === sampled,
         s"version $version")
     }
@@ -2535,7 +2535,7 @@ class MaSSTableSpec extends AnyFunSuite {
         "tags" -> (Marshal + "SetType(" + Marshal + "UTF8Type)"),
         "attrs" -> (Marshal + "MapType(" + Marshal + "UTF8Type," + Marshal + "LongType)"),
         "log" -> (Marshal + "ListType(" + Marshal + "LongType)")))))
-    val m = StatsFile.read(new ByteArrayInputStream(bytes), "mc")
+    val m = StatsFile.read(ByteCursor(bytes, "Statistics.db"), "mc")
     assert(m.columns === Some(Seq(
       "tags" -> CComplex(CText),
       "attrs" -> CComplex(CLong),
@@ -2621,7 +2621,7 @@ class MaSSTableSpec extends AnyFunSuite {
         "click" -> (Marshal + "UTF8Type"),
         "nclicks" -> (Marshal + "LongType"),
         "weird" -> "com.example.CustomType")))) // no marshal prefix -> vint-framed
-    val m = StatsFile.read(new ByteArrayInputStream(bytes), "mc")
+    val m = StatsFile.read(ByteCursor(bytes, "Statistics.db"), "mc")
     assert(m.minTimestamp === 5000L)
     assert(m.minTtl === 77L)
     assert(m.clustering === Seq(CText, CInt32))
@@ -2633,7 +2633,7 @@ class MaSSTableSpec extends AnyFunSuite {
 
   test("ka Statistics.db yields the partitioner; no header component") {
     val bytes = statsBytes(Marshal + "RandomPartitioner", None)
-    val m = StatsFile.read(new ByteArrayInputStream(bytes), "ka")
+    val m = StatsFile.read(ByteCursor(bytes, "Statistics.db"), "ka")
     assert(m.columns === None)
     assert(m.partitioner === Some("random"))
   }
@@ -2645,7 +2645,7 @@ class MaSSTableSpec extends AnyFunSuite {
     (1 to 5).foreach(i => e.longlong(i.toLong)) // 5 fixed longs
     e.out.writeInt(0); e.out.writeInt(0) // 2 fixed ints
     e.string(Marshal + "ByteOrderedPartitioner")
-    val m = StatsFile.read(new ByteArrayInputStream(e.result), "ja")
+    val m = StatsFile.read(ByteCursor(e.result, "Statistics.db"), "ja")
     assert(m.columns === None)
     assert(m.partitioner === Some("byteOrdered"))
   }
@@ -2662,7 +2662,7 @@ class MaSSTableSpec extends AnyFunSuite {
     val mc = statsBytes(Marshal + "Murmur3Partitioner", header, version = "mc")
     assert(nb.length === mc.length + 4 * (2 + 2),
       "nb adds two TOC CRCs and one CRC per component")
-    val m = StatsFile.read(new ByteArrayInputStream(nb), "nb")
+    val m = StatsFile.read(ByteCursor(nb, "Statistics.db"), "nb")
     assert(m.minTimestamp === 9000L)
     assert(m.minTtl === 33L)
     assert(m.clustering === Seq(CInt32))
@@ -2671,7 +2671,7 @@ class MaSSTableSpec extends AnyFunSuite {
     // md/me: same unchecksummed TOC as mc (their deltas live in the
     // skipped StatsMetadata component).
     for (v <- Seq("md", "me"))
-      assert(StatsFile.read(new ByteArrayInputStream(mc), v).minTimestamp === 9000L)
+      assert(StatsFile.read(ByteCursor(mc, "Statistics.db"), v).minTimestamp === 9000L)
   }
 
   test("nb Statistics.db: corrupted TOC fails loudly, not a misparse") {
@@ -2682,7 +2682,7 @@ class MaSSTableSpec extends AnyFunSuite {
     // crc:4, entry1:8 — byte 17 sits in entry2's type/offset region).
     val bad = nb.clone(); bad(17) = (bad(17) ^ 0x40).toByte
     val ex = intercept[IllegalArgumentException] {
-      StatsFile.read(new ByteArrayInputStream(bad), "nb")
+      StatsFile.read(ByteCursor(bad, "Statistics.db"), "nb")
     }
     assert(ex.getMessage.contains("checksum mismatch"))
   }
@@ -2903,13 +2903,13 @@ class MaSSTableSpec extends AnyFunSuite {
 
     // Bounds round-trip; a summary WITHOUT trailing bounds yields None
     // (older fixtures) and keeps the un-pruned path.
-    val sin = Files.newInputStream(dir.resolve("mc-1-big-Summary.db"))
-    val b = try MaFormat.readSummaryBounds(sin, "mc") finally sin.close()
+    val b = MaFormat.readSummaryBounds(
+      ByteCursor(Files.readAllBytes(dir.resolve("mc-1-big-Summary.db")), "Summary.db"), "mc")
     assert(b.map { case (f, l) => (new String(f, UTF_8), new String(l, UTF_8)) }
       === Some((keys(0), keys(2))))
     writeSummary(dir, "unbounded", Seq("a" -> 0L))
-    val sin2 = Files.newInputStream(dir.resolve("unbounded-Summary.db"))
-    val b2 = try MaFormat.readSummaryBounds(sin2, "mc") finally sin2.close()
+    val b2 = MaFormat.readSummaryBounds(
+      ByteCursor(Files.readAllBytes(dir.resolve("unbounded-Summary.db")), "Summary.db"), "mc")
     assert(b2 === None)
   }
 

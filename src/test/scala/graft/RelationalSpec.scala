@@ -31,7 +31,7 @@ class RelationalSpec extends AnyFunSuite {
   }
 
   test("every oracleSql key has a queries entry") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    val orphans = graft.oracle.Oracle.sql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracleSql without queries: $orphans")
   }
 
