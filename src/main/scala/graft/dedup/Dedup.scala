@@ -765,7 +765,7 @@ object Dedup {
     // sum n·(n−1) (each term even), halve on the driver — SQL `/` on
     // longs would promote to double.
     val instances = Option(postings.filter(size(col("ids")) >= 2)
-      .agg(sum(n * (n - 1L))).head.get(0))
+      .agg(sum(n * (n - 1L))).head().get(0))
       .fold(0L)(_.asInstanceOf[Long] / 2L)
     val floor = postings.sparkSession.sessionState.conf.numShufflePartitions
     math.max(floor.toLong, (instances + pairsPerPartition - 1) / pairsPerPartition)

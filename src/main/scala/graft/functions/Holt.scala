@@ -18,12 +18,15 @@ import org.apache.spark.sql.types._
   *   l_t   = f_t + α·err_t
   *   b_t   = b_{t−1} + α·β·err_t
   * returning the full (l, b, err) path: level, trend, and the forecast
-  * residual an alerting rule thresholds. The trend state is what
-  * [[EwmaSeq]] structurally lacks — a steady ramp gives EWMA a
-  * permanent lag (constant nonzero err) while Holt's b converges to
-  * the slope and the residual to zero.
+  * residual an alerting rule thresholds. With β = 0 it is the EWMA
+  * recurrence (s_t = s_{t−1} + α·(x_t − s_{t−1})) bit for bit: b stays
+  * +0.0, so f = l for the non-negative series callers pass, and l and
+  * err are EWMA's level and residual. The trend state is what EWMA
+  * structurally lacks — a steady ramp gives EWMA a permanent lag
+  * (constant nonzero err) while Holt's b converges to the slope and
+  * the residual to zero.
   *
-  * Same frame class and scale contract as [[EwmaSeq]]/[[CusumSeq]]: a
+  * Same frame class and scale contract as [[CusumSeq]]: a
   * feedback recurrence neither windows nor `aggregate` emit per-step,
   * evaluated over an ALREADY-AGGREGATED dimension-sized series, so the
   * loop is bounded by the time span, never the corpus. The arithmetic

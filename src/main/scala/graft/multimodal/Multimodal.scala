@@ -213,20 +213,10 @@ object Multimodal {
       .withColumn("bucket_ppm",
         graft.sources.PersistedIndex.ppmBucket(
           col("doc_id"), concat(lit("#"), col("format"))))
-    val counts = m.groupBy(col("format"))
-      .agg(count(lit(1)).as("n_items"), sum(col("n_bytes")).as("total_bytes"))
-      .withColumn("w_q",
-        floor(sqrt(col("total_bytes").cast("double")) * 1048576.0).cast("long"))
-    val totals = counts.agg(
-      sum(col("w_q")).as("w_total"), sum(col("total_bytes")).as("corpus_bytes"))
-    val rates = counts.crossJoin(broadcast(totals))
-      .withColumn("target_bytes",
-        expr("""cast(cast(corpus_bytes div 2 as decimal(38,0)) * cast(w_q as decimal(38,0))
-               |  div cast(w_total as decimal(38,0)) as bigint)""".stripMargin))
-      .withColumn("rate_ppm",
-        least(lit(1000000L),
-          expr("""cast(cast(target_bytes as decimal(38,0)) * 1000000
-                 |  div cast(total_bytes as decimal(38,0)) as bigint)""".stripMargin)))
+    val rates = graft.sources.PersistedIndex.sqrtRates(
+        m.groupBy(col("format"))
+          .agg(count(lit(1)).as("n_items"), sum(col("n_bytes")).as("total_bytes")),
+        size = "total_bytes", total = "corpus_bytes", target = "target_bytes")
       .select(col("format"), col("n_items"), col("total_bytes"),
         col("target_bytes"), col("rate_ppm"))
     m.join(rates, Seq("format"))

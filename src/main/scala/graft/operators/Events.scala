@@ -19,6 +19,9 @@ import graft.sources.Tables
   */
 object Events {
 
+  /** One hour in epoch microseconds. */
+  private[graft] val HourUs: Long = 3600L * 1000000L
+
   /** #30 events_windowed_agg: tumbling 1-hour windows per event type.
     * Uses Spark's `window()` (the same construct the streaming variant
     * uses, so batch and stream share plan shape); epoch-aligned, so the
@@ -80,7 +83,7 @@ object Events {
     * and the 3-row summary is a global aggregate of counts. */
   /** Per-step conversion tolerance shared by [[funnel]] and
     * [[conversionLag]] — one constant so the two can never drift. */
-  private val FunnelTolUs = 72L * 3600L * 1000000L // 72h per step
+  private val FunnelTolUs = 72L * HourUs // 72h per step
 
   /** The funnel's per-user step times (t1 = first view, t2 = earliest
     * qualifying click after t1, t3 = earliest qualifying purchase
@@ -148,7 +151,7 @@ object Events {
     * corpus-derived shuffles (first-week agg, distinct, cohort join)
     * and three parquet scans for the same matrix. */
   def retention(spark: SparkSession, dir: String): DataFrame = {
-    val weekUs = 7L * 24 * 3600 * 1000000L
+    val weekUs = 7L * 24 * HourUs
     val perUser = Tables.events(spark, dir)
       .select(col("user_id"),
         unix_micros(date_trunc("week", col("ts"))).as("week_us"))
@@ -287,10 +290,9 @@ object Events {
     * over a deterministic row set, rounded to 4 decimals under one IEEE
     * divide, so the result is hash-exact cross-engine. */
   def movingAvg(spark: SparkSession, dir: String): DataFrame = {
-    val oneHourUs = 3600L * 1000000L
     val byUserRange = Window.partitionBy(col("user_id"))
       .orderBy(col("tus"))
-      .rangeBetween(-oneHourUs, 0)
+      .rangeBetween(-HourUs, 0)
     Tables.events(spark, dir)
       // value has 2-decimal precision: aggregate as integer cents so the
       // trailing sum is exact, divide once at the end.
@@ -398,6 +400,43 @@ object Events {
       .orderBy(col("window_id"))
   }
 
+  /** Each event's type and epoch hour `hr`. */
+  private def eventHours(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir)
+      .select(col("event_type"), expr(s"unix_micros(ts) div $HourUs").as("hr"))
+
+  /** The (type × hour) event count `(event_type, hr, c)` of
+    * [[eventHours]]: one map-side-combinable shuffle to a frame whose
+    * cardinality grows with span × types, never rows. Silent hours
+    * have no row. */
+  private def hourlyCounts(hours: DataFrame): DataFrame =
+    hours.groupBy(col("event_type"), col("hr")).agg(count(lit(1)).as("c"))
+
+  /** The dense hourly rate grid `(event_type, hr, c)`: [[hourlyCounts]]
+    * over every hour between the corpus's first and last event hour (a
+    * `sequence` explode off a 1-row min/max scalar), so a silent hour is
+    * a zero-rate hour, not a missing step. */
+  private def hourlyGrid(spark: SparkSession, dir: String): DataFrame = {
+    val ev = eventHours(spark, dir)
+    val cnt = hourlyCounts(ev)
+    val bounds = ev.agg(min(col("hr")).as("hmin"), max(col("hr")).as("hmax"))
+    cnt.select(col("event_type")).distinct()
+      .crossJoin(broadcast(bounds)) // 1-row scalar
+      .select(col("event_type"),
+        explode(sequence(col("hmin"), col("hmax"))).as("hr"))
+      .join(cnt, Seq("event_type", "hr"), "left_outer")
+      .withColumn("c", coalesce(col("c"), lit(0L)))
+  }
+
+  /** Each type's [[hourlyGrid]] as ONE sorted array `hs` of (hr, c)
+    * (bounded by |hours|, not |events|) and its rates as doubles in
+    * `xs`, the input of the `*_seq` recurrences. */
+  private def hourlySeries(grid: DataFrame): DataFrame =
+    grid.groupBy(col("event_type"))
+      // struct sorts by its first field, so this is the hour order.
+      .agg(sort_array(collect_list(struct(col("hr"), col("c")))).as("hs"))
+      .withColumn("xs", transform(col("hs"), e => e.getField("c").cast("double")))
+
   /** #32m events_cusum: CUSUM changepoint detection (Page 1954) on the
     * hourly event-rate series per type — the sequential drift detector
     * behind "did this event stream's rate shift?", the class of
@@ -418,27 +457,15 @@ object Events {
     * as a recursive CTE — hash-exact including the 4σ alarm boundary.
     * Slack 0.5σ, alarm at 4σ (the standard CUSUM tuning). */
   def cusum(spark: SparkSession, dir: String): DataFrame = {
-    val hourUs = 3600L * 1000000L
-    val ev = Tables.events(spark, dir)
-      .select(col("event_type"), unix_micros(col("ts")).as("tus"))
-      .withColumn("h", expr(s"tus div ${hourUs}L"))
-    val cnt = ev.groupBy(col("event_type"), col("h"))
-      .agg(count(lit(1)).as("x"))
-    val bounds = ev.agg(min(col("h")).as("hmin"), max(col("h")).as("hmax"))
-    val dense = cnt.select(col("event_type")).distinct()
-      .crossJoin(broadcast(bounds)) // 1-row scalar
-      .select(col("event_type"),
-        explode(sequence(col("hmin"), col("hmax"))).as("h"))
-    val d = dense.join(cnt, Seq("event_type", "h"), "left_outer")
-      .withColumn("x", coalesce(col("x"), lit(0L)))
+    val d = hourlyGrid(spark, dir)
     // DECIMAL(38,0) moments (the zscore convention, Exact.scala): a
     // LONG x*x wraps past ~3e9 events/hour and a LONG Σx² past ~10^12
     // busy hours — under ANSI either aborts; the decimal sums stay
     // exact at any corpus size, like DuckDB's HUGEINT promotion.
     val stats = d.groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
-        sum(col("x").cast("decimal(38,0)")).as("sx"),
-        sum(col("x").cast("decimal(38,0)") * col("x").cast("decimal(38,0)"))
+        sum(col("c").cast("decimal(38,0)")).as("sx"),
+        sum(col("c").cast("decimal(38,0)") * col("c").cast("decimal(38,0)"))
           .as("ss"))
       .withColumn("mean", col("sx").cast("double") / col("n").cast("double"))
       .withColumn("std", sqrt(greatest(
@@ -446,21 +473,18 @@ object Events {
           (col("sx").cast("double") / col("n").cast("double")) *
           (col("sx").cast("double") / col("n").cast("double")),
         lit(0.0))))
-    val series = d.groupBy(col("event_type"))
-      // struct sorts by its first field, so this is the hour order.
-      .agg(sort_array(collect_list(struct(col("h"), col("x")))).as("hs"))
+    val series = hourlySeries(d)
       .join(stats.select(col("event_type"), col("mean"), col("std")),
         Seq("event_type"))
       .withColumn("cs", graft.functions.CusumSeq.cusumSeq(
-        transform(col("hs"), e => e.getField("x").cast("double")),
-        col("mean"), col("std")))
+        col("xs"), col("mean"), col("std")))
     series
       .select(col("event_type"), col("mean"), col("std"),
         posexplode(arrays_zip(col("hs"), col("cs"))))
       .select(
         col("event_type"),
-        col("col.hs.h").as("hour"),
-        col("col.hs.x").as("n_events"),
+        col("col.hs.hr").as("hour"),
+        col("col.hs.c").as("n_events"),
         d4w(col("col.cs.sp")).as("cusum_pos"),
         d4w(col("col.cs.sn")).as("cusum_neg"),
         (col("col.cs.sp") > lit(4.0) * col("std") ||
@@ -475,7 +499,8 @@ object Events {
     * thresholds. A feedback recurrence (s_t reads s_{t−1}) is the
     * frame class neither windows nor `aggregate` HOF emit per-step —
     * the same class as 32m's CUSUM — so it runs as ONE codegen'd
-    * `ewma_seq` pass over each type's gap-densified sorted hour array.
+    * `holt_seq` pass with β = 0 (the EWMA recurrence, bit for bit) over
+    * each type's gap-densified sorted hour array.
     * Scale shape is 32m's: the corpus collapses FIRST to the
     * (type × hour) frame (one map-side-combinable shuffle; cardinality
     * grows with span × types, never rows), hours densify via a
@@ -484,34 +509,19 @@ object Events {
     * bounded by the span. Fixed IEEE sequence (err and the α-step
     * share one subtraction), replayed token-for-token by the DuckDB
     * recursive-CTE oracle — hash-exact. */
-  def ewma(spark: SparkSession, dir: String, alpha: Double = 0.25): DataFrame = {
-    val hourUs = 3600L * 1000000L
-    val ev = Tables.events(spark, dir)
-      .select(col("event_type"), unix_micros(col("ts")).as("tus"))
-      .withColumn("h", expr(s"tus div ${hourUs}L"))
-    val cnt = ev.groupBy(col("event_type"), col("h"))
-      .agg(count(lit(1)).as("x"))
-    val bounds = ev.agg(min(col("h")).as("hmin"), max(col("h")).as("hmax"))
-    val dense = cnt.select(col("event_type")).distinct()
-      .crossJoin(broadcast(bounds)) // 1-row scalar
-      .select(col("event_type"),
-        explode(sequence(col("hmin"), col("hmax"))).as("h"))
-    val d = dense.join(cnt, Seq("event_type", "h"), "left_outer")
-      .withColumn("x", coalesce(col("x"), lit(0L)))
-    d.groupBy(col("event_type"))
-      // struct sorts by its first field, so this is the hour order.
-      .agg(sort_array(collect_list(struct(col("h"), col("x")))).as("hs"))
-      .withColumn("es", graft.functions.EwmaSeq.ewmaSeq(
-        transform(col("hs"), e => e.getField("x").cast("double")), lit(alpha)))
+  def ewma(spark: SparkSession, dir: String, alpha: Double = 0.25): DataFrame =
+    hourlySeries(hourlyGrid(spark, dir))
+      // EWMA is Holt with β = 0: level l is the smoothed rate s.
+      .withColumn("es",
+        graft.functions.HoltSeq.holtSeq(col("xs"), lit(alpha), lit(0.0)))
       .select(col("event_type"), posexplode(arrays_zip(col("hs"), col("es"))))
       .select(
         col("event_type"),
-        col("col.hs.h").as("hour"),
-        col("col.hs.x").as("n_events"),
-        d4w(col("col.es.s")).as("ewma"),
+        col("col.hs.hr").as("hour"),
+        col("col.hs.c").as("n_events"),
+        d4w(col("col.es.l")).as("ewma"),
         d4w(col("col.es.err")).as("forecast_err"))
       .orderBy(col("event_type"), col("hour"))
-  }
 
   /** #32ee events_holt: Holt's double-exponential (linear-trend)
     * smoothing of the per-type hourly rate — level, trend, and the
@@ -532,36 +542,19 @@ object Events {
     * shared err term), replayed token-for-token by the DuckDB
     * recursive-CTE oracle; driver-replay spec. */
   def holt(spark: SparkSession, dir: String,
-      alpha: Double = 0.25, beta: Double = 0.3): DataFrame = {
-    val hourUs = 3600L * 1000000L
-    val ev = Tables.events(spark, dir)
-      .select(col("event_type"), unix_micros(col("ts")).as("tus"))
-      .withColumn("h", expr(s"tus div ${hourUs}L"))
-    val cnt = ev.groupBy(col("event_type"), col("h"))
-      .agg(count(lit(1)).as("x"))
-    val bounds = ev.agg(min(col("h")).as("hmin"), max(col("h")).as("hmax"))
-    val dense = cnt.select(col("event_type")).distinct()
-      .crossJoin(broadcast(bounds)) // 1-row scalar
-      .select(col("event_type"),
-        explode(sequence(col("hmin"), col("hmax"))).as("h"))
-    val d = dense.join(cnt, Seq("event_type", "h"), "left_outer")
-      .withColumn("x", coalesce(col("x"), lit(0L)))
-    d.groupBy(col("event_type"))
-      // struct sorts by its first field, so this is the hour order.
-      .agg(sort_array(collect_list(struct(col("h"), col("x")))).as("hs"))
-      .withColumn("es", graft.functions.HoltSeq.holtSeq(
-        transform(col("hs"), e => e.getField("x").cast("double")),
-        lit(alpha), lit(beta)))
+      alpha: Double = 0.25, beta: Double = 0.3): DataFrame =
+    hourlySeries(hourlyGrid(spark, dir))
+      .withColumn("es",
+        graft.functions.HoltSeq.holtSeq(col("xs"), lit(alpha), lit(beta)))
       .select(col("event_type"), posexplode(arrays_zip(col("hs"), col("es"))))
       .select(
         col("event_type"),
-        col("col.hs.h").as("hour"),
-        col("col.hs.x").as("n_events"),
+        col("col.hs.hr").as("hour"),
+        col("col.hs.c").as("n_events"),
         d4w(col("col.es.l")).as("level"),
         d4w(col("col.es.b")).as("trend"),
         d4w(col("col.es.err")).as("forecast_err"))
       .orderBy(col("event_type"), col("hour"))
-  }
 
   /** #32ff events_forecast_backtest: the model-selection report the
     * smoother family feeds — per event type, the one-step-ahead
@@ -584,27 +577,12 @@ object Events {
     * then collapses to the |types| frame. */
   def forecastBacktest(spark: SparkSession, dir: String,
       alpha: Double = 0.25, beta: Double = 0.3): DataFrame = {
-    val hourUs = 3600L * 1000000L
-    val ev = Tables.events(spark, dir)
-      .select(col("event_type"), unix_micros(col("ts")).as("tus"))
-      .withColumn("h", expr(s"tus div ${hourUs}L"))
-    val cnt = ev.groupBy(col("event_type"), col("h"))
-      .agg(count(lit(1)).as("x"))
-    val bounds = ev.agg(min(col("h")).as("hmin"), max(col("h")).as("hmax"))
-    val dense = cnt.select(col("event_type")).distinct()
-      .crossJoin(broadcast(bounds)) // 1-row scalar
-      .select(col("event_type"),
-        explode(sequence(col("hmin"), col("hmax"))).as("h"))
-    val d = dense.join(cnt, Seq("event_type", "h"), "left_outer")
-      .withColumn("x", coalesce(col("x"), lit(0L)))
     // x10000 integer of a 4-rounded double err — exact because the
     // rounded value is an exact DECIMAL(28,4).
     def e4(c: org.apache.spark.sql.Column) = round(c, 4).cast("decimal(28,4)")
-    d.groupBy(col("event_type"))
-      .agg(sort_array(collect_list(struct(col("h"), col("x")))).as("hs"))
-      .withColumn("xs",
-        transform(col("hs"), e => e.getField("x").cast("double")))
-      .withColumn("ew", graft.functions.EwmaSeq.ewmaSeq(col("xs"), lit(alpha)))
+    hourlySeries(hourlyGrid(spark, dir))
+      .withColumn("ew",
+        graft.functions.HoltSeq.holtSeq(col("xs"), lit(alpha), lit(0.0)))
       .withColumn("ho",
         graft.functions.HoltSeq.holtSeq(col("xs"), lit(alpha), lit(beta)))
       .select(col("event_type"),
@@ -891,7 +869,7 @@ object Events {
     Tables.events(spark, dir)
       .withColumn("us", unix_micros(col("ts")))
       .withColumn("dow", expr("(us div 86400000000 + 3) % 7").cast("int"))
-      .withColumn("hour", expr("(us div 3600000000) % 24").cast("int"))
+      .withColumn("hour", expr(s"(us div $HourUs) % 24").cast("int"))
       .groupBy(col("event_type"), col("dow"), col("hour"))
       .agg(
         count(lit(1)).as("n_events"),
@@ -1140,7 +1118,7 @@ object Events {
   def conversionLag(spark: SparkSession, dir: String): DataFrame = {
     val lags = funnelStepTimes(spark, dir)
       .filter(col("t2").isNotNull)
-      .select(expr("(t2 - t1) div 3600000000").as("lag_hours"))
+      .select(expr(s"(t2 - t1) div $HourUs").as("lag_hours"))
     val total = lags.agg(count(lit(1)).as("n_converters"))
     lags.groupBy(col("lag_hours"))
       .agg(count(lit(1)).as("n_users"))
@@ -1215,10 +1193,7 @@ object Events {
     * above-average gate is integer cross-multiplication
     * (c·H > N ⇔ c > N/H, no IEEE). */
   def activityIslands(spark: SparkSession, dir: String): DataFrame = {
-    val hourly = Tables.events(spark, dir)
-      .withColumn("hr", expr("unix_micros(ts) div 3600000000"))
-      .groupBy(col("event_type"), col("hr"))
-      .agg(count(lit(1)).as("c"))
+    val hourly = hourlyCounts(eventHours(spark, dir))
     val m = hourly.groupBy(col("event_type"))
       .agg(sum(col("c")).as("n_ev"),
         (max(col("hr")) - min(col("hr")) + 1).as("h"))
@@ -1235,8 +1210,8 @@ object Events {
         sum(col("c")).as("n_events"))
       .select(
         col("event_type"),
-        timestamp_micros(col("start_hr") * 3600000000L).as("island_start"),
-        timestamp_micros((col("end_hr") + 1) * 3600000000L).as("island_end"),
+        timestamp_micros(col("start_hr") * HourUs).as("island_start"),
+        timestamp_micros((col("end_hr") + 1) * HourUs).as("island_end"),
         col("n_hours"), col("n_events"))
       .orderBy(col("event_type"), col("island_start"))
   }
@@ -1256,10 +1231,7 @@ object Events {
     * correctly-rounded operation (not a libm approximation), so the
     * pinned expression is engine-exact like any divide. */
   def autocorr(spark: SparkSession, dir: String): DataFrame = {
-    val hourly = Tables.events(spark, dir)
-      .withColumn("hr", expr("unix_micros(ts) div 3600000000"))
-      .groupBy(col("event_type"), col("hr"))
-      .agg(count(lit(1)).as("c"))
+    val hourly = hourlyCounts(eventHours(spark, dir))
     val adj = hourly.as("a")
       .join(hourly.select(col("event_type"), (col("hr") - 1).as("hr"),
         col("c").as("c_next")).as("b"), Seq("event_type", "hr"))
@@ -1319,10 +1291,7 @@ object Events {
     * dimension-sized hourly frame; the span rides min/max hour —
     * silent hours are arithmetic, never generated rows. */
   def burstiness(spark: SparkSession, dir: String): DataFrame = {
-    val hourly = Tables.events(spark, dir)
-      .withColumn("hr", expr("unix_micros(ts) div 3600000000"))
-      .groupBy(col("event_type"), col("hr"))
-      .agg(count(lit(1)).as("c"))
+    val hourly = hourlyCounts(eventHours(spark, dir))
     hourly.groupBy(col("event_type"))
       .agg(
         sum(col("c")).as("n_events"),

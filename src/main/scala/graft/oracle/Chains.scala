@@ -276,4 +276,99 @@ private[oracle] object Chains {
       .mkString(",\n")
 
   val ClustersCtePrefix: String = "WITH RECURSIVE " + clusterCtes()
+
+  /** How many of a document's tokens `toks` are in the SQL list
+    * `words`, as a `typ`; the list starts a new line indented `ind`. */
+  def wordCount(words: String, ind: String, typ: String): String =
+    s"CAST(len(list_filter(toks, x -> list_contains(\n$ind$words, x))) AS $typ)"
+
+  /** The stopword list of the text quality score. */
+  val QualityStopwords = "['the','a','an','and','or','of','to','in','is','it','on','for']"
+
+  /** The text quality score's inputs over `documents`, one column a
+    * line: the tokens `toks`, `n_chars` and the punctuation count
+    * `punct`. */
+  val qualityInputCols: String =
+    raw"""  string_split_regex(lower(text), '\s+') AS toks,
+      |  CAST(length(text) AS DOUBLE) AS n_chars,
+      |  CAST(length(regexp_replace(lower(text), '[a-z0-9\s]', '', 'g')) AS DOUBLE) AS punct""".stripMargin
+
+  /** The text quality score (length, stopword density and punctuation
+    * blended 0.4/0.4/0.2, as an exact 4-place DECIMAL read back as a
+    * DOUBLE) over `n_chars`, `punct`, the stopword count `stops` and
+    * the token count `nToks`. Each term starts a line indented `ind`;
+    * `sep` separates `stops` from its divisor. */
+  def qualityScore(ind: String, stops: String = "stops", nToks: String = "n_toks",
+      sep: String = " "): String =
+    s"""CAST(CAST(ROUND(
+      |${ind}LEAST(n_chars / 500.0, 1.0) * 0.4
+      |$ind+ LEAST($stops$sep/ GREATEST($nToks * 0.05, 1.0), 1.0) * 0.4
+      |$ind+ GREATEST(1.0 - punct / GREATEST(n_chars * 0.1, 1.0), 0.0) * 0.2, 4)
+      |${ind}AS DECIMAL(10,4)) AS DOUBLE)""".stripMargin
+
+  /** The stopword lists of the 4-language langid, by language. */
+  val LangStopwords: Seq[(String, String)] = Seq(
+    "en" -> "['the','and','of','to','is','that','with','for']",
+    "de" -> "['der','die','das','und','ist','nicht','ein','mit']",
+    "fr" -> "['le','la','les','et','est','pas','une','dans']",
+    "es" -> "['el','los','las','es','y','no','una','por']")
+
+  /** One stopword-count column per language, a `typ` followed by
+    * `per`: `<prefix>_<lang>`. */
+  def langCountCols(typ: String, per: String, prefix: String): String =
+    LangStopwords.map { case (lang, words) =>
+      s"    ${wordCount(words, "      ", typ)}$per AS ${prefix}_$lang"
+    }.mkString(",\n")
+
+  /** The langid argmax input: one row per language of `from`, carrying
+    * `cols` and the struct `b` = {`key`: `<prefix>_<lang>`, 'lang'}, so
+    * MAX(b) picks the best-scoring language. */
+  def langUnion(cols: String, key: String, prefix: String, from: String): String =
+    LangStopwords.map(_._1).zipWithIndex.map { case (lang, i) =>
+      val b = s"{'$key': ${prefix}_$lang, 'lang': '$lang'}"
+      if (i == 0) s"    SELECT $cols, $b AS b FROM $from"
+      else s"    UNION ALL SELECT $cols, $b FROM $from"
+    }.mkString("\n")
+
+  /** The stopword-share langid chain of text_lang_mix and
+    * curation_report: tokens (`t`), their count `n` (`s`), each
+    * language's stopword share and the CJK character share `cjk`
+    * (`sc`), and the best language `best.lang` per document (`lng`).
+    * `carry` lists extra columns (", source") every CTE keeps. */
+  def langShareCtes(t: String, s: String, sc: String, lng: String,
+      carry: String): String =
+    raw"""$t AS (SELECT doc_id, text$carry,
+      |    string_split_regex(lower(text), '\s+') AS toks FROM documents),
+      |$s AS (SELECT doc_id, text$carry, toks,
+      |    CAST(GREATEST(len(toks), 1) AS DOUBLE) AS n FROM $t),
+      |$sc AS (SELECT doc_id$carry,
+      |${langCountCols("DOUBLE", " / n", "s")},
+      |    CAST(length(text) - length(regexp_replace(text, '[\x{4e00}-\x{9fff}]', '', 'g'))
+      |      AS DOUBLE) / CAST(GREATEST(length(text), 1) AS DOUBLE) AS cjk
+      |  FROM $s),
+      |$lng AS (
+      |  SELECT doc_id$carry, cjk, MAX(b) AS best FROM (
+      |${langUnion(s"doc_id$carry, cjk", "score", "s", sc)}) u
+      |  GROUP BY doc_id$carry, cjk)""".stripMargin
+
+  /** The √n (temperature α = 0.5) sampling rates as the CTEs `c`, `t`,
+    * `r` and `r2`: per group of `from`, `w_q` = √`sizeAgg` in 2⁻²⁰
+    * BIGINT units, the group's √-share `target` of half the corpus
+    * (`total` = Σ`size`), and `rate_ppm` = min(10⁶, target · 10⁶ //
+    * size) — all integer arithmetic after the floor. `cCols`, `rCols`
+    * and `r2Cols` are the group and size columns c, r and r2 carry. */
+  def sqrtRateCtes(cCols: String, sizeAgg: String, from: String, size: String,
+      total: String, target: String, rCols: String, r2Cols: String): String =
+    s"""c AS (SELECT $cCols,
+      |    CAST(FLOOR(sqrt(CAST($sizeAgg AS DOUBLE)) * 1048576.0) AS BIGINT) AS w_q
+      |  FROM $from),
+      |t AS (SELECT SUM(w_q) AS w_total, SUM($size) AS $total FROM c),
+      |r AS (SELECT $rCols,
+      |    CAST(((CAST($total AS HUGEINT) // 2) * CAST(w_q AS HUGEINT))
+      |      // CAST(w_total AS HUGEINT) AS BIGINT) AS $target
+      |  FROM c, t),
+      |r2 AS (SELECT $r2Cols,
+      |    LEAST(1000000, CAST((CAST($target AS HUGEINT) * 1000000)
+      |      // CAST($size AS HUGEINT) AS BIGINT)) AS rate_ppm
+      |  FROM r)""".stripMargin
 }

@@ -74,8 +74,8 @@ private[oracle] object EventsOracle {
 
     // The EWMA recurrence replayed as a recursive CTE: base row seeds
     // s = x, err = 0; each step's err and α-update read the SAME
-    // (x − s_prev) subtraction the codegen'd ewma_seq computes, so the
-    // paths are bit-identical.
+    // (x − s_prev) subtraction the codegen'd holt_seq computes with
+    // β = 0, so the paths are bit-identical.
     "events_ewma" ->
       s"""WITH RECURSIVE
         |$HourlySeriesCtes,

@@ -18,19 +18,12 @@ private[oracle] object MultimodalOracle {
         |      md5(CAST(doc_id AS VARCHAR) || '#' || format), 1, 12)) AS UBIGINT)
         |      % 1000000 AS BIGINT) AS bucket_ppm
         |  FROM med),
-        |c AS (SELECT format, COUNT(*)::BIGINT AS n_items,
-        |    SUM(n_bytes)::BIGINT AS total_bytes,
-        |    CAST(FLOOR(sqrt(CAST(SUM(n_bytes) AS DOUBLE)) * 1048576.0) AS BIGINT) AS w_q
-        |  FROM b GROUP BY format),
-        |t AS (SELECT SUM(w_q) AS w_total, SUM(total_bytes) AS corpus_bytes FROM c),
-        |r AS (SELECT c.format, c.n_items, c.total_bytes,
-        |    CAST(((CAST(corpus_bytes AS HUGEINT) // 2) * CAST(w_q AS HUGEINT))
-        |      // CAST(w_total AS HUGEINT) AS BIGINT) AS target_bytes
-        |  FROM c, t),
-        |r2 AS (SELECT format, n_items, total_bytes, target_bytes,
-        |    LEAST(1000000, CAST((CAST(target_bytes AS HUGEINT) * 1000000)
-        |      // CAST(total_bytes AS HUGEINT) AS BIGINT)) AS rate_ppm
-        |  FROM r),
+        |${sqrtRateCtes(
+               cCols = "format, COUNT(*)::BIGINT AS n_items,\n    SUM(n_bytes)::BIGINT AS total_bytes",
+               sizeAgg = "SUM(n_bytes)", from = "b GROUP BY format", size = "total_bytes",
+               total = "corpus_bytes", target = "target_bytes",
+               rCols = "c.format, c.n_items, c.total_bytes",
+               r2Cols = "format, n_items, total_bytes, target_bytes")},
         |s AS (SELECT b.format,
         |    CAST(SUM(CASE WHEN b.bucket_ppm < r2.rate_ppm THEN 1 ELSE 0 END) AS BIGINT)
         |      AS n_sampled,

@@ -7,6 +7,10 @@ import Chains._
 /** Oracle SQL of the curation pipeline reports. */
 private[oracle] object PipelineOracle {
 
+  /** The text quality score's inputs per document, as `qt`. */
+  private val QualityQtCte: String =
+    s"qt AS (SELECT doc_id,\n$qualityInputCols\n  FROM documents)"
+
   /** dedup_quality_audit: the [[ClustersCtePrefix]] verdict chain
     * joined to text_quality's proven score fragments — per dedup
     * verdict, exact integer token/q4 sums and tie-free ratio4
@@ -15,19 +19,11 @@ private[oracle] object PipelineOracle {
     * threshold). */
   private val DedupQualityAuditOracleSql: String = ClustersCtePrefix +
     raw""",
-      |qt AS (SELECT doc_id,
-      |  string_split_regex(lower(text), '\s+') AS toks,
-      |  CAST(length(text) AS DOUBLE) AS n_chars,
-      |  CAST(length(regexp_replace(lower(text), '[a-z0-9\s]', '', 'g')) AS DOUBLE) AS punct
-      |  FROM documents),
+      |$QualityQtCte,
       |qs AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_toks,
-      |  CAST(ROUND(CAST(CAST(ROUND(
-      |    LEAST(n_chars / 500.0, 1.0) * 0.4
-      |    + LEAST(CAST(len(list_filter(toks, x -> list_contains(
-      |        ['the','a','an','and','or','of','to','in','is','it','on','for'], x))) AS DOUBLE)
-      |        / GREATEST(CAST(len(toks) AS DOUBLE) * 0.05, 1.0), 1.0) * 0.4
-      |    + GREATEST(1.0 - punct / GREATEST(n_chars * 0.1, 1.0), 0.0) * 0.2, 4)
-      |    AS DECIMAL(10,4)) AS DOUBLE) * 10000.0, 0) AS BIGINT) AS q4
+      |  CAST(ROUND(${qualityScore("    ",
+             stops = wordCount(QualityStopwords, "        ", "DOUBLE"),
+             nToks = "CAST(len(toks) AS DOUBLE)", sep = "\n        ")} * 10000.0, 0) AS BIGINT) AS q4
       |  FROM qt),
       |vq AS (SELECT
       |    CASE WHEN c.cluster_id IS NULL THEN 'unique'
@@ -78,46 +74,15 @@ private[oracle] object PipelineOracle {
     // sampler (sample_stratified), each verbatim.
     "curation_report" ->
       ("WITH RECURSIVE " + clusterCtes("toks3", "sh3", "prs") + raw""",
-        |qt AS (SELECT doc_id,
-        |  string_split_regex(lower(text), '\s+') AS toks,
-        |  CAST(length(text) AS DOUBLE) AS n_chars,
-        |  CAST(length(regexp_replace(lower(text), '[a-z0-9\s]', '', 'g')) AS DOUBLE) AS punct
-        |  FROM documents),
+        |$QualityQtCte,
         |qs AS (SELECT doc_id, n_chars, punct,
         |  CAST(len(toks) AS DOUBLE) AS n_toks,
-        |  CAST(len(list_filter(toks, x -> list_contains(
-        |    ['the','a','an','and','or','of','to','in','is','it','on','for'], x))) AS DOUBLE) AS stops
+        |  ${wordCount(QualityStopwords, "    ", "DOUBLE")} AS stops
         |  FROM qt),
         |qq AS (SELECT doc_id,
-        |  CAST(CAST(ROUND(
-        |    LEAST(n_chars / 500.0, 1.0) * 0.4
-        |    + LEAST(stops / GREATEST(n_toks * 0.05, 1.0), 1.0) * 0.4
-        |    + GREATEST(1.0 - punct / GREATEST(n_chars * 0.1, 1.0), 0.0) * 0.2, 4)
-        |    AS DECIMAL(10,4)) AS DOUBLE) AS quality_score
+        |  ${qualityScore("    ")} AS quality_score
         |  FROM qs),
-        |lt AS (SELECT doc_id, text,
-        |    string_split_regex(lower(text), '\s+') AS toks FROM documents),
-        |ls AS (SELECT doc_id, text, toks,
-        |    CAST(GREATEST(len(toks), 1) AS DOUBLE) AS n FROM lt),
-        |lsc AS (SELECT doc_id,
-        |    CAST(len(list_filter(toks, x -> list_contains(
-        |      ['the','and','of','to','is','that','with','for'], x))) AS DOUBLE) / n AS s_en,
-        |    CAST(len(list_filter(toks, x -> list_contains(
-        |      ['der','die','das','und','ist','nicht','ein','mit'], x))) AS DOUBLE) / n AS s_de,
-        |    CAST(len(list_filter(toks, x -> list_contains(
-        |      ['le','la','les','et','est','pas','une','dans'], x))) AS DOUBLE) / n AS s_fr,
-        |    CAST(len(list_filter(toks, x -> list_contains(
-        |      ['el','los','las','es','y','no','una','por'], x))) AS DOUBLE) / n AS s_es,
-        |    CAST(length(text) - length(regexp_replace(text, '[\x{4e00}-\x{9fff}]', '', 'g'))
-        |      AS DOUBLE) / CAST(GREATEST(length(text), 1) AS DOUBLE) AS cjk
-        |  FROM ls),
-        |llng AS (
-        |  SELECT doc_id, cjk, MAX(b) AS best FROM (
-        |    SELECT doc_id, cjk, {'score': s_en, 'lang': 'en'} AS b FROM lsc
-        |    UNION ALL SELECT doc_id, cjk, {'score': s_de, 'lang': 'de'} FROM lsc
-        |    UNION ALL SELECT doc_id, cjk, {'score': s_fr, 'lang': 'fr'} FROM lsc
-        |    UNION ALL SELECT doc_id, cjk, {'score': s_es, 'lang': 'es'} FROM lsc) u
-        |  GROUP BY doc_id, cjk),
+        |${langShareCtes("lt", "ls", "lsc", "llng", "")},
         |lpred AS (SELECT doc_id,
         |    CASE WHEN cjk > 0.3 THEN 'zh' ELSE best.lang END AS pred_lang
         |  FROM llng),
@@ -204,18 +169,10 @@ private[oracle] object PipelineOracle {
         |      md5(CAST(doc_id AS VARCHAR) || '#' || format), 1, 12)) AS UBIGINT)
         |      % 1000000 AS BIGINT) AS bucket_ppm
         |  FROM it),
-        |c AS (SELECT format, SUM(nb)::BIGINT AS fmt_bytes,
-        |    CAST(FLOOR(sqrt(CAST(SUM(nb) AS DOUBLE)) * 1048576.0) AS BIGINT) AS w_q
-        |  FROM itb WHERE s2 GROUP BY format),
-        |t AS (SELECT SUM(w_q) AS w_total, SUM(fmt_bytes) AS dedup_bytes FROM c),
-        |r AS (SELECT format, fmt_bytes,
-        |    CAST(((CAST(dedup_bytes AS HUGEINT) // 2) * CAST(w_q AS HUGEINT))
-        |      // CAST(w_total AS HUGEINT) AS BIGINT) AS target_bytes
-        |  FROM c, t),
-        |r2 AS (SELECT format,
-        |    LEAST(1000000, CAST((CAST(target_bytes AS HUGEINT) * 1000000)
-        |      // CAST(fmt_bytes AS HUGEINT) AS BIGINT)) AS rate_ppm
-        |  FROM r),
+        |${sqrtRateCtes(cCols = "format, SUM(nb)::BIGINT AS fmt_bytes", sizeAgg = "SUM(nb)",
+               from = "itb WHERE s2 GROUP BY format", size = "fmt_bytes",
+               total = "dedup_bytes", target = "target_bytes", rCols = "format, fmt_bytes",
+               r2Cols = "format")},
         |fl AS (SELECT itb.*, (s2 AND bucket_ppm < COALESCE(r2.rate_ppm, 0)) AS s3
         |  FROM itb LEFT JOIN r2 USING (format)),
         |rep AS (

@@ -130,31 +130,21 @@ private[oracle] object TextOracle {
         |FROM n LEFT JOIN h USING (doc_id)
         |ORDER BY n.doc_id""".stripMargin
 
+  /** text_quality's inputs with the digit count (`t`) and its token
+    * and stopword counts (`s`), shared with text_quality_curve. */
+  private val QualityCtes: String =
+    s"""WITH t AS (SELECT doc_id, text,
+      |$qualityInputCols,
+      |  CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) AS digits
+      |  FROM documents),
+      |s AS (SELECT *,
+      |  CAST(len(toks) AS DOUBLE) AS n_toks,
+      |  ${wordCount(QualityStopwords, "    ", "DOUBLE")} AS stops
+      |  FROM t)""".stripMargin
+
   val sql: Map[String, String] = Map(
     "text_lang_mix" ->
-      raw"""WITH t AS (SELECT doc_id, text, source,
-        |    string_split_regex(lower(text), '\s+') AS toks FROM documents),
-        |s AS (SELECT doc_id, text, source, toks,
-        |    CAST(GREATEST(len(toks), 1) AS DOUBLE) AS n FROM t),
-        |sc AS (SELECT doc_id, source,
-        |    CAST(len(list_filter(toks, x -> list_contains(
-        |      ['the','and','of','to','is','that','with','for'], x))) AS DOUBLE) / n AS s_en,
-        |    CAST(len(list_filter(toks, x -> list_contains(
-        |      ['der','die','das','und','ist','nicht','ein','mit'], x))) AS DOUBLE) / n AS s_de,
-        |    CAST(len(list_filter(toks, x -> list_contains(
-        |      ['le','la','les','et','est','pas','une','dans'], x))) AS DOUBLE) / n AS s_fr,
-        |    CAST(len(list_filter(toks, x -> list_contains(
-        |      ['el','los','las','es','y','no','una','por'], x))) AS DOUBLE) / n AS s_es,
-        |    CAST(length(text) - length(regexp_replace(text, '[\x{4e00}-\x{9fff}]', '', 'g'))
-        |      AS DOUBLE) / CAST(GREATEST(length(text), 1) AS DOUBLE) AS cjk
-        |  FROM s),
-        |lng AS (
-        |  SELECT doc_id, source, cjk, MAX(b) AS best FROM (
-        |    SELECT doc_id, source, cjk, {'score': s_en, 'lang': 'en'} AS b FROM sc
-        |    UNION ALL SELECT doc_id, source, cjk, {'score': s_de, 'lang': 'de'} FROM sc
-        |    UNION ALL SELECT doc_id, source, cjk, {'score': s_fr, 'lang': 'fr'} FROM sc
-        |    UNION ALL SELECT doc_id, source, cjk, {'score': s_es, 'lang': 'es'} FROM sc) u
-        |  GROUP BY doc_id, source, cjk),
+      raw"""WITH ${langShareCtes("t", "s", "sc", "lng", ", source")},
         |pred AS (SELECT source,
         |    CASE WHEN cjk > 0.3 THEN 'zh' ELSE best.lang END AS pred_lang
         |  FROM lng),
@@ -173,24 +163,14 @@ private[oracle] object TextOracle {
         |s AS (SELECT doc_id, text, toks,
         |    CAST(GREATEST(len(toks), 1) AS BIGINT) AS n FROM t),
         |sc AS (SELECT doc_id, n,
-        |    CAST(len(list_filter(toks, x -> list_contains(
-        |      ['the','and','of','to','is','that','with','for'], x))) AS BIGINT) AS c_en,
-        |    CAST(len(list_filter(toks, x -> list_contains(
-        |      ['der','die','das','und','ist','nicht','ein','mit'], x))) AS BIGINT) AS c_de,
-        |    CAST(len(list_filter(toks, x -> list_contains(
-        |      ['le','la','les','et','est','pas','une','dans'], x))) AS BIGINT) AS c_fr,
-        |    CAST(len(list_filter(toks, x -> list_contains(
-        |      ['el','los','las','es','y','no','una','por'], x))) AS BIGINT) AS c_es,
+        |${langCountCols("BIGINT", "", "c")},
         |    CAST(length(text) - length(regexp_replace(text, '[\x{4e00}-\x{9fff}]', '', 'g'))
         |      AS BIGINT) AS cjk_c,
         |    CAST(GREATEST(length(text), 1) AS BIGINT) AS n_chars
         |  FROM s),
         |lng AS (
         |  SELECT doc_id, cjk_c, n_chars, n, MAX(b) AS best FROM (
-        |    SELECT doc_id, cjk_c, n_chars, n, {'n': c_en, 'lang': 'en'} AS b FROM sc
-        |    UNION ALL SELECT doc_id, cjk_c, n_chars, n, {'n': c_de, 'lang': 'de'} FROM sc
-        |    UNION ALL SELECT doc_id, cjk_c, n_chars, n, {'n': c_fr, 'lang': 'fr'} FROM sc
-        |    UNION ALL SELECT doc_id, cjk_c, n_chars, n, {'n': c_es, 'lang': 'es'} FROM sc) u
+        |${langUnion("doc_id, cjk_c, n_chars, n", "n", "c", "sc")}) u
         |  GROUP BY doc_id, cjk_c, n_chars, n)
         |SELECT doc_id,
         |  CASE WHEN CAST(cjk_c AS DOUBLE) / CAST(n_chars AS DOUBLE) > 0.3
@@ -250,23 +230,9 @@ private[oracle] object TextOracle {
         |ORDER BY d.doc_id""".stripMargin),
 
     "text_quality_curve" ->
-      raw"""WITH t AS (SELECT doc_id, text,
-        |  string_split_regex(lower(text), '\s+') AS toks,
-        |  CAST(length(text) AS DOUBLE) AS n_chars,
-        |  CAST(length(regexp_replace(lower(text), '[a-z0-9\s]', '', 'g')) AS DOUBLE) AS punct,
-        |  CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) AS digits
-        |  FROM documents),
-        |s AS (SELECT *,
-        |  CAST(len(toks) AS DOUBLE) AS n_toks,
-        |  CAST(len(list_filter(toks, x -> list_contains(
-        |    ['the','a','an','and','or','of','to','in','is','it','on','for'], x))) AS DOUBLE) AS stops
-        |  FROM t),
+      raw"""$QualityCtes,
         |sc AS (SELECT doc_id, CAST(n_toks AS BIGINT) AS n_tokens,
-        | CAST(CAST(ROUND(
-        |   LEAST(n_chars / 500.0, 1.0) * 0.4
-        |   + LEAST(stops / GREATEST(n_toks * 0.05, 1.0), 1.0) * 0.4
-        |   + GREATEST(1.0 - punct / GREATEST(n_chars * 0.1, 1.0), 0.0) * 0.2, 4)
-        |   AS DECIMAL(10,4)) AS DOUBLE) AS score
+        | ${qualityScore("   ")} AS score
         | FROM s),
         |tot AS (SELECT COUNT(*)::BIGINT AS n_docs,
         |  SUM(n_tokens)::BIGINT AS n_tokens_all FROM sc),
@@ -512,18 +478,10 @@ private[oracle] object TextOracle {
         |      md5(CAST(doc_id AS VARCHAR) || '#' || source), 1, 12)) AS UBIGINT)
         |      % 1000000 AS BIGINT) AS bucket_ppm
         |  FROM documents),
-        |c AS (SELECT source, COUNT(*) AS n_docs,
-        |    CAST(FLOOR(sqrt(CAST(COUNT(*) AS DOUBLE)) * 1048576.0) AS BIGINT) AS w_q
-        |  FROM b GROUP BY source),
-        |t AS (SELECT SUM(w_q) AS w_total, SUM(n_docs) AS corpus_docs FROM c),
-        |r AS (SELECT c.source, c.n_docs,
-        |    CAST(((CAST(corpus_docs AS HUGEINT) // 2) * CAST(w_q AS HUGEINT))
-        |      // CAST(w_total AS HUGEINT) AS BIGINT) AS target_docs
-        |  FROM c, t),
-        |r2 AS (SELECT source, n_docs, target_docs,
-        |    LEAST(1000000, CAST((CAST(target_docs AS HUGEINT) * 1000000)
-        |      // CAST(n_docs AS HUGEINT) AS BIGINT)) AS rate_ppm
-        |  FROM r),
+        |${sqrtRateCtes(cCols = "source, COUNT(*) AS n_docs", sizeAgg = "COUNT(*)",
+               from = "b GROUP BY source", size = "n_docs", total = "corpus_docs",
+               target = "target_docs", rCols = "c.source, c.n_docs",
+               r2Cols = "source, n_docs, target_docs")},
         |s AS (SELECT b.source,
         |    CAST(SUM(CASE WHEN b.bucket_ppm < r2.rate_ppm THEN 1 ELSE 0 END) AS BIGINT) AS n_sampled
         |  FROM b JOIN r2 USING (source) GROUP BY b.source)
@@ -754,28 +712,14 @@ private[oracle] object TextOracle {
         |ORDER BY doc_id""".stripMargin,
 
     "text_quality" ->
-      raw"""WITH t AS (SELECT doc_id, text,
-        |  string_split_regex(lower(text), '\s+') AS toks,
-        |  CAST(length(text) AS DOUBLE) AS n_chars,
-        |  CAST(length(regexp_replace(lower(text), '[a-z0-9\s]', '', 'g')) AS DOUBLE) AS punct,
-        |  CAST(length(regexp_replace(text, '[^0-9]', '', 'g')) AS DOUBLE) AS digits
-        |  FROM documents),
-        |s AS (SELECT *,
-        |  CAST(len(toks) AS DOUBLE) AS n_toks,
-        |  CAST(len(list_filter(toks, x -> list_contains(
-        |    ['the','a','an','and','or','of','to','in','is','it','on','for'], x))) AS DOUBLE) AS stops
-        |  FROM t)
+      raw"""$QualityCtes
         |SELECT doc_id,
         | CAST(n_chars AS INT) AS n_chars,
         | CAST(n_toks AS INT) AS n_tokens,
         | ${ratio4Sql("punct", "GREATEST(n_chars, 1)")} AS punct_ratio,
         | ${ratio4Sql("digits", "GREATEST(n_chars, 1)")} AS digit_ratio,
         | ${ratio4Sql("stops", "GREATEST(n_toks, 1)")} AS stopword_ratio,
-        | CAST(CAST(ROUND(
-        |   LEAST(n_chars / 500.0, 1.0) * 0.4
-        |   + LEAST(stops / GREATEST(n_toks * 0.05, 1.0), 1.0) * 0.4
-        |   + GREATEST(1.0 - punct / GREATEST(n_chars * 0.1, 1.0), 0.0) * 0.2, 4)
-        |   AS DECIMAL(10,4)) AS DOUBLE) AS quality_score
+        | ${qualityScore("   ")} AS quality_score
         |FROM s
         |ORDER BY doc_id""".stripMargin,
 

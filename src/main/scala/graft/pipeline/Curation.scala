@@ -223,21 +223,10 @@ object Curation {
           col("doc_id"), concat(lit("#"), col("format"))))
       .withColumn("s1", col("nb") > 0L)
       .withColumn("s2", col("s1") && col("_dropped").isNull)
-    val counts = flagged.filter(col("s2")).groupBy(col("format"))
-      .agg(sum(col("nb")).as("fmt_bytes"))
-      .withColumn("w_q",
-        floor(sqrt(col("fmt_bytes").cast("double")) * 1048576.0).cast("long"))
-    val totals = counts.agg(
-      sum(col("w_q")).as("w_total"), sum(col("fmt_bytes")).as("dedup_bytes"))
-    val rates = counts.crossJoin(broadcast(totals))
-      .withColumn("target_bytes",
-        expr("""cast(cast(dedup_bytes div 2 as decimal(38,0))
-               |  * cast(w_q as decimal(38,0))
-               |  div cast(w_total as decimal(38,0)) as bigint)""".stripMargin))
-      .withColumn("rate_ppm",
-        least(lit(1000000L),
-          expr("""cast(cast(target_bytes as decimal(38,0)) * 1000000
-                 |  div cast(fmt_bytes as decimal(38,0)) as bigint)""".stripMargin)))
+    val rates = graft.sources.PersistedIndex.sqrtRates(
+        flagged.filter(col("s2")).groupBy(col("format"))
+          .agg(sum(col("nb")).as("fmt_bytes")),
+        size = "fmt_bytes", total = "dedup_bytes", target = "target_bytes")
       .select(col("format"), col("rate_ppm"))
     val flags = flagged.join(broadcast(rates), Seq("format"), "left_outer")
       .withColumn("s3",

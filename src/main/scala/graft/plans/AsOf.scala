@@ -39,31 +39,22 @@ object AsOf {
 
   /** #32b events_asof_join: every purchase matched to the user's latest
     * click no more than 7 days earlier (attribution-window semantics). */
-  def eventsAsofJoin(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id"), col("event_id"), col("ts"), col("value"))
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user_id"), col("event_id").as("click_id"),
-        col("ts").as("click_ts"))
-    val tolUs = 7L * 24 * 3600 * 1000000L
-    asofJoin(
-      purchases, clicks,
-      Seq(purchases("user_id")), Seq(clicks("c_user_id")),
-      purchases("ts"), clicks("click_ts"), tolUs,
-      rightSeq = Seq(clicks("click_id")))
-      .select(col("user_id"), col("event_id"), col("ts"), col("value"),
-        col("click_id"), col("click_ts"),
-        (unix_micros(col("ts")) - unix_micros(col("click_ts"))).as("gap_us"))
-      .orderBy(col("user_id"), col("event_id"))
-  }
+  def eventsAsofJoin(spark: SparkSession, dir: String): DataFrame =
+    purchaseClicks(spark, dir, "backward")
 
   /** #32i events_asof_next: every purchase matched to the user's
     * EARLIEST click no more than 7 days later — the forward direction
     * of the same custom merge exec (post-purchase re-engagement
     * attribution). Same plan shape as [[eventsAsofJoin]]: co-partition
     * on user_id, per-partition merge, O(1) state. */
-  def eventsAsofNext(spark: SparkSession, dir: String): DataFrame = {
+  def eventsAsofNext(spark: SparkSession, dir: String): DataFrame =
+    purchaseClicks(spark, dir, "forward")
+
+  /** Every purchase matched to one click of the same user within 7 days
+    * in `direction`, with `gap_us` the non-negative distance between
+    * the two (purchase − click backward, click − purchase forward). */
+  private def purchaseClicks(
+      spark: SparkSession, dir: String, direction: String): DataFrame = {
     val ev = Tables.events(spark, dir)
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("user_id"), col("event_id"), col("ts"), col("value"))
@@ -71,15 +62,17 @@ object AsOf {
       .select(col("user_id").as("c_user_id"), col("event_id").as("click_id"),
         col("ts").as("click_ts"))
     val tolUs = 7L * 24 * 3600 * 1000000L
+    val (later, earlier) =
+      if (direction == "forward") ("click_ts", "ts") else ("ts", "click_ts")
     asofJoin(
       purchases, clicks,
       Seq(purchases("user_id")), Seq(clicks("c_user_id")),
       purchases("ts"), clicks("click_ts"), tolUs,
       rightSeq = Seq(clicks("click_id")),
-      direction = "forward")
+      direction = direction)
       .select(col("user_id"), col("event_id"), col("ts"), col("value"),
         col("click_id"), col("click_ts"),
-        (unix_micros(col("click_ts")) - unix_micros(col("ts"))).as("gap_us"))
+        (unix_micros(col(later)) - unix_micros(col(earlier))).as("gap_us"))
       .orderBy(col("user_id"), col("event_id"))
   }
 }

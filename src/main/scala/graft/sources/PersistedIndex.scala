@@ -1,7 +1,8 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, SparkSession}
-import org.apache.spark.sql.functions.{concat, conv, md5, substring}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{broadcast, col, concat, conv, expr, floor,
+  least, lit, md5, sqrt, substring, sum}
 
 /** Shared machinery for SESSION-BUILT persisted bucketed indexes —
   * the dedup signature index pair (graft.dedup.Dedup) and the ANN IVF
@@ -32,6 +33,31 @@ object PersistedIndex {
   def ppmBucket(key: Column, salt: Column): Column =
     conv(substring(md5(concat(key.cast("string"), salt)
       .cast("binary")), 1, 12), 16, 10).cast("long") % 1000000L
+
+  /** The rate half of the √n (temperature α = 0.5) samplers whose
+    * per-row half is [[ppmBucket]] (a row is kept while its bucket <
+    * `rate_ppm`). Adds to the per-group frame `groups`, sized by its
+    * column `size` (documents or bytes): `w_q` = √size quantized to a
+    * 2⁻²⁰ BIGINT, the column `target` = the group's √-share of half
+    * the corpus (Σsize, in the column `total`), and `rate_ppm` =
+    * min(10⁶, target · 10⁶ div size). After the correctly-rounded √
+    * and floor everything is integer arithmetic (DECIMAL(38,0)
+    * products, `div` floors), so every rate is bit-identical in the
+    * DuckDB oracle. */
+  def sqrtRates(groups: DataFrame, size: String, total: String,
+      target: String): DataFrame = {
+    val counts = groups.withColumn("w_q",
+      floor(sqrt(col(size).cast("double")) * 1048576.0).cast("long"))
+    val totals = counts.agg(sum(col("w_q")).as("w_total"), sum(col(size)).as(total))
+    counts.crossJoin(broadcast(totals)) // 1-row scalar
+      .withColumn(target,
+        expr(s"""cast(cast($total div 2 as decimal(38,0)) * cast(w_q as decimal(38,0))
+                |  div cast(w_total as decimal(38,0)) as bigint)""".stripMargin))
+      .withColumn("rate_ppm",
+        least(lit(1000000L),
+          expr(s"""cast(cast($target as decimal(38,0)) * 1000000
+                  |  div cast($size as decimal(38,0)) as bigint)""".stripMargin)))
+  }
 
   /** Collision-proof table-name key (ADVICE r14: dir.hashCode could
     * collide across two dirs in one session, silently cross-serving

@@ -202,8 +202,6 @@ object Streaming {
   case class RateAlarm(event_type: String, hour: Long, n_events: Long,
       cusum_pos: Double, cusum_neg: Double)
 
-  private val HourUs: Long = 3600L * 1000000L
-
   /** #32m's streaming form: CAUSAL per-type rate-shift detection. The
     * stream buckets each type's events into epoch hours inside the
     * keyed state (only the OPEN hour's partial count is ever held); a
@@ -237,7 +235,6 @@ object Streaming {
   def cusumGroup(
       eventType: String, batch: Iterator[Ev],
       state: GroupState[CusumState]): Iterator[RateAlarm] = {
-    val sorted = batch.toSeq.sortBy(e => (tsUs(e.ts), e.event_id))
     var st = state.getOption.getOrElse(
       CusumState(0L, 0L, BigDecimal(0), 0.0, 0.0, Long.MinValue, 0L))
     val out = Seq.newBuilder[RateAlarm]
@@ -259,22 +256,8 @@ object Streaming {
       st = st.copy(n = st.n + 1, sx = st.sx + x,
         ss = st.ss + BigDecimal(x) * x)
     }
-    sorted.foreach { e =>
-      val h = tsUs(e.ts) / HourUs
-      if (st.curHour == Long.MinValue)
-        st = st.copy(curHour = h, curCount = 1L)
-      else if (h == st.curHour)
-        st = st.copy(curCount = st.curCount + 1L)
-      else if (h > st.curHour) {
-        closeHour(st.curHour, st.curCount)
-        var g = st.curHour + 1
-        while (g < h) { closeHour(g, 0L); g += 1 }
-        st = st.copy(curHour = h, curCount = 1L)
-      }
-      // h < curHour (late data): a causal monitor cannot rewrite a
-      // closed hour — dropped, the documented watermark-free trade.
-    }
-    state.update(st)
+    val (h, c) = closeHours(batch, st.curHour, st.curCount)(closeHour)
+    state.update(st.copy(curHour = h, curCount = c))
     out.result().iterator
   }
 
@@ -319,7 +302,6 @@ object Streaming {
   def holtGroup(alpha: Double, beta: Double)(
       eventType: String, batch: Iterator[Ev],
       state: GroupState[HoltState]): Iterator[HoltPoint] = {
-    val sorted = batch.toSeq.sortBy(e => (tsUs(e.ts), e.event_id))
     var st = state.getOption.getOrElse(
       HoltState(started = false, 0.0, 0.0, Long.MinValue, 0L))
     val out = Seq.newBuilder[HoltPoint]
@@ -336,23 +318,35 @@ object Streaming {
         out += HoltPoint(eventType, h, x, r4(st.l), r4(st.b), r4(e))
       }
     }
-    sorted.foreach { e =>
-      val h = tsUs(e.ts) / HourUs
-      if (st.curHour == Long.MinValue)
-        st = st.copy(curHour = h, curCount = 1L)
-      else if (h == st.curHour)
-        st = st.copy(curCount = st.curCount + 1L)
-      else if (h > st.curHour) {
-        closeHour(st.curHour, st.curCount)
-        var g = st.curHour + 1
-        while (g < h) { closeHour(g, 0L); g += 1 }
-        st = st.copy(curHour = h, curCount = 1L)
-      }
-      // h < curHour (late data): dropped — a causal monitor cannot
-      // rewrite a closed hour.
-    }
-    state.update(st)
+    val (h, c) = closeHours(batch, st.curHour, st.curCount)(closeHour)
+    state.update(st.copy(curHour = h, curCount = c))
     out.result().iterator
+  }
+
+  /** The hour-closing loop of [[cusumGroup]] and [[holtGroup]]: walk a
+    * type's batch in time order from the open hour `curHour` (partial
+    * count `curCount`; `Long.MinValue` = none yet) and hand each hour
+    * an event steps past to `closeHour(hour, count)` — the gap hours
+    * in between close at zero. Returns the new open hour and its
+    * partial count. */
+  private def closeHours(batch: Iterator[Ev], curHour: Long, curCount: Long)(
+      closeHour: (Long, Long) => Unit): (Long, Long) = {
+    var hour = curHour
+    var count = curCount
+    batch.toSeq.sortBy(e => (tsUs(e.ts), e.event_id)).foreach { e =>
+      val h = tsUs(e.ts) / graft.operators.Events.HourUs
+      if (hour == Long.MinValue) { hour = h; count = 1L }
+      else if (h == hour) count += 1L
+      else if (h > hour) {
+        closeHour(hour, count)
+        var g = hour + 1
+        while (g < h) { closeHour(g, 0L); g += 1 }
+        hour = h; count = 1L
+      }
+      // h < hour (late data): a causal monitor cannot rewrite a closed
+      // hour — dropped, the documented watermark-free trade.
+    }
+    (hour, count)
   }
 
   private val GapUs: Long = 30L * 60L * 1000000L

@@ -526,22 +526,9 @@ object Text {
       col("source"),
       graft.sources.PersistedIndex.ppmBucket(
         col("doc_id"), concat(lit("#"), col("source"))).as("bucket_ppm"))
-    val counts = docs.groupBy(col("source"))
-      .agg(count(lit(1)).as("n_docs"))
-      // √n quantized to 2^-20 — exact BIGINT from here on.
-      .withColumn("w_q",
-        floor(sqrt(col("n_docs").cast("double")) * 1048576.0).cast("long"))
-    val totals = counts.agg(
-      sum(col("w_q")).as("w_total"),
-      sum(col("n_docs")).as("corpus_docs"))
-    val rates = counts.crossJoin(broadcast(totals)) // 1-row scalar
-      .withColumn("target_docs",
-        expr("""cast(cast(corpus_docs div 2 as decimal(38,0)) * cast(w_q as decimal(38,0))
-               |  div cast(w_total as decimal(38,0)) as bigint)""".stripMargin))
-      .withColumn("rate_ppm",
-        least(lit(1000000L),
-          expr("""cast(cast(target_docs as decimal(38,0)) * 1000000
-                 |  div cast(n_docs as decimal(38,0)) as bigint)""".stripMargin)))
+    val rates = graft.sources.PersistedIndex.sqrtRates(
+        docs.groupBy(col("source")).agg(count(lit(1)).as("n_docs")),
+        size = "n_docs", total = "corpus_docs", target = "target_docs")
       .select(col("source"), col("n_docs"), col("w_q"), col("target_docs"),
         col("rate_ppm"))
     // The rate columns ride THROUGH the aggregation as grouping keys

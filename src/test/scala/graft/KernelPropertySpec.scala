@@ -211,6 +211,35 @@ class KernelPropertySpec extends AnyFunSuite {
     }
   }
 
+  test("holt_seq with beta = 0 is the EWMA fold, bit for bit, with b = +0.0 throughout") {
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    // Own generator: the suite-level rng feeds the other cases in order.
+    val r = new scala.util.Random(4321)
+    def bits(d: Double): Long = java.lang.Double.doubleToRawLongBits(d)
+    (0 to 300).foreach { trial =>
+      // Non-negative integer series, as the hourly counts are; the
+      // first trials pin the empty and 1-element edges.
+      val n = if (trial < 2) trial else r.nextInt(60)
+      val xs = Array.fill(n)(r.nextInt(if (r.nextBoolean()) 5 else 1000).toDouble)
+      val alpha = trial % 4 match {
+        case 0 => 0.25
+        case 1 => 0.5
+        case 2 => 1.0
+        case _ => r.nextDouble()
+      }
+      val got = graft.functions.HoltSeq.run(new GenericArrayData(xs), alpha, 0.0)
+      assert(got.numElements() === n)
+      var s = 0.0
+      xs.zipWithIndex.foreach { case (x, i) =>
+        val err = if (i == 0) { s = x; 0.0 } else { val e = x - s; s = s + alpha * e; e }
+        val row = got.getStruct(i, 3)
+        assert(bits(row.getDouble(0)) === bits(s), s"trial=$trial i=$i level")
+        assert(bits(row.getDouble(1)) === bits(0.0), s"trial=$trial i=$i trend")
+        assert(bits(row.getDouble(2)) === bits(err), s"trial=$trial i=$i err")
+      }
+    }
+  }
+
   test("seq recurrences reject nullable-element arrays at analysis (the r8 getDouble fix)") {
     // run() reads slots via getDouble, which cannot represent null — a
     // containsNull=true array must fail at ANALYSIS with the typed
@@ -226,13 +255,12 @@ class KernelPropertySpec extends AnyFunSuite {
         s"$name: wrong analysis error:\n$msg")
     }
     rejects(graft.functions.HoltSeq.holtSeq(col("xs"), lit(0.5), lit(0.3)), "holt_seq")
-    rejects(graft.functions.EwmaSeq.ewmaSeq(col("xs"), lit(0.5)), "ewma_seq")
     rejects(graft.functions.CusumSeq.cusumSeq(col("xs"), lit(0.0), lit(1.0)), "cusum_seq")
     // Happy path unharmed: a non-nullable array still runs.
     val ok = spark.range(1)
-      .select(graft.functions.EwmaSeq.ewmaSeq(
-        array(lit(1.0), lit(3.0)), lit(0.5)).as("p"))
-      .selectExpr("p[1].s").head().getDouble(0)
+      .select(graft.functions.HoltSeq.holtSeq(
+        array(lit(1.0), lit(3.0)), lit(0.5), lit(0.0)).as("p"))
+      .selectExpr("p[1].l").head().getDouble(0)
     assert(ok === 2.0)
   }
 

@@ -197,14 +197,14 @@ class KeyedSinkSpec extends AnyFunSuite with StreamCheckpoints {
     // Stream: two real micro-batches through foreachBatch.
     KeyedSinkSpec.store.clear(); KeyedSinkSpec.attempts.clear()
     val input = MemoryStream[KeyedSinkSpec.Rec]
-    val export = new KeyedSink.StreamingExport(
+    val streamingExport = new KeyedSink.StreamingExport(
       new KeyedSinkSpec.MemoryStoreWriter(failKeysFirstN = inject), policy)
-    val q = input.toDF().writeStream.foreachBatch(export.writeBatch _)
+    val q = input.toDF().writeStream.foreachBatch(streamingExport.writeBatch _)
       .option("checkpointLocation", checkpoint()).start()
     input.addData(batch1); q.processAllAvailable()
     input.addData(batch2); q.processAllAvailable()
     q.stop()
-    assert(export.stats === want, s"streamed totals: ${export.stats}")
+    assert(streamingExport.stats === want, s"streamed totals: ${streamingExport.stats}")
     assert(KeyedSinkSpec.store.get("a").contains(1L),
       "cross-batch create-only: the batch-1 value survives the batch-2 re-offer")
     assert(KeyedSinkSpec.store.keySet === Set("a", "b", "c"))
